@@ -16,6 +16,10 @@ Measures the two BASELINE.json metrics on this sandbox:
 
 Prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+with the session's two fixed fees beside the query lines:
+``job_floor_ms`` (a no-op JVM job) and ``python_task_floor_ms`` (a
+no-op one-task ``mapInPandas`` that imports the package, as every
+engine UDF does).
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 SPARK_GRAFT_CPUS (default 32), BENCH_TURNS (override corpus size).
@@ -32,6 +36,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -87,6 +92,33 @@ def materialize_corpus(n_turns: int) -> str:
     return path
 
 
+def session_floors(spark) -> dict:
+    """Median wall ms (of 7) of a no-op JVM job and of a no-op one-task
+    ``mapInPandas``, same session: what every job, and every Python
+    task on top of it, costs before any engine work."""
+
+    def noop(batches):
+        import lucene_solr_spark  # noqa: F401  (as every engine UDF)
+
+        yield from batches
+
+    def median_ms(fn) -> float:
+        ts = []
+        for _ in range(7):
+            t0 = time.perf_counter()
+            fn()
+            ts.append((time.perf_counter() - t0) * 1e3)
+        return round(statistics.median(ts), 1)
+
+    one = spark.range(0, 1, 1, 1)
+    return {
+        "job_floor_ms": median_ms(one.collect),
+        "python_task_floor_ms": median_ms(
+            one.mapInPandas(noop, "id long").collect
+        ),
+    }
+
+
 def run_once(cpus: int, n_turns: int, queries: bool = True,
              corpus_path: str | None = None) -> dict:
     """One full build+query cycle at the given core count."""
@@ -126,6 +158,7 @@ def run_once(cpus: int, n_turns: int, queries: bool = True,
         spark.range(0, cpus * 4, numPartitions=cpus * 4).mapInPandas(
             _warm, "id long"
         ).count()
+        out.update(session_floors(spark))
 
         # The corpus is conversation-contiguous (Iceberg bucket layout)
         # → shuffle-free per-partition inversion, the 100 TB build path.
@@ -469,6 +502,8 @@ def main() -> None:
         "metric": "build_plus_query_sec",
         "value": round(total, 3),
         "unit": "sec",
+        "job_floor_ms": r["job_floor_ms"],
+        "python_task_floor_ms": r["python_task_floor_ms"],
         "queries": r.get("queries", {}),
         "pipeline": r.get("pipeline", {}),
         "deletes": {

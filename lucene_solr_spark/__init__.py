@@ -22,6 +22,13 @@ No per-row Python anywhere on a hot path.
 
 __version__ = "0.1.0"
 
+from pyspark import SparkFiles
+
 from lucene_solr_spark.analyzer import TOKEN_PATTERN, tokenize_pandas, tokens_col
+
+if SparkFiles._is_running_on_worker:
+    from lucene_solr_spark.session import lazy_zip_invalidation
+
+    lazy_zip_invalidation()
 
 __all__ = ["TOKEN_PATTERN", "tokenize_pandas", "tokens_col", "__version__"]

@@ -30,6 +30,7 @@ from __future__ import annotations
 import math
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -579,8 +580,12 @@ class IndexSearcher:
         tombstones exist (zero plan change otherwise)."""
         if not self.deleted_keys:
             return self._docmap_df
+        # pandas → Arrow LocalRelation, no Python pass (see seg_driver)
         dead = self.spark.createDataFrame(
-            sorted(self.deleted_keys), "conv_id string, turn_idx int"
+            pd.DataFrame(
+                sorted(self.deleted_keys), columns=["conv_id", "turn_idx"]
+            ).astype({"turn_idx": "int32"}),
+            "conv_id string, turn_idx int",
         )
         return self._docmap_df.join(
             F.broadcast(dead), ["conv_id", "turn_idx"], "left_anti"
@@ -607,20 +612,21 @@ class IndexSearcher:
 
     # -- Weight binding ------------------------------------------------
     def global_df(self, terms: list[str]) -> dict[str, int]:
-        """Index-wide doc freq per term (cached). One tiny aggregation
-        over the term-pruned postings scan for uncached terms."""
+        """Index-wide doc freq per term (cached). Uncached terms cost
+        one term-pruned postings scan whose (term, df) rows — at most
+        #segments × #terms — are summed on the driver: one stage, no
+        aggregation exchange."""
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            rows = (
+            found = dict.fromkeys(missing, 0)
+            for r in (
                 self.postings()
                 .filter(F.col("term").isin(missing))
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"))
+                .select("term", "df")
                 .collect()
-            )
-            found = {r.term: int(r.df) for r in rows}
-            for t in missing:
-                self._df_cache[t] = found.get(t, 0)
+            ):
+                found[r.term] += int(r.df)
+            self._df_cache.update(found)
         return {t: self._df_cache[t] for t in terms}
 
     def global_idf(self, terms: list[str]) -> dict[str, float]:
@@ -632,9 +638,15 @@ class IndexSearcher:
         }
 
     # -- search --------------------------------------------------------
-    def score_hits(self, spec: BooleanSpec, k: int | None = None) -> DataFrame:
+    def score_hits(
+        self, spec: BooleanSpec, k: int | None = None,
+        round_to: int | None = None,
+    ) -> DataFrame:
         """UNSORTED scored hits: per-segment top-k rows (all matching
         turns when k is None) with raw float64 scores — no global sort.
+        ``round_to`` is the rounding the caller ranks by: each segment
+        then also keeps the docs that tie its k-th score only after
+        rounding, so the pinned tiebreak sees them.
 
         This is the composable building block: :meth:`search` adds the
         pinned TakeOrdered; parent-block aggregation
@@ -732,7 +744,8 @@ class IndexSearcher:
                 allowed = fq_mask
             term_rows = {r["term"]: r for _, r in pdf.iterrows()}
             docs, scores = score_segment(
-                spec, term_rows, idf, avgdl, doc_len, allowed, seg_k
+                spec, term_rows, idf, avgdl, doc_len, allowed, seg_k,
+                round_to,
             )
             if len(docs) == 0:
                 return pd.DataFrame(columns=["conv_id", "turn_idx", "score"])
@@ -743,7 +756,7 @@ class IndexSearcher:
         return post.groupBy("seg_id").applyInPandas(run_seg, schema=RESULT_SCHEMA)
 
     def search(self, spec: BooleanSpec, round_to: int | None = None) -> DataFrame:
-        hits = self.score_hits(spec, k=spec.k)
+        hits = self.score_hits(spec, k=spec.k, round_to=round_to)
         if round_to is not None:
             hits = hits.withColumn("score", F.round("score", round_to))
         return hits.orderBy(F.desc("score"), "conv_id", "turn_idx").limit(spec.k)
@@ -1606,8 +1619,12 @@ class IndexSearcher:
             len(seg_ids),
             max(self.spark.sparkContext.defaultParallelism, 1),
         )
+        # with Arrow on (get_spark), a pandas frame becomes a JVM-only
+        # LocalRelation; a list of tuples would cost a Python worker
+        # pass (parallelize + an identity map) on every execution of
+        # every seg-driver plan
         return self.spark.createDataFrame(
-            [(s,) for s in seg_ids], "seg_id int"
+            pd.DataFrame({"seg_id": seg_ids}, dtype="int32"), "seg_id int"
         ).repartition(n_parts, "seg_id")
 
     # -- DocSet (all matches, no scoring) ------------------------------

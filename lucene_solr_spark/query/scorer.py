@@ -715,12 +715,15 @@ def score_segment(
     doc_len: np.ndarray,
     allowed: np.ndarray | None,
     k: int,
+    round_to: int | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Score one segment. Returns (doc_ords, scores) of its top-k.
 
     term_rows: term -> postings row dict (absent terms missing).
     doc_len: per-doc lengths (norms file analog).
     allowed: bool mask over doc ords (FILTER/fq doc set) or None.
+    round_to: decimal places the global ranking rounds scores to
+    (None = raw) — widens the kept boundary ties (see ``_topk``).
     """
     tp: dict[str, TermPostings] = {
         t: TermPostings(r, idf[t]) for t, r in term_rows.items()
@@ -751,7 +754,7 @@ def score_segment(
         # rises, so the region machinery would just re-sort the
         # accumulating hit set per chunk — exact scoring decodes each
         # block once instead.
-        return _wand_topk(spec, tp, terms, avgdl, doc_len, k)
+        return _wand_topk(spec, tp, terms, avgdl, doc_len, k, round_to)
 
     # ---- exact scoring over candidates (or full disjunction) --------
     all_docs: list[np.ndarray] = []
@@ -821,22 +824,37 @@ def score_segment(
             )
             sums[np.searchsorted(uniq, pdocs)] += bonus
 
-    return _topk(uniq, sums, k)
+    return _topk(uniq, sums, k, round_to)
 
 
-def _topk(docs: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+def _tie_floor(kth: float, round_to: int | None) -> float:
+    """Lowest raw score that can still tie the k-th score ``kth`` in the
+    global ranking. Raw scores tie only when equal. Rounded to
+    ``round_to`` places, any score that rounds to at least round(kth)
+    lies above kth − 10^−round_to (each rounding moves a score by at
+    most half a unit, whatever the rounding mode), so the floor drops
+    one whole unit below kth."""
+    return kth if round_to is None else kth - 10.0 ** -round_to
+
+
+def _topk(
+    docs: np.ndarray, scores: np.ndarray, k: int, round_to: int | None = None
+) -> tuple[np.ndarray, np.ndarray]:
     """HitQueue analog: top-k by (score desc, doc asc) — keeping ALL
-    docs tied with the k-th score. Slicing ties by segment-local
+    docs that can tie the k-th score. Slicing ties by segment-local
     doc_ord would make results depend on segment layout (doc_ord
     assignment changes under merge/repartition); the global
     TakeOrdered applies the pinned (conv_id, turn_idx) tiebreak, so
-    every boundary-tied candidate must survive the segment stage."""
+    every boundary-tied candidate must survive the segment stage —
+    including, under ``round_to``, docs just below the raw k-th score
+    that round to the same value."""
     if len(docs) <= k:
         order = np.lexsort((docs, -scores))
         return docs[order], scores[order]
     part = np.argpartition(-scores, k - 1)
     kth = scores[part[k - 1]]
-    cand = np.nonzero(scores >= kth)[0]  # ALL boundary ties survive
+    # ALL boundary ties survive
+    cand = np.nonzero(scores >= _tie_floor(kth, round_to))[0]
     d, s = docs[cand], scores[cand]
     order = np.lexsort((d, -s))
     return d[order], s[order]
@@ -849,12 +867,14 @@ def _wand_topk(
     avgdl: float,
     doc_len: np.ndarray,
     k: int,
+    round_to: int | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Block-max WAND over a pure disjunction.
 
     Doc space is cut at every block boundary of every term; each region
     gets Σ upper bounds of overlapping blocks. Regions are scored
-    exactly in descending-bound order until bound ≤ θ (k-th best).
+    exactly in descending-bound order until bound < θ, the tie floor of
+    the k-th best score (``_tie_floor``).
     """
     n_docs = len(doc_len)
     ubs = {t: tp[t].block_upper_bounds(avgdl) for t in terms}
@@ -884,9 +904,10 @@ def _wand_topk(
         chunk = order[c0 : c0 + CHUNK]
         if len(top_docs) >= k and region_ub[chunk[0]] < theta:
             # STRICTLY below theta: a region whose bound equals theta
-            # can still hold docs that tie the k-th score and win the
-            # (score desc, doc asc) tiebreak — pruning them would break
-            # rank-identity at tied boundaries.
+            # can still hold docs that tie the k-th score (after
+            # rounding, when round_to is set) and win the pinned
+            # tiebreak — pruning them would break rank-identity at
+            # tied boundaries.
             break  # every remaining region is dominated — prune
         sel_regions = np.sort(chunk)  # searchsorted below needs sorted bounds
         lo, hi = cuts[sel_regions], cuts[sel_regions + 1]
@@ -913,7 +934,8 @@ def _wand_topk(
         uniq, sums, _ = _sparse_sum(np.concatenate(docs_l), np.concatenate(vals_l))
         top_docs = np.concatenate([top_docs, uniq])
         top_scores = np.concatenate([top_scores, sums])
-        top_docs, top_scores = _topk(top_docs, top_scores, k)
+        top_docs, top_scores = _topk(top_docs, top_scores, k, round_to)
         if len(top_docs) >= k:
-            theta = top_scores[k - 1]  # k-th best (ties may extend past k)
+            # k-th best (ties may extend past k)
+            theta = _tie_floor(top_scores[k - 1], round_to)
     return top_docs, top_scores

@@ -8640,7 +8640,7 @@ def _idx_term_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = cached_searcher(spark, sf_dir)
     top = (
-        s.score_hits(BooleanSpec(must=("merge",), k=3), k=3)
+        s.score_hits(BooleanSpec(must=("merge",), k=3), k=3, round_to=ROUND)
         .withColumn("score", F.round("score", ROUND))
         .orderBy(F.desc("score"), "conv_id", "turn_idx")
         .limit(3)
@@ -8693,7 +8693,7 @@ def _idx_term_vectors_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = cached_searcher(spark, sf_dir)
     top = (
-        s.score_hits(BooleanSpec(must=("merge",), k=3), k=3)
+        s.score_hits(BooleanSpec(must=("merge",), k=3), k=3, round_to=ROUND)
         .withColumn("score", F.round("score", ROUND))
         .orderBy(F.desc("score"), "conv_id", "turn_idx")
         .limit(3)

@@ -6,11 +6,19 @@ coalesce + skew-join splitting), Arrow on for every pandas UDF
 boundary, shuffle partitions sized to cores (cluster: 2-3x total
 cores), small broadcast threshold left at default so dimension
 tables broadcast.
+
+Python worker processes also get one fix outside any conf: on CPython
+< 3.12, importing the package on a worker makes zip-archive import
+cache invalidation lazy (:func:`lazy_zip_invalidation`). Every Python
+task starts with ``importlib.invalidate_caches()``, and there 3.11's
+zipimporter re-reads its archive's whole central directory — once per
+subpackage imported from ``pyspark.zip``, ~200 ms per task.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -36,6 +44,43 @@ def cpu_scaled(df: DataFrame, *cols: str) -> DataFrame:
     if n_in >= target:
         return df
     return df.repartition(target)
+
+
+def lazy_zip_invalidation() -> bool:
+    """Make zipimporter cache invalidation lazy, as CPython 3.12 does
+    (gh-103200): an importer re-reads its archive's directory only when
+    the archive's ``(st_mtime_ns, st_size)`` stamp differs from the one
+    it last read, kept on the importer. Other finders keep their normal
+    invalidation. Returns whether the lazy form is in place; a no-op on
+    3.12+, where it is the interpreter's own behaviour.
+
+    Called from the package ``__init__`` on Python workers only: PySpark
+    runs ``importlib.invalidate_caches()`` at the start of every task
+    (``worker_util.setup_spark_files``), and 3.11 answers that with one
+    full central-directory read per zipimporter — one per subpackage
+    imported from ``pyspark.zip`` or py4j's zip, 16 reads per task on
+    PySpark 4.1. Drop this once 3.12 is the minimum."""
+    if sys.version_info >= (3, 12):
+        return False
+    import zipimport
+
+    eager = zipimport.zipimporter.invalidate_caches
+    if getattr(eager, "lazy", False):
+        return True
+
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_read_stamp", None):
+            eager(self)
+            self._read_stamp = stamp
+
+    invalidate_caches.lazy = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    return True
 
 
 def get_spark(
