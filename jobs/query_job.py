@@ -214,7 +214,7 @@ def main() -> None:
 
     if args.facet:
         # always over the q+fq domain (Solr semantics): segment_partials
-        # handles term-free specs via the seg-id driver, so filter-only /
+        # visits every segment for term-free specs, so filter-only /
         # pure-negative queries facet over their filtered domain too
         exclude = tuple(
             f for f in (args.facet_exclude or "").split(",") if f

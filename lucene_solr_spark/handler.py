@@ -2151,6 +2151,24 @@ def select(searcher, params: dict, stored: DataFrame | None = None) -> dict:
         sc.setLocalProperty("spark.job.description", None)
 
 
+def _ranked_keys(spark, page_keys: DataFrame) -> DataFrame:
+    """The page's (conv_id, turn_idx) with their page rank ``rn``,
+    collected once (the bounded page Solr materializes too) into a
+    driver-side table: legs that join it no longer re-run the page's
+    plan, and ``rn`` orders their output."""
+    import pandas as pd
+
+    rows = page_keys.collect()
+    return spark.createDataFrame(
+        pd.DataFrame({
+            "conv_id": pd.array([r.conv_id for r in rows], dtype=object),
+            "turn_idx": pd.array([r.turn_idx for r in rows], dtype="int32"),
+            "rn": pd.array(range(len(rows)), dtype="int64"),
+        }),
+        "conv_id string, turn_idx int, rn long",
+    )
+
+
 def _select_impl(
     searcher, params: dict, stored: DataFrame | None = None
 ) -> dict:
@@ -2159,8 +2177,9 @@ def _select_impl(
 
     Paging stays distributed-bounded: the engine retrieves the
     start+rows head (what Solr's distributed merge heap holds), and
-    the offset slices with one row_number window over those ≤
-    start+rows rows — never a global sort, never a driver collect.
+    the offset slices it inside the same TakeOrdered (limit start+rows,
+    offset start) — never a global sort, never a window; only the tv
+    and hl legs collect the ≤ rows page keys, once.
     A field sort orders the match DocSet by index docvalues instead
     of score (keys join the pruned docmap columns, the limit turns
     the order into a distributed TakeOrdered top-k — still never a
@@ -2267,8 +2286,8 @@ def _select_impl(
                     (F.row_number().over(ow) + n_elev)
                     .cast("long").alias("slot"))
         )
-        head = elevated.unionByName(organic)
         order = [F.asc("slot")]
+        head = elevated.unionByName(organic).orderBy(*order)
     elif o["collapse"] is not None:
         # CollapsingQParser leg: per-key best-scoring head (rounded
         # score desc, doc-key tiebreak — an engine-independent
@@ -2394,14 +2413,19 @@ def _select_impl(
             .orderBy(*order)
             .limit(o["start"] + o["rows"])
         )
-    w = Window.orderBy(*order)
-    paged = head.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") > o["start"]
+    # every head above is ordered by `order` (and bounded by start+rows
+    # except the elevate union): the page is its slice past `start`,
+    # one TakeOrdered with an offset — no window, never a global sort
+    page = head.offset(o["start"])
+    page_keys = page.select("conv_id", "turn_idx")
+    # tv/hl present per-doc rows in page order: they join the page
+    # keys ranked once on the driver (≤ rows rows), not in a window
+    ranked_keys = (
+        _ranked_keys(searcher.spark, page_keys)
+        if o["tv"] or o["hl"] else None
     )
-    page = paged.drop("rn").orderBy(*order)
-    page_keys = paged.select("conv_id", "turn_idx", "rn")
     if o["fl_transformers"]:
-        aug = paged
+        aug = page
         if {"docid", "shard"} & set(o["fl_transformers"]):
             # one broadcast of the page keys against the pruned docmap
             # (seg_id, doc_ord) columns; segment metadata (name,
@@ -2420,8 +2444,7 @@ def _select_impl(
             locs = (
                 searcher.docmap()
                 .select("conv_id", "turn_idx", "seg_id", "doc_ord")
-                .join(F.broadcast(page_keys.drop("rn")),
-                      ["conv_id", "turn_idx"])
+                .join(F.broadcast(page_keys), ["conv_id", "turn_idx"])
                 .join(seg_meta, "seg_id")
                 .select(
                     "conv_id", "turn_idx", "shard",
@@ -2457,7 +2480,7 @@ def _select_impl(
                 ).alias("explain")
             )
             aug = aug.join(per_doc, ["conv_id", "turn_idx"], "left")
-        page = aug.orderBy("rn").drop("rn")
+        page = aug.orderBy(*order)
     if o["fl"]:
         func_aliases = {a for a, _, _ in o.get("fl_funcs", ())}
         bad_alias = func_aliases & set(page.columns)
@@ -2474,8 +2497,8 @@ def _select_impl(
             # stored/docvalues fl fields on a score-sorted page
             # hydrate via ONE page-bounded join: ≤ start+rows keys
             # broadcast against the PRUNED docmap columns (Solr's
-            # per-page stored-fields fetch); rn carries the page
-            # order through the join
+            # per-page stored-fields fetch); the page's own sort keys
+            # restore its order after the join
             dm_all = set(searcher.docmap().columns)
             bad_fl = [f for f in missing_fl if f not in dm_all]
             if bad_fl:
@@ -2486,11 +2509,9 @@ def _select_impl(
                 .select("conv_id", "turn_idx", *missing_fl)
                 .join(F.broadcast(page_keys), ["conv_id", "turn_idx"])
             )
-            page = (
-                page.join(F.broadcast(vals),
-                          ["conv_id", "turn_idx"], "left")
-                .orderBy("rn").drop("rn")
-            )
+            page = page.join(
+                F.broadcast(vals), ["conv_id", "turn_idx"], "left"
+            ).orderBy(*order)
         for alias, _, fn in o.get("fl_funcs", ()):
             page = page.withColumn(alias, fn(searcher))
         page = page.select(*o["fl"])
@@ -2522,7 +2543,7 @@ def _select_impl(
         # re-queries the collapsed groups after the main pass
         n_exp = o["expand"]
         key_c = o["collapse"][0]
-        pg = page_keys.drop("rn")
+        pg = page_keys
         if key_c not in ("conv_id", "turn_idx"):
             pg = pg.join(
                 searcher.docmap().select("conv_id", "turn_idx", key_c),
@@ -2920,7 +2941,7 @@ def _select_impl(
         from lucene_solr_spark.analyzer import tokens_col as _tvtoks
 
         tv_base = (
-            stored.join(F.broadcast(page_keys), ["conv_id", "turn_idx"])
+            stored.join(F.broadcast(ranked_keys), ["conv_id", "turn_idx"])
             .select(
                 "conv_id", "turn_idx", "rn",
                 F.posexplode(_tvtoks("text")).alias("pos", "term"),
@@ -3242,7 +3263,7 @@ def _select_impl(
         ))
         toks = tokens_col("text")
         joined = stored.join(
-            F.broadcast(page_keys), ["conv_id", "turn_idx"]
+            F.broadcast(ranked_keys), ["conv_id", "turn_idx"]
         )
         if o["hl_passages"]:
             # multi-snippet passage mode (hl.snippets/hl.fragsize —

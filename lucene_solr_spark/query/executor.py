@@ -2,27 +2,29 @@
 
 Physical plan:
 
-    postings scan, filter term ∈ query terms        (Parquet row-group
-                                                     pruning: files are
-                                                     term-sorted — the
-                                                     terms-dict seek)
-      → tiny groupBy(term).sum(df) → driver          (Weight binding:
-                                                     global df → idf,
-                                                     cached per term)
-      → groupBy(seg_id) → applyInPandas scorer       (vectorized decode,
-                                                     leapfrog AND,
-                                                     block-max WAND)
+    df probe: DRIVER-side pyarrow read of (term, df)  (Weight binding:
+      over every segment's postings file, term       global df → idf,
+      filter pushed to row-group stats               cached per term;
+                                                     no Spark job)
+      → spark.range(n_segs).mapInPandas              (IndexSearcher leaf
+          task per segment: its OWN term-pruned       loop: vectorized
+          postings + docmap columns from Parquet      decode, leapfrog
+          → scorer                                    AND, block-max WAND)
       → per-segment top-k rows
       → orderBy(score desc, conv, turn).limit(k)     (TakeOrderedAndProject
                                                      ≡ TopDocs.merge)
 
-Only the pruned postings rows ever shuffle. The scorer task reads its
-OWN segment's docmap columns (doc_len = norms; conv/turn ids; filter
-fields = fq docvalues) straight from the segment's Parquet on shared
-storage — exactly Lucene's per-segment norms/docvalues access pattern
-(``SegmentReader``), and the property that keeps query cost independent
-of corpus width: a query over 10^12 turns touches q-term postings plus
-the docmaps of segments that contain them, never a corpus-wide shuffle.
+One stage, one job, nothing shuffles to reach a segment: every
+per-segment pass (search, DocSet, caches, facets) runs through
+:meth:`IndexSearcher.each_segment`, whose task reads its OWN segment's
+postings rows (term-sorted file → row-group pruning is the terms-dict
+seek) and docmap columns (doc_len = norms; conv/turn ids; filter fields
+= fq docvalues) straight from the segment's Parquet on shared storage —
+exactly Lucene's per-segment access pattern (``SegmentReader``), and the
+property that keeps query cost independent of corpus width: a query
+over 10^12 turns touches q-term postings plus the docmaps of segments
+that contain them. Only the small per-segment results move, into the
+final merge.
 """
 
 from __future__ import annotations
@@ -36,7 +38,7 @@ from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.manifest import Manifest
 from lucene_solr_spark.query.model import BooleanSpec
-from lucene_solr_spark.query.scorer import score_segment
+from lucene_solr_spark.query.scorer import match_segment, score_segment
 
 RESULT_SCHEMA = "conv_id string, turn_idx int, score double"
 
@@ -174,6 +176,21 @@ def postings_task_columns(spec) -> list[str] | None:
             "tf_offs", "max_tfs", "min_dls", "doc_bytes", "tf_bytes"]
 
 
+def segment_postings(seg_dir: str, terms, columns) -> dict:
+    """TASK-side: one segment's postings rows for ``terms`` as
+    ``{term: row}`` — the terms-dict seek (the file is term-sorted, so
+    the ``in`` filter prunes row groups on their min/max stats) plus
+    the column projection of :func:`postings_task_columns`."""
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(
+        f"{seg_dir}/postings.parquet",
+        filters=[("term", "in", list(terms))],
+        columns=columns,
+    ).to_pandas()
+    return {r["term"]: r for _, r in tbl.iterrows()}
+
+
 def _write_bits(cache_dir: str, seg_id: int, payload: bytes) -> None:
     """Task-side atomic sidecar write: unique temp + rename, so a
     concurrent warm of the same entry (or a task retry) can never
@@ -190,7 +207,7 @@ class SegBitsCache:
     """Executor-resident cached bitsets — the storage layer behind the
     filterCache and queryResultCache. The per-segment packed bits live
     as sidecar FILES under ``{index_root}/querycache/…/{seg_id}.bits``,
-    written by the same seg-driver tasks that computed them and read
+    written by the same per-segment tasks that computed them and read
     back by whichever task serves that segment (the "tasks read their
     own segment's Parquet" locality pattern: on a cluster the cache
     shares the index's storage and data-locality, Solr's per-core
@@ -224,6 +241,65 @@ class SegBitsCache:
         import shutil
 
         shutil.rmtree(self.path, ignore_errors=True)
+
+
+class SegmentDomain:
+    """A query domain's per-segment hit DocSet, shipped to the
+    per-segment tasks of :meth:`IndexSearcher.each_segment`:
+    MatchAllDocs (``spec`` None — every live doc), a queryResultCache
+    hit (the cached per-segment bits — liveDocs baked in, no postings
+    read, no fq columns; see ``IndexSearcher.cache_docset``) or a spec
+    evaluated in the task (fq mask ∩ liveDocs ∩ match_segment over the
+    task's own postings). ``cols`` are the docmap columns the caller
+    reads beyond that; the delete keys ride along whenever tombstones
+    exist, for :meth:`live`. Pass ``postings_spec`` to each_segment."""
+
+    def __init__(self, searcher, spec: BooleanSpec | None, cols):
+        self.spec = spec
+        self.bits = (
+            searcher._docset_cached_bc(spec) if spec is not None else None
+        )
+        #: what each_segment reads postings for (a cache hit: nothing)
+        self.postings_spec = spec if self.bits is None else None
+        cols = list(cols)
+        if self.postings_spec is not None:
+            cols = filter_cols(spec, ["doc_ord", "doc_len", *cols])
+        if searcher.deleted_keys:
+            cols += ["conv_id", "turn_idx"]
+        self.cols = list(dict.fromkeys(cols))
+        self.seg_dirs = searcher.seg_dir_by_id
+        self.deleted_bc = searcher._deleted_bc
+
+    def live(self, dm: pd.DataFrame):
+        """liveDocs mask over ``dm`` (None when nothing is deleted)."""
+        bc = self.deleted_bc
+        return apply_deletes(None, dm, bc.value if bc else None)
+
+    def read(self, seg_id: int, term_rows):
+        """TASK-side: ``(docmap columns, hit ords)`` of one segment;
+        hit ords None means every doc."""
+        import numpy as np
+        import pyarrow.parquet as pq
+
+        dm = pq.read_table(
+            f"{self.seg_dirs[seg_id]}/docmap.parquet", columns=self.cols
+        ).to_pandas()  # written sorted by doc_ord
+        if self.bits is not None:
+            bits, n = self.bits.get(seg_id)
+            return dm, np.flatnonzero(
+                np.unpackbits(np.frombuffer(bits, np.uint8), count=n)
+            )
+        if self.spec is None:
+            live = self.live(dm)
+            return dm, None if live is None else np.flatnonzero(live)
+        bc = self.deleted_bc
+        allowed = apply_deletes(
+            filter_mask(dm, self.spec), dm, bc.value if bc else None
+        )
+        max_dl = int(dm["doc_len"].max()) if len(dm) else 0
+        return dm, match_segment(
+            self.spec, term_rows, len(dm), allowed, max_dl
+        )
 
 
 def _range_cmp(col, bound: str, is_lo: bool):
@@ -306,6 +382,8 @@ class IndexSearcher:
         self._dicts_df = self.spark.read.parquet(*self._dict_files)
         #: term → global df cache (SolrIndexSearcher filterCache spirit)
         self._df_cache: dict[str, int] = {}
+        #: driver-side pyarrow dataset over the postings files (global_df)
+        self._postings_ds = None
         self._field_card_cache: dict[str, int] = {}
         # MatchAll facet partials cache (UnInvertedField / FieldCache
         # analog): keyed (field, group_by, missing), bounded by the 3
@@ -342,10 +420,15 @@ class IndexSearcher:
             self._deleted_bc = spark.sparkContext.broadcast(arr)
 
     def persist(self) -> "IndexSearcher":
-        """Serving mode: pin the postings table in executor memory
-        (the OS-page-cache warm-index analog). ~15-20%
-        off warm query latency in local mode; on a cluster it removes
-        object-store reads from the query path entirely."""
+        """Serving mode: pin the postings TABLE (``postings()``) in
+        executor memory (the OS-page-cache warm-index analog). It
+        serves the plans that still scan the whole postings table —
+        the MultiTermQuery dictionary scan (``expand_terms``), the
+        handler's term-dictionary legs (tv.df, spellcheck, suggest)
+        and the registry operators over ``postings()``. The
+        per-segment passes (``each_segment``: search, DocSet, facets)
+        and the df probe (``global_df``) read the segment files
+        directly and never touch it."""
         self._postings_df = self._postings_df.persist()
         self._postings_df.count()  # materialize
         return self
@@ -383,7 +466,7 @@ class IndexSearcher:
 
     def cache_filter(self, spec: BooleanSpec) -> bool:
         """Populate the filterCache for ``spec``'s fq constraints: one
-        seg-driver job evaluates the filter mask per segment, packs it
+        each_segment job evaluates the filter mask per segment, packs it
         to a bitset (maxDoc/8 bytes — exactly Lucene's per-core
         FixedBitSet cost model) and writes it as a per-segment sidecar
         file IN THE SAME TASK (SegBitsCache: executor/storage-resident
@@ -423,11 +506,10 @@ class IndexSearcher:
         dm_cols = filter_cols(fspec, ["doc_ord"])
         cdir = self._cache_entry_dir("fq", key)
 
-        def one(pdf):
+        def one(seg_id, _term_rows):
             import pandas as pd
             import pyarrow.parquet as pq
 
-            seg_id = int(pdf["seg_id"].iloc[0])
             dm = pq.read_table(
                 f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
             ).to_pandas()
@@ -438,12 +520,9 @@ class IndexSearcher:
                  "pop": [int(mask.sum())]}
             )
 
-        rows = (
-            self.seg_driver()
-            .groupBy("seg_id")
-            .applyInPandas(one, "seg_id int, n long, pop long")
-            .collect()  # O(#segments) count rows — never the bits
-        )
+        rows = self.each_segment(
+            one, "seg_id int, n long, pop long"
+        ).collect()  # O(#segments) count rows — never the bits
         meta = {int(r.seg_id): (int(r.n), int(r.pop)) for r in rows}
         if len(self._fq_cache) >= self.MAX_FILTER_CACHE:
             self._fq_cache.pop(next(iter(self._fq_cache))).destroy()
@@ -474,7 +553,7 @@ class IndexSearcher:
 
     def cache_docset(self, spec: BooleanSpec) -> None:
         """Warm the FULL-spec DocSet as per-segment packed bitsets
-        (getDocSet + queryResultCache): ONE seg-driver job computes
+        (getDocSet + queryResultCache): ONE each_segment job computes
         each segment's live hit mask (scoring match ∩ fq ∩ liveDocs —
         tombstones bake in, safe because a searcher is pinned to one
         snapshot) and writes maxDoc/8 bytes per segment as a sidecar
@@ -496,45 +575,16 @@ class IndexSearcher:
         key = self._docset_key(spec)
         if key in self._docset_cache:
             return
-        lspec = key
-        seg_dirs = self.seg_dir_by_id
-        # the warm task needs the doc keys ONLY to bake the liveDocs
-        # mask in; with no tombstones the scan drops the key columns
+        # the warm task reads the doc keys ONLY to bake the liveDocs
+        # mask in: with no tombstones the domain drops the key columns
         # (10M string reads per warm at 10M turns, otherwise)
-        base_cols = _BASE_COLS if self.deleted_keys else [
-            "doc_ord", "doc_len",
-        ]
-        dm_cols = filter_cols(lspec, base_cols)
-        deleted_bc = self._deleted_bc
-        lookup = list(lspec.lookup_terms)
+        dom = SegmentDomain(self, key, [])
         cdir = self._cache_entry_dir("ds", key)
 
-        def one(pdf):
+        def one(seg_id, term_rows):
             import pandas as pd
-            import pyarrow.parquet as pq
 
-            from lucene_solr_spark.query.scorer import match_segment
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            ).to_pandas()
-            allowed = apply_deletes(
-                filter_mask(dm, lspec), dm,
-                deleted_bc.value if deleted_bc else None,
-            )
-            term_rows = {}
-            if lookup:
-                post_tbl = pq.read_table(
-                    f"{seg_dirs[seg_id]}/postings.parquet",
-                    filters=[("term", "in", lookup)],
-                    columns=postings_task_columns(lspec),
-                ).to_pandas()
-                term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-            hits = match_segment(
-                lspec, term_rows, len(dm), allowed,
-                int(dm["doc_len"].max()) if len(dm) else 0,
-            )
+            dm, hits = dom.read(seg_id, term_rows)
             mask = np.zeros(len(dm), dtype=np.uint8)
             mask[hits] = 1
             _write_bits(cdir, seg_id, np.packbits(mask).tobytes())
@@ -543,12 +593,11 @@ class IndexSearcher:
                  "pop": [int(mask.sum())]}
             )
 
-        rows = (
-            self.seg_driver()
-            .groupBy("seg_id")
-            .applyInPandas(one, "seg_id int, n long, pop long")
-            .collect()  # O(#segments) count rows — never the bits
-        )
+        # every segment writes its bits (a term-free one writes an
+        # empty set): cache readers fetch each segment's file
+        rows = self.each_segment(
+            one, "seg_id int, n long, pop long", key, visit_all=True
+        ).collect()  # O(#segments) count rows — never the bits
         meta = {int(r.seg_id): (int(r.n), int(r.pop)) for r in rows}
         if len(self._docset_cache) >= self.MAX_DOCSET_CACHE:
             self._docset_cache.pop(
@@ -580,7 +629,9 @@ class IndexSearcher:
         tombstones exist (zero plan change otherwise)."""
         if not self.deleted_keys:
             return self._docmap_df
-        # pandas → Arrow LocalRelation, no Python pass (see seg_driver)
+        # with Arrow on (get_spark), a pandas frame becomes a JVM-only
+        # LocalRelation; a list of tuples would cost a Python worker
+        # pass (parallelize + an identity map) on every execution
         dead = self.spark.createDataFrame(
             pd.DataFrame(
                 sorted(self.deleted_keys), columns=["conv_id", "turn_idx"]
@@ -613,19 +664,30 @@ class IndexSearcher:
     # -- Weight binding ------------------------------------------------
     def global_df(self, terms: list[str]) -> dict[str, int]:
         """Index-wide doc freq per term (cached). Uncached terms cost
-        one term-pruned postings scan whose (term, df) rows — at most
-        #segments × #terms — are summed on the driver: one stage, no
-        aggregation exchange."""
+        one DRIVER-side read of the (term, df) columns over every
+        segment's postings file, the term filter pushed down to the
+        row-group statistics of the term-sorted files — at most
+        #segments × #terms rows, summed here. No Spark job: the
+        driver already reads index files (manifest, tombstones), and
+        a job costs far more than the whole probe (median of 35 probes
+        of 3 terms, 4 segments, 4-core host: 103 ms as a Spark job
+        against 3.2 ms here)."""
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
+            import pyarrow.dataset as ds
+
+            if self._postings_ds is None:  # fragments keep their footers
+                self._postings_ds = ds.dataset(
+                    self._postings_files, format="parquet"
+                )
             found = dict.fromkeys(missing, 0)
-            for r in (
-                self.postings()
-                .filter(F.col("term").isin(missing))
-                .select("term", "df")
-                .collect()
+            tbl = self._postings_ds.to_table(
+                columns=["term", "df"], filter=ds.field("term").isin(missing)
+            )
+            for t, df in zip(
+                tbl.column("term").to_pylist(), tbl.column("df").to_pylist()
             ):
-                found[r.term] += int(r.df)
+                found[t] += int(df)
             self._df_cache.update(found)
         return {t: self._df_cache[t] for t in terms}
 
@@ -665,8 +727,7 @@ class IndexSearcher:
             # .makeQueryable wraps them for filters, not scoring) — and
             # bm25_df.search raises identically.
             raise ValueError("query has no scoring terms")
-        all_terms = list(spec.lookup_terms)
-        idf = self.global_idf(all_terms)  # must_not idf unused but keyed
+        idf = self.global_idf(list(spec.lookup_terms))  # must_not keyed
         if spec.boosts:
             # BoostQuery: contribution AND WAND upper bound both scale
             # linearly in idf, so folding the boost into idf applies it
@@ -684,13 +745,6 @@ class IndexSearcher:
         seg_k = (1 << 62) if k is None else k
         deleted_bc = self._deleted_bc
 
-        post = self.postings().filter(F.col("term").isin(all_terms))
-        if not spec.needs_positions:
-            # the position payload (~60% of postings bytes at 10M
-            # turns, measured) never leaves the parquet reader for a
-            # pure term/boolean spec — Lucene's .pos-file IO contract
-            post = post.drop("pos_offs", "pos_bytes")
-
         # fields the fq mask actually touches (pandas-materialized in
         # tasks; everything else stays Arrow/numpy)
         fq_fields = sorted(
@@ -703,12 +757,11 @@ class IndexSearcher:
         )
         has_deletes = bool(self.deleted_keys)
 
-        def run_seg(pdf):
+        def run_seg(seg_id, term_rows):
             import numpy as np
             import pandas as pd
             import pyarrow.parquet as pq
 
-            seg_id = int(pdf["seg_id"].iloc[0])
             # per-segment docvalues/norms read — segment-local, no
             # shuffle, and ARROW-NATIVE: converting a whole segment's
             # docmap to pandas materializes every conv_id as a python
@@ -742,7 +795,6 @@ class IndexSearcher:
                 )
             else:
                 allowed = fq_mask
-            term_rows = {r["term"]: r for _, r in pdf.iterrows()}
             docs, scores = score_segment(
                 spec, term_rows, idf, avgdl, doc_len, allowed, seg_k,
                 round_to,
@@ -753,7 +805,7 @@ class IndexSearcher:
             sel["score"] = scores
             return sel
 
-        return post.groupBy("seg_id").applyInPandas(run_seg, schema=RESULT_SCHEMA)
+        return self.each_segment(run_seg, RESULT_SCHEMA, spec)
 
     def search(self, spec: BooleanSpec, round_to: int | None = None) -> DataFrame:
         hits = self.score_hits(spec, k=spec.k, round_to=round_to)
@@ -1049,11 +1101,10 @@ class IndexSearcher:
         deleted_bc = self._deleted_bc
         lidf = {t: idf[t] for t in int_union}
 
-        def run_seg(pdf):
+        def run_seg(seg_id, term_rows):
             import pandas as pd
             import pyarrow.parquet as pq
 
-            seg_id = int(pdf["seg_id"].iloc[0])
             dm = pq.read_table(
                 f"{seg_dirs[seg_id]}/docmap.parquet", columns=_BASE_COLS
             ).to_pandas()
@@ -1064,8 +1115,7 @@ class IndexSearcher:
                 None, dm, deleted_bc.value if deleted_bc else None
             )
             frames = []
-            for _, row in pdf.iterrows():
-                t = row["term"]
+            for t, row in term_rows.items():
                 d, tf = TermPostings(row, 0.0).decode_all()
                 if live is not None:
                     m = np.asarray(live)[d]
@@ -1089,14 +1139,11 @@ class IndexSearcher:
                 return pd.DataFrame(columns=cols)
             return pd.concat(frames, ignore_index=True)[cols]
 
-        contribs = (
-            self.postings()
-            .filter(F.col("term").isin(sorted(int_union)))
-            .groupBy("seg_id")
-            .applyInPandas(
-                run_seg,
-                "term string, conv_id string, turn_idx int, contrib double",
-            )
+        # the batched query is an OR over the interesting terms
+        contribs = self.each_segment(
+            run_seg,
+            "term string, conv_id string, turn_idx int, contrib double",
+            BooleanSpec(should=tuple(sorted(int_union))),
         )
         scored = (
             contribs.join(F.broadcast(src_map), "term")
@@ -1193,10 +1240,9 @@ class IndexSearcher:
                 )
             )
 
-        def run(pdf):
+        def run(_seg_id, term_rows):
             import pandas as pd
 
-            term_rows = {r["term"]: r for _, r in pdf.iterrows()}
             rows = []
             for t in term_rows:
                 if t not in terms:
@@ -1221,13 +1267,9 @@ class IndexSearcher:
                     rows.append(('"' + " ".join(ph) + '"', int(ptf[m][0])))
             return pd.DataFrame(rows, columns=["term", "tf"])
 
-        tfdf = (
-            self.postings()
-            .filter(
-                (F.col("seg_id") == seg_id) & F.col("term").isin(scan_terms)
-            )
-            .groupBy("seg_id")
-            .applyInPandas(run, "term string, tf long")
+        tfdf = self.each_segment(
+            run, "term string, tf long", spec, terms=scan_terms,
+            seg_ids=[seg_id],
         )
 
         def _idf(t: str) -> float:
@@ -1326,17 +1368,15 @@ class IndexSearcher:
         bm = spec.boost_map
         seg_ids = sorted(by_seg)
 
-        def run_seg(pdf):
+        def run_seg(seg_id, term_rows):
             import pandas as pd
 
-            seg_id = int(pdf["seg_id"].iloc[0])
             want = by_seg[seg_id]
             ords = np.array([w[0] for w in want], dtype=np.int64)
             order = np.argsort(ords)
             s_ords = ords[order]
             rows = []
-            for _, row in pdf.iterrows():
-                t = row["term"]
+            for t, row in term_rows.items():
                 p = TermPostings(row, 0.0)
                 blocks = p.blocks_for_docs(s_ords)
                 d, tf = p.decode_blocks(blocks)
@@ -1349,14 +1389,9 @@ class IndexSearcher:
                 rows, columns=["conv_id", "turn_idx", "term", "tf"]
             )
 
-        tfdf = (
-            self.postings()
-            .filter(
-                F.col("seg_id").isin(seg_ids) & F.col("term").isin(terms)
-            )
-            .groupBy("seg_id")
-            .applyInPandas(run_seg, "conv_id string, turn_idx int, "
-                                    "term string, tf long")
+        tfdf = self.each_segment(
+            run_seg, "conv_id string, turn_idx int, term string, tf long",
+            spec, terms=terms, seg_ids=seg_ids,
         )
 
         def _idf(t: str) -> float:
@@ -1400,8 +1435,8 @@ class IndexSearcher:
         terms over-represented in the query's hit set vs the corpus,
         scored fg_df²/bg_df (the battery op's pinned formula).
 
-        Physical — zero shuffle until the tiny term aggregation: the
-        seg-id driver fans out one task per segment; each task reads
+        Physical — zero shuffle until the tiny term aggregation: one
+        each_segment pass visits every segment; each task reads
         its OWN postings file, computes the segment's hit DocSet once
         (match_segment), then counts |postings(term) ∩ hits| per term
         with doc-level decodes only (no position bytes). Per-segment
@@ -1415,34 +1450,24 @@ class IndexSearcher:
              SignificantTermsQParserPlugin.java"""
         import numpy as np
 
-        from lucene_solr_spark.query.scorer import TermPostings, match_segment
+        from lucene_solr_spark.query.scorer import TermPostings
 
         if spec.needs_rewrite:
             spec = self.rewrite(spec)
         seg_dirs = self.seg_dir_by_id
-        dm_cols = filter_cols(spec, _BASE_COLS)
-        deleted_bc = self._deleted_bc
-        lspec = spec
+        cols = postings_task_columns(spec)
+        dom = SegmentDomain(self, spec, [])
 
-        def run_seg(pdf):
+        def run_seg(seg_id, _term_rows):
             import pandas as pd
             import pyarrow.parquet as pq
 
-            seg_id = int(pdf["seg_id"].iloc[0])
+            # candidate enumeration reads the segment's WHOLE postings
             post = pq.read_table(
-                f"{seg_dirs[seg_id]}/postings.parquet",
-                columns=postings_task_columns(lspec),
+                f"{seg_dirs[seg_id]}/postings.parquet", columns=cols
             ).to_pandas()
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            ).to_pandas()
-            allowed = apply_deletes(
-                filter_mask(dm, lspec), dm,
-                deleted_bc.value if deleted_bc else None,
-            )
             term_rows = {r["term"]: r for _, r in post.iterrows()}
-            max_dl = int(dm["doc_len"].max()) if len(dm) else 0
-            hits = match_segment(lspec, term_rows, len(dm), allowed, max_dl)
+            _dm, hits = dom.read(seg_id, term_rows)
             if len(hits) == 0:
                 return pd.DataFrame(columns=["term", "fg", "df"])
             out_t, out_f, out_d = [], [], []
@@ -1455,9 +1480,7 @@ class IndexSearcher:
                     out_d.append(int(row["df"]))
             return pd.DataFrame({"term": out_t, "fg": out_f, "df": out_d})
 
-        partials = self.seg_driver().groupBy("seg_id").applyInPandas(
-            run_seg, "term string, fg long, df long"
-        )
+        partials = self.each_segment(run_seg, "term string, fg long, df long")
         agg = partials.groupBy("term").agg(
             F.sum("fg").alias("fg_df"), F.sum("df").alias("bg_df")
         )
@@ -1551,10 +1574,9 @@ class IndexSearcher:
 
         lcursor = cursor
 
-        def run_seg(pdf: pd.DataFrame) -> pd.DataFrame:
+        def run_seg(seg_id, _term_rows):
             import pyarrow.parquet as pq
 
-            seg_id = int(pdf["seg_id"].iloc[0])
             pf = pq.ParquetFile(f"{seg_dirs[seg_id]}/docmap.parquet")
             conv_i = pf.schema_arrow.names.index("conv_id")
             groups = range(pf.num_row_groups)
@@ -1597,48 +1619,84 @@ class IndexSearcher:
                 return pd.DataFrame(columns=cols)
             return pd.concat(got, ignore_index=True)[cols]
 
-        cands = self.seg_driver().groupBy("seg_id").applyInPandas(
-            run_seg, schema
-        )
+        cands = self.each_segment(run_seg, schema)
         return cands.orderBy("conv_id", "turn_idx").limit(kk)
 
-    # -- segment-driver helper -----------------------------------------
-    def seg_driver(self) -> DataFrame:
-        """One row per committed segment — the MatchAllDocs-style plan
-        driver: guarantees every segment runs, even ones containing
-        none of a query's terms (pure-negative / filter-only specs,
-        MatchAll facet domains)."""
-        seg_ids = sorted(self.seg_dir_by_id)
-        # one TASK per segment only up to the cluster's core count:
-        # past that, tasks serve several segment GROUPS sequentially
-        # (same per-segment UDF calls, fewer scheduling waves — at 192
-        # segments on local[32] this is 6× less task overhead, and on
-        # a 1000-executor cluster it still spreads one segment per
-        # core)
-        n_parts = min(
-            len(seg_ids),
-            max(self.spark.sparkContext.defaultParallelism, 1),
+    # -- per-segment fan-out -------------------------------------------
+    def each_segment(
+        self,
+        fn,
+        schema: str,
+        spec: BooleanSpec | None = None,
+        terms=None,
+        visit_all: bool | None = None,
+        seg_ids=None,
+    ) -> DataFrame:
+        """Run ``fn(seg_id, term_rows) -> pandas.DataFrame`` once per
+        segment and union the frames — the ``IndexSearcher#search``
+        leaf loop. Every per-segment pass in the engine goes through
+        here; nothing shuffles to reach its segment.
+
+        Physical: ``spark.range(n_segs).mapInPandas`` — one stage, no
+        exchange, one task per segment up to the cluster's core count
+        (past that a task serves several segments in turn: at 192
+        segments on local[32] that is 6× less task overhead, and on a
+        1000-executor cluster it still spreads one segment per core).
+        Each task reads its OWN segment's postings rows for ``terms``
+        straight from Parquet (row-group pruned on the term-sorted
+        file; position columns only when ``spec`` needs them, see
+        postings_task_columns) and hands ``fn`` a ``{term: row}`` map.
+
+        ``terms`` defaults to ``spec.lookup_terms``. A segment holding
+        none of them is skipped unless ``visit_all`` — the default
+        when the domain has no scoring terms (MatchAll, pure-negative
+        or filter-only specs), whose term-free segments still match.
+        ``seg_ids`` restricts the pass to those segments."""
+        if terms is None:
+            terms = spec.lookup_terms if spec is not None else ()
+        terms = sorted(set(terms))
+        if visit_all is None:
+            visit_all = not (
+                spec.scoring_terms if spec is not None else terms
+            )
+        ids = sorted(self.seg_dir_by_id if seg_ids is None else seg_ids)
+        seg_dirs = self.seg_dir_by_id
+        cols = postings_task_columns(spec)
+        n_parts = max(
+            1, min(len(ids), self.spark.sparkContext.defaultParallelism)
         )
-        # with Arrow on (get_spark), a pandas frame becomes a JVM-only
-        # LocalRelation; a list of tuples would cost a Python worker
-        # pass (parallelize + an identity map) on every execution of
-        # every seg-driver plan
-        return self.spark.createDataFrame(
-            pd.DataFrame({"seg_id": seg_ids}, dtype="int32"), "seg_id int"
-        ).repartition(n_parts, "seg_id")
+
+        def run(batches):
+            for batch in batches:
+                for i in batch["id"].tolist():
+                    seg_id = ids[i]
+                    term_rows = {}
+                    if terms:
+                        term_rows = segment_postings(
+                            seg_dirs[seg_id], terms, cols
+                        )
+                        if not term_rows and not visit_all:
+                            continue
+                    out = fn(seg_id, term_rows)
+                    if len(out):
+                        yield out
+
+        return self.spark.range(0, len(ids), 1, n_parts).mapInPandas(
+            run, schema
+        )
 
     # -- DocSet (all matches, no scoring) ------------------------------
     def docset(self, spec: BooleanSpec) -> DataFrame:
         """ALL matching (conv_id, turn_idx) — ``getDocSet`` analog,
         used by filter queries, exports, and MultiTermQuery rewrites.
 
-        Specs WITHOUT positive terms (pure-negative ``-stream`` /
-        filter-only ``role:assistant``) run over the segment-id driver
-        so term-free segments still contribute (Solr wraps these as
-        MatchAllDocs minus exclusions, ``QueryUtils#makeQueryable``);
-        each task then reads its own segment's postings for the
-        excluded terms straight from Parquet (term-pruned by row-group
-        stats) — no corpus shuffle either way."""
+        One :meth:`each_segment` pass: each task reads its own
+        segment's postings for the spec's terms straight from Parquet
+        (term-pruned by row-group stats). Specs WITHOUT positive terms
+        (pure-negative ``-stream`` / filter-only ``role:assistant``)
+        visit every segment so term-free segments still contribute
+        (Solr wraps these as MatchAllDocs minus exclusions,
+        ``QueryUtils#makeQueryable``)."""
         if spec.needs_rewrite:
             spec = self.rewrite(spec)
         if spec.min_should_match > len(spec.should):
@@ -1647,82 +1705,17 @@ class IndexSearcher:
             return self.spark.createDataFrame(
                 [], "conv_id string, turn_idx int"
             )
-        ds_bc = self._docset_cached_bc(spec)
-        if ds_bc is not None:
-            # queryResultCache hit: serve keys straight off the
-            # broadcast hit bitsets — no postings read, no fq
-            # evaluation, docmap scan pruned to the two key columns
-            # (liveDocs already baked into the cached bits)
-            seg_dirs = self.seg_dir_by_id
+        # a queryResultCache hit serves keys straight off the cached
+        # hit bits: no postings read, no fq evaluation, docmap read
+        # pruned to the two key columns (liveDocs baked into the bits)
+        dom = SegmentDomain(self, spec, ["conv_id", "turn_idx"])
 
-            def from_bits(pdf):
-                import numpy as np
-                import pandas as pd
-                import pyarrow.parquet as pq
+        def run_seg(seg_id, term_rows):
+            dm, hits = dom.read(seg_id, term_rows)
+            return dm.iloc[hits][["conv_id", "turn_idx"]]
 
-                seg_id = int(pdf["seg_id"].iloc[0])
-                bits, n = ds_bc.get(seg_id)
-                hits = np.flatnonzero(np.unpackbits(
-                    np.frombuffer(bits, np.uint8), count=n
-                ))
-                dm = pq.read_table(
-                    f"{seg_dirs[seg_id]}/docmap.parquet",
-                    columns=["conv_id", "turn_idx"],
-                ).to_pandas()
-                sel = dm.iloc[hits]
-                return pd.DataFrame(
-                    {"conv_id": sel["conv_id"], "turn_idx": sel["turn_idx"]}
-                )
-
-            return self.seg_driver().groupBy("seg_id").applyInPandas(
-                from_bits, schema="conv_id string, turn_idx int"
-            )
-        seg_dirs = self.seg_dir_by_id
-        dm_cols = filter_cols(spec, _BASE_COLS)
-        pure_negative = not spec.scoring_terms
-        lookup = list(spec.lookup_terms)
-        deleted_bc = self._deleted_bc
-
-        def run_seg(pdf):
-            import pandas as pd
-            import pyarrow.parquet as pq
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            ).to_pandas()
-            allowed = apply_deletes(
-                filter_mask(dm, spec), dm,
-                deleted_bc.value if deleted_bc else None,
-            )
-            if pure_negative:
-                term_rows = {}
-                if lookup:  # filter-only specs never touch postings
-                    post_tbl = pq.read_table(
-                        f"{seg_dirs[seg_id]}/postings.parquet",
-                        filters=[("term", "in", lookup)],
-                        columns=postings_task_columns(spec),
-                    ).to_pandas()
-                    term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-            else:
-                term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-            from lucene_solr_spark.query.scorer import match_segment
-
-            hits = match_segment(
-                spec, term_rows, len(dm), allowed,
-                int(dm["doc_len"].max()) if len(dm) else 0,
-            )
-            sel = dm.iloc[hits]
-            return pd.DataFrame(
-                {"conv_id": sel["conv_id"], "turn_idx": sel["turn_idx"]}
-            )
-
-        if pure_negative:
-            driver = self.seg_driver()
-        else:
-            driver = self.postings().filter(F.col("term").isin(lookup))
-        return driver.groupBy("seg_id").applyInPandas(
-            run_seg, schema="conv_id string, turn_idx int"
+        return self.each_segment(
+            run_seg, "conv_id string, turn_idx int", dom.postings_spec
         )
 
     def payload_score(
@@ -1764,13 +1757,12 @@ class IndexSearcher:
         deleted_bc = self._deleted_bc
         lfunc = func
 
-        def run_seg(pdf):
+        def run_seg(seg_id, term_rows):
             import pandas as pd
             import pyarrow.parquet as pq
 
             from lucene_solr_spark.query.scorer import TermPostings
 
-            seg_id = int(pdf["seg_id"].iloc[0])
             dm = pq.read_table(
                 f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
             ).to_pandas()
@@ -1778,13 +1770,8 @@ class IndexSearcher:
                 filter_mask(dm, spec), dm,
                 deleted_bc.value if deleted_bc else None,
             )
-            row = next(
-                (r for _, r in pdf.iterrows() if r["term"] == term), None
-            )
             empty = pd.DataFrame(columns=["conv_id", "turn_idx", "score"])
-            if row is None:
-                return empty
-            tp = TermPostings(row, 0.0)
+            tp = TermPostings(term_rows[term], 0.0)
             d, tf, pos = tp.positions(np.arange(tp.n_blocks))
             if allowed is not None:
                 keep = allowed[d]
@@ -1811,10 +1798,8 @@ class IndexSearcher:
                 }
             )
 
-        post = self.postings().filter(F.col("term") == term)
-        hits = post.groupBy("seg_id").applyInPandas(
-            run_seg, schema=RESULT_SCHEMA
-        )
+        # the payload decode reads the position stream: all columns
+        hits = self.each_segment(run_seg, RESULT_SCHEMA, terms=(term,))
         if round_to is not None:
             hits = hits.withColumn("score", F.round("score", round_to))
         return hits.orderBy(
@@ -1844,25 +1829,19 @@ class IndexSearcher:
         seg_dirs = self.seg_dir_by_id
         deleted_bc = self._deleted_bc
 
-        def run_seg(pdf):
+        def run_seg(seg_id, term_rows):
             import pandas as pd
             import pyarrow.parquet as pq
 
             from lucene_solr_spark.query.scorer import TermPostings
 
-            seg_id = int(pdf["seg_id"].iloc[0])
             dm = pq.read_table(
                 f"{seg_dirs[seg_id]}/docmap.parquet", columns=_BASE_COLS
             ).to_pandas()
             allowed = apply_deletes(
                 None, dm, deleted_bc.value if deleted_bc else None
             )
-            row = next(
-                (r for _, r in pdf.iterrows() if r["term"] == term), None
-            )
-            if row is None:
-                return pd.DataFrame(columns=["conv_id", "turn_idx", "tf"])
-            d, tf = TermPostings(row, 0.0).decode_all()
+            d, tf = TermPostings(term_rows[term], 0.0).decode_all()
             if allowed is not None:
                 keep = allowed[d]
                 d, tf = d[keep], tf[keep]
@@ -1875,9 +1854,9 @@ class IndexSearcher:
                 }
             )
 
-        post = self.postings().filter(F.col("term") == term)
-        return post.groupBy("seg_id").applyInPandas(
-            run_seg, schema="conv_id string, turn_idx int, tf long"
+        return self.each_segment(
+            run_seg, "conv_id string, turn_idx int, tf long",
+            BooleanSpec(must=(term,)),
         )
 
     def payload_check(
@@ -1922,20 +1901,14 @@ class IndexSearcher:
         seg_dirs = self.seg_dir_by_id
         dm_cols = filter_cols(spec, _BASE_COLS)
         deleted_bc = self._deleted_bc
+        # None on a pre-max_dl manifest: the task takes it from the
+        # docmap it reads anyway
         max_dl = {
             sid: self.manifest.seg_max_dl(sid) for sid in seg_dirs
         }
-        if any(v is None for v in max_dl.values()):
-            max_dl = {
-                int(r["seg_id"]): int(r["mdl"])
-                for r in self.docmap()
-                .groupBy("seg_id")
-                .agg(F.max("doc_len").alias("mdl"))
-                .collect()
-            }
         terms_t, pays = tuple(terms), tuple(payloads)
 
-        def run_seg(pdf):
+        def run_seg(seg_id, term_rows):
             import pandas as pd
             import pyarrow.parquet as pq
 
@@ -1945,13 +1918,16 @@ class IndexSearcher:
             )
 
             empty = pd.DataFrame(columns=["conv_id", "turn_idx", "score"])
-            seg_id = int(pdf["seg_id"].iloc[0])
-            term_rows = {r["term"]: r for _, r in pdf.iterrows()}
             tps = [
                 TermPostings(term_rows[t], 0.0) if t in term_rows else None
                 for t in terms_t
             ]
-            seg_max = int(max_dl[seg_id])
+            dm = pq.read_table(
+                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
+            ).to_pandas()
+            seg_max = max_dl[seg_id]
+            if seg_max is None:
+                seg_max = int(dm["doc_len"].max()) if len(dm) else 0
             keys = _phrase_start_keys(tps, seg_max)
             if len(keys) == 0:
                 return empty
@@ -1963,9 +1939,6 @@ class IndexSearcher:
             docs = keys[m] // stride
             if len(docs) == 0:
                 return empty
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            ).to_pandas()
             allowed = apply_deletes(
                 filter_mask(dm, spec), dm,
                 deleted_bc.value if deleted_bc else None,
@@ -1984,10 +1957,7 @@ class IndexSearcher:
                 }
             )
 
-        post = self.postings().filter(F.col("term").isin(list(terms_t)))
-        hits = post.groupBy("seg_id").applyInPandas(
-            run_seg, schema=RESULT_SCHEMA
-        )
+        hits = self.each_segment(run_seg, RESULT_SCHEMA, spec)
         if round_to is not None:
             hits = hits.withColumn("score", F.round("score", round_to))
         return hits.orderBy(

@@ -18,15 +18,18 @@ The fork's signature path, re-expressed Spark-first:
   cross the shuffle — never the full term cardinality, which is what
   makes the plan survive a 100x scale-up of facet cardinality.
 
-Counting and matching happen in ONE cogrouped ``applyInPandas`` pass
-over (postings, docmap) — the hit DocSet never leaves the executor;
-what shuffles is ``(seg_id, term_ord, cnt)`` partials (tiny).
+Matching, counting and the ord→term lookup happen in ONE per-segment
+pass (``IndexSearcher.each_segment``): each task reads its own
+segment's postings rows, docmap ordinal column and dictionary, so the
+hit DocSet never leaves the executor and nothing shuffles to reach a
+segment; what shuffles is the named ``(seg_id, term, cnt)`` partials
+(tiny).
 
 Physical plan::
 
-    postings(term ∈ domain terms)  ─┐ cogroup by seg_id
-    docmap(doc_ord, <field>_ord)   ─┘ → applyInPandas(sparse count)
-      → join dicts(seg_id, term_ord → term)        [facet ord→term lookup]
+    spark.range(n_segs).mapInPandas, one task per segment:
+        own postings(term ∈ domain terms) + docmap(<field>_ord)
+        → sparse count → ord→term from own dicts.parquet
       → phase 1: Window per seg, rank ≤ 1.5k+10 → candidate terms
       → phase 2: semi-join candidates → groupBy(term).sum(cnt)
       → orderBy(cnt desc, term) limit k
@@ -41,11 +44,34 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.query.executor import postings_task_columns
+from lucene_solr_spark.query.executor import SegmentDomain
 from lucene_solr_spark.query.model import BooleanSpec
-from lucene_solr_spark.query.scorer import match_segment
 
-PARTIAL_SCHEMA = "seg_id int, term_ord int, cnt long"
+PARTIAL_SCHEMA = "seg_id int, term string, cnt long"
+
+
+def _ord_terms(seg_dir: str, field: str) -> np.ndarray:
+    """TASK-side ``lookupOrd``: the segment's ord → term table for
+    ``field``, read from its OWN ``dicts.parquet`` — partials leave the
+    counting task already named, so no plan joins the dictionaries."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(
+        f"{seg_dir}/dicts.parquet", columns=["term_ord", "term"],
+        filters=[("field", "==", field)],
+    )
+    ords = t.column("term_ord").to_numpy()
+    lut = np.empty(int(ords.max()) + 1 if len(ords) else 0, dtype=object)
+    lut[ords] = t.column("term").to_numpy(zero_copy_only=False)
+    return lut
+
+
+def _named(lut: np.ndarray, ords: np.ndarray) -> np.ndarray:
+    """Terms for ``ords``; a negative ord (missing value) stays NULL."""
+    out = np.full(len(ords), None, dtype=object)
+    ok = ords >= 0
+    out[ok] = lut[ords[ok]]
+    return out
 
 
 @dataclass(frozen=True)
@@ -100,19 +126,18 @@ def _overrequest(limit: int) -> int:
 
 
 def segment_partials(searcher, req: FacetRequest, spec: BooleanSpec | None) -> DataFrame:
-    """Per-segment sparse ordinal counts: (seg_id, term_ord, cnt).
+    """Per-segment sparse counts, named in the task: (seg_id, term,
+    cnt); facet.missing adds one NULL-term row per segment.
 
-    No docmap shuffle: each counting task reads its OWN segment's
-    ordinal column straight from the segment Parquet (the per-segment
-    docvalues access of ``DocValuesFacets#getCounts``). With a query
-    domain, only the term-pruned postings rows shuffle; with a
-    MatchAllDocs domain, only a seg_id list does.
+    One :meth:`IndexSearcher.each_segment` pass: each counting task
+    reads its OWN segment's ordinal column straight from the segment
+    Parquet (the per-segment docvalues access of
+    ``DocValuesFacets#getCounts``), its own postings rows for the
+    domain's terms, and its own dictionary for ``lookupOrd``.
     """
     ord_col = f"{req.field}_ord"
-    seg_dirs = searcher.seg_dir_by_id
+    field = req.field
     want_missing = req.missing
-    has_deletes = bool(searcher.deleted_keys)  # drives column reads
-    deleted_bc = searcher._deleted_bc  # broadcast mask (None = no-op)
     if req.group_by not in (None, "conv_id"):
         # only the segment-local block key sums correctly (see
         # FacetRequest.group_by); anything else would need a global
@@ -120,13 +145,14 @@ def segment_partials(searcher, req: FacetRequest, spec: BooleanSpec | None) -> D
         raise ValueError(f"group_by={req.group_by!r}: only conv_id is "
                          "segment-local")
     grouped = req.group_by is not None
+    dom = SegmentDomain(
+        searcher, spec, [ord_col] + (["conv_id"] if grouped else [])
+    )
 
-    def _count_ords(
-        seg_id: int,
-        hits: np.ndarray | None,
-        ords: np.ndarray,
-        groups: np.ndarray | None = None,
-    ) -> pd.DataFrame:
+    def count(seg_id: int, term_rows) -> pd.DataFrame:
+        dm, hits = dom.read(seg_id, term_rows)
+        ords = dm[ord_col].to_numpy(np.int64)
+        groups = dm["conv_id"].to_numpy() if grouped else None
         if hits is not None:
             ords = ords[hits]
             if groups is not None:
@@ -157,120 +183,12 @@ def segment_partials(searcher, req: FacetRequest, spec: BooleanSpec | None) -> D
         return pd.DataFrame(
             {
                 "seg_id": np.full(len(uniq), seg_id, np.int32),
-                "term_ord": uniq.astype(np.int32),
+                "term": _named(_ord_terms(dom.seg_dirs[seg_id], field), uniq),
                 "cnt": cnt.astype(np.int64),
             }
         )
 
-    if spec is None:
-        seg_df = searcher.seg_driver()
-
-        def count_all(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            from lucene_solr_spark.query.executor import apply_deletes
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            cols = [ord_col] + (["conv_id", "turn_idx"] if has_deletes else [])
-            if grouped and "conv_id" not in cols:
-                cols.append("conv_id")
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=cols
-            ).to_pandas()
-            ords = dm[ord_col].to_numpy().astype(np.int64)
-            live = apply_deletes(None, dm, deleted_bc.value if deleted_bc else None)
-            hits = None if live is None else np.flatnonzero(live)
-            groups = dm["conv_id"].to_numpy() if grouped else None
-            return _count_ords(seg_id, hits, ords, groups)
-
-        return seg_df.groupBy("seg_id").applyInPandas(count_all, PARTIAL_SCHEMA)
-
-    ds_bc = searcher._docset_cached_bc(spec)
-    if ds_bc is not None:
-        # queryResultCache hit (see IndexSearcher.cache_docset): the
-        # domain's per-segment hit bitsets are already broadcast, so
-        # the sparse pass skips match_segment, the postings read AND
-        # the fq docvalues columns — each task unpacks its bits and
-        # bincounts the ord column (liveDocs baked into the bits)
-        seg_df = searcher.seg_driver()
-
-        def count_cached(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            bits, n = ds_bc.get(seg_id)
-            hits = np.flatnonzero(np.unpackbits(
-                np.frombuffer(bits, np.uint8), count=n
-            ))
-            cols = [ord_col] + (["conv_id"] if grouped else [])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=cols
-            ).to_pandas()
-            groups = dm["conv_id"].to_numpy() if grouped else None
-            return _count_ords(
-                seg_id, hits, dm[ord_col].to_numpy().astype(np.int64),
-                groups,
-            )
-
-        return seg_df.groupBy("seg_id").applyInPandas(
-            count_cached, PARTIAL_SCHEMA
-        )
-
-    from lucene_solr_spark.query.executor import apply_deletes, filter_cols, filter_mask
-
-    lookup = list(spec.lookup_terms)
-    pure_negative = not spec.scoring_terms
-    dm_cols = filter_cols(spec, ["doc_ord", "doc_len", ord_col])
-    if has_deletes:
-        dm_cols += [c for c in ("conv_id", "turn_idx") if c not in dm_cols]
-    if grouped and "conv_id" not in dm_cols:
-        dm_cols.append("conv_id")
-
-    def count_hits(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow.parquet as pq
-
-        seg_id = int(pdf["seg_id"].iloc[0])
-        dm = pq.read_table(
-            f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-        ).to_pandas()  # written sorted by doc_ord
-        n_docs = len(dm)
-        allowed = apply_deletes(
-            filter_mask(dm, spec), dm, deleted_bc.value if deleted_bc else None
-        )
-        if pure_negative:
-            term_rows = {}
-            if lookup:
-                post_tbl = pq.read_table(
-                    f"{seg_dirs[seg_id]}/postings.parquet",
-                    filters=[("term", "in", lookup)],
-                    columns=postings_task_columns(spec),
-                ).to_pandas()
-                term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-        else:
-            term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-        max_dl = int(dm["doc_len"].max()) if n_docs else 0
-        hits = match_segment(spec, term_rows, n_docs, allowed, max_dl)
-        groups = dm["conv_id"].to_numpy() if grouped else None
-        return _count_ords(
-            seg_id, hits, dm[ord_col].to_numpy(np.int64), groups
-        )
-
-    # pure-negative / filter-only domains must visit EVERY segment
-    # (term-pruned postings would silently drop term-free segments);
-    # the seg-id driver guarantees that, tasks read their own postings.
-    driver = (
-        searcher.seg_driver() if pure_negative
-        else searcher.postings().filter(F.col("term").isin(lookup))
-    )
-    return driver.groupBy("seg_id").applyInPandas(count_hits, PARTIAL_SCHEMA)
-
-
-def _with_terms(searcher, partials: DataFrame, field: str) -> DataFrame:
-    """Ordinal→term lookup (``lookupOrd``): join per-segment dicts."""
-    dicts = searcher.dicts().filter(F.col("field") == field).select(
-        "seg_id", "term_ord", "term"
-    )
-    return partials.join(dicts, ["seg_id", "term_ord"], "inner")
+    return searcher.each_segment(count, PARTIAL_SCHEMA, dom.postings_spec)
 
 
 _METRIC_KINDS = (
@@ -303,8 +221,8 @@ def facet_metrics(
     inside the SAME per-segment sparse pass as the counts (np.unique
     inverse + weighted bincount / ufunc.at over hit ordinals only),
     merged as algebraic partials (Σcnt, Σsum → avg; per-segment
-    min/max → global min/max). Only (seg_id, term_ord, cnt, partials)
-    rows ever shuffle — one narrow row per (segment, bucket).
+    min/max → global min/max). Only (term, cnt, partials) rows ever
+    shuffle — one narrow row per (segment, bucket).
 
     ``aggs`` is a tuple of (kind, column) with kind ∈ sum|avg|min|max|
     sumsq|stddev|variance|missing|countvals|unique; the legacy
@@ -362,84 +280,22 @@ def facet_metrics(
         + [(f"ms_{c}", "long") for c in ms_cols]
         + [(f"u_{c}", "string") for c in uq_cols]
     )
-    partial_schema = "seg_id int, term_ord int, cnt long, " + ", ".join(
+    partial_schema = "term string, cnt long, " + ", ".join(
         f"{p} {t}" for p, t in partial_cols
     )
     ord_col = f"{field}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    deleted_bc = searcher._deleted_bc
-    has_deletes = bool(searcher.deleted_keys)
-
-    from lucene_solr_spark.query.executor import (
-        apply_deletes,
-        filter_cols,
-        filter_mask,
-    )
-
     if spec is not None and spec.needs_rewrite:
         spec = searcher.rewrite(spec)
-    ds_bc = searcher._docset_cached_bc(spec) if spec is not None else None
-    lookup = list(spec.lookup_terms) if spec is not None else []
-    pure_negative = spec is not None and not spec.scoring_terms
-    base_cols = ["doc_ord", "doc_len", ord_col]
-    base_cols += [c for c in metric_cols if c not in base_cols]
-    if ds_bc is not None:
-        # queryResultCache hit: the hit bits replace match_segment —
-        # only the ord and metric columns are ever read
-        dm_cols = list(dict.fromkeys([ord_col, *metric_cols]))
-    else:
-        dm_cols = (
-            filter_cols(spec, base_cols) if spec is not None
-            else list(base_cols)
-        )
-        if has_deletes:
-            dm_cols += [
-                c for c in ("conv_id", "turn_idx") if c not in dm_cols
-            ]
+    dom = SegmentDomain(searcher, spec, [ord_col, *metric_cols])
 
-    def run_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow.parquet as pq
-
-        seg_id = int(pdf["seg_id"].iloc[0])
-        dm = pq.read_table(
-            f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-        ).to_pandas()
-        n_docs = len(dm)
+    def run_seg(seg_id: int, term_rows) -> pd.DataFrame:
+        dm, hits = dom.read(seg_id, term_rows)
         ords = dm[ord_col].to_numpy(np.int64)
         # numeric kinds read float64 (nulls → NaN, masked out below);
         # missing/countvals/unique read the raw values + a null mask
         vals = {c: dm[c].to_numpy(np.float64) for c in num_cols}
         nulls = {c: dm[c].isna().to_numpy() for c in metric_cols}
         objs = {c: dm[c].to_numpy(object) for c in uq_cols}
-        if ds_bc is not None:
-            bits, n = ds_bc.get(seg_id)
-            hits = np.flatnonzero(np.unpackbits(
-                np.frombuffer(bits, np.uint8), count=n
-            ))
-        elif spec is None:
-            live = apply_deletes(
-                None, dm, deleted_bc.value if deleted_bc else None
-            )
-            hits = None if live is None else np.flatnonzero(live)
-        else:
-            allowed = apply_deletes(
-                filter_mask(dm, spec),
-                dm,
-                deleted_bc.value if deleted_bc else None,
-            )
-            if pure_negative:
-                term_rows = {}
-                if lookup:
-                    post_tbl = pq.read_table(
-                        f"{seg_dirs[seg_id]}/postings.parquet",
-                        filters=[("term", "in", lookup)],
-                        columns=postings_task_columns(spec),
-                    ).to_pandas()
-                    term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-            else:
-                term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-            max_dl = int(dm["doc_len"].max()) if n_docs else 0
-            hits = match_segment(spec, term_rows, n_docs, allowed, max_dl)
         if hits is not None:
             ords = ords[hits]
             vals = {c: v[hits] for c, v in vals.items()}
@@ -454,8 +310,7 @@ def facet_metrics(
         objs = {c: v[keep] for c, v in objs.items()}
         uniq, inv = np.unique(ords, return_inverse=True)
         data = {
-            "seg_id": np.full(len(uniq), seg_id, np.int32),
-            "term_ord": uniq.astype(np.int32),
+            "term": _ord_terms(dom.seg_dirs[seg_id], field)[uniq],
             "cnt": np.bincount(inv).astype(np.int64),
         }
         nb = len(uniq)
@@ -494,14 +349,7 @@ def facet_metrics(
             data[f"u_{c}"] = [_USEP.join(sorted(s)) for s in sets]
         return pd.DataFrame(data)
 
-    if spec is None or pure_negative or ds_bc is not None:
-        driver = searcher.seg_driver()
-    else:
-        driver = searcher.postings().filter(F.col("term").isin(lookup))
-    partials = driver.groupBy("seg_id").applyInPandas(
-        run_seg, partial_schema
-    )
-    parts = _with_terms(searcher, partials, field)
+    parts = searcher.each_segment(run_seg, partial_schema, dom.postings_spec)
     merge_aggs = [F.sum("cnt").alias("cnt")]
     merge_aggs += [F.sum(f"s_{c}").alias(f"s_{c}") for c in sum_cols]
     merge_aggs += [F.sum(f"ss_{c}").alias(f"ss_{c}") for c in sq_cols]
@@ -582,127 +430,32 @@ def facet_pivot(
 
     Per-segment sparse PAIR counting: one ``np.unique`` over the
     packed (ord1, ord2) key of hit docs — only touched pairs leave the
-    executor, so shuffle width is bounded by distinct co-occurring
-    pairs, not field-cardinality product. Rows with either value
-    missing (ord -1) are excluded, Lucene missing semantics."""
+    executor (named in the task), so shuffle width is bounded by
+    distinct co-occurring pairs, not field-cardinality product. Rows
+    with either value missing (ord -1) are excluded, Lucene missing
+    semantics."""
     o1, o2 = f"{f1}_ord", f"{f2}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    has_deletes = bool(searcher.deleted_keys)
-    deleted_bc = searcher._deleted_bc
-    pair_schema = "seg_id int, ord1 int, ord2 int, cnt long"
+    dom = SegmentDomain(searcher, spec, [o1, o2])
 
-    def count_pairs(seg_id: int, hits: np.ndarray | None,
-                    a: np.ndarray, b: np.ndarray) -> pd.DataFrame:
+    def count_pairs(seg_id: int, term_rows) -> pd.DataFrame:
+        dm, hits = dom.read(seg_id, term_rows)
+        a, b = dm[o1].to_numpy(np.int64), dm[o2].to_numpy(np.int64)
         if hits is not None:
             a, b = a[hits], b[hits]
         m = (a >= 0) & (b >= 0)
-        key = a[m].astype(np.int64) * (1 << 31) + b[m]
+        key = a[m] * (1 << 31) + b[m]
         uniq, cnt = np.unique(key, return_counts=True)
+        seg_dir = dom.seg_dirs[seg_id]
         return pd.DataFrame({
-            "seg_id": np.full(len(uniq), seg_id, np.int32),
-            "ord1": (uniq >> 31).astype(np.int32),
-            "ord2": (uniq & ((1 << 31) - 1)).astype(np.int32),
+            "v1": _ord_terms(seg_dir, f1)[uniq >> 31],
+            "v2": _ord_terms(seg_dir, f2)[uniq & ((1 << 31) - 1)],
             "cnt": cnt.astype(np.int64),
         })
 
-    if spec is None:
-        seg_df = searcher.seg_driver()
-
-        def run_all(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            from lucene_solr_spark.query.executor import apply_deletes
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            cols = [o1, o2] + (["conv_id", "turn_idx"] if has_deletes else [])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=cols
-            ).to_pandas()
-            live = apply_deletes(None, dm, deleted_bc.value if deleted_bc else None)
-            hits = None if live is None else np.flatnonzero(live)
-            return count_pairs(
-                seg_id, hits,
-                dm[o1].to_numpy().astype(np.int64),
-                dm[o2].to_numpy().astype(np.int64),
-            )
-
-        pairs = seg_df.groupBy("seg_id").applyInPandas(run_all, pair_schema)
-    elif (ds_bc := searcher._docset_cached_bc(spec)) is not None:
-        # queryResultCache hit: the broadcast hit bits replace
-        # match_segment — only the two ord columns are read
-        def run_cached(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            bits, n = ds_bc.get(seg_id)
-            hits = np.flatnonzero(np.unpackbits(
-                np.frombuffer(bits, np.uint8), count=n
-            ))
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=[o1, o2]
-            ).to_pandas()
-            return count_pairs(
-                seg_id, hits,
-                dm[o1].to_numpy(np.int64), dm[o2].to_numpy(np.int64),
-            )
-
-        pairs = searcher.seg_driver().groupBy("seg_id").applyInPandas(
-            run_cached, pair_schema
-        )
-    else:
-        from lucene_solr_spark.query.executor import apply_deletes, filter_cols, filter_mask
-
-        lookup = list(spec.lookup_terms)
-        pure_negative = not spec.scoring_terms
-        dm_cols = filter_cols(spec, ["doc_ord", "doc_len", o1, o2])
-        if has_deletes:
-            dm_cols += [c for c in ("conv_id", "turn_idx") if c not in dm_cols]
-
-        def run_hits(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            ).to_pandas()
-            allowed = apply_deletes(  # fq domain
-                filter_mask(dm, spec), dm,
-                deleted_bc.value if deleted_bc else None,
-            )
-            if pure_negative:
-                term_rows = {}
-                if lookup:
-                    post_tbl = pq.read_table(
-                        f"{seg_dirs[seg_id]}/postings.parquet",
-                        filters=[("term", "in", lookup)],
-                        columns=postings_task_columns(spec),
-                    ).to_pandas()
-                    term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-            else:
-                term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-            hits = match_segment(
-                spec, term_rows, len(dm), allowed,
-                int(dm["doc_len"].max()) if len(dm) else 0,
-            )
-            return count_pairs(
-                seg_id, hits,
-                dm[o1].to_numpy(np.int64), dm[o2].to_numpy(np.int64),
-            )
-
-        driver = (
-            searcher.seg_driver() if pure_negative
-            else searcher.postings().filter(F.col("term").isin(lookup))
-        )
-        pairs = driver.groupBy("seg_id").applyInPandas(run_hits, pair_schema)
-
-    d1 = searcher.dicts().filter(F.col("field") == f1).select(
-        "seg_id", F.col("term_ord").alias("ord1"), F.col("term").alias("v1")
-    )
-    d2 = searcher.dicts().filter(F.col("field") == f2).select(
-        "seg_id", F.col("term_ord").alias("ord2"), F.col("term").alias("v2")
-    )
     named = (
-        pairs.join(d1, ["seg_id", "ord1"]).join(d2, ["seg_id", "ord2"])
+        searcher.each_segment(
+            count_pairs, "v1 string, v2 string, cnt long", dom.postings_spec
+        )
         .groupBy("v1", "v2").agg(F.sum("cnt").alias("cnt"))
     )
     top1 = (
@@ -746,113 +499,32 @@ def facet_pivot3(
     ref: solr/core/src/java/org/apache/solr/handler/component/
     PivotFacetProcessor.java (doPivots recursion)."""
     o1, o2, o3 = f"{f1}_ord", f"{f2}_ord", f"{f3}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    has_deletes = bool(searcher.deleted_keys)
-    deleted_bc = searcher._deleted_bc
-    triple_schema = "seg_id int, ord1 int, ord2 int, ord3 int, cnt long"
     _B21 = (1 << 21) - 1
+    dom = SegmentDomain(searcher, spec, [o1, o2, o3])
 
-    def count_triples(seg_id: int, hits: np.ndarray | None,
-                      a: np.ndarray, b: np.ndarray,
-                      c: np.ndarray) -> pd.DataFrame:
+    def count_triples(seg_id: int, term_rows) -> pd.DataFrame:
+        dm, hits = dom.read(seg_id, term_rows)
+        a, b, c = (dm[o].to_numpy(np.int64) for o in (o1, o2, o3))
         if hits is not None:
             a, b, c = a[hits], b[hits], c[hits]
         m = (a >= 0) & (b >= 0) & (c >= 0)
-        key = ((a[m].astype(np.int64) << 42)
-               | (b[m].astype(np.int64) << 21) | c[m])
+        key = (a[m] << 42) | (b[m] << 21) | c[m]
         uniq, cnt = np.unique(key, return_counts=True)
+        seg_dir = dom.seg_dirs[seg_id]
         return pd.DataFrame({
-            "seg_id": np.full(len(uniq), seg_id, np.int32),
-            "ord1": (uniq >> 42).astype(np.int32),
-            "ord2": ((uniq >> 21) & _B21).astype(np.int32),
-            "ord3": (uniq & _B21).astype(np.int32),
+            "v1": _ord_terms(seg_dir, f1)[uniq >> 42],
+            "v2": _ord_terms(seg_dir, f2)[(uniq >> 21) & _B21],
+            "v3": _ord_terms(seg_dir, f3)[uniq & _B21],
             "cnt": cnt.astype(np.int64),
         })
 
-    if spec is None:
-        def run_all(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            from lucene_solr_spark.query.executor import apply_deletes
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            cols = [o1, o2, o3] + (
-                ["conv_id", "turn_idx"] if has_deletes else [])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=cols
-            ).to_pandas()
-            live = apply_deletes(
-                None, dm, deleted_bc.value if deleted_bc else None)
-            hits = None if live is None else np.flatnonzero(live)
-            return count_triples(
-                seg_id, hits,
-                dm[o1].to_numpy(np.int64), dm[o2].to_numpy(np.int64),
-                dm[o3].to_numpy(np.int64),
-            )
-
-        triples = searcher.seg_driver().groupBy("seg_id").applyInPandas(
-            run_all, triple_schema)
-    else:
-        from lucene_solr_spark.query.executor import (
-            apply_deletes, filter_cols, filter_mask,
+    named = (
+        searcher.each_segment(
+            count_triples, "v1 string, v2 string, v3 string, cnt long",
+            dom.postings_spec,
         )
-
-        lookup = list(spec.lookup_terms)
-        pure_negative = not spec.scoring_terms
-        dm_cols = filter_cols(spec, ["doc_ord", "doc_len", o1, o2, o3])
-        if has_deletes:
-            dm_cols += [c for c in ("conv_id", "turn_idx")
-                        if c not in dm_cols]
-
-        def run_hits(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            ).to_pandas()
-            allowed = apply_deletes(
-                filter_mask(dm, spec), dm,
-                deleted_bc.value if deleted_bc else None,
-            )
-            if pure_negative:
-                term_rows = {}
-                if lookup:
-                    post_tbl = pq.read_table(
-                        f"{seg_dirs[seg_id]}/postings.parquet",
-                        filters=[("term", "in", lookup)],
-                        columns=postings_task_columns(spec),
-                    ).to_pandas()
-                    term_rows = {
-                        r["term"]: r for _, r in post_tbl.iterrows()}
-            else:
-                term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-            hits = match_segment(
-                spec, term_rows, len(dm), allowed,
-                int(dm["doc_len"].max()) if len(dm) else 0,
-            )
-            return count_triples(
-                seg_id, hits,
-                dm[o1].to_numpy(np.int64), dm[o2].to_numpy(np.int64),
-                dm[o3].to_numpy(np.int64),
-            )
-
-        driver = (
-            searcher.seg_driver() if pure_negative
-            else searcher.postings().filter(F.col("term").isin(lookup))
-        )
-        triples = driver.groupBy("seg_id").applyInPandas(
-            run_hits, triple_schema)
-
-    dicts = searcher.dicts()
-    named = triples
-    for n, fld in ((1, f1), (2, f2), (3, f3)):
-        d = dicts.filter(F.col("field") == fld).select(
-            "seg_id", F.col("term_ord").alias(f"ord{n}"),
-            F.col("term").alias(f"v{n}"),
-        )
-        named = named.join(d, ["seg_id", f"ord{n}"])
-    named = named.groupBy("v1", "v2", "v3").agg(F.sum("cnt").alias("cnt"))
+        .groupBy("v1", "v2", "v3").agg(F.sum("cnt").alias("cnt"))
+    )
     top1 = (
         named.groupBy("v1").agg(F.sum("cnt").alias("t1"))
         .orderBy(F.desc("t1"), "v1").limit(limit1)
@@ -896,21 +568,22 @@ def facet_nested(
 
     Physical: per-segment sparse (ord1, ord2) pair counting like
     :func:`facet_pivot`, but (a) docs missing f2 still count toward
-    their f1 bucket (ord2 = -1 partials survive, Lucene bucket-count
-    semantics: the sub-facet only narrows its own sub-domain), and
-    (b) each partial carries Σ doc_len so any algebraic metric merges
-    associatively — only touched (pair, cnt, sum) rows shuffle."""
+    their f1 bucket (ord2 = -1 partials survive as a NULL v2, Lucene
+    bucket-count semantics: the sub-facet only narrows its own
+    sub-domain), and (b) each partial carries Σ doc_len so any
+    algebraic metric merges associatively — only touched (pair, cnt,
+    sum) rows shuffle."""
     o1, o2 = f"{f1}_ord", f"{f2}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    pair_schema = "seg_id int, ord1 int, ord2 int, cnt long, sum_dl long"
+    dom = SegmentDomain(searcher, spec, ["doc_len", o1, o2])
 
-    def count_pairs(seg_id: int, hits: np.ndarray | None,
-                    a: np.ndarray, b: np.ndarray, dl: np.ndarray) -> pd.DataFrame:
+    def count_pairs(seg_id: int, term_rows) -> pd.DataFrame:
+        dm, hits = dom.read(seg_id, term_rows)
+        a, b, dl = (dm[c].to_numpy(np.int64) for c in (o1, o2, "doc_len"))
         if hits is not None:
             a, b, dl = a[hits], b[hits], dl[hits]
         m = a >= 0  # keep ord2 == -1: counts toward the parent bucket
         a, b, dl = a[m], b[m], dl[m]
-        key = a.astype(np.int64) * (1 << 31) + (b + 1)  # -1 → 0
+        key = a * (1 << 31) + (b + 1)  # -1 → 0
         order = np.argsort(key, kind="stable")
         key_s, dl_s = key[order], dl[order]
         starts = (
@@ -923,126 +596,26 @@ def facet_nested(
             np.add.reduceat(dl_s, starts) if len(key_s)
             else np.empty(0, np.int64)
         )
+        seg_dir = dom.seg_dirs[seg_id]
         return pd.DataFrame({
-            "seg_id": np.full(len(uniq), seg_id, np.int32),
-            "ord1": (uniq >> 31).astype(np.int32),
-            "ord2": ((uniq & ((1 << 31) - 1)) - 1).astype(np.int32),
+            "v1": _ord_terms(seg_dir, f1)[uniq >> 31],
+            "v2": _named(
+                _ord_terms(seg_dir, f2), (uniq & ((1 << 31) - 1)) - 1
+            ),
             "cnt": cnt.astype(np.int64),
             "sum_dl": sums.astype(np.int64),
         })
 
-    from lucene_solr_spark.query.executor import apply_deletes, filter_cols, filter_mask
-
-    dm_base = ["doc_ord", "doc_len", o1, o2]
-    has_deletes = bool(searcher.deleted_keys)
-    deleted_bc = searcher._deleted_bc
-
-    if spec is None:
-        seg_df = searcher.seg_driver()
-
-        def run_all(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            cols = ["doc_len", o1, o2] + (
-                ["conv_id", "turn_idx"] if has_deletes else []
-            )
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=cols
-            ).to_pandas()
-            live = apply_deletes(None, dm, deleted_bc.value if deleted_bc else None)
-            hits = None if live is None else np.flatnonzero(live)
-            return count_pairs(
-                seg_id, hits,
-                dm[o1].to_numpy().astype(np.int64),
-                dm[o2].to_numpy().astype(np.int64),
-                dm["doc_len"].to_numpy().astype(np.int64),
-            )
-
-        pairs = seg_df.groupBy("seg_id").applyInPandas(run_all, pair_schema)
-    elif (ds_bc := searcher._docset_cached_bc(spec)) is not None:
-        # queryResultCache hit: bits replace match_segment; only the
-        # ord pair + the metric column are read
-        def run_cached(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            bits, n = ds_bc.get(seg_id)
-            hits = np.flatnonzero(np.unpackbits(
-                np.frombuffer(bits, np.uint8), count=n
-            ))
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet",
-                columns=["doc_len", o1, o2],
-            ).to_pandas()
-            return count_pairs(
-                seg_id, hits,
-                dm[o1].to_numpy(np.int64), dm[o2].to_numpy(np.int64),
-                dm["doc_len"].to_numpy(np.int64),
-            )
-
-        pairs = searcher.seg_driver().groupBy("seg_id").applyInPandas(
-            run_cached, pair_schema
-        )
-    else:
-        lookup = list(spec.lookup_terms)
-        pure_negative = not spec.scoring_terms
-        dm_cols = filter_cols(spec, dm_base)
-        if has_deletes:
-            dm_cols += [c for c in ("conv_id", "turn_idx") if c not in dm_cols]
-
-        def run_hits(pdf: pd.DataFrame) -> pd.DataFrame:
-            import pyarrow.parquet as pq
-
-            seg_id = int(pdf["seg_id"].iloc[0])
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            ).to_pandas()
-            allowed = apply_deletes(
-                filter_mask(dm, spec), dm,
-                deleted_bc.value if deleted_bc else None,
-            )
-            if pure_negative:
-                term_rows = {}
-                if lookup:
-                    post_tbl = pq.read_table(
-                        f"{seg_dirs[seg_id]}/postings.parquet",
-                        filters=[("term", "in", lookup)],
-                        columns=postings_task_columns(spec),
-                    ).to_pandas()
-                    term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-            else:
-                term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-            hits = match_segment(
-                spec, term_rows, len(dm), allowed,
-                int(dm["doc_len"].max()) if len(dm) else 0,
-            )
-            return count_pairs(
-                seg_id, hits,
-                dm[o1].to_numpy(np.int64), dm[o2].to_numpy(np.int64),
-                dm["doc_len"].to_numpy(np.int64),
-            )
-
-        driver = (
-            searcher.seg_driver() if pure_negative
-            else searcher.postings().filter(F.col("term").isin(lookup))
-        )
-        pairs = driver.groupBy("seg_id").applyInPandas(run_hits, pair_schema)
-
-    d1 = searcher.dicts().filter(F.col("field") == f1).select(
-        "seg_id", F.col("term_ord").alias("ord1"), F.col("term").alias("v1")
+    named = searcher.each_segment(
+        count_pairs, "v1 string, v2 string, cnt long, sum_dl long",
+        dom.postings_spec,
     )
-    d2 = searcher.dicts().filter(F.col("field") == f2).select(
-        "seg_id", F.col("term_ord").alias("ord2"), F.col("term").alias("v2")
-    )
-    named = pairs.join(d1, ["seg_id", "ord1"])
     top1 = (
         named.groupBy("v1").agg(F.sum("cnt").alias("cnt1"))
         .orderBy(F.desc("cnt1"), "v1").limit(limit1)
     )
     sub = (
-        named.filter(F.col("ord2") >= 0)
-        .join(d2, ["seg_id", "ord2"])
+        named.filter(F.col("v2").isNotNull())
         .groupBy("v1", "v2")
         .agg(F.sum("cnt").alias("cnt2"), F.sum("sum_dl").alias("sum_dl"))
     )
@@ -1101,7 +674,7 @@ def facet_field(
     """
     # MatchAll-domain partials are snapshot-stable → served from the
     # searcher's UnInvertedField-style cache (one tiny persisted
-    # (seg_id, term_ord, cnt) frame per field; a new snapshot means a
+    # (seg_id, term, cnt) frame per field; a new snapshot means a
     # new searcher, so staleness is impossible). Query-domain partials
     # are computed per call as before.
     cached: list[DataFrame] = []  # call-owned persisted frames to free
@@ -1122,9 +695,8 @@ def facet_field(
         elif req.missing:
             raw = raw.persist()  # both the buckets and the miss row
             cached.append(raw)
-    # ord -1 (missing) partials have no dictionary row → inner join
-    # keeps them out of the term buckets automatically
-    parts = _with_terms(searcher, raw, req.field)
+    # missing-value partials carry a NULL term: never a bucket
+    parts = raw.filter(F.col("term").isNotNull())
     if req.prefix is not None:
         parts = parts.filter(F.col("term").startswith(req.prefix))
     if req.contains is not None:
@@ -1149,7 +721,7 @@ def facet_field(
         # for candidates) both consume the partials; persisting them
         # runs the sparse counting pass ONCE instead of twice (~40%
         # off MatchAll high-cardinality facet latency). The cached
-        # rows are tiny — (seg_id, term_ord, cnt) partials only.
+        # rows are tiny — (seg_id, term, cnt) partials only.
         parts = parts.persist()
         cached.append(parts)
         over = _overrequest(req.offset + req.limit)
@@ -1178,7 +750,7 @@ def facet_field(
     out = out.limit(req.limit)
     if req.missing:
         miss = (
-            raw.filter(F.col("term_ord") == -1)
+            raw.filter(F.col("term").isNull())
             .agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("cnt"))
             .select(F.lit(None).cast("string").alias("facet_value"), "cnt")
         )
@@ -1195,7 +767,7 @@ def facet_field(
     return out
 
 
-RELATEDNESS_PARTIAL_SCHEMA = "seg_id int, term_ord int, fg long, bg long"
+RELATEDNESS_PARTIAL_SCHEMA = "term string, fg long, bg long"
 
 
 def facet_relatedness(
@@ -1221,67 +793,33 @@ def facet_relatedness(
     relatedness (engine-independent limit boundary), bucket value
     tiebreak.
 
-    Physical — ONE seg-driver fan-out, like significant_terms: every
-    segment task reads its OWN docmap (and only the fg spec's
-    term-pruned postings rows via a parquet predicate), computes the
-    fg hit DocSet once, then counts bucket ordinals over BOTH domains
-    in the same vectorized pass. Only (seg_id, term_ord, fg, bg)
-    partials plus one sizes row per segment ever shuffle — bucket
-    cardinality bounds the shuffle, never corpus size. The seg driver
-    (not the postings groupBy) is load-bearing: segments with zero fg
-    matches still contribute background counts.
+    Physical — ONE per-segment pass visiting EVERY segment, like
+    significant_terms: each task reads its OWN docmap (and only the fg
+    spec's term-pruned postings rows), computes the fg hit DocSet
+    once, then counts bucket ordinals over BOTH domains in the same
+    vectorized pass. Only (term, fg, bg) partials plus one sizes row
+    (NULL term) per segment ever shuffle — bucket cardinality bounds
+    the shuffle, never corpus size. Visiting every segment is
+    load-bearing: segments with zero fg matches still contribute
+    background counts.
 
     ref: solr/core/src/java/org/apache/solr/search/facet/RelatednessAgg.java
          (computeRelatedness; fg/bg set comparison per bucket)
     """
-    from lucene_solr_spark.query.executor import (
-        apply_deletes,
-        filter_cols,
-        filter_mask,
-    )
-
     if fg_spec.needs_rewrite:
         fg_spec = searcher.rewrite(fg_spec)
     ord_col = f"{field}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    deleted_bc = searcher._deleted_bc
-    has_deletes = bool(searcher.deleted_keys)
-    lookup = list(fg_spec.lookup_terms)
-    dm_cols = filter_cols(fg_spec, ["doc_ord", "doc_len", ord_col])
-    if has_deletes:
-        dm_cols += [c for c in ("conv_id", "turn_idx") if c not in dm_cols]
-    lspec = fg_spec
+    dom = SegmentDomain(searcher, fg_spec, [ord_col])
 
-    def run_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow.parquet as pq
-
-        seg_id = int(pdf["seg_id"].iloc[0])
-        dm = pq.read_table(
-            f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-        ).to_pandas()
-        n_docs = len(dm)
+    def run_seg(seg_id: int, term_rows) -> pd.DataFrame:
+        dm, hits = dom.read(seg_id, term_rows)
         ords = dm[ord_col].to_numpy(np.int64)
-        live = apply_deletes(None, dm, deleted_bc.value if deleted_bc else None)
+        live = dom.live(dm)
         if live is None:
-            bg_ords, bg_size = ords, n_docs
+            bg_ords, bg_size = ords, len(dm)
         else:
             bg_ords, bg_size = ords[live], int(live.sum())
-        allowed = apply_deletes(
-            filter_mask(dm, lspec), dm,
-            deleted_bc.value if deleted_bc else None,
-        )
-        term_rows = {}
-        if lookup:
-            post_tbl = pq.read_table(
-                f"{seg_dirs[seg_id]}/postings.parquet",
-                filters=[("term", "in", lookup)],
-                columns=postings_task_columns(lspec),
-            ).to_pandas()
-            term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-        max_dl = int(dm["doc_len"].max()) if n_docs else 0
-        hits = match_segment(lspec, term_rows, n_docs, allowed, max_dl)
         fg_ords = ords[hits]
-        fg_size = int(len(hits))
         # one sparse pass over each domain's touched ordinals
         bg_u, bg_c = np.unique(bg_ords[bg_ords >= 0], return_counts=True)
         fg_u, fg_c = np.unique(fg_ords[fg_ords >= 0], return_counts=True)
@@ -1291,31 +829,25 @@ def facet_relatedness(
         fg_col = np.zeros(len(bg_u), np.int64)
         if len(fg_u):
             fg_col[np.searchsorted(bg_u, fg_u)] = fg_c
-        # sizes row: term_ord -2 carries (fg_size, bg_size)
-        uniq = np.append(bg_u, -2)
-        fg_out = np.append(fg_col, fg_size)
-        bg_out = np.append(bg_c, bg_size)
+        # sizes row: a NULL term carries (fg_size, bg_size)
+        terms = np.append(_ord_terms(dom.seg_dirs[seg_id], field)[bg_u], None)
         return pd.DataFrame(
             {
-                "seg_id": np.full(len(uniq), seg_id, np.int32),
-                "term_ord": uniq.astype(np.int32),
-                "fg": fg_out.astype(np.int64),
-                "bg": bg_out.astype(np.int64),
+                "term": terms,
+                "fg": np.append(fg_col, len(hits)).astype(np.int64),
+                "bg": np.append(bg_c, bg_size).astype(np.int64),
             }
         )
 
-    partials = searcher.seg_driver().groupBy("seg_id").applyInPandas(
-        run_seg, RELATEDNESS_PARTIAL_SCHEMA
-    )
-    partials = partials.persist()
+    partials = searcher.each_segment(
+        run_seg, RELATEDNESS_PARTIAL_SCHEMA, dom.postings_spec,
+        visit_all=True,
+    ).persist()
     sizes = (
-        partials.filter(F.col("term_ord") == -2)
+        partials.filter(F.col("term").isNull())
         .agg(F.sum("bg").alias("bg_size"))
     )
-    named = _with_terms(
-        searcher, partials.filter(F.col("term_ord") >= 0), field
-    )
-    agg = named.groupBy("term").agg(
+    agg = partials.filter(F.col("term").isNotNull()).groupBy("term").agg(
         F.sum("fg").alias("fg_count"), F.sum("bg").alias("bg_count")
     )
     fg_pop = F.col("fg_count") / F.col("bg_size")
@@ -1342,6 +874,18 @@ def facet_relatedness(
     return searcher.spark.createDataFrame(rows, out.schema)
 
 
+def _bucket_counts(partials: DataFrame, limit: int) -> DataFrame:
+    """(facet_value, cnt) top ``limit`` by (cnt desc, value asc) over
+    named (term, cnt) partials."""
+    return (
+        partials.groupBy("term")
+        .agg(F.sum("cnt").alias("cnt"))
+        .select(F.col("term").alias("facet_value"), "cnt")
+        .orderBy(F.desc("cnt"), F.asc("facet_value"))
+        .limit(limit)
+    )
+
+
 def facet_block_domain(
     searcher,
     field: str,
@@ -1361,84 +905,32 @@ def facet_block_domain(
     ref: solr/core/src/java/org/apache/solr/search/facet/FacetRequest.java
          (Domain.toChildren / BlockJoinChildQParser domain changes)
     """
-    from lucene_solr_spark.query.executor import (
-        apply_deletes,
-        filter_cols,
-        filter_mask,
-    )
-
     if spec.needs_rewrite:
         spec = searcher.rewrite(spec)
     ord_col = f"{field}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    deleted_bc = searcher._deleted_bc
-    lookup = list(spec.lookup_terms)
-    pure_negative = not spec.scoring_terms
-    base = ["doc_ord", "doc_len", ord_col, "conv_id"]
-    dm_cols = filter_cols(spec, base)
-    if "turn_idx" not in dm_cols and bool(searcher.deleted_keys):
-        dm_cols.append("turn_idx")
-    lspec = spec
+    dom = SegmentDomain(searcher, spec, [ord_col, "conv_id"])
 
-    def run_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow.parquet as pq
-
-        seg_id = int(pdf["seg_id"].iloc[0])
-        dm = pq.read_table(
-            f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-        ).to_pandas()
-        n_docs = len(dm)
-        allowed = apply_deletes(
-            filter_mask(dm, lspec), dm,
-            deleted_bc.value if deleted_bc else None,
-        )
-        if pure_negative:
-            term_rows = {}
-            if lookup:
-                post_tbl = pq.read_table(
-                    f"{seg_dirs[seg_id]}/postings.parquet",
-                    filters=[("term", "in", lookup)],
-                    columns=postings_task_columns(lspec),
-                ).to_pandas()
-                term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-        else:
-            term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-        max_dl = int(dm["doc_len"].max()) if n_docs else 0
-        hits = match_segment(lspec, term_rows, n_docs, allowed, max_dl)
+    def run_seg(seg_id: int, term_rows) -> pd.DataFrame:
+        dm, hits = dom.read(seg_id, term_rows)
         convs = dm["conv_id"].to_numpy()
         # widen: every live doc whose conversation contains a hit
         in_block = np.isin(convs, np.unique(convs[hits]))
-        live = apply_deletes(None, dm, deleted_bc.value if deleted_bc else None)
+        live = dom.live(dm)
         if live is not None:
             in_block &= live
         ords = dm[ord_col].to_numpy(np.int64)[in_block]
         uniq, cnt = np.unique(ords[ords >= 0], return_counts=True)
-        return pd.DataFrame(
-            {
-                "seg_id": np.full(len(uniq), seg_id, np.int32),
-                "term_ord": uniq.astype(np.int32),
-                "cnt": cnt.astype(np.int64),
-            }
-        )
+        return pd.DataFrame({
+            "term": _ord_terms(dom.seg_dirs[seg_id], field)[uniq],
+            "cnt": cnt.astype(np.int64),
+        })
 
-    driver = (
-        searcher.seg_driver() if pure_negative
-        else searcher.postings().filter(F.col("term").isin(lookup))
-    )
-    partials = driver.groupBy("seg_id").applyInPandas(
-        run_seg, PARTIAL_SCHEMA
-    )
-    named = _with_terms(searcher, partials, field)
-    return (
-        named.groupBy("term")
-        .agg(F.sum("cnt").alias("cnt"))
-        .select(F.col("term").alias("facet_value"), "cnt")
-        .orderBy(F.desc("cnt"), F.asc("facet_value"))
-        .limit(limit)
-    )
+    return _bucket_counts(searcher.each_segment(
+        run_seg, "term string, cnt long", dom.postings_spec
+    ), limit)
 
 
-UNIQUE_BLOCK_PARTIAL_SCHEMA = "seg_id int, term_ord int, cnt long, uniq long"
+UNIQUE_BLOCK_PARTIAL_SCHEMA = "term string, cnt long, uniq long"
 
 
 def facet_unique_block(
@@ -1457,63 +949,20 @@ def facet_unique_block(
     `q_idx_grouped_facet` and the conv block joins rely on. Each
     segment's pass counts docs AND unique conv blocks per bucket
     ordinal in one vectorized composite-key np.unique; only
-    (seg_id, term_ord, cnt, uniq) rows shuffle.
+    (term, cnt, uniq) rows shuffle.
 
     ref: solr/core/src/java/org/apache/solr/search/facet/UniqueBlockAgg.java
          (unique parent counting riding the child-domain terms facet)
     """
-    from lucene_solr_spark.query.executor import (
-        apply_deletes,
-        filter_cols,
-        filter_mask,
-    )
-
     if spec is not None and spec.needs_rewrite:
         spec = searcher.rewrite(spec)
     ord_col = f"{field}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    deleted_bc = searcher._deleted_bc
-    lookup = list(spec.lookup_terms) if spec is not None else []
-    pure_negative = spec is not None and not spec.scoring_terms
-    base = ["doc_ord", "doc_len", ord_col, "conv_id"]
-    dm_cols = filter_cols(spec, base) if spec is not None else list(base)
-    if "turn_idx" not in dm_cols and bool(searcher.deleted_keys):
-        dm_cols.append("turn_idx")
-    lspec = spec
+    dom = SegmentDomain(searcher, spec, [ord_col, "conv_id"])
 
-    def run_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow.parquet as pq
-
-        seg_id = int(pdf["seg_id"].iloc[0])
-        dm = pq.read_table(
-            f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-        ).to_pandas()
-        n_docs = len(dm)
+    def run_seg(seg_id: int, term_rows) -> pd.DataFrame:
+        dm, hits = dom.read(seg_id, term_rows)
         ords = dm[ord_col].to_numpy(np.int64)
         convs = dm["conv_id"].to_numpy()
-        if lspec is None:
-            live = apply_deletes(
-                None, dm, deleted_bc.value if deleted_bc else None
-            )
-            hits = None if live is None else np.flatnonzero(live)
-        else:
-            allowed = apply_deletes(
-                filter_mask(dm, lspec), dm,
-                deleted_bc.value if deleted_bc else None,
-            )
-            if pure_negative:
-                term_rows = {}
-                if lookup:
-                    post_tbl = pq.read_table(
-                        f"{seg_dirs[seg_id]}/postings.parquet",
-                        filters=[("term", "in", lookup)],
-                        columns=postings_task_columns(lspec),
-                    ).to_pandas()
-                    term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-            else:
-                term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-            max_dl = int(dm["doc_len"].max()) if n_docs else 0
-            hits = match_segment(lspec, term_rows, n_docs, allowed, max_dl)
         if hits is not None:
             ords, convs = ords[hits], convs[hits]
         keep = ords >= 0
@@ -1529,28 +978,23 @@ def facet_unique_block(
         )
         return pd.DataFrame(
             {
-                "seg_id": np.full(len(uniq_o), seg_id, np.int32),
-                "term_ord": uniq_o.astype(np.int32),
+                "term": _ord_terms(dom.seg_dirs[seg_id], field)[uniq_o],
                 "cnt": cnt.astype(np.int64),
                 "uniq": ub.astype(np.int64),
             }
         )
 
-    driver = (
-        searcher.seg_driver() if (spec is None or pure_negative)
-        else searcher.postings().filter(F.col("term").isin(lookup))
+    partials = searcher.each_segment(
+        run_seg, UNIQUE_BLOCK_PARTIAL_SCHEMA, dom.postings_spec
     )
-    partials = driver.groupBy("seg_id").applyInPandas(
-        run_seg, UNIQUE_BLOCK_PARTIAL_SCHEMA
-    )
-    named = _with_terms(searcher, partials, field)
     return (
-        named.groupBy("term")
+        partials.groupBy("term")
         .agg(F.sum("cnt").alias("cnt"), F.sum("uniq").alias("unique_convs"))
         .select(F.col("term").alias("facet_value"), "cnt", "unique_convs")
         .orderBy(F.desc("cnt"), F.asc("facet_value"))
         .limit(limit)
     )
+
 
 def facet_block_parent(
     searcher,
@@ -1568,84 +1012,34 @@ def facet_block_parent(
     uniqueBlock: conversations never span segments (hash-partitioned
     build), so each segment task maps its OWN hits to parent rows with
     one vectorized isin — no conv-id shuffle, no join; only
-    (seg_id, term_ord, cnt) partials leave the executor. A tombstoned
-    parent row drops its conversation from the domain (liveDocs parity
-    with ToParentBlockJoinQuery: deleted parents are never returned).
+    (term, cnt) partials leave the executor. A tombstoned parent row
+    drops its conversation from the domain (liveDocs parity with
+    ToParentBlockJoinQuery: deleted parents are never returned).
 
     ref: solr/core/src/java/org/apache/solr/search/facet/FacetRequest.java
          (Domain.toParent / BlockJoinParentQParser domain changes)
     """
-    from lucene_solr_spark.query.executor import (
-        apply_deletes,
-        filter_cols,
-        filter_mask,
-    )
-
     if spec.needs_rewrite:
         spec = searcher.rewrite(spec)
     ord_col = f"{field}_ord"
-    seg_dirs = searcher.seg_dir_by_id
-    deleted_bc = searcher._deleted_bc
-    lookup = list(spec.lookup_terms)
-    pure_negative = not spec.scoring_terms
-    base = ["doc_ord", "doc_len", ord_col, "conv_id", "turn_idx"]
-    dm_cols = filter_cols(spec, base)
-    lspec = spec
+    dom = SegmentDomain(searcher, spec, [ord_col, "conv_id", "turn_idx"])
 
-    def run_seg(pdf: pd.DataFrame) -> pd.DataFrame:
-        import pyarrow.parquet as pq
-
-        seg_id = int(pdf["seg_id"].iloc[0])
-        dm = pq.read_table(
-            f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-        ).to_pandas()
-        n_docs = len(dm)
-        allowed = apply_deletes(
-            filter_mask(dm, lspec), dm,
-            deleted_bc.value if deleted_bc else None,
-        )
-        if pure_negative:
-            term_rows = {}
-            if lookup:
-                post_tbl = pq.read_table(
-                    f"{seg_dirs[seg_id]}/postings.parquet",
-                    filters=[("term", "in", lookup)],
-                    columns=postings_task_columns(lspec),
-                ).to_pandas()
-                term_rows = {r["term"]: r for _, r in post_tbl.iterrows()}
-        else:
-            term_rows = {r["term"]: r for _, r in pdf.iterrows()}
-        max_dl = int(dm["doc_len"].max()) if n_docs else 0
-        hits = match_segment(lspec, term_rows, n_docs, allowed, max_dl)
+    def run_seg(seg_id: int, term_rows) -> pd.DataFrame:
+        dm, hits = dom.read(seg_id, term_rows)
         convs = dm["conv_id"].to_numpy()
         # toParent: parent rows (turn 0, live) of conversations with a hit
         parents = dm["turn_idx"].to_numpy(np.int64) == 0
-        live = apply_deletes(None, dm, deleted_bc.value if deleted_bc else None)
+        live = dom.live(dm)
         if live is not None:
             parents &= live
         parents &= np.isin(convs, np.unique(convs[hits]))
         ords = dm[ord_col].to_numpy(np.int64)[parents]
         uniq, cnt = np.unique(ords[ords >= 0], return_counts=True)
-        return pd.DataFrame(
-            {
-                "seg_id": np.full(len(uniq), seg_id, np.int32),
-                "term_ord": uniq.astype(np.int32),
-                "cnt": cnt.astype(np.int64),
-            }
-        )
+        return pd.DataFrame({
+            "term": _ord_terms(dom.seg_dirs[seg_id], field)[uniq],
+            "cnt": cnt.astype(np.int64),
+        })
 
-    driver = (
-        searcher.seg_driver() if pure_negative
-        else searcher.postings().filter(F.col("term").isin(lookup))
-    )
-    partials = driver.groupBy("seg_id").applyInPandas(
-        run_seg, PARTIAL_SCHEMA
-    )
-    named = _with_terms(searcher, partials, field)
-    return (
-        named.groupBy("term")
-        .agg(F.sum("cnt").alias("cnt"))
-        .select(F.col("term").alias("facet_value"), "cnt")
-        .orderBy(F.desc("cnt"), F.asc("facet_value"))
-        .limit(limit)
-    )
+    return _bucket_counts(searcher.each_segment(
+        run_seg, "term string, cnt long", dom.postings_spec
+    ), limit)

@@ -2,11 +2,10 @@
 filters, pure-negative and filter-only DocSets, facet/pivot domains
 with filters — index engine vs brute Catalyst vs pandas reference.
 
-The structural trap being guarded: the index query plan groups
-term-pruned postings by seg_id, so a segment containing NONE of the
-query's terms emits no group — for pure-negative/filter-only specs
-every such segment still matches everything, and the seg-id driver
-fallback must pick them up."""
+The structural trap being guarded: the per-segment pass skips a
+segment containing NONE of the query's terms — for pure-negative/
+filter-only specs every such segment still matches everything, so the
+pass must visit every segment for them."""
 
 from __future__ import annotations
 
