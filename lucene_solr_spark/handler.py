@@ -2668,7 +2668,7 @@ def _select_impl(
         # classic facet.pivot leg: the index sparse pair-counting
         # engine over the SAME q+fq domain (shuffle bounded by
         # distinct co-occurring pairs, never the corpus)
-        from lucene_solr_spark.query.facets import facet_pivot, facet_pivot3
+        from lucene_solr_spark.query.facets import facet_pivot
 
         from lucene_solr_spark.query.executor import (  # noqa: F811
             _exclude_filter_fields,
@@ -2679,19 +2679,9 @@ def _select_impl(
         # domain only (the multi-select rule, same engine API the
         # facet.field leg rides)
         p_spec = _exclude_filter_fields(spec, pv_ex) if pv_ex else spec
-        # facet_pivot does not rewrite multiterm specs itself
-        p_spec = searcher.rewrite(p_spec) if p_spec.needs_rewrite \
-            else p_spec
-        lim = o["facet_limit"]
-        if len(pv_fields) == 2:
-            f1, f2 = pv_fields
-            pv = facet_pivot(
-                searcher, f1, f2, spec=p_spec, limit1=lim, limit2=lim)
-        else:
-            f1, f2, f3 = pv_fields
-            pv = facet_pivot3(
-                searcher, f1, f2, f3, spec=p_spec,
-                limit1=lim, limit2=lim, limit3=lim)
+        pv = facet_pivot(
+            searcher, pv_fields, spec=p_spec,
+            limits=(o["facet_limit"],) * len(pv_fields))
         out["facet_pivots"] = {pv_key: pv}
     if o["stats_fields"]:
         # StatsComponent leg: algebraic aggregates over the domain's

@@ -25,6 +25,12 @@ property that keeps query cost independent of corpus width: a query
 over 10^12 turns touches q-term postings plus the docmaps of segments
 that contain them. Only the small per-segment results move, into the
 final merge.
+
+Every task opens its segment's docmap through :class:`SegmentDomain`,
+the one segment reader (Lucene's ``LeafReader``): it prunes the read
+to the columns the caller needs and hands back the fq mask or hit ords
+with liveDocs already applied, so no read path can skip the tombstone
+mask (tests/test_segment_reader.py guards it).
 """
 
 from __future__ import annotations
@@ -32,6 +38,7 @@ from __future__ import annotations
 import math
 import os
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -43,7 +50,7 @@ from lucene_solr_spark.query.scorer import match_segment, score_segment
 RESULT_SCHEMA = "conv_id string, turn_idx int, score double"
 
 #: docmap columns every scorer needs (norms + result ids)
-_BASE_COLS = ["doc_ord", "doc_len", "conv_id", "turn_idx"]
+_BASE_COLS = ["doc_len", "conv_id", "turn_idx"]
 
 
 def _exclude_filter_fields(
@@ -103,14 +110,13 @@ def apply_deletes(allowed, dm, deleted):
     keys (built once at searcher init): the membership test is one
     vectorized encode + ``searchsorted`` probe — numpy end to end, no
     per-row Python, near-free (de)serialization when the mask ships to
-    tasks. No-op (returns ``allowed`` unchanged) when empty/None."""
+    tasks. ``dm`` is an Arrow table or a pandas frame holding the two
+    key columns. No-op (returns ``allowed`` unchanged) when empty/None."""
     if deleted is None or not len(deleted):
         return allowed
-    import numpy as np
-
     keys = np.char.add(
-        np.char.add(dm["conv_id"].to_numpy(dtype="U"), "|"),
-        dm["turn_idx"].to_numpy(dtype="U"),
+        np.char.add(np.asarray(dm["conv_id"]).astype("U"), "|"),
+        np.asarray(dm["turn_idx"]).astype("U"),
     ).astype("S")
     # widen both sides to a common byte width (S-compare null-pads, so
     # widening preserves order and equality; plain astype would
@@ -191,6 +197,16 @@ def segment_postings(seg_dir: str, terms, columns) -> dict:
     return {r["term"]: r for _, r in tbl.iterrows()}
 
 
+def _take_keys(dm, docs, **extra) -> pd.DataFrame:
+    """TASK-side output rows: the (conv_id, turn_idx) keys of ``docs``,
+    taken on the Arrow side so only these rows cross into pandas, plus
+    the ``extra`` per-row columns."""
+    out = dm.select(["conv_id", "turn_idx"]).take(docs).to_pandas()
+    for name, vals in extra.items():
+        out[name] = vals
+    return out
+
+
 def _write_bits(cache_dir: str, seg_id: int, payload: bytes) -> None:
     """Task-side atomic sidecar write: unique temp + rename, so a
     concurrent warm of the same entry (or a task retry) can never
@@ -243,62 +259,129 @@ class SegBitsCache:
         shutil.rmtree(self.path, ignore_errors=True)
 
 
+def _unpack(bits_cache: SegBitsCache, seg_id: int) -> np.ndarray:
+    """One segment's cached packed bits as a bool mask."""
+    bits, n = bits_cache.get(seg_id)
+    return np.unpackbits(np.frombuffer(bits, np.uint8), count=n).astype(bool)
+
+
 class SegmentDomain:
-    """A query domain's per-segment hit DocSet, shipped to the
-    per-segment tasks of :meth:`IndexSearcher.each_segment`:
-    MatchAllDocs (``spec`` None — every live doc), a queryResultCache
-    hit (the cached per-segment bits — liveDocs baked in, no postings
-    read, no fq columns; see ``IndexSearcher.cache_docset``) or a spec
-    evaluated in the task (fq mask ∩ liveDocs ∩ match_segment over the
-    task's own postings). ``cols`` are the docmap columns the caller
-    reads beyond that; the delete keys ride along whenever tombstones
-    exist, for :meth:`live`. Pass ``postings_spec`` to each_segment."""
+    """The engine's one task-side segment reader (Lucene's
+    ``LeafReader``): every per-segment task that reads a segment's
+    docmap opens it here, so the liveDocs mask is applied by structure.
+    No other code names ``docmap.parquet`` or calls ``apply_deletes`` /
+    ``filter_mask`` (tests/test_segment_reader.py walks the AST to keep
+    it so). ``early_topk`` is the one caller that streams row groups
+    itself (index-sort early termination has no whole-segment read):
+    it opens :meth:`path` and takes its mask from :meth:`live`.
+
+    Built on the driver for one query ``spec`` (None is MatchAllDocs)
+    and shipped to the tasks of :meth:`IndexSearcher.each_segment`.
+    Each call reads the segment's docmap ONCE, ARROW-NATIVE: pruned to
+    the caller's ``cols`` plus the fq columns, plus the delete keys only
+    when tombstones exist, and only the fq columns and the delete keys
+    cross into pandas — a whole-segment ``to_pandas`` materializes every
+    conv_id as a python string, the corpus-width cost. Callers convert
+    the columns they read (:meth:`ints`).
+
+    Two outputs, each with liveDocs applied:
+
+    - :meth:`allowed` — the scorers' mask: the filterCache bits on a
+      hit, else ``filter_mask`` over the fq columns.
+    - :meth:`read` — the domain users' hit ords: the queryResultCache
+      bits on a hit (no postings read, no fq columns; see
+      ``IndexSearcher.cache_docset``), else ``match_segment`` over
+      :meth:`allowed`. Pass ``postings_spec`` to each_segment.
+
+    ``max_dl`` (the phrase stride) comes from the manifest's committed
+    per-segment stats; only a manifest written before ``max_dl``
+    existed makes the reader take ``doc_len`` for it (:meth:`max_doclen`).
+    """
+
+    DOCMAP = "docmap.parquet"
 
     def __init__(self, searcher, spec: BooleanSpec | None, cols):
         self.spec = spec
+        self.seg_dirs = searcher.seg_dir_by_id
+        self.deleted_bc = searcher._deleted_bc
+        # None on a manifest written before max_dl existed
+        self.max_dl = {
+            int(s["part"]): s.get("max_dl")
+            for s in searcher.manifest.segments.values()
+        }
+        cols = list(cols)
+        if None in self.max_dl.values():
+            cols.append("doc_len")
+        keys = ["conv_id", "turn_idx"] if searcher.deleted_keys else []
+        self.fq_bits = (
+            searcher._fq_cached_bc(spec) if spec is not None else None
+        )
+        #: docmap fields the fq mask reads (none on a filterCache hit)
+        self.fq_fields = (
+            filter_cols(spec, []) if spec is not None and self.fq_bits is None
+            else []
+        )
+        self.cols = list(dict.fromkeys(cols + self.fq_fields + keys))
         self.bits = (
             searcher._docset_cached_bc(spec) if spec is not None else None
         )
         #: what each_segment reads postings for (a cache hit: nothing)
         self.postings_spec = spec if self.bits is None else None
-        cols = list(cols)
-        if self.postings_spec is not None:
-            cols = filter_cols(spec, ["doc_ord", "doc_len", *cols])
-        if searcher.deleted_keys:
-            cols += ["conv_id", "turn_idx"]
-        self.cols = list(dict.fromkeys(cols))
-        self.seg_dirs = searcher.seg_dir_by_id
-        self.deleted_bc = searcher._deleted_bc
+        #: the columns :meth:`read` takes on a queryResultCache hit
+        self.hit_cols = list(dict.fromkeys(cols + keys))
 
-    def live(self, dm: pd.DataFrame):
-        """liveDocs mask over ``dm`` (None when nothing is deleted)."""
+    def path(self, seg_id: int) -> str:
+        return f"{self.seg_dirs[seg_id]}/{self.DOCMAP}"
+
+    def _open(self, seg_id: int, cols):
+        import pyarrow.parquet as pq
+
+        # written sorted by doc_ord: row i is doc i
+        return pq.read_table(self.path(seg_id), columns=cols)
+
+    @staticmethod
+    def ints(dm, col: str) -> np.ndarray:
+        """One integer column of a docmap read as int64 numpy."""
+        return np.asarray(dm.column(col).to_numpy(), np.int64)
+
+    def live(self, dm):
+        """liveDocs mask over ``dm`` (an Arrow read or a pandas frame
+        carrying the delete keys); None when nothing is deleted."""
         bc = self.deleted_bc
         return apply_deletes(None, dm, bc.value if bc else None)
+
+    def max_doclen(self, seg_id: int, dm) -> int:
+        m = self.max_dl[seg_id]
+        if m is None:  # pre-max_dl manifest: the docmap maximum
+            m = int(self.ints(dm, "doc_len").max()) if len(dm) else 0
+        return m
+
+    def allowed(self, seg_id: int):
+        """TASK-side: ``(docmap columns, allowed mask)`` of one segment
+        — the fq mask ∩ liveDocs; a None mask admits every doc."""
+        dm = self._open(seg_id, self.cols)
+        if self.fq_bits is not None:
+            mask = _unpack(self.fq_bits, seg_id)
+        elif self.fq_fields:
+            fq = dm.select(self.fq_fields).to_pandas()
+            mask = filter_mask(fq, self.spec)
+        else:
+            mask = None
+        bc = self.deleted_bc
+        return dm, apply_deletes(mask, dm, bc.value if bc else None)
 
     def read(self, seg_id: int, term_rows):
         """TASK-side: ``(docmap columns, hit ords)`` of one segment;
         hit ords None means every doc."""
-        import numpy as np
-        import pyarrow.parquet as pq
-
-        dm = pq.read_table(
-            f"{self.seg_dirs[seg_id]}/docmap.parquet", columns=self.cols
-        ).to_pandas()  # written sorted by doc_ord
         if self.bits is not None:
-            bits, n = self.bits.get(seg_id)
-            return dm, np.flatnonzero(
-                np.unpackbits(np.frombuffer(bits, np.uint8), count=n)
-            )
+            dm = self._open(seg_id, self.hit_cols)
+            return dm, np.flatnonzero(_unpack(self.bits, seg_id))
+        dm, allowed = self.allowed(seg_id)
         if self.spec is None:
-            live = self.live(dm)
-            return dm, None if live is None else np.flatnonzero(live)
-        bc = self.deleted_bc
-        allowed = apply_deletes(
-            filter_mask(dm, self.spec), dm, bc.value if bc else None
-        )
-        max_dl = int(dm["doc_len"].max()) if len(dm) else 0
+            return dm, None if allowed is None else np.flatnonzero(allowed)
         return dm, match_segment(
-            self.spec, term_rows, len(dm), allowed, max_dl
+            self.spec, term_rows, len(dm), allowed,
+            self.max_doclen(seg_id, dm),
         )
 
 
@@ -368,7 +451,7 @@ class IndexSearcher:
             )
         dirs = self.manifest.seg_dirs()
         self._postings_files = [f"{d}/postings.parquet" for d in dirs]
-        self._docmap_files = [f"{d}/docmap.parquet" for d in dirs]
+        self._docmap_files = [f"{d}/{SegmentDomain.DOCMAP}" for d in dirs]
         self._dict_files = [f"{d}/dicts.parquet" for d in dirs]
         #: seg_id → segment dir (shipped to scorer tasks; tiny)
         self.seg_dir_by_id = {
@@ -466,7 +549,9 @@ class IndexSearcher:
 
     def cache_filter(self, spec: BooleanSpec) -> bool:
         """Populate the filterCache for ``spec``'s fq constraints: one
-        each_segment job evaluates the filter mask per segment, packs it
+        each_segment job takes the reader's allowed mask per segment
+        (fq ∩ liveDocs — like Solr's DocSets, the bits hold live docs
+        only; the reader intersects liveDocs again on a hit), packs it
         to a bitset (maxDoc/8 bytes — exactly Lucene's per-core
         FixedBitSet cost model) and writes it as a per-segment sidecar
         file IN THE SAME TASK (SegBitsCache: executor/storage-resident
@@ -489,8 +574,6 @@ class IndexSearcher:
         SolrIndexSearcher.java (getDocSet / filterCache),
         solr/core/src/java/org/apache/solr/search/DocSetCollector.java
         """
-        import numpy as np
-
         key = self._filter_key(spec)
         if not any(key):
             return False
@@ -502,18 +585,14 @@ class IndexSearcher:
             exists_filters=spec.exists_filters,
             missing_filters=spec.missing_filters,
         )
-        seg_dirs = self.seg_dir_by_id
-        dm_cols = filter_cols(fspec, ["doc_ord"])
+        dom = SegmentDomain(self, fspec, [])
         cdir = self._cache_entry_dir("fq", key)
 
         def one(seg_id, _term_rows):
             import pandas as pd
-            import pyarrow.parquet as pq
 
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            ).to_pandas()
-            mask = np.asarray(filter_mask(dm, fspec), dtype=np.uint8)
+            dm, allowed = dom.allowed(seg_id)
+            mask = np.asarray(allowed, dtype=np.uint8)
             _write_bits(cdir, seg_id, np.packbits(mask).tobytes())
             return pd.DataFrame(
                 {"seg_id": [seg_id], "n": [len(dm)],
@@ -735,75 +814,18 @@ class IndexSearcher:
             bm = spec.boost_map
             idf = {t: v * bm.get(t, 1.0) for t, v in idf.items()}
         avgdl = self.manifest.avgdl
-        seg_dirs = self.seg_dir_by_id
-        fq_bc = self._fq_cached_bc(spec)
-        # filterCache hit: the fq bitset replaces per-row predicate
-        # evaluation AND the scan drops the fq columns entirely
-        dm_cols = _BASE_COLS if fq_bc is not None else filter_cols(
-            spec, _BASE_COLS
-        )
         seg_k = (1 << 62) if k is None else k
-        deleted_bc = self._deleted_bc
-
-        # fields the fq mask actually touches (pandas-materialized in
-        # tasks; everything else stays Arrow/numpy)
-        fq_fields = sorted(
-            {f for f in spec.exists_filters}
-            | {f for f in spec.missing_filters}
-            | {f for f, _ in spec.filters}
-            | {f for f, _ in spec.in_filters}
-            | {f for f, _ in spec.not_filters}
-            | {f for f, _, _ in spec.range_filters}
-        )
-        has_deletes = bool(self.deleted_keys)
+        # norms + result ids; a filterCache hit drops the fq columns
+        dom = SegmentDomain(self, spec, _BASE_COLS)
 
         def run_seg(seg_id, term_rows):
-            import numpy as np
-            import pandas as pd
-            import pyarrow.parquet as pq
-
-            # per-segment docvalues/norms read — segment-local, no
-            # shuffle, and ARROW-NATIVE: converting a whole segment's
-            # docmap to pandas materializes every conv_id as a python
-            # string — 10M objects per query at 10M turns, the
-            # measured corpus-width latency term. Only the fq columns,
-            # the delete keys (when tombstones exist) and the top-k
-            # OUTPUT rows ever cross into pandas.
-            dm_t = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            )  # written sorted by doc_ord
-            doc_len = np.asarray(
-                dm_t.column("doc_len").to_numpy(zero_copy_only=False),
-                np.int64,
-            )
-            if fq_bc is not None:
-                bits, n = fq_bc.get(seg_id)
-                fq_mask = np.unpackbits(
-                    np.frombuffer(bits, np.uint8), count=n
-                ).astype(bool)
-            elif fq_fields:
-                fq_mask = filter_mask(
-                    dm_t.select(fq_fields).to_pandas(), spec
-                )
-            else:
-                fq_mask = None
-            if has_deletes:
-                allowed = apply_deletes(
-                    fq_mask,
-                    dm_t.select(["conv_id", "turn_idx"]).to_pandas(),
-                    deleted_bc.value if deleted_bc else None,
-                )
-            else:
-                allowed = fq_mask
+            # only the top-k OUTPUT rows cross into pandas here
+            dm, allowed = dom.allowed(seg_id)
             docs, scores = score_segment(
-                spec, term_rows, idf, avgdl, doc_len, allowed, seg_k,
-                round_to,
+                spec, term_rows, idf, avgdl, dom.ints(dm, "doc_len"),
+                allowed, seg_k, round_to,
             )
-            if len(docs) == 0:
-                return pd.DataFrame(columns=["conv_id", "turn_idx", "score"])
-            sel = dm_t.select(["conv_id", "turn_idx"]).take(docs).to_pandas()
-            sel["score"] = scores
-            return sel
+            return _take_keys(dm, docs, score=scores)
 
         return self.each_segment(run_seg, RESULT_SCHEMA, spec)
 
@@ -1048,8 +1070,6 @@ class IndexSearcher:
              MoreLikeThis.java"""
         from collections import Counter
 
-        import numpy as np
-
         from lucene_solr_spark.analyzer import tokenize_one
         from lucene_solr_spark.query.model import B, K1
         from lucene_solr_spark.query.scorer import TermPostings
@@ -1097,28 +1117,20 @@ class IndexSearcher:
             "boost double",
         )
         avgdl = self.manifest.avgdl
-        seg_dirs = self.seg_dir_by_id
-        deleted_bc = self._deleted_bc
         lidf = {t: idf[t] for t in int_union}
+        # the batched query is an OR over the interesting terms
+        or_spec = BooleanSpec(should=tuple(sorted(int_union)))
+        dom = SegmentDomain(self, or_spec, _BASE_COLS)
 
         def run_seg(seg_id, term_rows):
-            import pandas as pd
-            import pyarrow.parquet as pq
-
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=_BASE_COLS
-            ).to_pandas()
-            doc_len = dm["doc_len"].to_numpy("int64")
-            # docmap read site: liveDocs tombstones mask before any
-            # candidate leaves the task
-            live = apply_deletes(
-                None, dm, deleted_bc.value if deleted_bc else None
-            )
+            # liveDocs masks before any candidate leaves the task
+            dm, live = dom.allowed(seg_id)
+            doc_len = dom.ints(dm, "doc_len")
             frames = []
             for t, row in term_rows.items():
                 d, tf = TermPostings(row, 0.0).decode_all()
                 if live is not None:
-                    m = np.asarray(live)[d]
+                    m = live[d]
                     d, tf = d[m], tf[m]
                 if len(d) == 0:
                     continue
@@ -1127,23 +1139,16 @@ class IndexSearcher:
                     lidf[t] * (tf * (K1 + 1))
                     / (tf + K1 * (1 - B + B * dl / avgdl))
                 )
-                sel = dm.iloc[d]
-                frames.append(pd.DataFrame({
-                    "term": t,
-                    "conv_id": sel["conv_id"].to_numpy(),
-                    "turn_idx": sel["turn_idx"].to_numpy(),
-                    "contrib": contrib,
-                }))
+                frames.append(_take_keys(dm, d, term=t, contrib=contrib))
             cols = ["term", "conv_id", "turn_idx", "contrib"]
             if not frames:
                 return pd.DataFrame(columns=cols)
             return pd.concat(frames, ignore_index=True)[cols]
 
-        # the batched query is an OR over the interesting terms
         contribs = self.each_segment(
             run_seg,
             "term string, conv_id string, turn_idx int, contrib double",
-            BooleanSpec(should=tuple(sorted(int_union))),
+            or_spec,
         )
         scored = (
             contribs.join(F.broadcast(src_map), "term")
@@ -1560,11 +1565,9 @@ class IndexSearcher:
              lucene/core/src/java/org/apache/lucene/index/IndexWriterConfig.java
              (setIndexSort); solr/core/src/java/org/apache/solr/search/
              CursorMark.java (keyset paging on the request sort)"""
-        import pandas as pd
-
-        seg_dirs = self.seg_dir_by_id
-        deleted_bc = self._deleted_bc
-        has_deletes = bool(self.deleted_keys)
+        # the reader serves the path and the liveDocs mask; the
+        # streaming read stays here (no whole-segment equivalent)
+        dom = SegmentDomain(self, None, [])
         cols = ["conv_id", "turn_idx", *fields]
         schema = ", ".join(
             ["conv_id string", "turn_idx int"]
@@ -1577,7 +1580,7 @@ class IndexSearcher:
         def run_seg(seg_id, _term_rows):
             import pyarrow.parquet as pq
 
-            pf = pq.ParquetFile(f"{seg_dirs[seg_id]}/docmap.parquet")
+            pf = pq.ParquetFile(dom.path(seg_id))
             conv_i = pf.schema_arrow.names.index("conv_id")
             groups = range(pf.num_row_groups)
             if lcursor is not None:
@@ -1605,12 +1608,9 @@ class IndexSearcher:
                         (dm["conv_id"] == c0) & (dm["turn_idx"] > t0)
                     )
                     dm = dm[after]
-                if has_deletes:
-                    live = apply_deletes(
-                        None, dm, deleted_bc.value if deleted_bc else None
-                    )
-                    if live is not None:
-                        dm = dm[live]
+                live = dom.live(dm)
+                if live is not None:
+                    dm = dm[live]
                 got.append(dm.head(kk - n))
                 n += len(got[-1])
                 if n >= kk:
@@ -1711,8 +1711,7 @@ class IndexSearcher:
         dom = SegmentDomain(self, spec, ["conv_id", "turn_idx"])
 
         def run_seg(seg_id, term_rows):
-            dm, hits = dom.read(seg_id, term_rows)
-            return dm.iloc[hits][["conv_id", "turn_idx"]]
+            return _take_keys(*dom.read(seg_id, term_rows))
 
         return self.each_segment(
             run_seg, "conv_id string, turn_idx int", dom.postings_spec
@@ -1747,30 +1746,16 @@ class IndexSearcher:
         PayloadScoreQuery.java, MaxPayloadFunction/MinPayloadFunction/
         SumPayloadFunction/AveragePayloadFunction.java
         """
-        import numpy as np
-
         if func not in ("min", "max", "sum", "avg"):
             raise ValueError(f"unknown payload function: {func}")
         spec = BooleanSpec(must=(term,), filters=tuple(filters), k=k)
-        seg_dirs = self.seg_dir_by_id
-        dm_cols = filter_cols(spec, _BASE_COLS)
-        deleted_bc = self._deleted_bc
+        dom = SegmentDomain(self, spec, ["conv_id", "turn_idx"])
         lfunc = func
 
         def run_seg(seg_id, term_rows):
-            import pandas as pd
-            import pyarrow.parquet as pq
-
             from lucene_solr_spark.query.scorer import TermPostings
 
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            ).to_pandas()
-            allowed = apply_deletes(
-                filter_mask(dm, spec), dm,
-                deleted_bc.value if deleted_bc else None,
-            )
-            empty = pd.DataFrame(columns=["conv_id", "turn_idx", "score"])
+            dm, allowed = dom.allowed(seg_id)
             tp = TermPostings(term_rows[term], 0.0)
             d, tf, pos = tp.positions(np.arange(tp.n_blocks))
             if allowed is not None:
@@ -1778,7 +1763,7 @@ class IndexSearcher:
                 occ_keep = np.repeat(keep, tf)
                 d, tf, pos = d[keep], tf[keep], pos[occ_keep]
             if len(d) == 0:
-                return empty
+                return pd.DataFrame(columns=["conv_id", "turn_idx", "score"])
             pay = 1.0 + (pos % 4).astype(np.float64)
             starts = np.cumsum(tf) - tf
             if lfunc == "sum":
@@ -1789,14 +1774,7 @@ class IndexSearcher:
                 s = np.minimum.reduceat(pay, starts)
             else:  # avg
                 s = np.add.reduceat(pay, starts) / tf.astype(np.float64)
-            sel = dm.iloc[d]
-            return pd.DataFrame(
-                {
-                    "conv_id": sel["conv_id"].to_numpy(),
-                    "turn_idx": sel["turn_idx"].to_numpy(),
-                    "score": s,
-                }
-            )
+            return _take_keys(dm, d, score=s)
 
         # the payload decode reads the position stream: all columns
         hits = self.each_segment(run_seg, RESULT_SCHEMA, terms=(term,))
@@ -1824,39 +1802,21 @@ class IndexSearcher:
              solr/search/ValueSourceParser.java (termfreq/docfreq/
              totaltermfreq registrations)
         """
-        import numpy as np
-
-        seg_dirs = self.seg_dir_by_id
-        deleted_bc = self._deleted_bc
+        spec = BooleanSpec(must=(term,))
+        dom = SegmentDomain(self, spec, ["conv_id", "turn_idx"])
 
         def run_seg(seg_id, term_rows):
-            import pandas as pd
-            import pyarrow.parquet as pq
-
             from lucene_solr_spark.query.scorer import TermPostings
 
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=_BASE_COLS
-            ).to_pandas()
-            allowed = apply_deletes(
-                None, dm, deleted_bc.value if deleted_bc else None
-            )
+            dm, allowed = dom.allowed(seg_id)
             d, tf = TermPostings(term_rows[term], 0.0).decode_all()
             if allowed is not None:
                 keep = allowed[d]
                 d, tf = d[keep], tf[keep]
-            sel = dm.iloc[d]
-            return pd.DataFrame(
-                {
-                    "conv_id": sel["conv_id"].to_numpy(),
-                    "turn_idx": sel["turn_idx"].to_numpy(),
-                    "tf": tf.astype(np.int64),
-                }
-            )
+            return _take_keys(dm, d, tf=tf.astype(np.int64))
 
         return self.each_segment(
-            run_seg, "conv_id string, turn_idx int, tf long",
-            BooleanSpec(must=(term,)),
+            run_seg, "conv_id string, turn_idx int, tf long", spec
         )
 
     def payload_check(
@@ -1888,8 +1848,6 @@ class IndexSearcher:
         ref: lucene/queries/src/java/org/apache/lucene/queries/
         payloads/SpanPayloadCheckQuery.java
         """
-        import numpy as np
-
         if len(payloads) != len(terms):
             raise ValueError(
                 f"payloads/terms length mismatch: {len(payloads)} vs "
@@ -1898,20 +1856,10 @@ class IndexSearcher:
         if any(p not in (1.0, 2.0, 3.0, 4.0) for p in payloads):
             raise ValueError(f"payloads outside pay(p) range: {payloads}")
         spec = BooleanSpec(phrases=(tuple(terms),), k=k)
-        seg_dirs = self.seg_dir_by_id
-        dm_cols = filter_cols(spec, _BASE_COLS)
-        deleted_bc = self._deleted_bc
-        # None on a pre-max_dl manifest: the task takes it from the
-        # docmap it reads anyway
-        max_dl = {
-            sid: self.manifest.seg_max_dl(sid) for sid in seg_dirs
-        }
+        dom = SegmentDomain(self, spec, ["conv_id", "turn_idx"])
         terms_t, pays = tuple(terms), tuple(payloads)
 
         def run_seg(seg_id, term_rows):
-            import pandas as pd
-            import pyarrow.parquet as pq
-
             from lucene_solr_spark.query.scorer import (
                 TermPostings,
                 _phrase_start_keys,
@@ -1922,12 +1870,8 @@ class IndexSearcher:
                 TermPostings(term_rows[t], 0.0) if t in term_rows else None
                 for t in terms_t
             ]
-            dm = pq.read_table(
-                f"{seg_dirs[seg_id]}/docmap.parquet", columns=dm_cols
-            ).to_pandas()
-            seg_max = max_dl[seg_id]
-            if seg_max is None:
-                seg_max = int(dm["doc_len"].max()) if len(dm) else 0
+            dm, allowed = dom.allowed(seg_id)
+            seg_max = dom.max_doclen(seg_id, dm)
             keys = _phrase_start_keys(tps, seg_max)
             if len(keys) == 0:
                 return empty
@@ -1937,25 +1881,12 @@ class IndexSearcher:
             for i, pv in enumerate(pays):
                 m &= (1.0 + ((p + i) % 4).astype(np.float64)) == pv
             docs = keys[m] // stride
-            if len(docs) == 0:
-                return empty
-            allowed = apply_deletes(
-                filter_mask(dm, spec), dm,
-                deleted_bc.value if deleted_bc else None,
-            )
             if allowed is not None:
                 docs = docs[allowed[docs]]
-                if len(docs) == 0:
-                    return empty
+            if len(docs) == 0:
+                return empty
             d, c = np.unique(docs, return_counts=True)
-            sel = dm.iloc[d]
-            return pd.DataFrame(
-                {
-                    "conv_id": sel["conv_id"].to_numpy(),
-                    "turn_idx": sel["turn_idx"].to_numpy(),
-                    "score": c.astype(np.float64),
-                }
-            )
+            return _take_keys(dm, d, score=c.astype(np.float64))
 
         hits = self.each_segment(run_seg, RESULT_SCHEMA, spec)
         if round_to is not None:

@@ -20,10 +20,11 @@ The fork's signature path, re-expressed Spark-first:
 
 Matching, counting and the ord→term lookup happen in ONE per-segment
 pass (``IndexSearcher.each_segment``): each task reads its own
-segment's postings rows, docmap ordinal column and dictionary, so the
-hit DocSet never leaves the executor and nothing shuffles to reach a
-segment; what shuffles is the named ``(seg_id, term, cnt)`` partials
-(tiny).
+segment's postings rows, its docmap ordinal column through
+``executor.SegmentDomain`` (the segment reader: hit ords with the fq
+and liveDocs masks applied) and its dictionary, so the hit DocSet
+never leaves the executor and nothing shuffles to reach a segment;
+what shuffles is the named ``(seg_id, term, cnt)`` partials (tiny).
 
 Physical plan::
 
@@ -50,20 +51,26 @@ from lucene_solr_spark.query.model import BooleanSpec
 PARTIAL_SCHEMA = "seg_id int, term string, cnt long"
 
 
-def _ord_terms(seg_dir: str, field: str) -> np.ndarray:
-    """TASK-side ``lookupOrd``: the segment's ord → term table for
-    ``field``, read from its OWN ``dicts.parquet`` — partials leave the
-    counting task already named, so no plan joins the dictionaries."""
+def _ord_terms(seg_dir: str, *fields: str) -> list[np.ndarray]:
+    """TASK-side ``lookupOrd``: the segment's ord → term table of each
+    of ``fields``, from ONE read of its own ``dicts.parquet`` —
+    partials leave the counting task already named, so no plan joins
+    the dictionaries."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     t = pq.read_table(
-        f"{seg_dir}/dicts.parquet", columns=["term_ord", "term"],
-        filters=[("field", "==", field)],
+        f"{seg_dir}/dicts.parquet", columns=["field", "term_ord", "term"],
+        filters=[("field", "in", list(fields))],
     )
-    ords = t.column("term_ord").to_numpy()
-    lut = np.empty(int(ords.max()) + 1 if len(ords) else 0, dtype=object)
-    lut[ords] = t.column("term").to_numpy(zero_copy_only=False)
-    return lut
+    luts = []
+    for f in fields:
+        sub = t.filter(pc.equal(t.column("field"), f))
+        ords = sub.column("term_ord").to_numpy()
+        lut = np.empty(int(ords.max()) + 1 if len(ords) else 0, dtype=object)
+        lut[ords] = sub.column("term").to_numpy()
+        luts.append(lut)
+    return luts
 
 
 def _named(lut: np.ndarray, ords: np.ndarray) -> np.ndarray:
@@ -151,8 +158,8 @@ def segment_partials(searcher, req: FacetRequest, spec: BooleanSpec | None) -> D
 
     def count(seg_id: int, term_rows) -> pd.DataFrame:
         dm, hits = dom.read(seg_id, term_rows)
-        ords = dm[ord_col].to_numpy(np.int64)
-        groups = dm["conv_id"].to_numpy() if grouped else None
+        ords = dom.ints(dm, ord_col)
+        groups = dm.column("conv_id").to_numpy() if grouped else None
         if hits is not None:
             ords = ords[hits]
             if groups is not None:
@@ -183,7 +190,9 @@ def segment_partials(searcher, req: FacetRequest, spec: BooleanSpec | None) -> D
         return pd.DataFrame(
             {
                 "seg_id": np.full(len(uniq), seg_id, np.int32),
-                "term": _named(_ord_terms(dom.seg_dirs[seg_id], field), uniq),
+                "term": _named(
+                    _ord_terms(dom.seg_dirs[seg_id], field)[0], uniq
+                ),
                 "cnt": cnt.astype(np.int64),
             }
         )
@@ -290,12 +299,13 @@ def facet_metrics(
 
     def run_seg(seg_id: int, term_rows) -> pd.DataFrame:
         dm, hits = dom.read(seg_id, term_rows)
-        ords = dm[ord_col].to_numpy(np.int64)
+        ords = dom.ints(dm, ord_col)
+        mv = dm.select(list(metric_cols)).to_pandas()
         # numeric kinds read float64 (nulls → NaN, masked out below);
         # missing/countvals/unique read the raw values + a null mask
-        vals = {c: dm[c].to_numpy(np.float64) for c in num_cols}
-        nulls = {c: dm[c].isna().to_numpy() for c in metric_cols}
-        objs = {c: dm[c].to_numpy(object) for c in uq_cols}
+        vals = {c: mv[c].to_numpy(np.float64) for c in num_cols}
+        nulls = {c: mv[c].isna().to_numpy() for c in metric_cols}
+        objs = {c: mv[c].to_numpy(object) for c in uq_cols}
         if hits is not None:
             ords = ords[hits]
             vals = {c: v[hits] for c, v in vals.items()}
@@ -310,7 +320,7 @@ def facet_metrics(
         objs = {c: v[keep] for c, v in objs.items()}
         uniq, inv = np.unique(ords, return_inverse=True)
         data = {
-            "term": _ord_terms(dom.seg_dirs[seg_id], field)[uniq],
+            "term": _ord_terms(dom.seg_dirs[seg_id], field)[0][uniq],
             "cnt": np.bincount(inv).astype(np.int64),
         }
         nb = len(uniq)
@@ -418,137 +428,78 @@ def facet_metrics(
 
 def facet_pivot(
     searcher,
-    f1: str,
-    f2: str,
+    fields: tuple[str, ...],
     spec: BooleanSpec | None = None,
-    limit1: int = 3,
-    limit2: int = 2,
+    *,
+    limits: tuple[int, ...],
 ) -> DataFrame:
     """Hierarchical pivot facet over the index docvalues
-    (``PivotFacetProcessor``): top `limit1` values of f1 by count,
-    within each the top `limit2` values of f2.
+    (``facet.pivot=f1,f2,...`` — ``PivotFacetProcessor``), any depth:
+    level 1 keeps the top ``limits[0]`` values of ``fields[0]``, and
+    each deeper level keeps the top ``limits[i]`` children of every
+    surviving parent, all ranked by (total desc, value asc). Rows are
+    ``(v1, …, vN, cnt)`` ordered count desc, value asc at every level
+    (Solr's ``facet.sort=count``). Multiterm specs are rewritten here.
 
-    Per-segment sparse PAIR counting: one ``np.unique`` over the
-    packed (ord1, ord2) key of hit docs — only touched pairs leave the
-    executor (named in the task), so shuffle width is bounded by
-    distinct co-occurring pairs, not field-cardinality product. Rows
-    with either value missing (ord -1) are excluded, Lucene missing
-    semantics."""
-    o1, o2 = f"{f1}_ord", f"{f2}_ord"
-    dom = SegmentDomain(searcher, spec, [o1, o2])
-
-    def count_pairs(seg_id: int, term_rows) -> pd.DataFrame:
-        dm, hits = dom.read(seg_id, term_rows)
-        a, b = dm[o1].to_numpy(np.int64), dm[o2].to_numpy(np.int64)
-        if hits is not None:
-            a, b = a[hits], b[hits]
-        m = (a >= 0) & (b >= 0)
-        key = a[m] * (1 << 31) + b[m]
-        uniq, cnt = np.unique(key, return_counts=True)
-        seg_dir = dom.seg_dirs[seg_id]
-        return pd.DataFrame({
-            "v1": _ord_terms(seg_dir, f1)[uniq >> 31],
-            "v2": _ord_terms(seg_dir, f2)[uniq & ((1 << 31) - 1)],
-            "cnt": cnt.astype(np.int64),
-        })
-
-    named = (
-        searcher.each_segment(
-            count_pairs, "v1 string, v2 string, cnt long", dom.postings_spec
-        )
-        .groupBy("v1", "v2").agg(F.sum("cnt").alias("cnt"))
-    )
-    top1 = (
-        named.groupBy("v1").agg(F.sum("cnt").alias("t1"))
-        .orderBy(F.desc("t1"), "v1").limit(limit1)
-    )
-    w = Window.partitionBy("v1").orderBy(F.desc("cnt"), F.asc("v2"))
-    return (
-        named.join(F.broadcast(top1), "v1")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= limit2)
-        .select("v1", "v2", "cnt", "t1")
-        .orderBy(F.desc("t1"), "v1", F.desc("cnt"), "v2")
-        .drop("t1")
-    )
-
-
-def facet_pivot3(
-    searcher,
-    f1: str,
-    f2: str,
-    f3: str,
-    spec: BooleanSpec | None = None,
-    limit1: int = 3,
-    limit2: int = 2,
-    limit3: int = 2,
-) -> DataFrame:
-    """Three-level pivot facet (``facet.pivot=f1,f2,f3`` —
-    PivotFacetProcessor recursion depth 3): top `limit1` values of f1
-    by count, within each the top `limit2` of f2, within each the top
-    `limit3` of f3.
-
-    Same sparse shape as :func:`facet_pivot`, one level deeper: ONE
-    ``np.unique`` per segment over the packed (ord1, ord2, ord3)
-    int64 key (21 bits per ordinal — ords are docvalues-dictionary
-    indices, far below 2^21 for any facetable field) — shuffle width
-    stays bounded by distinct co-occurring TRIPLES, never the
-    cardinality product; docs missing any of the three values are
-    excluded (Lucene missing semantics, matching the 2-level pivot).
+    Per-segment sparse tuple counting: one ``np.unique`` over the hit
+    docs' (ord1, …, ordN) rows, named in the task from ONE read of the
+    segment's dictionary — only touched tuples leave the executor, so
+    shuffle width is bounded by distinct co-occurring tuples, never
+    the cardinality product. Docs missing any of the values (ord -1)
+    are excluded, Lucene missing semantics.
 
     ref: solr/core/src/java/org/apache/solr/handler/component/
     PivotFacetProcessor.java (doPivots recursion)."""
-    o1, o2, o3 = f"{f1}_ord", f"{f2}_ord", f"{f3}_ord"
-    _B21 = (1 << 21) - 1
-    dom = SegmentDomain(searcher, spec, [o1, o2, o3])
+    fields, limits = tuple(fields), tuple(limits)
+    n = len(fields)
+    if len(limits) != n:
+        raise ValueError(f"facet_pivot: {n} fields but {len(limits)} limits")
+    if spec is not None and spec.needs_rewrite:
+        spec = searcher.rewrite(spec)
+    ord_cols = [f"{f}_ord" for f in fields]
+    vs = [f"v{i + 1}" for i in range(n)]
+    ts = [f"t{i + 1}" for i in range(n)]
+    dom = SegmentDomain(searcher, spec, ord_cols)
 
-    def count_triples(seg_id: int, term_rows) -> pd.DataFrame:
+    def count_tuples(seg_id: int, term_rows) -> pd.DataFrame:
         dm, hits = dom.read(seg_id, term_rows)
-        a, b, c = (dm[o].to_numpy(np.int64) for o in (o1, o2, o3))
+        ords = np.stack([dom.ints(dm, c) for c in ord_cols], axis=1)
         if hits is not None:
-            a, b, c = a[hits], b[hits], c[hits]
-        m = (a >= 0) & (b >= 0) & (c >= 0)
-        key = (a[m] << 42) | (b[m] << 21) | c[m]
-        uniq, cnt = np.unique(key, return_counts=True)
-        seg_dir = dom.seg_dirs[seg_id]
-        return pd.DataFrame({
-            "v1": _ord_terms(seg_dir, f1)[uniq >> 42],
-            "v2": _ord_terms(seg_dir, f2)[(uniq >> 21) & _B21],
-            "v3": _ord_terms(seg_dir, f3)[uniq & _B21],
-            "cnt": cnt.astype(np.int64),
-        })
+            ords = ords[hits]
+        ords = ords[(ords >= 0).all(axis=1)]
+        uniq, cnt = np.unique(ords, axis=0, return_counts=True)
+        luts = _ord_terms(dom.seg_dirs[seg_id], *fields)
+        out = {v: lut[uniq[:, i]] for i, (v, lut) in enumerate(zip(vs, luts))}
+        return pd.DataFrame({**out, "cnt": cnt.astype(np.int64)})
 
     named = (
         searcher.each_segment(
-            count_triples, "v1 string, v2 string, v3 string, cnt long",
+            count_tuples,
+            ", ".join(f"{v} string" for v in vs) + ", cnt long",
             dom.postings_spec,
         )
-        .groupBy("v1", "v2", "v3").agg(F.sum("cnt").alias("cnt"))
+        .groupBy(*vs).agg(F.sum("cnt").alias("cnt"))
     )
-    top1 = (
-        named.groupBy("v1").agg(F.sum("cnt").alias("t1"))
-        .orderBy(F.desc("t1"), "v1").limit(limit1)
-    )
-    # level-2 pick WITHIN the surviving v1 buckets (PivotFacet's
-    # per-parent recursion): totals per (v1, v2), top limit2 each
-    lvl2 = (
-        named.join(F.broadcast(top1), "v1")
-        .groupBy("v1", "v2").agg(F.sum("cnt").alias("t2"))
-    )
-    w2 = Window.partitionBy("v1").orderBy(F.desc("t2"), F.asc("v2"))
-    top2 = (
-        lvl2.withColumn("rk2", F.row_number().over(w2))
-        .filter(F.col("rk2") <= limit2)
-        .select("v1", "v2", "t2")
-    )
-    w3 = Window.partitionBy("v1", "v2").orderBy(F.desc("cnt"), F.asc("v3"))
-    return (
-        named.join(F.broadcast(top2), ["v1", "v2"])
-        .withColumn("rk3", F.row_number().over(w3))
-        .filter(F.col("rk3") <= limit3)
-        .orderBy("v1", F.desc("t2"), "v2", F.desc("cnt"), "v3")
-        .select("v1", "v2", "v3", "cnt")
-    )
+    # level by level (PivotFacet's per-parent recursion): totals of
+    # the surviving parents' children, top limits[i] per parent; the
+    # parents' totals ride along for the output order
+    top = None
+    for i, lim in enumerate(limits):
+        src = named if top is None else named.join(F.broadcast(top), vs[:i])
+        tot = src.groupBy(*vs[: i + 1], *ts[:i]).agg(
+            F.sum("cnt").alias(ts[i])
+        )
+        if i == 0:
+            top = tot.orderBy(F.desc(ts[0]), vs[0]).limit(lim)
+            continue
+        w = Window.partitionBy(*vs[:i]).orderBy(F.desc(ts[i]), F.asc(vs[i]))
+        top = (
+            tot.withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") <= lim)
+            .drop("rk")
+        )
+    order = [c for t, v in zip(ts, vs) for c in (F.desc(t), F.asc(v))]
+    return top.orderBy(*order).select(*vs, F.col(ts[-1]).alias("cnt"))
 
 
 def facet_nested(
@@ -566,10 +517,10 @@ def facet_nested(
     carrying count + avg(doc_len) (an ``AggValueSource`` metric riding
     the same partial rows).
 
-    Physical: per-segment sparse (ord1, ord2) pair counting like
-    :func:`facet_pivot`, but (a) docs missing f2 still count toward
-    their f1 bucket (ord2 = -1 partials survive as a NULL v2, Lucene
-    bucket-count semantics: the sub-facet only narrows its own
+    Physical: per-segment sparse (ord1, ord2) pair counting like a
+    2-level :func:`facet_pivot`, but (a) docs missing f2 still count
+    toward their f1 bucket (ord2 = -1 partials survive as a NULL v2,
+    Lucene bucket-count semantics: the sub-facet only narrows its own
     sub-domain), and (b) each partial carries Σ doc_len so any
     algebraic metric merges associatively — only touched (pair, cnt,
     sum) rows shuffle."""
@@ -578,7 +529,7 @@ def facet_nested(
 
     def count_pairs(seg_id: int, term_rows) -> pd.DataFrame:
         dm, hits = dom.read(seg_id, term_rows)
-        a, b, dl = (dm[c].to_numpy(np.int64) for c in (o1, o2, "doc_len"))
+        a, b, dl = (dom.ints(dm, c) for c in (o1, o2, "doc_len"))
         if hits is not None:
             a, b, dl = a[hits], b[hits], dl[hits]
         m = a >= 0  # keep ord2 == -1: counts toward the parent bucket
@@ -596,12 +547,10 @@ def facet_nested(
             np.add.reduceat(dl_s, starts) if len(key_s)
             else np.empty(0, np.int64)
         )
-        seg_dir = dom.seg_dirs[seg_id]
+        lut1, lut2 = _ord_terms(dom.seg_dirs[seg_id], f1, f2)
         return pd.DataFrame({
-            "v1": _ord_terms(seg_dir, f1)[uniq >> 31],
-            "v2": _named(
-                _ord_terms(seg_dir, f2), (uniq & ((1 << 31) - 1)) - 1
-            ),
+            "v1": lut1[uniq >> 31],
+            "v2": _named(lut2, (uniq & ((1 << 31) - 1)) - 1),
             "cnt": cnt.astype(np.int64),
             "sum_dl": sums.astype(np.int64),
         })
@@ -813,7 +762,7 @@ def facet_relatedness(
 
     def run_seg(seg_id: int, term_rows) -> pd.DataFrame:
         dm, hits = dom.read(seg_id, term_rows)
-        ords = dm[ord_col].to_numpy(np.int64)
+        ords = dom.ints(dm, ord_col)
         live = dom.live(dm)
         if live is None:
             bg_ords, bg_size = ords, len(dm)
@@ -830,7 +779,9 @@ def facet_relatedness(
         if len(fg_u):
             fg_col[np.searchsorted(bg_u, fg_u)] = fg_c
         # sizes row: a NULL term carries (fg_size, bg_size)
-        terms = np.append(_ord_terms(dom.seg_dirs[seg_id], field)[bg_u], None)
+        terms = np.append(
+            _ord_terms(dom.seg_dirs[seg_id], field)[0][bg_u], None
+        )
         return pd.DataFrame(
             {
                 "term": terms,
@@ -912,16 +863,16 @@ def facet_block_domain(
 
     def run_seg(seg_id: int, term_rows) -> pd.DataFrame:
         dm, hits = dom.read(seg_id, term_rows)
-        convs = dm["conv_id"].to_numpy()
+        convs = dm.column("conv_id").to_numpy()
         # widen: every live doc whose conversation contains a hit
         in_block = np.isin(convs, np.unique(convs[hits]))
         live = dom.live(dm)
         if live is not None:
             in_block &= live
-        ords = dm[ord_col].to_numpy(np.int64)[in_block]
+        ords = dom.ints(dm, ord_col)[in_block]
         uniq, cnt = np.unique(ords[ords >= 0], return_counts=True)
         return pd.DataFrame({
-            "term": _ord_terms(dom.seg_dirs[seg_id], field)[uniq],
+            "term": _ord_terms(dom.seg_dirs[seg_id], field)[0][uniq],
             "cnt": cnt.astype(np.int64),
         })
 
@@ -961,8 +912,8 @@ def facet_unique_block(
 
     def run_seg(seg_id: int, term_rows) -> pd.DataFrame:
         dm, hits = dom.read(seg_id, term_rows)
-        ords = dm[ord_col].to_numpy(np.int64)
-        convs = dm["conv_id"].to_numpy()
+        ords = dom.ints(dm, ord_col)
+        convs = dm.column("conv_id").to_numpy()
         if hits is not None:
             ords, convs = ords[hits], convs[hits]
         keep = ords >= 0
@@ -978,7 +929,7 @@ def facet_unique_block(
         )
         return pd.DataFrame(
             {
-                "term": _ord_terms(dom.seg_dirs[seg_id], field)[uniq_o],
+                "term": _ord_terms(dom.seg_dirs[seg_id], field)[0][uniq_o],
                 "cnt": cnt.astype(np.int64),
                 "uniq": ub.astype(np.int64),
             }
@@ -1026,17 +977,17 @@ def facet_block_parent(
 
     def run_seg(seg_id: int, term_rows) -> pd.DataFrame:
         dm, hits = dom.read(seg_id, term_rows)
-        convs = dm["conv_id"].to_numpy()
+        convs = dm.column("conv_id").to_numpy()
         # toParent: parent rows (turn 0, live) of conversations with a hit
-        parents = dm["turn_idx"].to_numpy(np.int64) == 0
+        parents = dom.ints(dm, "turn_idx") == 0
         live = dom.live(dm)
         if live is not None:
             parents &= live
         parents &= np.isin(convs, np.unique(convs[hits]))
-        ords = dm[ord_col].to_numpy(np.int64)[parents]
+        ords = dom.ints(dm, ord_col)[parents]
         uniq, cnt = np.unique(ords[ords >= 0], return_counts=True)
         return pd.DataFrame({
-            "term": _ord_terms(dom.seg_dirs[seg_id], field)[uniq],
+            "term": _ord_terms(dom.seg_dirs[seg_id], field)[0][uniq],
             "cnt": cnt.astype(np.int64),
         })
 

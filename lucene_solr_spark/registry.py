@@ -1897,7 +1897,7 @@ def _idx_facet_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lucene_solr_spark.query.facets import facet_pivot
 
     s = cached_searcher(spark, sf_dir)
-    return facet_pivot(s, "role", "tool", spec=None, limit1=3, limit2=2)
+    return facet_pivot(s, ("role", "tool"), spec=None, limits=(3, 2))
 
 
 register(
@@ -1922,14 +1922,14 @@ def _idx_facet_pivot3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """facet.pivot=role,tool,ftok — THREE-level pivot over the 'data'
     query domain through the index docvalues: top-3 roles, top-2
     tools within each, top-2 first-tokens within each of those. One
-    np.unique per segment over the packed (ord1,ord2,ord3) key — the
-    shuffle carries distinct TRIPLES only (see facets.facet_pivot3)."""
-    from lucene_solr_spark.query.facets import facet_pivot3
+    np.unique per segment over the (ord1,ord2,ord3) rows — the
+    shuffle carries distinct TRIPLES only (see facets.facet_pivot)."""
+    from lucene_solr_spark.query.facets import facet_pivot
 
     s = cached_searcher(spark, sf_dir)
-    return facet_pivot3(
-        s, "role", "tool", "ftok", spec=BooleanSpec(must=("data",)),
-        limit1=3, limit2=2, limit3=2,
+    return facet_pivot(
+        s, ("role", "tool", "ftok"), spec=BooleanSpec(must=("data",)),
+        limits=(3, 2, 2),
     )
 
 

@@ -1149,8 +1149,8 @@ def test_select_handler_pivot_and_debug_legs(spark, sf_dir):
                       "facet.limit": 3, "debug": True})
     got = [tuple(r) for r in resp["facet_pivots"]["role,tool"].collect()]
     want = [tuple(r) for r in facet_pivot(
-        s, "role", "tool", spec=BooleanSpec(must=("data",), k=4),
-        limit1=3, limit2=3,
+        s, ("role", "tool"), spec=BooleanSpec(must=("data",), k=4),
+        limits=(3, 3),
     ).collect()]
     assert got == want and got
     # debug: contribs sum to the page scores, keys cover the page

@@ -246,3 +246,137 @@ def test_r4_read_paths_honor_tombstones(spark, idx):
         after, "role", BooleanSpec(must=("merge",)), limit=20
     ).collect()
     assert all(r.facet_value != "user" for r in wide)
+
+
+# ---------------------------------------------------------------------------
+# every segment-reader user that no test above runs on a tombstoned index
+# ---------------------------------------------------------------------------
+
+Q_DATA = BooleanSpec(must=("data",))
+#: crosses roles, tools, conversations and parent (turn 0) rows
+Q_DEL = BooleanSpec(must=("merge",), range_filters=(("turn_idx", "0", "3"),))
+
+
+def _docvalues(before, deleted, spec):
+    """pandas recount source, independent of the reader: the pre-delete
+    docvalues, flagged with the spec's pre-delete hits and liveness."""
+    dm = before.docmap().toPandas()
+    hits = {(r.conv_id, r.turn_idx) for r in before.docset(spec).collect()}
+    keys = list(zip(dm.conv_id, dm.turn_idx))
+    dm["hit"] = [k in hits for k in keys]
+    dm["live"] = [k not in deleted for k in keys]
+    return dm
+
+
+def _pivot(fields):
+    def check(sf_dir, before, after, dm):
+        from lucene_solr_spark.query.facets import facet_pivot
+
+        def recount(d):
+            d = d[d.hit].dropna(subset=list(fields))
+            n = d.groupby(list(fields)).size()
+            return {k: int(v) for k, v in n.items()}
+
+        got = {tuple(r)[:-1]: r.cnt for r in facet_pivot(
+            after, fields, spec=Q_DATA, limits=(10**6,) * len(fields)
+        ).collect()}
+        assert got == recount(dm[dm.live]) != recount(dm)
+    return check
+
+
+def _nested(sf_dir, before, after, dm):
+    from lucene_solr_spark.query.facets import facet_nested
+
+    def recount(d):
+        d = d[d.hit].dropna(subset=["role"])
+        cnt1 = d.groupby("role").size()
+        sub = d.dropna(subset=["tool"]).groupby(["role", "tool"]).doc_len
+        return {(v1, v2): (int(cnt1[v1]), int(n), m)
+                for (v1, v2), n, m in zip(
+                    sub.size().index, sub.size(), sub.mean())}
+
+    got = {(r.v1, r.v2): (r.cnt1, r.cnt2, r.avg_dl) for r in facet_nested(
+        after, "role", "tool", spec=Q_DATA, limit1=10, limit2=10**6
+    ).collect()}
+    want = recount(dm[dm.live])
+    assert set(got) == set(want) and want != recount(dm)
+    for key, (c1, c2, avg) in got.items():
+        assert (c1, c2) == want[key][:2] and abs(avg - want[key][2]) < 1e-4
+
+
+def _metrics(sf_dir, before, after, dm):
+    from lucene_solr_spark.query.facets import facet_metrics
+
+    def recount(d):
+        d = d[d.hit].dropna(subset=["role"])
+        g = d.groupby("role").doc_len
+        return {v: (int(n), float(s)) for v, n, s in zip(
+            g.size().index, g.size(), g.sum())}
+
+    got = {r.facet_value: (r.cnt, r.sum_doc_len) for r in facet_metrics(
+        after, "role", spec=Q_DATA, aggs=(("sum", "doc_len"),)
+    ).collect()}
+    assert got == recount(dm[dm.live]) != recount(dm)
+
+
+def _block_parent(sf_dir, before, after, dm):
+    from lucene_solr_spark.query.facets import facet_block_parent
+
+    def recount(d):
+        convs = set(d[d.hit].conv_id)
+        p = d[(d.turn_idx == 0) & d.conv_id.isin(convs)].dropna(
+            subset=["role"])
+        return {k: int(v) for k, v in p.groupby("role").size().items()}
+
+    got = {r.facet_value: r.cnt for r in facet_block_parent(
+        after, "role", Q_DATA, limit=10).collect()}
+    assert got == recount(dm[dm.live]) != recount(dm)
+
+
+def _significant_terms(sf_dir, before, after, dm):
+    deleted = after.deleted_keys
+    rows = after.significant_terms(Q_DATA, min_fg=5, limit=3).collect()
+    assert rows
+    moved = False
+    for r in rows:
+        spec = BooleanSpec(must=tuple(dict.fromkeys(("data", r.term))))
+        fg_all = {(x.conv_id, x.turn_idx)
+                  for x in before.docset(spec).collect()}
+        assert r.fg_df == len(fg_all - deleted), r
+        moved |= bool(fg_all & deleted)
+    assert moved  # the delete reaches the fg domain
+
+
+def _mlt_batch(sf_dir, before, after, dm):
+    t = transcripts_from_documents(before.spark, sf_dir).toPandas()
+    live = dm[dm.live & dm.hit].sort_values(["conv_id", "turn_idx"]).head(3)
+    text = {(r.conv_id, r.turn_idx): r.text for r in t.itertuples()}
+    sources = [(c, int(i), text[(c, i)])
+               for c, i in zip(live.conv_id, live.turn_idx)]
+
+    def sims(s):
+        return {(r.sim_conv_id, r.sim_turn_idx)
+                for r in s.mlt_batch(sources, k=50).collect()}
+
+    deleted = after.deleted_keys
+    assert sims(before) & deleted  # the delete reaches the candidates
+    got = sims(after)
+    assert got and not got & deleted
+
+
+@pytest.mark.parametrize("check", [
+    _pivot(("role", "tool")), _pivot(("role", "tool", "ftok")), _nested,
+    _metrics, _block_parent, _significant_terms, _mlt_batch,
+], ids=["pivot2", "pivot3", "facet_nested", "facet_metrics",
+        "facet_block_parent", "significant_terms", "mlt_batch"])
+def test_segment_reader_users_honor_tombstones(spark, sf_dir, idx, check):
+    """Each surface that reads segments through SegmentDomain, on a
+    tombstoned index: counts equal a pandas recount over the live docs
+    (and differ from the pre-delete recount, so the delete reaches the
+    domain), or the output holds no deleted key."""
+    before = IndexSearcher(spark, idx)
+    n = delete_by_query(spark, idx, Q_DEL)
+    after = IndexSearcher(spark, idx)
+    assert n == len(after.deleted_keys) > 0
+    check(sf_dir, before, after,
+          _docvalues(before, after.deleted_keys, Q_DATA))

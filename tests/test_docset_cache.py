@@ -141,12 +141,12 @@ def test_cached_docset_pivot_and_nested_identical(searcher):
 
     spec = SPECS[0]
     cold_p = [tuple(r) for r in facet_pivot(
-        searcher, "role", "tool", spec=spec, limit1=3, limit2=2).collect()]
+        searcher, ("role", "tool"), spec=spec, limits=(3, 2)).collect()]
     cold_n = [tuple(r) for r in facet_nested(
         searcher, "role", "tool", spec=spec, limit1=3, limit2=2).collect()]
     searcher.cache_docset(spec)
     warm_p = [tuple(r) for r in facet_pivot(
-        searcher, "role", "tool", spec=spec, limit1=3, limit2=2).collect()]
+        searcher, ("role", "tool"), spec=spec, limits=(3, 2)).collect()]
     warm_n = [tuple(r) for r in facet_nested(
         searcher, "role", "tool", spec=spec, limit1=3, limit2=2).collect()]
     assert cold_p == warm_p and cold_p

@@ -241,8 +241,8 @@ def test_nested_and_pivot_merge_invariant(spark, sf_dir, tmp_path_factory):
     b = facet_nested(sm, "role", "tool", spec=spec, limit1=3, limit2=2).toPandas()
     assert a.equals(b), (a, b)
 
-    c = facet_pivot(s, "role", "tool", spec=spec, limit1=3, limit2=2).toPandas()
-    d = facet_pivot(sm, "role", "tool", spec=spec, limit1=3, limit2=2).toPandas()
+    c = facet_pivot(s, ("role", "tool"), spec=spec, limits=(3, 2)).toPandas()
+    d = facet_pivot(sm, ("role", "tool"), spec=spec, limits=(3, 2)).toPandas()
     assert c.equals(d), (c, d)
 
     # grouped facet + bucket metrics: merging unions disjoint conv

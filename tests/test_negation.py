@@ -125,7 +125,7 @@ def test_pivot_filtered_domain(env):
     (round 1 silently over-counted)."""
     s, t, pdf = env
     spec = BooleanSpec(must=("data",), filters=(("role", "user"),))
-    got = facet_pivot(s, "role", "tool", spec=spec, limit1=3, limit2=2).toPandas()
+    got = facet_pivot(s, ("role", "tool"), spec=spec, limits=(3, 2)).toPandas()
     sub = pdf[
         np.array([("data" in ts) for ts in pdf.toks])
         & (pdf.role == "user").to_numpy()

@@ -134,8 +134,11 @@ def test_json_facet_domain_query_replaces_domain(spark, sf_dir):
 
 def test_select_facet_pivot3_leg(spark, sf_dir):
     """facet.pivot=f1,f2,f3 through /select equals the 3-level engine
-    directly; >3 or duplicate fields raise."""
-    from lucene_solr_spark.query.facets import facet_pivot3
+    directly, ordered count desc / value asc at every level; >3 or
+    duplicate fields raise."""
+    from collections import Counter
+
+    from lucene_solr_spark.query.facets import facet_pivot
 
     s = cached_searcher(spark, sf_dir)
     resp = select(s, {"q": "data", "rows": 0, "facet.limit": 2,
@@ -143,12 +146,20 @@ def test_select_facet_pivot3_leg(spark, sf_dir):
     got = [tuple(r) for r in
            resp["facet_pivots"]["role,tool,ftok"].collect()]
     spec, _ = parse_select_params({"q": "data"})
-    direct = [tuple(r) for r in facet_pivot3(
-        s, "role", "tool", "ftok", spec=spec,
-        limit1=2, limit2=2, limit3=2).collect()]
+    direct = [tuple(r) for r in facet_pivot(
+        s, ("role", "tool", "ftok"), spec=spec,
+        limits=(2, 2, 2)).collect()]
     assert got == direct and got
+    # one output order at every depth: (total desc, value asc) per level
+    every = facet_pivot(s, ("role", "tool", "ftok"), spec=spec,
+                        limits=(10**6,) * 3).collect()
+    t1, t2 = Counter(), Counter()
+    for v1, v2, _, cnt in every:
+        t1[v1] += cnt
+        t2[(v1, v2)] += cnt
+    assert got == sorted(got, key=lambda r: (
+        -t1[r[0]], r[0], -t2[r[:2]], r[1], -r[3], r[2]))
     # every (v1,v2) parent keeps <= 2 children; counts positive
-    from collections import Counter
     kids = Counter((v1, v2) for v1, v2, _, _ in got)
     assert all(c <= 2 for c in kids.values())
     assert all(cnt >= 1 for _, _, _, cnt in got)
