@@ -1205,9 +1205,9 @@ def parse_select_params(params: dict) -> tuple[BooleanSpec, dict]:
                 "conv_id (grouped facet counts are exact only for the "
                 "segment-local block key)")
     # facet.method — Solr's enum/fc/uif pick maps onto this engine's
-    # exact-single-shuffle vs two-phase-refine choice: auto = the
+    # exact-driver-merge vs two-phase-refine choice: auto = the
     # cardinality heuristic (default), refine = force two-phase,
-    # exact = force the single-shuffle control path
+    # exact = force the driver-merge control path
     facet_method = params.get("facet.method", "auto")
     if facet_method not in ("auto", "refine", "exact"):
         raise ValueError(
@@ -2090,8 +2090,11 @@ def select(searcher, params: dict, stored: DataFrame | None = None) -> dict:
     answer. Inside the budget the response is bit-identical to the
     un-budgeted request (``partialResults=False``). The budget covers
     the main search phase (page + numFound + docset warm), matching
-    Solr's collector-level check; component legs returned as lazy
-    frames collect outside it.
+    Solr's collector-level check, and every leg that runs inside
+    ``_select_impl``: the facet.field legs fused into the page's pass
+    (``IndexSearcher.doc_list_and_set``) and the exact facet.field
+    legs, which merge on the driver before returning. Legs returned as
+    lazy frames collect outside it.
 
     ref: lucene/core/src/java/org/apache/lucene/index/
          ExitableDirectoryReader.java,
@@ -2105,6 +2108,10 @@ def select(searcher, params: dict, stored: DataFrame | None = None) -> dict:
         raise ValueError(f"timeAllowed must be a positive ms count: {ta}")
     import threading
     import uuid
+
+    import pandas as pd
+
+    from lucene_solr_spark.query.executor import local_frame
 
     inner = {k: v for k, v in params.items() if k != "timeAllowed"}
     sc = searcher.spark.sparkContext
@@ -2122,9 +2129,13 @@ def select(searcher, params: dict, stored: DataFrame | None = None) -> dict:
         out = _select_impl(searcher, inner, stored)
         resp = out["response"]
         # materialize the bounded page inside the budget so partiality
-        # is decided here, not at some later caller-side collect
-        rows = resp.collect()
-        out["response"] = searcher.spark.createDataFrame(rows, resp.schema)
+        # is decided here, not at some later caller-side collect; the
+        # rows come back as a pandas-built table (no job on collect)
+        out["response"] = local_frame(
+            searcher.spark,
+            pd.DataFrame.from_records(resp.collect(), columns=resp.columns),
+            resp.schema,
+        )
         # cancelJobGroup only aborts ACTIVE jobs — a cancel landing
         # between two jobs lets the rest run to completion. The
         # contract stays honest: budget elapsed ⇒ flagged, even when
@@ -2169,6 +2180,43 @@ def _ranked_keys(spark, page_keys: DataFrame) -> DataFrame:
     )
 
 
+def _facet_field_legs(searcher, o: dict) -> list:
+    """The facet.field legs as engine requests: ``(out key,
+    FacetRequest, {!ex} fields)`` in request order."""
+    from lucene_solr_spark.query.facets import FacetRequest
+
+    legs = []
+    for fld, ex_fields, out_key in o["facet_fields"]:
+        # f.<field>.facet.<opt> overrides win over the request-wide
+        # facet.<opt> for this one field (SolrParams.getFieldParam)
+        ov = o.get("facet_overrides", {}).get(fld, {})
+        f_lim = ov.get("limit", o["facet_limit"])
+        if f_lim == -1:
+            # facet.limit=-1 (SimpleFacets UNLIMITED): resolve to the
+            # field's dictionary cardinality (a cached driver-side
+            # read), so the request stays explicitly bounded instead
+            # of an open-ended collect
+            f_lim = searcher.field_cardinality(fld)
+        elif f_lim < 1:
+            raise ValueError(
+                f"facet.limit must be >= 1 or -1 (unlimited): {f_lim}")
+        legs.append((out_key, FacetRequest(
+            field=fld,
+            limit=f_lim,
+            mincount=ov.get("mincount", o["facet_mincount"]),
+            sort=ov.get("sort", o["facet_sort"]),
+            missing=o["facet_missing"],
+            prefix=ov.get("prefix", o["facet_prefix"]),
+            contains=ov.get("contains", o.get("facet_contains")),
+            contains_ignore_case=o.get("facet_contains_ic", False),
+            matches=ov.get("matches", o.get("facet_matches")),
+            group_by="conv_id" if o.get("group_facet") else None,
+            offset=ov.get("offset", o["facet_offset"]),
+            exclude_terms=tuple(o["facet_exclude_terms"]),
+        ), ex_fields))
+    return legs
+
+
 def _select_impl(
     searcher, params: dict, stored: DataFrame | None = None
 ) -> dict:
@@ -2187,7 +2235,22 @@ def _select_impl(
     numFound), one bounded count job over the same masked domain.
     Facets run the index sparse-counting engine over the SAME spec
     (hits + fq), so multi-component responses stay
-    one-domain-consistent."""
+    one-domain-consistent.
+
+    A score-sorted page with facet.field legs over the request's own
+    domain (no ``{!ex}``) whose counts merge exactly
+    (``facets.use_refine`` False) is ``getDocListAndSet``: one
+    per-segment pass scores the page and counts those legs
+    (``IndexSearcher.doc_list_and_set``), the driver merges both, and
+    they come back as pandas-built tables — on a cached key that is
+    the request's one Spark job, run inside the timeAllowed budget."""
+    from lucene_solr_spark.query.executor import (
+        RESULT_SCHEMA, _exclude_filter_fields, local_frame,
+    )
+    from lucene_solr_spark.query.facets import (
+        FACET_SCHEMA, facet_field, use_refine,
+    )
+
     spec, o = parse_select_params(params)
     if o["cursor_mark"] is not None:
         # keyset page: one distributed TakeOrdered of rows past the
@@ -2242,6 +2305,24 @@ def _select_impl(
             "numFound": searcher.docset_count(spec),
             "nextCursorMark": next_mark,
         }
+    if (o["facet_fields"] or o["json_facets"] or o["facet_queries"]
+            or o["facet_range"] or o["facet_pivot"] or o["stats_fields"]
+            or o["facet_interval"]):
+        # multi-component request: ONE getDocSet pass (per-segment hit
+        # bitsets) serves numFound as a driver-side popcount and every
+        # facet/stats leg's domain — the queryResultCache population
+        # Solr does per request (see IndexSearcher.cache_docset)
+        searcher.cache_docset(spec)
+    ff_legs = _facet_field_legs(searcher, o)
+    ff_refine = o["facet_method"] != "exact"
+    ff_method = o["facet_method"] if ff_refine else "auto"
+    # facet.field legs over the request's own domain (no {!ex}) that
+    # merge exactly ride the score-sorted page's per-segment pass
+    fusable = [
+        (key, req) for key, req, ex in ff_legs
+        if not ex and not use_refine(searcher, req, ff_refine, ff_method)
+    ]
+    fused_counts: dict = {}
     ranked_c = None
     elev_numfound = None
     if o["elevate"] is not None:
@@ -2385,6 +2466,17 @@ def _select_impl(
             # spec's DocSet domain below
             head = searcher.spark.createDataFrame(
                 [], "conv_id string, turn_idx int, score double")
+        elif fusable:
+            # getDocListAndSet: the start+rows head and the fusable
+            # facet.field counts from ONE per-segment pass, both merged
+            # on the driver into pandas-built tables (no job on collect)
+            top, counts = searcher.doc_list_and_set(
+                spec, spec.k, 4, [req for _, req in fusable])
+            head = local_frame(searcher.spark, top, RESULT_SCHEMA)
+            fused_counts = {
+                key: local_frame(searcher.spark, c, FACET_SCHEMA)
+                for (key, _), c in zip(fusable, counts)
+            }
         else:
             head = searcher.search(spec, round_to=4)
         order = [F.desc("score"), F.asc("conv_id"), F.asc("turn_idx")]
@@ -2516,15 +2608,6 @@ def _select_impl(
             page = page.withColumn(alias, fn(searcher))
         page = page.select(*o["fl"])
     page = _encode_wt(page, o["wt"])
-    if (o["facet_fields"] or o["json_facets"] or o["facet_queries"]
-            or o["facet_range"] or o["facet_pivot"] or o["stats_fields"]
-            or o["facet_interval"]):
-        # multi-component request: ONE getDocSet pass (per-segment hit
-        # bitsets, broadcast) serves numFound as a driver-side
-        # popcount and every facet/stats leg's domain — the
-        # queryResultCache population Solr does per request (see
-        # IndexSearcher.cache_docset)
-        searcher.cache_docset(spec)
     out: dict = {
         "response": page,
         # collapsed numFound = the GROUP count (one bounded distinct
@@ -2560,38 +2643,13 @@ def _select_impl(
             )
             .orderBy("group_value", "expand_rank")
         )
-    for fld, ex_fields, out_key in o["facet_fields"]:
-        # f.<field>.facet.<opt> overrides win over the request-wide
-        # facet.<opt> for this one field (SolrParams.getFieldParam)
-        ov = o.get("facet_overrides", {}).get(fld, {})
-        f_lim = ov.get("limit", o["facet_limit"])
-        if f_lim == -1:
-            # facet.limit=-1 (SimpleFacets UNLIMITED): resolve to the
-            # field's dictionary cardinality — one bounded dictionary
-            # aggregation (cached), so the request stays explicitly
-            # bounded instead of an open-ended collect
-            f_lim = searcher.field_cardinality(fld)
-        elif f_lim < 1:
-            raise ValueError(
-                f"facet.limit must be >= 1 or -1 (unlimited): {f_lim}")
-        fc = searcher.facet(
-            fld, spec=spec,
-            limit=f_lim,
-            mincount=ov.get("mincount", o["facet_mincount"]),
-            sort=ov.get("sort", o["facet_sort"]),
-            missing=o["facet_missing"],
-            prefix=ov.get("prefix", o["facet_prefix"]),
-            contains=ov.get("contains", o.get("facet_contains")),
-            contains_ignore_case=o.get("facet_contains_ic", False),
-            matches=ov.get("matches", o.get("facet_matches")),
-            group_by="conv_id" if o.get("group_facet") else None,
-            offset=ov.get("offset", o["facet_offset"]),
-            exclude_terms=o["facet_exclude_terms"],
-            exclude_fields=ex_fields,
-            refine=o["facet_method"] != "exact",
-            method=o["facet_method"] if o["facet_method"] != "exact"
-            else "auto",
-        )
+    for out_key, req, ex_fields in ff_legs:
+        fc = fused_counts.get(out_key)
+        if fc is None:
+            f_spec = (_exclude_filter_fields(spec, ex_fields) if ex_fields
+                      else spec)
+            fc = facet_field(searcher, req, spec=f_spec, refine=ff_refine,
+                             method=ff_method)
         if o["facet_exists"]:
             # EXISTS method: presence, not frequency — cap the counts
             # of the (index-ordered, mincount=1) buckets at 1
@@ -2614,10 +2672,6 @@ def _select_impl(
             # {!ex}: drop the tagged fq constraints from THIS range
             # facet's domain only (filters are rewrite-independent,
             # so the exclusion applies to the request spec directly)
-            from lucene_solr_spark.query.executor import (
-                _exclude_filter_fields,
-            )
-
             r_spec = _exclude_filter_fields(spec, rf_ex)
         else:
             r_spec = spec
@@ -2669,10 +2723,6 @@ def _select_impl(
         # engine over the SAME q+fq domain (shuffle bounded by
         # distinct co-occurring pairs, never the corpus)
         from lucene_solr_spark.query.facets import facet_pivot
-
-        from lucene_solr_spark.query.executor import (  # noqa: F811
-            _exclude_filter_fields,
-        )
 
         pv_fields, pv_ex, pv_key = o["facet_pivot"]
         # {!ex}: the tagged fq constraints drop from THIS pivot's
@@ -2872,11 +2922,9 @@ def _select_impl(
         )
         legs = []
         for g_idx, (raw, gq_spec) in enumerate(o["group_queries"]):
-            r_spec = (searcher.rewrite(gq_spec)
-                      if gq_spec.needs_rewrite else gq_spec)
             legs.append(
                 gq_hits.join(
-                    searcher.docset(r_spec),
+                    searcher.docset(gq_spec),
                     ["conv_id", "turn_idx"], "left_semi")
                 .orderBy(F.desc("score"), F.asc("conv_id"),
                          F.asc("turn_idx"))
@@ -3105,8 +3153,6 @@ def _select_impl(
         # pass), query buckets are one bounded DocSet count each
         from lucene_solr_spark.query.facets import facet_metrics
 
-        from lucene_solr_spark.query.executor import _exclude_filter_fields
-
         out["facets"] = {}
         for name, req in o["json_facets"].items():
             if req[0] == "terms":
@@ -3198,10 +3244,6 @@ def _select_impl(
                 n_spec = _exclude_filter_fields(spec, ex) if ex else spec
                 if dom_f is not None:
                     n_spec = _merge_filters(n_spec, dom_f)
-                n_spec = (
-                    searcher.rewrite(n_spec) if n_spec.needs_rewrite
-                    else n_spec
-                )
                 out["facets"][name] = facet_nested(
                     searcher, f1, f2, spec=n_spec, limit1=l1, limit2=l2
                 )

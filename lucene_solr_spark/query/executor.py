@@ -26,6 +26,14 @@ over 10^12 turns touches q-term postings plus the docmaps of segments
 that contain them. Only the small per-segment results move, into the
 final merge.
 
+A score-sorted ``/select`` with exact facet.field legs is ONE such pass
+as well (:meth:`IndexSearcher.doc_list_and_set`, Solr's
+``getDocListAndSet``): each task scores its segment's top-k and counts
+the facet ordinals over the same hit DocSet; the driver orders the
+rounded hits and merges the facet partials. Exact facet counts are a
+driver merge of collected partials (``facets.merge_partials``), never
+a shuffle.
+
 Every task opens its segment's docmap through :class:`SegmentDomain`,
 the one segment reader (Lucene's ``LeafReader``): it prunes the read
 to the columns the caller needs and hands back the fq mask or hit ords
@@ -48,6 +56,13 @@ from lucene_solr_spark.query.model import BooleanSpec
 from lucene_solr_spark.query.scorer import match_segment, score_segment
 
 RESULT_SCHEMA = "conv_id string, turn_idx int, score double"
+#: rows of one :meth:`IndexSearcher.doc_list_and_set` pass: scored hits
+#: (kind -1) and each facet request's named partials (kind = its index)
+DOC_LIST_AND_SET_SCHEMA = (
+    "kind int, conv_id string, turn_idx int, score double,"
+    " term string, cnt long"
+)
+_DLS_COLS = ["kind", "conv_id", "turn_idx", "score", "term", "cnt"]
 
 #: docmap columns every scorer needs (norms + result ids)
 _BASE_COLS = ["doc_len", "conv_id", "turn_idx"]
@@ -207,6 +222,21 @@ def _take_keys(dm, docs, **extra) -> pd.DataFrame:
     return out
 
 
+def local_frame(spark: SparkSession, pdf: pd.DataFrame, schema) -> DataFrame:
+    """A driver-side table from a pandas frame: with Arrow on
+    (``get_spark``) it is a JVM-only LocalRelation, so ``collect`` runs
+    no Spark job. Zero rows go through an Arrow table: an empty pandas
+    frame would fall back to an RDD scan, one job with a Python worker
+    on every collect (as a list of Rows always does)."""
+    if len(pdf):
+        return spark.createDataFrame(pdf, schema)
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.Table.from_pandas(pdf, preserve_index=False), schema
+    )
+
+
 def _write_bits(cache_dir: str, seg_id: int, payload: bytes) -> None:
     """Task-side atomic sidecar write: unique temp + rename, so a
     concurrent warm of the same entry (or a task retry) can never
@@ -265,18 +295,44 @@ def _unpack(bits_cache: SegBitsCache, seg_id: int) -> np.ndarray:
     return np.unpackbits(np.frombuffer(bits, np.uint8), count=n).astype(bool)
 
 
+#: an unset lazily computed mask (None is a valid mask: admit all)
+_UNSET = object()
+
+
+class Leaf:
+    """One segment as :meth:`SegmentDomain.open` read it: the docmap
+    columns ``dm``, the hit ords ``hits`` (None: every doc), the mask
+    ``allowed`` the hits were matched under (None admits every doc) and
+    the liveDocs mask ``live`` (None: nothing deleted). Every mask is
+    the one the reader built on the way — never probed a second time;
+    only a queryResultCache hit, whose bits already hold liveDocs,
+    probes ``live`` on first use."""
+
+    __slots__ = ("dm", "hits", "allowed", "_live", "_dom")
+
+    def __init__(self, dom, dm, hits, allowed, live=_UNSET):
+        self.dm, self.hits, self.allowed = dm, hits, allowed
+        self._dom, self._live = dom, live
+
+    @property
+    def live(self):
+        if self._live is _UNSET:
+            self._live = self._dom._live_docs(self.dm)
+        return self._live
+
+
 class SegmentDomain:
     """The engine's one task-side segment reader (Lucene's
     ``LeafReader``): every per-segment task that reads a segment's
     docmap opens it here, so the liveDocs mask is applied by structure.
-    No other code names ``docmap.parquet`` or calls ``apply_deletes`` /
-    ``filter_mask`` (tests/test_segment_reader.py walks the AST to keep
-    it so). ``early_topk`` is the one caller that streams row groups
-    itself (index-sort early termination has no whole-segment read):
-    it opens :meth:`path` and takes its mask from :meth:`live`.
+    No other code names ``docmap.parquet``, calls ``apply_deletes`` /
+    ``filter_mask`` or probes liveDocs (tests/test_segment_reader.py
+    walks the AST to keep it so).
 
-    Built on the driver for one query ``spec`` (None is MatchAllDocs)
-    and shipped to the tasks of :meth:`IndexSearcher.each_segment`.
+    Built on the driver for one query ``spec`` (None is MatchAllDocs),
+    which it rewrites first (multiterm → SHOULD terms, the one
+    ``IndexSearcher.rewrite`` call every domain user shares), and
+    shipped to the tasks of :meth:`IndexSearcher.each_segment`.
     Each call reads the segment's docmap ONCE, ARROW-NATIVE: pruned to
     the caller's ``cols`` plus the fq columns, plus the delete keys only
     when tombstones exist, and only the fq columns and the delete keys
@@ -284,14 +340,18 @@ class SegmentDomain:
     conv_id as a python string, the corpus-width cost. Callers convert
     the columns they read (:meth:`ints`).
 
-    Two outputs, each with liveDocs applied:
+    Outputs, each with liveDocs applied:
 
     - :meth:`allowed` — the scorers' mask: the filterCache bits on a
       hit, else ``filter_mask`` over the fq columns.
-    - :meth:`read` — the domain users' hit ords: the queryResultCache
-      bits on a hit (no postings read, no fq columns; see
-      ``IndexSearcher.cache_docset``), else ``match_segment`` over
-      :meth:`allowed`. Pass ``postings_spec`` to each_segment.
+    - :meth:`open` — a :class:`Leaf`: the hit ords (the queryResultCache
+      bits on a hit — no postings read, no fq columns; see
+      ``IndexSearcher.cache_docset`` — else ``match_segment`` over
+      :meth:`allowed`), the mask they were matched under and the
+      liveDocs mask. :meth:`read` is its ``(dm, hits)``. Pass
+      ``postings_spec`` to each_segment.
+    - :meth:`stream` — live docmap batches in index order, for
+      index-sort early termination (no whole-segment read).
 
     ``max_dl`` (the phrase stride) comes from the manifest's committed
     per-segment stats; only a manifest written before ``max_dl``
@@ -301,7 +361,14 @@ class SegmentDomain:
     DOCMAP = "docmap.parquet"
 
     def __init__(self, searcher, spec: BooleanSpec | None, cols):
+        if spec is not None and spec.needs_rewrite:
+            spec = searcher.rewrite(spec)
         self.spec = spec
+        #: an unsatisfiable mm (a multiterm pattern that expanded to
+        #: nothing) matches no doc — never the term-free MatchAll
+        self.empty = (
+            spec is not None and spec.min_should_match > len(spec.should)
+        )
         self.seg_dirs = searcher.seg_dir_by_id
         self.deleted_bc = searcher._deleted_bc
         # None on a manifest written before max_dl existed
@@ -327,7 +394,7 @@ class SegmentDomain:
         )
         #: what each_segment reads postings for (a cache hit: nothing)
         self.postings_spec = spec if self.bits is None else None
-        #: the columns :meth:`read` takes on a queryResultCache hit
+        #: the columns :meth:`open` takes on a queryResultCache hit
         self.hit_cols = list(dict.fromkeys(cols + keys))
 
     def path(self, seg_id: int) -> str:
@@ -344,7 +411,7 @@ class SegmentDomain:
         """One integer column of a docmap read as int64 numpy."""
         return np.asarray(dm.column(col).to_numpy(), np.int64)
 
-    def live(self, dm):
+    def _live_docs(self, dm):
         """liveDocs mask over ``dm`` (an Arrow read or a pandas frame
         carrying the delete keys); None when nothing is deleted."""
         bc = self.deleted_bc
@@ -356,33 +423,85 @@ class SegmentDomain:
             m = int(self.ints(dm, "doc_len").max()) if len(dm) else 0
         return m
 
+    def _masks(self, seg_id: int):
+        """(docmap columns, fq mask ∩ liveDocs, liveDocs) of one
+        segment; a None mask admits every doc."""
+        dm = self._open(seg_id, self.cols)
+        if self.fq_bits is not None:
+            fq = _unpack(self.fq_bits, seg_id)
+        elif self.fq_fields:
+            fq = filter_mask(dm.select(self.fq_fields).to_pandas(), self.spec)
+        else:
+            fq = None
+        live = self._live_docs(dm)
+        if fq is None or live is None:
+            return dm, (live if fq is None else fq), live
+        return dm, fq & live, live
+
     def allowed(self, seg_id: int):
         """TASK-side: ``(docmap columns, allowed mask)`` of one segment
         — the fq mask ∩ liveDocs; a None mask admits every doc."""
-        dm = self._open(seg_id, self.cols)
-        if self.fq_bits is not None:
-            mask = _unpack(self.fq_bits, seg_id)
-        elif self.fq_fields:
-            fq = dm.select(self.fq_fields).to_pandas()
-            mask = filter_mask(fq, self.spec)
+        dm, allowed, _live = self._masks(seg_id)
+        return dm, allowed
+
+    def open(self, seg_id: int, term_rows) -> Leaf:
+        """TASK-side: one segment's :class:`Leaf`. On a
+        queryResultCache hit the hit bits are also its ``allowed``
+        mask: they are the match set ∩ fq ∩ liveDocs, so a scorer
+        restricted to them ranks exactly the docs it would rank under
+        fq ∩ liveDocs, without reading the fq columns."""
+        if self.bits is not None:
+            dm = self._open(seg_id, self.hit_cols)
+            bits = _unpack(self.bits, seg_id)
+            return Leaf(self, dm, np.flatnonzero(bits), bits)
+        dm, allowed, live = self._masks(seg_id)
+        if self.empty:
+            hits = np.empty(0, np.int64)
+        elif self.spec is None:
+            hits = None if allowed is None else np.flatnonzero(allowed)
         else:
-            mask = None
-        bc = self.deleted_bc
-        return dm, apply_deletes(mask, dm, bc.value if bc else None)
+            hits = match_segment(
+                self.spec, term_rows, len(dm), allowed,
+                self.max_doclen(seg_id, dm),
+            )
+        return Leaf(self, dm, hits, allowed, live)
 
     def read(self, seg_id: int, term_rows):
         """TASK-side: ``(docmap columns, hit ords)`` of one segment;
         hit ords None means every doc."""
-        if self.bits is not None:
-            dm = self._open(seg_id, self.hit_cols)
-            return dm, np.flatnonzero(_unpack(self.bits, seg_id))
-        dm, allowed = self.allowed(seg_id)
-        if self.spec is None:
-            return dm, None if allowed is None else np.flatnonzero(allowed)
-        return dm, match_segment(
-            self.spec, term_rows, len(dm), allowed,
-            self.max_doclen(seg_id, dm),
-        )
+        leaf = self.open(seg_id, term_rows)
+        return leaf.dm, leaf.hits
+
+    def stream(self, seg_id: int, cols, batch_size: int, after=None):
+        """TASK-side: the segment's docmap ``cols`` (the two key
+        columns among them) as live pandas batches in index order —
+        the streaming read of index-sort early termination, which
+        stops after a few batches. ``after`` is a (conv_id, turn_idx)
+        mark: row groups whose conv_id max sits before it are skipped
+        on their statistics (the sorted-segment seek), and the
+        boundary batch is masked row-wise."""
+        import pyarrow.parquet as pq
+
+        pf = pq.ParquetFile(self.path(seg_id))
+        groups = range(pf.num_row_groups)
+        if after is not None:
+            conv_i = pf.schema_arrow.names.index("conv_id")
+            groups = [
+                g for g in groups
+                if (st := pf.metadata.row_group(g).column(conv_i)
+                    .statistics) is None or st.max >= after[0]
+            ]
+        for batch in pf.iter_batches(
+            batch_size=batch_size, columns=cols, row_groups=list(groups),
+        ):
+            dm = batch.to_pandas()
+            if after is not None:
+                c0, t0 = after
+                dm = dm[(dm["conv_id"] > c0) | (
+                    (dm["conv_id"] == c0) & (dm["turn_idx"] > t0)
+                )]
+            live = self._live_docs(dm)
+            yield dm if live is None else dm[live]
 
 
 def _range_cmp(col, bound: str, is_lo: bool):
@@ -725,18 +844,23 @@ class IndexSearcher:
         return self._dicts_df
 
     def field_cardinality(self, field: str) -> int:
-        """Global distinct-term count of a docvalues field (cached —
-        one tiny dictionary aggregation on first use). Drives the
-        facet method choice, the Solr ``facet.method`` heuristic:
-        SimpleFacets picks enum/fc by field term count vs request
-        size; we pick exact-single-shuffle vs two-phase refine the
-        same way (see facets.facet_field)."""
+        """Global distinct-term count of a docvalues field (cached).
+        Drives the facet method choice, the Solr ``facet.method``
+        heuristic: SimpleFacets picks enum/fc by field term count vs
+        request size; we pick the exact driver merge vs two-phase
+        refine the same way (see facets.facet_field). A DRIVER-side
+        pyarrow read of the (field, term) columns of every segment's
+        ``dicts.parquet``, like ``global_df`` — no Spark job, so the
+        first facet request after a commit pays none either."""
         card = self._field_card_cache.get(field)
         if card is None:
-            card = (
-                self._dicts_df.filter(F.col("field") == field)
-                .select("term").distinct().count()
-            )
+            import pyarrow.compute as pc
+            import pyarrow.dataset as ds
+
+            terms = ds.dataset(self._dict_files, format="parquet").to_table(
+                columns=["term"], filter=ds.field("field") == field
+            ).column("term")
+            card = len(pc.unique(terms))
             self._field_card_cache[field] = card
         return card
 
@@ -779,6 +903,31 @@ class IndexSearcher:
         }
 
     # -- search --------------------------------------------------------
+    def _weights(self, spec: BooleanSpec):
+        """Bind a scored query (``Weight`` creation): ``(rewritten
+        spec, idf per lookup term)``, boosts folded into the idf; the
+        idf is None when the spec can match nothing."""
+        if spec.needs_rewrite:
+            spec = self.rewrite(spec)
+        if spec.min_should_match > len(spec.should):
+            # unsatisfiable mm — e.g. a multiterm pattern that matched
+            # NOTHING in the dictionary (Lucene's empty rewrite with
+            # mm=1): zero hits, not an error
+            return spec, None
+        if not spec.scoring_terms:
+            # Lucene rejects pure-negative scored queries (QueryUtils
+            # .makeQueryable wraps them for filters, not scoring) — and
+            # bm25_df.search raises identically.
+            raise ValueError("query has no scoring terms")
+        idf = self.global_idf(list(spec.lookup_terms))  # must_not keyed
+        if spec.boosts:
+            # BoostQuery: contribution AND WAND upper bound both scale
+            # linearly in idf, so folding the boost into idf applies it
+            # everywhere consistently (pruning stays sound).
+            bm = spec.boost_map
+            idf = {t: v * bm.get(t, 1.0) for t, v in idf.items()}
+        return spec, idf
+
     def score_hits(
         self, spec: BooleanSpec, k: int | None = None,
         round_to: int | None = None,
@@ -794,25 +943,9 @@ class IndexSearcher:
         (:meth:`search_conversations`) and rerank consume it directly,
         avoiding a degenerate single-task sort of the full hit set
         that a giant-k ``orderBy().limit()`` would plan."""
-        if spec.needs_rewrite:
-            spec = self.rewrite(spec)
-        if spec.min_should_match > len(spec.should):
-            # unsatisfiable mm — e.g. a multiterm pattern that matched
-            # NOTHING in the dictionary (Lucene's empty rewrite with
-            # mm=1): zero hits, not an error
+        spec, idf = self._weights(spec)
+        if idf is None:
             return self.spark.createDataFrame([], RESULT_SCHEMA)
-        if not spec.scoring_terms:
-            # Lucene rejects pure-negative scored queries (QueryUtils
-            # .makeQueryable wraps them for filters, not scoring) — and
-            # bm25_df.search raises identically.
-            raise ValueError("query has no scoring terms")
-        idf = self.global_idf(list(spec.lookup_terms))  # must_not keyed
-        if spec.boosts:
-            # BoostQuery: contribution AND WAND upper bound both scale
-            # linearly in idf, so folding the boost into idf applies it
-            # everywhere consistently (pruning stays sound).
-            bm = spec.boost_map
-            idf = {t: v * bm.get(t, 1.0) for t, v in idf.items()}
         avgdl = self.manifest.avgdl
         seg_k = (1 << 62) if k is None else k
         # norms + result ids; a filterCache hit drops the fq columns
@@ -834,6 +967,88 @@ class IndexSearcher:
         if round_to is not None:
             hits = hits.withColumn("score", F.round("score", round_to))
         return hits.orderBy(F.desc("score"), "conv_id", "turn_idx").limit(spec.k)
+
+    def doc_list_and_set(
+        self, spec: BooleanSpec, k: int, round_to: int, facet_reqs=(),
+    ) -> tuple[pd.DataFrame, list[pd.DataFrame]]:
+        """The ranked top ``k`` and the exact counts of each
+        ``facet_reqs`` facet.field request over the same domain, from
+        ONE per-segment pass — ``SolrIndexSearcher#getDocListAndSet``:
+        one collection returns the DocList and the DocSet the facet
+        counters then count over.
+
+        Each :meth:`each_segment` task opens its segment once through
+        :class:`SegmentDomain`, scores its top ``k`` under the reader's
+        ``allowed`` mask with the ``round_to`` tie floor (as
+        :meth:`score_hits`), and counts every request over the
+        reader's hit ords (``facets.count_partials``). Its rows carry a
+        ``kind`` column: -1 for a scored hit, i for request i's
+        partials. The scores are rounded in the same job, so they are
+        bit-identical to :meth:`search`'s; the driver then orders the
+        hits (score desc, conv_id, turn_idx), keeps ``k``, and merges
+        each request's partials (``facets.merge_partials``).
+
+        Returns ``(top-k hits, [(facet_value, cnt) per request])`` as
+        pandas frames — the caller decides what becomes a Spark table.
+        Requests must be exact-merge ones (``facets.use_refine`` False)."""
+        from lucene_solr_spark.query.facets import (
+            _ord_terms, count_partials, merge_partials,
+        )
+
+        reqs = list(facet_reqs)
+        spec, idf = self._weights(spec)
+        if idf is None:
+            no_parts = pd.DataFrame({"term": [], "cnt": []})
+            return (
+                pd.DataFrame({"conv_id": [], "turn_idx": [], "score": []}),
+                [merge_partials(no_parts, r) for r in reqs],
+            )
+        fields = list(dict.fromkeys(r.field for r in reqs))
+        grouped = any(r.group_by for r in reqs)
+        dom = SegmentDomain(
+            self, spec,
+            _BASE_COLS + [f"{f}_ord" for f in fields]
+            + (["conv_id"] if grouped else []),
+        )
+        avgdl = self.manifest.avgdl
+
+        def run_seg(seg_id, term_rows):
+            leaf = dom.open(seg_id, term_rows)
+            docs, scores = np.empty(0, np.int64), np.empty(0)
+            if k:  # rows=0 at start 0: a facet-only request scores nothing
+                docs, scores = score_segment(
+                    spec, term_rows, idf, avgdl,
+                    dom.ints(leaf.dm, "doc_len"), leaf.allowed, k, round_to,
+                )
+            out = [_take_keys(leaf.dm, docs, score=scores, kind=-1)]
+            if reqs:
+                luts = dict(zip(
+                    fields, _ord_terms(dom.seg_dirs[seg_id], *fields)
+                ))
+                out += [
+                    count_partials(leaf.dm, leaf.hits, r, luts[r.field])
+                    .assign(kind=i)
+                    for i, r in enumerate(reqs)
+                ]
+            return pd.concat(out, ignore_index=True)[_DLS_COLS]
+
+        rows = (
+            self.each_segment(run_seg, DOC_LIST_AND_SET_SCHEMA, spec)
+            .withColumn("score", F.round("score", round_to))
+            .toPandas()
+        )
+        hits = rows[rows["kind"] < 0].sort_values(
+            ["score", "conv_id", "turn_idx"], ascending=[False, True, True]
+        ).head(k)
+        top = pd.DataFrame({
+            "conv_id": hits["conv_id"].to_numpy(object),
+            "turn_idx": hits["turn_idx"].to_numpy(np.int32),
+            "score": hits["score"].to_numpy(np.float64),
+        })
+        return top, [
+            merge_partials(rows.loc[rows["kind"] == i, ["term", "cnt"]], r)
+            for i, r in enumerate(reqs)
+        ]
 
     def rerank(
         self,
@@ -1565,8 +1780,7 @@ class IndexSearcher:
              lucene/core/src/java/org/apache/lucene/index/IndexWriterConfig.java
              (setIndexSort); solr/core/src/java/org/apache/solr/search/
              CursorMark.java (keyset paging on the request sort)"""
-        # the reader serves the path and the liveDocs mask; the
-        # streaming read stays here (no whole-segment equivalent)
+        # the reader streams the docmap in index order, liveDocs masked
         dom = SegmentDomain(self, None, [])
         cols = ["conv_id", "turn_idx", *fields]
         schema = ", ".join(
@@ -1575,42 +1789,13 @@ class IndexSearcher:
         )
         kk = int(k)
 
-        lcursor = cursor
-
         def run_seg(seg_id, _term_rows):
-            import pyarrow.parquet as pq
-
-            pf = pq.ParquetFile(dom.path(seg_id))
-            conv_i = pf.schema_arrow.names.index("conv_id")
-            groups = range(pf.num_row_groups)
-            if lcursor is not None:
-                # sorted-segment seek: drop row groups that END at or
-                # before the mark's conv (conservative — the boundary
-                # group is re-masked row-wise below)
-                groups = [
-                    g for g in groups
-                    if (st := pf.metadata.row_group(g).column(conv_i)
-                        .statistics) is None or st.max >= lcursor[0]
-                ]
             got: list[pd.DataFrame] = []
             n = 0
             # docmap is written in index-sort order, so streaming the
             # head IS the segment's sorted top-k; deletes are masked
             # batch-by-batch before counting toward k.
-            for batch in pf.iter_batches(
-                batch_size=max(kk, 1024), columns=cols,
-                row_groups=list(groups),
-            ):
-                dm = batch.to_pandas()
-                if lcursor is not None:
-                    c0, t0 = lcursor
-                    after = (dm["conv_id"] > c0) | (
-                        (dm["conv_id"] == c0) & (dm["turn_idx"] > t0)
-                    )
-                    dm = dm[after]
-                live = dom.live(dm)
-                if live is not None:
-                    dm = dm[live]
+            for dm in dom.stream(seg_id, cols, max(kk, 1024), cursor):
                 got.append(dm.head(kk - n))
                 n += len(got[-1])
                 if n >= kk:
@@ -2052,9 +2237,8 @@ class IndexSearcher:
         only the segment-local block key is allowed)."""
         from lucene_solr_spark.query.facets import FacetRequest, facet_field
 
-        if spec is not None and spec.needs_rewrite:
-            spec = self.rewrite(spec)
         if spec is not None and exclude_fields:
+            # fq-side only: the domain's multiterm rewrite is unaffected
             spec = _exclude_filter_fields(spec, exclude_fields)
 
         return facet_field(

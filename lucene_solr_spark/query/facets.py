@@ -22,18 +22,27 @@ Matching, counting and the ord→term lookup happen in ONE per-segment
 pass (``IndexSearcher.each_segment``): each task reads its own
 segment's postings rows, its docmap ordinal column through
 ``executor.SegmentDomain`` (the segment reader: hit ords with the fq
-and liveDocs masks applied) and its dictionary, so the hit DocSet
-never leaves the executor and nothing shuffles to reach a segment;
-what shuffles is the named ``(seg_id, term, cnt)`` partials (tiny).
+and liveDocs masks applied, the multiterm rewrite done once for every
+facet function) and its dictionary, so the hit DocSet never leaves the
+executor and nothing shuffles to reach a segment; what leaves is the
+named ``(seg_id, term, cnt)`` partials (tiny).
 
-Physical plan::
+Physical plan of ``facet_field``::
 
     spark.range(n_segs).mapInPandas, one task per segment:
         own postings(term ∈ domain terms) + docmap(<field>_ord)
         → sparse count → ord→term from own dicts.parquet
+    exact (use_refine False): ONE collect of the partials
+      → driver merge (merge_partials: filters, sum, mincount, sort,
+        offset, limit, missing) → pandas-built LocalRelation
+    refine (high-cardinality fields):
       → phase 1: Window per seg, rank ≤ 1.5k+10 → candidate terms
       → phase 2: semi-join candidates → groupBy(term).sum(cnt)
       → orderBy(cnt desc, term) limit k
+
+``/select`` folds the exact path into the page's own pass
+(``IndexSearcher.doc_list_and_set``): the same ``count_partials`` body
+runs in the scoring task and the same ``merge_partials`` on the driver.
 """
 
 from __future__ import annotations
@@ -45,10 +54,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.query.executor import SegmentDomain
+from lucene_solr_spark.query.executor import SegmentDomain, local_frame
 from lucene_solr_spark.query.model import BooleanSpec
 
 PARTIAL_SCHEMA = "seg_id int, term string, cnt long"
+FACET_SCHEMA = "facet_value string, cnt long"
 
 
 def _ord_terms(seg_dir: str, *fields: str) -> list[np.ndarray]:
@@ -125,11 +135,58 @@ class FacetRequest:
     #: with no extra shuffle (the same locality block joins rely on).
     group_by: str | None = None
 
+    def __post_init__(self) -> None:
+        if self.group_by not in (None, "conv_id"):
+            # only the segment-local block key sums correctly; anything
+            # else would need a global distinct shuffle — refuse rather
+            # than silently overcount.
+            raise ValueError(f"group_by={self.group_by!r}: only conv_id "
+                             "is segment-local")
+
 
 def _overrequest(limit: int) -> int:
     """Phase-1 per-shard over-request: the reference's limit*1.5+10
     (``FacetComponent.DistribFieldFacet``)."""
     return int(limit * 1.5) + 10
+
+
+def count_partials(dm, hits, req: FacetRequest, lut: np.ndarray) -> pd.DataFrame:
+    """TASK-side sparse counts of one facet.field request over one
+    segment's hit docs: named ``(term, cnt)`` rows, plus one NULL-term
+    row with the segment's missing count under facet.missing. ``dm``
+    is the segment's docmap read (``<field>_ord``, and conv_id for
+    group.facet), ``hits`` its hit ords (None: every doc), ``lut`` the
+    field's ord → term table (:func:`_ord_terms`)."""
+    ords = SegmentDomain.ints(dm, f"{req.field}_ord")
+    groups = dm.column("conv_id").to_numpy() if req.group_by else None
+    if hits is not None:
+        ords = ords[hits]
+        if groups is not None:
+            groups = groups[hits]
+    neg = ords < 0
+    if groups is None:
+        n_missing = int(neg.sum())
+        uniq, cnt = np.unique(ords[~neg], return_counts=True)  # sparse
+    else:
+        # group.facet: one count per DISTINCT (ord, group) pair —
+        # factorize group ids once, dedupe composite keys, count per
+        # ord. Segment-local groups make the cross-segment sum exact
+        # (FacetRequest.group_by).
+        codes = pd.factorize(groups)[0].astype(np.int64)
+        n_missing = int(len(np.unique(codes[neg]))) if neg.any() else 0
+        vals, gcodes = ords[~neg].astype(np.int64), codes[~neg]
+        if len(vals):
+            stride = int(codes.max()) + 1
+            uk = np.unique(vals * stride + gcodes)
+            uniq, cnt = np.unique(uk // stride, return_counts=True)
+        else:
+            uniq = np.empty(0, np.int64)
+            cnt = np.empty(0, np.int64)
+    if req.missing and n_missing:
+        # facet.missing: one extra partial per segment, ord -1
+        uniq = np.append(uniq, -1)
+        cnt = np.append(cnt, n_missing)
+    return pd.DataFrame({"term": _named(lut, uniq), "cnt": cnt.astype(np.int64)})
 
 
 def segment_partials(searcher, req: FacetRequest, spec: BooleanSpec | None) -> DataFrame:
@@ -142,62 +199,66 @@ def segment_partials(searcher, req: FacetRequest, spec: BooleanSpec | None) -> D
     ``DocValuesFacets#getCounts``), its own postings rows for the
     domain's terms, and its own dictionary for ``lookupOrd``.
     """
-    ord_col = f"{req.field}_ord"
-    field = req.field
-    want_missing = req.missing
-    if req.group_by not in (None, "conv_id"):
-        # only the segment-local block key sums correctly (see
-        # FacetRequest.group_by); anything else would need a global
-        # distinct shuffle — refuse rather than silently overcount.
-        raise ValueError(f"group_by={req.group_by!r}: only conv_id is "
-                         "segment-local")
-    grouped = req.group_by is not None
     dom = SegmentDomain(
-        searcher, spec, [ord_col] + (["conv_id"] if grouped else [])
+        searcher, spec,
+        [f"{req.field}_ord"] + (["conv_id"] if req.group_by else []),
     )
 
     def count(seg_id: int, term_rows) -> pd.DataFrame:
         dm, hits = dom.read(seg_id, term_rows)
-        ords = dom.ints(dm, ord_col)
-        groups = dm.column("conv_id").to_numpy() if grouped else None
-        if hits is not None:
-            ords = ords[hits]
-            if groups is not None:
-                groups = groups[hits]
-        neg = ords < 0
-        if groups is None:
-            n_missing = int(neg.sum())
-            uniq, cnt = np.unique(ords[~neg], return_counts=True)  # sparse
-        else:
-            # group.facet: one count per DISTINCT (ord, group) pair —
-            # factorize group ids once, dedupe composite keys, count
-            # per ord. Segment-local groups make the cross-segment sum
-            # exact (FacetRequest.group_by).
-            codes = pd.factorize(groups)[0].astype(np.int64)
-            n_missing = int(len(np.unique(codes[neg]))) if neg.any() else 0
-            vals, gcodes = ords[~neg].astype(np.int64), codes[~neg]
-            if len(vals):
-                stride = int(codes.max()) + 1
-                uk = np.unique(vals * stride + gcodes)
-                uniq, cnt = np.unique(uk // stride, return_counts=True)
-            else:
-                uniq = np.empty(0, np.int64)
-                cnt = np.empty(0, np.int64)
-        if want_missing and n_missing:
-            # facet.missing: one extra partial per segment, ord -1
-            uniq = np.append(uniq, -1)
-            cnt = np.append(cnt, n_missing)
-        return pd.DataFrame(
-            {
-                "seg_id": np.full(len(uniq), seg_id, np.int32),
-                "term": _named(
-                    _ord_terms(dom.seg_dirs[seg_id], field)[0], uniq
-                ),
-                "cnt": cnt.astype(np.int64),
-            }
-        )
+        lut = _ord_terms(dom.seg_dirs[seg_id], req.field)[0]
+        out = count_partials(dm, hits, req, lut)
+        out.insert(0, "seg_id", np.int32(seg_id))
+        return out
 
     return searcher.each_segment(count, PARTIAL_SCHEMA, dom.postings_spec)
+
+
+def merge_partials(parts: pd.DataFrame, req: FacetRequest) -> pd.DataFrame:
+    """The exact facet.field merge, on the driver: every segment's
+    named ``(term, cnt)`` partials (NULL term: facet.missing counts)
+    → the request's ``(facet_value, cnt)`` buckets. Applies prefix,
+    contains, matches and excludeTerms before the sum, then mincount,
+    sort (count: cnt desc, value asc; index: value asc), offset and
+    limit, and appends the facet.missing row last. The partials are at
+    most #segments × #buckets rows, so a pandas merge costs less than
+    one Spark job (``global_df``'s reasoning)."""
+    named = parts["term"].notna().to_numpy()
+    terms = parts["term"][named].astype(str)
+    keep = np.ones(len(terms), bool)
+    if req.prefix is not None:
+        keep &= terms.str.startswith(req.prefix).to_numpy(bool)
+    if req.contains is not None:
+        hay = terms.str.lower() if req.contains_ignore_case else terms
+        needle = (req.contains.lower() if req.contains_ignore_case
+                  else req.contains)
+        keep &= hay.str.contains(needle, regex=False).to_numpy(bool)
+    if req.matches is not None:
+        # whole-value match (Pattern.matches)
+        keep &= terms.str.fullmatch(req.matches).to_numpy(bool)
+    if req.exclude_terms:
+        keep &= ~terms.isin(req.exclude_terms).to_numpy(bool)
+    cnt = (
+        parts["cnt"][named][keep].astype(np.int64)
+        .groupby(terms[keep]).sum()
+    )
+    out = pd.DataFrame({
+        "facet_value": cnt.index.to_numpy(object),
+        "cnt": cnt.to_numpy(np.int64),
+    })
+    out = out[out["cnt"] >= req.mincount]
+    if req.sort == "count":
+        out = out.sort_values(["cnt", "facet_value"], ascending=[False, True])
+    else:
+        out = out.sort_values("facet_value")
+    out = out.iloc[req.offset:req.offset + req.limit]
+    if req.missing:
+        miss = int(parts["cnt"][~named].sum())
+        out = pd.concat([out, pd.DataFrame({
+            "facet_value": np.array([None], object),
+            "cnt": np.array([miss], np.int64),
+        })])
+    return out.reset_index(drop=True)
 
 
 _METRIC_KINDS = (
@@ -293,8 +354,6 @@ def facet_metrics(
         f"{p} {t}" for p, t in partial_cols
     )
     ord_col = f"{field}_ord"
-    if spec is not None and spec.needs_rewrite:
-        spec = searcher.rewrite(spec)
     dom = SegmentDomain(searcher, spec, [ord_col, *metric_cols])
 
     def run_seg(seg_id: int, term_rows) -> pd.DataFrame:
@@ -439,7 +498,7 @@ def facet_pivot(
     each deeper level keeps the top ``limits[i]`` children of every
     surviving parent, all ranked by (total desc, value asc). Rows are
     ``(v1, …, vN, cnt)`` ordered count desc, value asc at every level
-    (Solr's ``facet.sort=count``). Multiterm specs are rewritten here.
+    (Solr's ``facet.sort=count``).
 
     Per-segment sparse tuple counting: one ``np.unique`` over the hit
     docs' (ord1, …, ordN) rows, named in the task from ONE read of the
@@ -454,8 +513,6 @@ def facet_pivot(
     n = len(fields)
     if len(limits) != n:
         raise ValueError(f"facet_pivot: {n} fields but {len(limits)} limits")
-    if spec is not None and spec.needs_rewrite:
-        spec = searcher.rewrite(spec)
     ord_cols = [f"{f}_ord" for f in fields]
     vs = [f"v{i + 1}" for i in range(n)]
     ts = [f"t{i + 1}" for i in range(n)]
@@ -584,7 +641,7 @@ def facet_nested(
 def use_refine(searcher, req: FacetRequest, refine: bool, method: str) -> bool:
     """The facet method choice (SimpleFacets' enum/fc heuristic
     analog). refine=False or mincount>1 always means the exact
-    single-shuffle path (mincount exactness: ADVICE r2). Under
+    driver-merge path (mincount exactness: ADVICE r2). Under
     method='auto', low-cardinality fields also route exact: when the
     field's whole dictionary fits in HALF the phase-1 over-request
     window, every term is a phase-1 candidate anyway, so the persist +
@@ -608,25 +665,30 @@ def facet_field(
 ) -> DataFrame:
     """Distributed facet counts: (facet_value, cnt), top `limit`.
 
-    refine=True runs the reference's two-phase merge-and-refine (A3);
-    refine=False is the exact single-shuffle groupBy (the control both
-    the tests and the DuckDB oracle compare against). For mincount<=1
-    both paths are exact; with mincount>1 phase-1's per-segment
-    ranking could let sub-mincount singletons crowd qualifying buckets
-    out of the over-request window (ADVICE r2), so mincount>1 requests
-    are routed through the exact single-shuffle path.
+    The exact path (refine=False, mincount>1, or a low-cardinality
+    field under method='auto' — :func:`use_refine`) collects the
+    per-segment partials once and merges them on the driver
+    (:func:`merge_partials`, the same merge ``/select``'s fused pass
+    uses). refine=True on a high-cardinality field runs the
+    reference's two-phase merge-and-refine (A3) in Spark: phase-1
+    over-request ranks per segment, phase 2 sums the candidates' exact
+    counts. With mincount>1 phase-1's per-segment ranking could let
+    sub-mincount singletons crowd qualifying buckets out of the
+    over-request window (ADVICE r2), so mincount>1 requests are
+    routed exact.
 
     facet.sort honors count (default) vs index order — phase-1
     over-request ranks per segment in the SAME order, Solr's refine
     contract; facet.prefix narrows before ranking; facet.missing
     appends a trailing NULL bucket (never subject to limit/sort).
+    Either way the bounded result comes back as a pandas-built
+    LocalRelation (no job on collect).
     """
     # MatchAll-domain partials are snapshot-stable → served from the
     # searcher's UnInvertedField-style cache (one tiny persisted
     # (seg_id, term, cnt) frame per field; a new snapshot means a
     # new searcher, so staleness is impossible). Query-domain partials
     # are computed per call as before.
-    cached: list[DataFrame] = []  # call-owned persisted frames to free
     cache_key = (
         (req.field, req.group_by, req.missing) if spec is None else None
     )
@@ -641,9 +703,19 @@ def facet_field(
             if prior is not raw:
                 raw.unpersist()
                 raw = prior
-        elif req.missing:
-            raw = raw.persist()  # both the buckets and the miss row
-            cached.append(raw)
+    if not use_refine(searcher, req, refine, method):
+        return local_frame(
+            searcher.spark, merge_partials(raw.toPandas(), req), FACET_SCHEMA
+        )
+    # phase 1 (per-segment top ranking) and phase 2 (exact counts for
+    # candidates) both consume the partials; persisting them runs the
+    # sparse counting pass ONCE instead of twice (~40% off MatchAll
+    # high-cardinality facet latency). The cached rows are tiny —
+    # (seg_id, term, cnt) partials only.
+    cached: list[DataFrame] = []  # call-owned persisted frames to free
+    if cache_key is None and req.missing:
+        raw = raw.persist()  # both the buckets and the miss row
+        cached.append(raw)
     # missing-value partials carry a NULL term: never a bucket
     parts = raw.filter(F.col("term").isNotNull())
     if req.prefix is not None:
@@ -663,30 +735,19 @@ def facet_field(
     rank_order = (
         [F.desc("cnt"), F.asc("term")] if req.sort == "count" else [F.asc("term")]
     )
-
-    refine = use_refine(searcher, req, refine, method)
-    if refine:
-        # phase 1 (per-segment top ranking) and phase 2 (exact counts
-        # for candidates) both consume the partials; persisting them
-        # runs the sparse counting pass ONCE instead of twice (~40%
-        # off MatchAll high-cardinality facet latency). The cached
-        # rows are tiny — (seg_id, term, cnt) partials only.
-        parts = parts.persist()
-        cached.append(parts)
-        over = _overrequest(req.offset + req.limit)
-        w = Window.partitionBy("seg_id").orderBy(*rank_order)
-        cands = (
-            parts.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= over)
-            .select("term")
-            .distinct()
-        )
-        # Phase 2 refinement: exact counts for candidate terms only.
-        refined = parts.join(F.broadcast(cands), "term", "left_semi")
-        agg = refined.groupBy("term").agg(F.sum("cnt").alias("cnt"))
-    else:
-        agg = parts.groupBy("term").agg(F.sum("cnt").alias("cnt"))
-
+    parts = parts.persist()
+    cached.append(parts)
+    over = _overrequest(req.offset + req.limit)
+    w = Window.partitionBy("seg_id").orderBy(*rank_order)
+    cands = (
+        parts.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= over)
+        .select("term")
+        .distinct()
+    )
+    # Phase 2 refinement: exact counts for candidate terms only.
+    refined = parts.join(F.broadcast(cands), "term", "left_semi")
+    agg = refined.groupBy("term").agg(F.sum("cnt").alias("cnt"))
     out_order = (
         [F.desc("cnt"), F.asc("facet_value")] if req.sort == "count"
         else [F.asc("facet_value")]
@@ -704,16 +765,14 @@ def facet_field(
             .select(F.lit(None).cast("string").alias("facet_value"), "cnt")
         )
         out = out.unionByName(miss)
-    if cached:
-        # The facet result is bounded (<= limit+1 rows); materialize it
-        # now so the persisted partials can be freed immediately — a
-        # long-lived serving searcher must not accumulate cached
-        # partial frames across facet calls (ADVICE r2).
-        rows = out.collect()
-        for df in cached:
-            df.unpersist()
-        out = searcher.spark.createDataFrame(rows, out.schema)
-    return out
+    # The facet result is bounded (<= limit+1 rows); materialize it now
+    # so the persisted partials can be freed immediately — a long-lived
+    # serving searcher must not accumulate cached partial frames across
+    # facet calls (ADVICE r2).
+    pdf = out.toPandas()
+    for df in cached:
+        df.unpersist()
+    return local_frame(searcher.spark, pdf, FACET_SCHEMA)
 
 
 RELATEDNESS_PARTIAL_SCHEMA = "term string, fg long, bg long"
@@ -755,20 +814,18 @@ def facet_relatedness(
     ref: solr/core/src/java/org/apache/solr/search/facet/RelatednessAgg.java
          (computeRelatedness; fg/bg set comparison per bucket)
     """
-    if fg_spec.needs_rewrite:
-        fg_spec = searcher.rewrite(fg_spec)
     ord_col = f"{field}_ord"
     dom = SegmentDomain(searcher, fg_spec, [ord_col])
 
     def run_seg(seg_id: int, term_rows) -> pd.DataFrame:
-        dm, hits = dom.read(seg_id, term_rows)
-        ords = dom.ints(dm, ord_col)
-        live = dom.live(dm)
+        leaf = dom.open(seg_id, term_rows)
+        ords = dom.ints(leaf.dm, ord_col)
+        live = leaf.live
         if live is None:
-            bg_ords, bg_size = ords, len(dm)
+            bg_ords, bg_size = ords, len(ords)
         else:
             bg_ords, bg_size = ords[live], int(live.sum())
-        fg_ords = ords[hits]
+        fg_ords = ords[leaf.hits]
         # one sparse pass over each domain's touched ordinals
         bg_u, bg_c = np.unique(bg_ords[bg_ords >= 0], return_counts=True)
         fg_u, fg_c = np.unique(fg_ords[fg_ords >= 0], return_counts=True)
@@ -785,7 +842,7 @@ def facet_relatedness(
         return pd.DataFrame(
             {
                 "term": terms,
-                "fg": np.append(fg_col, len(hits)).astype(np.int64),
+                "fg": np.append(fg_col, len(leaf.hits)).astype(np.int64),
                 "bg": np.append(bg_c, bg_size).astype(np.int64),
             }
         )
@@ -820,9 +877,9 @@ def facet_relatedness(
     )
     # bounded result (<= limit rows): materialize so the persisted
     # partials free immediately (same discipline as facet_field)
-    rows = out.collect()
+    pdf = out.toPandas()
     partials.unpersist()
-    return searcher.spark.createDataFrame(rows, out.schema)
+    return local_frame(searcher.spark, pdf, out.schema)
 
 
 def _bucket_counts(partials: DataFrame, limit: int) -> DataFrame:
@@ -856,20 +913,17 @@ def facet_block_domain(
     ref: solr/core/src/java/org/apache/solr/search/facet/FacetRequest.java
          (Domain.toChildren / BlockJoinChildQParser domain changes)
     """
-    if spec.needs_rewrite:
-        spec = searcher.rewrite(spec)
     ord_col = f"{field}_ord"
     dom = SegmentDomain(searcher, spec, [ord_col, "conv_id"])
 
     def run_seg(seg_id: int, term_rows) -> pd.DataFrame:
-        dm, hits = dom.read(seg_id, term_rows)
-        convs = dm.column("conv_id").to_numpy()
+        leaf = dom.open(seg_id, term_rows)
+        convs = leaf.dm.column("conv_id").to_numpy()
         # widen: every live doc whose conversation contains a hit
-        in_block = np.isin(convs, np.unique(convs[hits]))
-        live = dom.live(dm)
-        if live is not None:
-            in_block &= live
-        ords = dom.ints(dm, ord_col)[in_block]
+        in_block = np.isin(convs, np.unique(convs[leaf.hits]))
+        if leaf.live is not None:
+            in_block &= leaf.live
+        ords = dom.ints(leaf.dm, ord_col)[in_block]
         uniq, cnt = np.unique(ords[ords >= 0], return_counts=True)
         return pd.DataFrame({
             "term": _ord_terms(dom.seg_dirs[seg_id], field)[0][uniq],
@@ -905,8 +959,6 @@ def facet_unique_block(
     ref: solr/core/src/java/org/apache/solr/search/facet/UniqueBlockAgg.java
          (unique parent counting riding the child-domain terms facet)
     """
-    if spec is not None and spec.needs_rewrite:
-        spec = searcher.rewrite(spec)
     ord_col = f"{field}_ord"
     dom = SegmentDomain(searcher, spec, [ord_col, "conv_id"])
 
@@ -970,21 +1022,18 @@ def facet_block_parent(
     ref: solr/core/src/java/org/apache/solr/search/facet/FacetRequest.java
          (Domain.toParent / BlockJoinParentQParser domain changes)
     """
-    if spec.needs_rewrite:
-        spec = searcher.rewrite(spec)
     ord_col = f"{field}_ord"
     dom = SegmentDomain(searcher, spec, [ord_col, "conv_id", "turn_idx"])
 
     def run_seg(seg_id: int, term_rows) -> pd.DataFrame:
-        dm, hits = dom.read(seg_id, term_rows)
-        convs = dm.column("conv_id").to_numpy()
+        leaf = dom.open(seg_id, term_rows)
+        convs = leaf.dm.column("conv_id").to_numpy()
         # toParent: parent rows (turn 0, live) of conversations with a hit
-        parents = dom.ints(dm, "turn_idx") == 0
-        live = dom.live(dm)
-        if live is not None:
-            parents &= live
-        parents &= np.isin(convs, np.unique(convs[hits]))
-        ords = dom.ints(dm, ord_col)[parents]
+        parents = dom.ints(leaf.dm, "turn_idx") == 0
+        if leaf.live is not None:
+            parents &= leaf.live
+        parents &= np.isin(convs, np.unique(convs[leaf.hits]))
+        ords = dom.ints(leaf.dm, ord_col)[parents]
         uniq, cnt = np.unique(ords[ords >= 0], return_counts=True)
         return pd.DataFrame({
             "term": _ord_terms(dom.seg_dirs[seg_id], field)[0][uniq],

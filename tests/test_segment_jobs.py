@@ -1,8 +1,8 @@
 """Spark jobs per request. Per-segment work runs as one shuffle-free
 stage (``IndexSearcher.each_segment``: ``spark.range(n_segs)
 .mapInPandas``, each task reading its own segment's files), and the df
-probe is a driver-side read — so a BM25 request is ONE job and a
-composed /select page + facet leg at most three. The same pass must
+probe is a driver-side read — so a BM25 request is ONE job, and so is
+a cached /select whose page and exact facet leg share one pass. The same pass must
 still visit a segment holding none of the query's terms whenever the
 domain needs it (pure-negative specs, MatchAll facets)."""
 
@@ -115,6 +115,40 @@ def test_composed_select_runs_at_most_three_jobs(spark, searcher):
     assert len(page) == 10
     assert {r[0] for r in facet} <= {"assistant", "tool"}
     assert sum(r[1] for r in facet) == num
+
+
+def test_cached_composed_select_is_one_job(spark, searcher):
+    """With its key cached, a score-sorted /select whose facet.field leg
+    merges exactly runs ONE job: the page top-k and the facet counts
+    come from one per-segment pass (``doc_list_and_set``), merged on
+    the driver into tables whose collect runs none."""
+    from lucene_solr_spark.handler import select
+
+    params = {"q": "w7 w8", "q.op": "AND", "fq": "-role:user",
+              "start": 10, "rows": 10, "facet.field": "role",
+              "facet.limit": 10}
+
+    def request():
+        out = select(searcher, params)
+        page = out["response"].collect()
+        facet = out["facet_counts"]["role"].collect()
+        return page, out["numFound"], facet
+
+    first = request()  # fills the filter and docset caches
+    second, n = _jobs(spark, request)
+    assert n == 1
+    assert second == first
+    spec = BooleanSpec(must=("w7", "w8"), not_filters=(("role", "user"),),
+                       k=20)
+    assert second[0] == searcher.search(spec, round_to=4).offset(10).collect()
+
+
+def test_field_cardinality_runs_no_job(spark, searcher):
+    fresh = IndexSearcher(spark, searcher.index_root)
+    card, n = _jobs(spark, lambda: fresh.field_cardinality("role"))
+    assert n == 0
+    assert card == fresh.dicts().filter("field = 'role'").select(
+        "term").distinct().count() == 3
 
 
 def test_term_free_segments_still_visited(searcher):

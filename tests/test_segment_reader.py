@@ -4,9 +4,11 @@ analog), so no new read path can skip the tombstone mask.
 
 Walks the AST of ``lucene_solr_spark/query/*.py`` and ``handler.py``:
 the mask primitives ``apply_deletes`` / ``filter_mask`` are called only
-inside ``SegmentDomain``, and the literal ``docmap.parquet`` appears
-only there (``early_topk``'s streaming index-sort read opens the
-reader's ``path`` and takes its mask from the reader's ``live``).
+inside ``SegmentDomain``, the literal ``docmap.parquet`` appears only
+there, and the liveDocs probe (a ``live`` / ``_live_docs`` call) runs
+only inside the reader and its ``Leaf`` — a caller takes the mask the
+reader already built instead of probing every doc key again
+(``early_topk`` streams its batches through ``SegmentDomain.stream``).
 Docstrings are prose and are not checked.
 """
 
@@ -23,6 +25,11 @@ FILES = sorted(glob.glob(os.path.join(ROOT, "query", "*.py"))) + [
     os.path.join(ROOT, "handler.py")
 ]
 MASK_CALLS = {"apply_deletes", "filter_mask"}
+#: the reader's own liveDocs probe: a caller takes the mask the reader
+#: built (``Leaf.live``) instead of probing the keys again
+PROBE_CALLS = {"live", "_live_docs"}
+#: the reader and the segment view it hands out
+READER = {"SegmentDomain", "Leaf"}
 
 
 def _sites(path: str):
@@ -48,6 +55,8 @@ def _sites(path: str):
             name = getattr(f, "id", None) or getattr(f, "attr", None)
             if name in MASK_CALLS:
                 out.append(("call", name, scope, node.lineno))
+            elif name in PROBE_CALLS:
+                out.append(("probe", name, scope, node.lineno))
         if (isinstance(node, ast.Constant) and isinstance(node.value, str)
                 and "docmap.parquet" in node.value
                 and id(node) not in docstrings):
@@ -70,6 +79,16 @@ def test_mask_primitives_called_only_in_segment_reader(path):
 
 
 @pytest.mark.parametrize("path", FILES, ids=os.path.basename)
+def test_livedocs_probed_only_in_segment_reader(path):
+    bad = [
+        f"{os.path.basename(path)}:{line} {name} in {'.'.join(scope)}"
+        for kind, name, scope, line in _sites(path)
+        if kind == "probe" and not READER & set(scope)
+    ]
+    assert not bad, bad
+
+
+@pytest.mark.parametrize("path", FILES, ids=os.path.basename)
 def test_docmap_read_only_in_segment_reader(path):
     bad = [
         f"{os.path.basename(path)}:{line} in {'.'.join(scope)}"
@@ -84,5 +103,5 @@ def test_guard_sees_the_reader():
     and docmap path."""
     sites = _sites(os.path.join(ROOT, "query", "executor.py"))
     assert {n for k, n, s, _ in sites if "SegmentDomain" in s} == (
-        MASK_CALLS | {"docmap.parquet"}
+        MASK_CALLS | {"docmap.parquet", "_live_docs"}
     )
