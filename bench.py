@@ -8,7 +8,9 @@ Measures the two BASELINE.json metrics on this sandbox:
    ``lucene_solr_spark.transcripts.generate_transcripts``) inverted
    into committed segments via the full production path
    (``build_index``: applyInPandas inversion → varint posting pack →
-   manifest commit).
+   manifest commit). The ``build`` block also carries ``merge_sec``:
+   ``merge_segments`` at its default ``merge_factor`` over a copy of
+   the built index (the build:merge ratio).
 2. **BM25 top-10 query latency** — the golden boolean query set
    (FIXTURES.md §3) executed by the distributed ``IndexSearcher``
    (bucket-pruned postings scan → cogrouped segment scorer with
@@ -46,6 +48,7 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from lucene_solr_spark.index.build import build_index_prepartitioned  # noqa: E402
+from lucene_solr_spark.index.merge import merge_segments  # noqa: E402
 from lucene_solr_spark.query.executor import IndexSearcher  # noqa: E402
 from lucene_solr_spark.registry import BM25_SPECS  # noqa: E402
 from lucene_solr_spark.session import get_spark  # noqa: E402
@@ -175,6 +178,17 @@ def run_once(cpus: int, n_turns: int, queries: bool = True,
             build_s = min(build_s, time.perf_counter() - t0)
         out["build_sec"] = round(build_s, 3)
         out["turns_per_sec"] = round(n_turns / build_s, 1)
+
+        # compaction of a copy at the default merge_factor (the build
+        # stays unmerged for the query phase): the build:merge ratio
+        merge_root = idx_root + "_merge"
+        shutil.copytree(idx_root, merge_root)
+        try:
+            t0 = time.perf_counter()
+            merge_segments(spark, merge_root)
+            out["merge_sec"] = round(time.perf_counter() - t0, 3)
+        finally:
+            shutil.rmtree(merge_root, ignore_errors=True)
 
         if queries:
             from lucene_solr_spark.query.model import BooleanSpec
@@ -516,6 +530,7 @@ def main() -> None:
             "sec": r["build_sec"],
             "turns_per_sec": r["turns_per_sec"],
             "cpus": r["cpus"],
+            "merge_sec": r["merge_sec"],
         },
     }))
 

@@ -41,7 +41,6 @@ def main() -> None:
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--merge-factor", type=int, default=0,
                     help="if >0, run tiered compaction after the build")
-    ap.add_argument("--salt-span", type=int, default=2)
     ap.add_argument("--dedupe-signature", action="store_true",
                     help="SignatureUpdateProcessor (overwriteDupes): "
                          "drop exact text duplicates before indexing")
@@ -83,8 +82,7 @@ def main() -> None:
         from lucene_solr_spark.index.merge import merge_segments
 
         manifest = merge_segments(
-            spark, args.output,
-            merge_factor=args.merge_factor, salt_span=args.salt_span,
+            spark, args.output, merge_factor=args.merge_factor,
         )
 
     print(json.dumps({

@@ -2244,6 +2244,8 @@ def _select_impl(
     (``IndexSearcher.doc_list_and_set``), the driver merges both, and
     they come back as pandas-built tables — on a cached key that is
     the request's one Spark job, run inside the timeAllowed budget."""
+    import pandas as pd
+
     from lucene_solr_spark.query.executor import (
         RESULT_SCHEMA, _exclude_filter_fields, local_frame,
     )
@@ -2277,8 +2279,10 @@ def _select_impl(
                 )
             else:
                 next_mark = params["cursorMark"]
-            page_df = searcher.spark.createDataFrame(
-                page_rows, page.schema
+            page_df = local_frame(
+                searcher.spark,
+                pd.DataFrame.from_records(page_rows, columns=page.columns),
+                page.schema,
             )
             return {
                 "response": _encode_wt(page_df, o["wt"]),
@@ -2296,9 +2300,13 @@ def _select_impl(
             # exhausted: Solr signals the end by echoing the request's
             # mark back unchanged
             next_mark = params["cursorMark"]
-        page_df = searcher.spark.createDataFrame(
-            [(r.conv_id, r.turn_idx, r.score) for r in page_rows],
-            "conv_id string, turn_idx int, score double",
+        page_df = local_frame(
+            searcher.spark,
+            pd.DataFrame.from_records(
+                [(r.conv_id, r.turn_idx, r.score) for r in page_rows],
+                columns=["conv_id", "turn_idx", "score"],
+            ),
+            RESULT_SCHEMA,
         )
         return {
             "response": _encode_wt(page_df, o["wt"]),
@@ -2333,16 +2341,23 @@ def _select_impl(
         # combined slot order. numFound = organic hit count + elevated
         # rows (Solr counts force-elevated non-matching docs too).
         elev_ids, excl_ids = o["elevate"]
-        elev = searcher.spark.createDataFrame(
-            [(c, t, i + 1) for i, (c, t) in enumerate(elev_ids)],
+        elev = local_frame(
+            searcher.spark,
+            pd.DataFrame.from_records(
+                [(c, t, i + 1) for i, (c, t) in enumerate(elev_ids)],
+                columns=["conv_id", "turn_idx", "slot"],
+            ),
             "conv_id string, turn_idx int, slot int",
         )
         e_hits = searcher.score_hits(spec, k=None).withColumn(
             "score", F.round("score", 4)
         )
         if excl_ids:
-            excl = searcher.spark.createDataFrame(
-                list(excl_ids), "conv_id string, turn_idx int")
+            excl = local_frame(
+                searcher.spark,
+                pd.DataFrame.from_records(
+                    list(excl_ids), columns=["conv_id", "turn_idx"]),
+                "conv_id string, turn_idx int")
             e_hits = e_hits.join(
                 F.broadcast(excl), ["conv_id", "turn_idx"], "left_anti")
         elevated = (
@@ -2464,8 +2479,10 @@ def _select_impl(
             # clauses exist, so there is no head to rank — the
             # component legs (numFound, facets, stats) run over the
             # spec's DocSet domain below
-            head = searcher.spark.createDataFrame(
-                [], "conv_id string, turn_idx int, score double")
+            head = local_frame(
+                searcher.spark,
+                pd.DataFrame(columns=["conv_id", "turn_idx", "score"]),
+                RESULT_SCHEMA)
         elif fusable:
             # getDocListAndSet: the start+rows head and the fusable
             # facet.field counts from ONE per-segment pass, both merged

@@ -52,9 +52,9 @@ from pyspark.sql import functions as F
 from lucene_solr_spark.index.build import (
     METRICS_SCHEMA,
     _fnv64_array,
-    _list_arr_from,
-    _ordinals,
-    write_segment,
+    flush_segment,
+    manifest_entries,
+    segment_tables,
 )
 from lucene_solr_spark.index.codec import (
     pack_all_postings,
@@ -69,6 +69,21 @@ _SPLIT_POST_SCHEMA = (
     "pos_offs array<long>, max_tfs array<long>, min_dls array<long>, "
     "doc_bytes binary, tf_bytes binary, pos_bytes binary"
 )
+
+
+def _list_arr_from(arrs) -> pa.Array:
+    """Series/list of int arrays → Arrow list<int32> column."""
+    arrs = [np.asarray(a, np.int64) for a in arrs]
+    if not arrs:
+        return pa.array([], type=pa.list_(pa.int32()))
+    offsets = np.zeros(len(arrs) + 1, np.int32)
+    np.cumsum([len(a) for a in arrs], out=offsets[1:])
+    flat = (
+        np.concatenate(arrs).astype(np.int32)
+        if any(len(a) for a in arrs)
+        else np.empty(0, np.int32)
+    )
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat))
 
 
 def route_convs(conv_ids: np.ndarray, n_children: int) -> np.ndarray:
@@ -218,78 +233,23 @@ def split_segment(
         c = int(post_pdf["child"].iloc[0]) if len(post_pdf) else int(
             dm_pdf["child"].iloc[0]
         )
-        part, seg = parts[c], names[c]
-        ch, no, _dl = bc.value
-        dmp = dm_pdf.sort_values("doc_ord").reset_index(drop=True)
-        dmp["doc_ord"] = no[dmp["doc_ord"].to_numpy()].astype(np.int32)
-        ords: dict[str, np.ndarray] = {}
-        dict_rows: list[pd.DataFrame] = []
-        for fld in ("role", "tool", "ftok"):
-            o, uq = _ordinals(dmp[fld])
-            ords[fld] = o
-            dict_rows.append(pd.DataFrame({
-                "field": fld,
-                "term_ord": np.arange(len(uq), dtype=np.int32),
-                "term": uq.astype(str) if len(uq) else np.array([], object),
-            }))
-        dict_pdf = pd.concat(dict_rows, ignore_index=True)
-        dict_pdf.insert(0, "seg_id", np.int32(part))
-
-        nd = len(dmp)
-        docmap = pa.table({
-            "seg_id": pa.array(np.full(nd, part, np.int32)),
-            "doc_ord": pa.array(dmp["doc_ord"].to_numpy(np.int32)),
-            "conv_id": pa.array(dmp["conv_id"].astype(str)),
-            "turn_idx": pa.array(dmp["turn_idx"].to_numpy(np.int32)),
-            "doc_len": pa.array(dmp["doc_len"].to_numpy(np.int32)),
-            "role": pa.array(dmp["role"], pa.string()),
-            "tool": pa.array(dmp["tool"], pa.string()),
-            "ftok": pa.array(dmp["ftok"], pa.string()),
-            "ts": pa.array(pd.to_datetime(dmp["ts"])).cast(pa.timestamp("us")),
-            "role_ord": pa.array(ords["role"]),
-            "tool_ord": pa.array(ords["tool"]),
-            "ftok_ord": pa.array(ords["ftok"]),
-        })
-
+        # the child's docs keep their old relative order, so doc_ord =
+        # row position is the order-preserving remap new_ord
+        docs = dm_pdf.sort_values("doc_ord").reset_index(drop=True)
         pp = post_pdf.sort_values("term", kind="mergesort")
         postings = pa.table({
-            "seg_id": pa.array(np.full(len(pp), part, np.int32)),
+            "seg_id": pa.array(np.full(len(pp), parts[c], np.int32)),
             "bucket": pa.array(pp["bucket"].to_numpy(np.int32)),
             "term": pa.array(pp["term"].astype(str), pa.string()),
             "df": pa.array(pp["df"].to_numpy(np.int64).astype(np.int32)),
             "cf": pa.array(pp["cf"].to_numpy(np.int64)),
-            "first_docs": _list_arr_from(pp["first_docs"]),
-            "doc_offs": _list_arr_from(pp["doc_offs"]),
-            "tf_offs": _list_arr_from(pp["tf_offs"]),
-            "pos_offs": _list_arr_from(pp["pos_offs"]),
-            "max_tfs": _list_arr_from(pp["max_tfs"]),
-            "min_dls": _list_arr_from(pp["min_dls"]),
-            "doc_bytes": pa.array(list(pp["doc_bytes"]), pa.binary()),
-            "tf_bytes": pa.array(list(pp["tf_bytes"]), pa.binary()),
-            "pos_bytes": pa.array(list(pp["pos_bytes"]), pa.binary()),
+            **{k: _list_arr_from(pp[k]) for k in (
+                "first_docs", "doc_offs", "tf_offs", "pos_offs", "max_tfs", "min_dls")},
+            **{k: pa.array(list(pp[k]), pa.binary()) for k in (
+                "doc_bytes", "tf_bytes", "pos_bytes")},
         })
-
-        dicts = pa.Table.from_pandas(dict_pdf, preserve_index=False)
-        write_segment(
-            {"postings": postings, "docmap": docmap, "dicts": dicts},
-            os.path.join(seg_root, seg),
-        )
-        n_bytes = int(
-            sum(len(b) for b in pp["doc_bytes"])
-            + sum(len(b) for b in pp["tf_bytes"])
-            + sum(len(b) for b in pp["pos_bytes"])
-        )
-        return pd.DataFrame([{
-            "part": part,
-            "seg_name": seg,
-            "n_docs": nd,
-            "sum_dl": int(dmp["doc_len"].sum()),
-            "max_dl": int(dmp["doc_len"].max()) if nd else 0,
-            "n_terms": len(pp),
-            "n_postings": int(pp["df"].sum()),
-            "n_tokens": int(pp["cf"].sum()),
-            "bytes": n_bytes,
-        }])
+        seg = segment_tables(parts[c], postings, docs)
+        return flush_segment(seg, seg_root, names[c], parts[c])
 
     rows = (
         child_post.groupby("child")
@@ -297,15 +257,7 @@ def split_segment(
         .applyInPandas(write_child, schema=METRICS_SCHEMA)
         .collect()
     )
-    children = {
-        r.seg_name: {
-            "part": r.part, "n_docs": r.n_docs, "sum_dl": r.sum_dl,
-            "max_dl": r.max_dl, "n_terms": r.n_terms,
-            "n_postings": r.n_postings, "n_tokens": r.n_tokens,
-            "bytes": r.bytes,
-        }
-        for r in rows
-    }
+    children = manifest_entries(rows)
     kept = {k: v for k, v in manifest.segments.items() if k != seg_name}
     manifest.commit_replace(
         {**kept, **children},

@@ -945,7 +945,11 @@ class IndexSearcher:
         that a giant-k ``orderBy().limit()`` would plan."""
         spec, idf = self._weights(spec)
         if idf is None:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(
+                self.spark,
+                pd.DataFrame(columns=["conv_id", "turn_idx", "score"]),
+                RESULT_SCHEMA,
+            )
         avgdl = self.manifest.avgdl
         seg_k = (1 << 62) if k is None else k
         # norms + result ids; a filterCache hit drops the fq columns

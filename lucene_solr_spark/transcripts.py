@@ -14,8 +14,8 @@ Two deterministic sources:
 2. :func:`generate_transcripts` — a counter-based (partition-invariant)
    synthetic generator for arbitrary row counts, used by the bench and
    scaling runs. Zipf-ish vocabulary (log-uniform ranks ≈ Zipf s=1)
-   produces the skewed high-DF head terms the salted merge must handle
-   (SURVEY §7.3). Randomness is splitmix64 counter hashing of
+   produces the skewed high-DF head terms (SURVEY §7.3) whose posting
+   runs every segment and every merge carries. Randomness is splitmix64 counter hashing of
    (row_id, position) — the same rows are produced regardless of
    partitioning, cluster size, or batch boundaries, which is what makes
    the N-vs-4N scaling runs byte-identical.

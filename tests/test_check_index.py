@@ -1,6 +1,6 @@
-"""CheckIndex CLI tool (tools/check_index.py): a freshly built index
-passes the deep check; tampered stats / unreadable segment files are
-detected; exit-code contract."""
+"""CheckIndex CLI tool (tools/check_index.py): a freshly built, a merged
+and a split index pass the deep check; tampered stats / unreadable
+segment files are detected; exit-code contract."""
 
 from __future__ import annotations
 
@@ -29,6 +29,30 @@ def test_clean_index_passes_deep(spark, built_root):
     assert rep["segments"] == 3 and rep["deep"]
 
 
+def test_merged_index_passes_deep(spark, built_root, tmp_path):
+    from lucene_solr_spark.index.merge import merge_segments
+
+    root = str(tmp_path / "merged")
+    shutil.copytree(built_root, root)
+    merge_segments(spark, root, merge_factor=2)
+    rep = check_index(spark, root, deep=True)
+    assert rep["ok"] and rep["errors"] == [], rep["errors"]
+    assert rep["segments"] == 2 and rep["deep"]
+
+
+def test_split_index_passes_deep(spark, built_root, tmp_path):
+    from lucene_solr_spark.index.manifest import Manifest
+    from lucene_solr_spark.index.split import split_segment
+
+    root = str(tmp_path / "split")
+    shutil.copytree(built_root, root)
+    split_segment(spark, root, sorted(Manifest.load(root).segments)[0],
+                  n_children=2)
+    rep = check_index(spark, root, deep=True)
+    assert rep["ok"] and rep["errors"] == [], rep["errors"]
+    assert rep["segments"] == 4 and rep["deep"]
+
+
 def test_tampered_stats_detected(spark, built_root, tmp_path):
     root = str(tmp_path / "tampered")
     shutil.copytree(built_root, root)
@@ -44,6 +68,29 @@ def test_tampered_stats_detected(spark, built_root, tmp_path):
     assert not rep["ok"]
     assert any("n_postings" in e for e in rep["errors"])
     assert any("sum_dl" in e for e in rep["errors"])
+
+
+def test_stale_block_max_detected(spark, built_root, tmp_path):
+    """Deep mode recomputes every block's max tf from the decoded tf
+    stream: one bumped ``max_tfs`` entry is reported."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "stale")
+    shutil.copytree(built_root, root)
+    seg = sorted(os.listdir(os.path.join(root, "segments")))[0]
+    path = os.path.join(root, "segments", seg, "postings.parquet")
+    t = pq.read_table(path)
+    mts = t["max_tfs"].to_pylist()
+    mts[0] = [mts[0][0] + 1] + mts[0][1:]
+    t = t.set_column(t.schema.get_field_index("max_tfs"), "max_tfs",
+                     pa.array(mts, t.schema.field("max_tfs").type))
+    pq.write_table(t, path)
+    assert check_index(spark, root, deep=False)["ok"]
+    rep = check_index(spark, root, deep=True)
+    assert not rep["ok"]
+    term = t["term"][0].as_py()
+    assert rep["errors"] == [f"{seg}/{term}: block-max tf stale (block 0)"]
 
 
 def test_unreadable_segment_detected(spark, built_root, tmp_path):

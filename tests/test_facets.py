@@ -233,7 +233,7 @@ def test_nested_and_pivot_merge_invariant(spark, sf_dir, tmp_path_factory):
     build_index(spark, t, root, num_parts=4, lineage_source=sf_dir)
     mroot = root + "_m"
     shutil.copytree(root, mroot)
-    merge_segments(spark, mroot, merge_factor=2, salt_span=1)
+    merge_segments(spark, mroot, merge_factor=2)
     s, sm = IndexSearcher(spark, root), IndexSearcher(spark, mroot)
 
     spec = BooleanSpec(must=("data",))

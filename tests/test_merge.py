@@ -1,19 +1,24 @@
-"""Segment merge tests (SURVEY §5 / M3): the salted term-keyed merge
+"""Segment merge tests (SURVEY §5 / M3): the per-destination merge
 must preserve every answer — merged index ≡ original index on the BM25
 battery and facets (SegmentMerger correctness re-expressed), global
-stats preserved, postings structurally valid (CheckIndex analog)."""
+stats preserved, postings structurally valid (CheckIndex analog) — and
+run as one shuffle-free stage whatever the vocabulary."""
 
 from __future__ import annotations
 
+import os
 import shutil
+import uuid
 
 import numpy as np
+import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from lucene_solr_spark.index import codec
-from lucene_solr_spark.index.build import build_index
+from lucene_solr_spark.index.build import FACET_FIELDS, build_index
 from lucene_solr_spark.index.manifest import Manifest
-from lucene_solr_spark.index.merge import merge_segments
+from lucene_solr_spark.index.merge import merge_segments, plan_merge
 from lucene_solr_spark.query.executor import IndexSearcher
 from lucene_solr_spark.query.model import BooleanSpec
 from lucene_solr_spark.registry import BM25_SPECS
@@ -28,8 +33,173 @@ def pair(spark, sf_dir, tmp_path_factory):
     build_index(spark, t, r1, num_parts=8, lineage_source=sf_dir)
     r2 = r1 + "_merged"
     shutil.copytree(r1, r2)
-    merge_segments(spark, r2, merge_factor=4, salt_span=2)
+    merge_segments(spark, r2, merge_factor=4)
     return IndexSearcher(spark, r1), IndexSearcher(spark, r2)
+
+
+#: distinct terms of the wide corpus (the per-term merge cost driver)
+WIDE_VOCAB = 24_000
+
+
+def _wide_corpus(n_turns: int = 600) -> pd.DataFrame:
+    """Every one of WIDE_VOCAB words once plus a Zipf head that lands
+    in every segment, so most terms have one run and head terms have
+    one run per source."""
+    rng = np.random.default_rng(9)
+    head = rng.zipf(1.3, 6_000) % 50
+    ids = np.concatenate([rng.permutation(WIDE_VOCAB), head])
+    rng.shuffle(ids)
+    toks = np.array([f"v{i}" for i in range(WIDE_VOCAB)], object)[ids]
+    text = [" ".join(c) for c in np.array_split(toks, n_turns)]
+    return pd.DataFrame({
+        "conv_id": [f"c{c:04d}" for c in np.arange(n_turns) // 6],
+        "turn_idx": (np.arange(n_turns) % 6).astype(np.int32),
+        "role": np.array(["user", "assistant", "tool"], object)[
+            np.arange(n_turns) % 3],
+        "text": text,
+        "tool": np.where(np.arange(n_turns) % 4 == 0, "grep", None),
+        "ts": pd.Timestamp("2024-01-01")
+        + pd.to_timedelta(np.arange(n_turns) * 60, unit="s"),
+    })
+
+
+@pytest.fixture(scope="module")
+def wide(spark, tmp_path_factory):
+    """(source root, merged root, #Spark jobs, stage ids of the merge)
+    for a 4-segment, >=20k-term index merged 2 -> 1 per tier."""
+    src = str(tmp_path_factory.mktemp("wide_src"))
+    t = spark.createDataFrame(
+        _wide_corpus(),
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp",
+    )
+    build_index(spark, t, src, num_parts=4)
+    dst = src + "_merged"
+    shutil.copytree(src, dst)
+    sc = spark.sparkContext
+    gid = f"merge-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "merge")
+    try:
+        merge_segments(spark, dst, merge_factor=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(gid)
+    stages = [s for j in jobs for s in st.getJobInfo(j).stageIds]
+    return src, dst, len(jobs), stages
+
+
+def _shuffle_bytes(spark, stage_id: int) -> int:
+    store = spark.sparkContext._jsc.sc().statusStore()
+    data = store.stageAttempt(
+        stage_id, 0, False, getattr(store, "stageAttempt$default$4")(),
+        False, getattr(store, "stageAttempt$default$6")(),
+    )._1()
+    return int(data.shuffleReadBytes() + data.shuffleWriteBytes())
+
+
+def test_wide_merge_is_one_shuffle_free_stage(spark, wide):
+    """The merge is one job of one stage with one task per destination
+    segment, and moves no shuffle bytes, at a >=20k-term vocabulary
+    (the term-keyed shuffles it replaced ran one Python group per
+    term)."""
+    src, dst, n_jobs, stages = wide
+    terms = set()
+    for d in Manifest.load(src).seg_dirs():
+        terms.update(pq.read_table(f"{d}/postings.parquet", columns=["term"])
+                     ["term"].to_pylist())
+    assert len(terms) >= 20_000
+    n_dst = len(Manifest.load(dst).segments)
+    assert n_dst == 2
+    assert n_jobs == 1 and len(stages) == 1
+    assert spark.sparkContext.statusTracker().getStageInfo(stages[0]).numTasks == n_dst
+    assert _shuffle_bytes(spark, stages[0]) == 0
+
+
+def _decode(post: pd.DataFrame) -> dict:
+    """term -> (docs, tfs, positions), every block decoded."""
+    out = {}
+    for row in post.itertuples(index=False):
+        fd = np.asarray(row.first_docs, np.int64)
+        docs, tfs = codec.unpack_postings(
+            fd, np.asarray(row.doc_offs, np.int64),
+            np.asarray(row.tf_offs, np.int64), row.doc_bytes, row.tf_bytes,
+        )
+        pos = codec.unpack_positions(
+            np.asarray(row.pos_offs, np.int64), row.pos_bytes, tfs,
+            np.arange(len(fd)), len(fd),
+        )
+        out[row.term] = (docs, tfs, pos)
+    return out
+
+
+def _tiers(src: str, dst: str, merge_factor: int):
+    """(merged segment dir, its source dirs in src_pos order) pairs."""
+    seg = os.path.join(src, "segments")
+    by_part = {s["part"]: n for n, s in Manifest.load(dst).segments.items()}
+    return [
+        (os.path.join(dst, "segments", by_part[i]),
+         [os.path.join(seg, n) for n in tier])
+        for i, tier in enumerate(plan_merge(Manifest.load(src), merge_factor))
+    ]
+
+
+@pytest.mark.parametrize("which", ["sf", "wide"])
+def test_merged_postings_are_rebased_source_runs(pair, wide, which):
+    """Every merged term decodes (docs, tfs, positions) to the
+    concatenation of its source runs in source order, each source's
+    docs shifted by its doc_base (the running doc count before it)."""
+    if which == "sf":
+        src, dst, mf = pair[0].index_root, pair[1].index_root, 4
+    else:
+        src, dst, mf = wide[0], wide[1], 2
+    for merged_dir, src_dirs in _tiers(src, dst, mf):
+        want: dict = {}
+        base = 0
+        for d in src_dirs:
+            for term, (docs, tfs, pos) in _decode(
+                    pd.read_parquet(f"{d}/postings.parquet")).items():
+                want.setdefault(term, []).append((docs + base, tfs, pos))
+            base += len(pd.read_parquet(f"{d}/docmap.parquet", columns=["doc_ord"]))
+        got = _decode(pd.read_parquet(f"{merged_dir}/postings.parquet"))
+        assert sorted(got) == sorted(want)
+        for term, runs in want.items():
+            docs, tfs, pos = got[term]
+            assert np.array_equal(docs, np.concatenate([r[0] for r in runs])), term
+            assert np.array_equal(tfs, np.concatenate([r[1] for r in runs])), term
+            assert np.array_equal(pos, np.concatenate([r[2] for r in runs])), term
+
+
+@pytest.mark.parametrize("which", ["sf", "wide"])
+def test_merged_docmap_and_dicts(pair, wide, which):
+    """The merged docmap is the source docmaps concatenated in source
+    order with doc_ord = row position, its ordinals index the merged
+    dictionaries, and each field's dictionary is the sorted distinct
+    non-null values of its docs."""
+    if which == "sf":
+        src, dst, mf = pair[0].index_root, pair[1].index_root, 4
+    else:
+        src, dst, mf = wide[0], wide[1], 2
+    cols = ["conv_id", "turn_idx", "doc_len", "ts", *FACET_FIELDS]
+    for merged_dir, src_dirs in _tiers(src, dst, mf):
+        want = pd.concat(
+            [pd.read_parquet(f"{d}/docmap.parquet").sort_values("doc_ord")[cols]
+             for d in src_dirs],
+            ignore_index=True,
+        )
+        dm = pd.read_parquet(f"{merged_dir}/docmap.parquet")
+        assert list(dm["doc_ord"]) == list(range(len(want)))
+        pd.testing.assert_frame_equal(dm[cols], want)
+        dicts = pd.read_parquet(f"{merged_dir}/dicts.parquet")
+        for fld in FACET_FIELDS:
+            d = dicts[dicts["field"] == fld].sort_values("term_ord")
+            uniq = sorted(want[fld].dropna().unique())
+            assert list(d["term"]) == uniq, fld
+            assert list(d["term_ord"]) == list(range(len(uniq))), fld
+            ords = dm[f"{fld}_ord"].to_numpy()
+            named = np.where(ords >= 0, np.asarray(uniq + [None], object)[ords], None)
+            assert list(named) == list(want[fld].where(want[fld].notna(), None)), fld
 
 
 def test_stats_preserved(pair):

@@ -31,7 +31,7 @@ def env(spark, sf_dir, tmp_path_factory):
     # a MERGED copy: results must be segment-layout-invariant
     mroot = root + "_m"
     shutil.copytree(root, mroot)
-    merge_segments(spark, mroot, merge_factor=2, salt_span=1)
+    merge_segments(spark, mroot, merge_factor=2)
     s = IndexSearcher(spark, root)
     sm = IndexSearcher(spark, mroot)
     # real vocabulary stratified by df (head / mid / tail)

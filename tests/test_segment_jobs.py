@@ -143,6 +143,29 @@ def test_cached_composed_select_is_one_job(spark, searcher):
     assert second[0] == searcher.search(spec, round_to=4).offset(10).collect()
 
 
+@pytest.mark.parametrize("sort", [None, "turn_idx asc"], ids=["score", "field"])
+def test_cursor_page_collect_runs_no_job(spark, searcher, sort):
+    """A cursorMark page is materialized once inside ``select`` (to
+    serialize nextCursorMark); the frame it returns is driver-side, so
+    collecting it runs no Spark job — neither for a full page nor for
+    the exhausted cursor's empty one."""
+    from lucene_solr_spark.handler import select
+
+    params = {"q": "w5", "rows": 5, "cursorMark": "*"}
+    if sort:
+        params["sort"] = sort
+    out = select(searcher, params)
+    page, n = _jobs(spark, out["response"].collect)
+    assert n == 0 and len(page) == 5
+    rows = [tuple(r) for r in page]
+    assert rows == [tuple(r) for r in out["response"].collect()]
+    end = select(searcher, dict(params, cursorMark=out["nextCursorMark"],
+                                rows=N_TURNS))
+    end = select(searcher, dict(params, cursorMark=end["nextCursorMark"]))
+    empty, n = _jobs(spark, end["response"].collect)
+    assert n == 0 and empty == []
+
+
 def test_field_cardinality_runs_no_job(spark, searcher):
     fresh = IndexSearcher(spark, searcher.index_root)
     card, n = _jobs(spark, lambda: fresh.field_cardinality("role"))

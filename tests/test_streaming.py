@@ -85,7 +85,7 @@ def test_compaction_after_streaming(spark, streamed):
     out_root, _ = streamed
     before = IndexSearcher(spark, out_root)
     answers = [before.search(s).toPandas() for s in SPECS]
-    merge_segments(spark, out_root, merge_factor=8, salt_span=2)
+    merge_segments(spark, out_root, merge_factor=8)
     after = IndexSearcher(spark, out_root)
     assert len(after.manifest.segments) < len(before.manifest.segments)
     for spec, want in zip(SPECS, answers):

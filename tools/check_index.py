@@ -123,14 +123,22 @@ def check_segment(seg_dir: str, seg_meta: dict, deep: bool,
             errs.append(f"{name}/{r.term}: doc ord out of [0, n_docs)")
         if int(tfs.sum()) != int(r.cf):
             errs.append(f"{name}/{r.term}: sum(tf) != cf")
+        # a block's tfs start after the varints that end before its
+        # tf_offs entry: blocks hold <= BLOCK_SIZE docs, and a merged
+        # list keeps each source run's short last block
         mts = np.array(r.max_tfs)
-        for b in range(len(mts)):
-            lo = b * codec.BLOCK_SIZE
-            hi = min(len(tfs), (b + 1) * codec.BLOCK_SIZE)
-            if hi > lo and mts[b] != tfs[lo:hi].max():
+        tbuf = np.frombuffer(r.tf_bytes, np.uint8)
+        n_before = np.append(0, np.cumsum((tbuf & 0x80) == 0))
+        starts = n_before[np.array(r.tf_offs, np.int64)]
+        sizes = np.diff(np.append(starts, len(tfs)))
+        if len(starts) != len(mts) or not (
+                (sizes >= 1) & (sizes <= codec.BLOCK_SIZE)).all():
+            errs.append(f"{name}/{r.term}: block layout broken")
+        elif len(mts):
+            stale = np.flatnonzero(np.maximum.reduceat(tfs, starts) != mts)
+            if len(stale):
                 errs.append(f"{name}/{r.term}: block-max tf stale "
-                            f"(block {b})")
-                break
+                            f"(block {stale[0]})")
     return errs
 
 
