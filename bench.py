@@ -10,7 +10,8 @@ Measures the two BASELINE.json metrics on this sandbox:
    (``build_index``: applyInPandas inversion → varint posting pack →
    manifest commit). The ``build`` block also carries ``merge_sec``:
    ``merge_segments`` at its default ``merge_factor`` over a copy of
-   the built index (the build:merge ratio).
+   the built index (the build:merge ratio), and ``split_sec``:
+   ``split_segment`` of the largest segment into 2, on another copy.
 2. **BM25 top-10 query latency** — the golden boolean query set
    (FIXTURES.md §3) executed by the distributed ``IndexSearcher``
    (bucket-pruned postings scan → cogrouped segment scorer with
@@ -48,7 +49,9 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from lucene_solr_spark.index.build import build_index_prepartitioned  # noqa: E402
+from lucene_solr_spark.index.manifest import Manifest  # noqa: E402
 from lucene_solr_spark.index.merge import merge_segments  # noqa: E402
+from lucene_solr_spark.index.split import split_segment  # noqa: E402
 from lucene_solr_spark.query.executor import IndexSearcher  # noqa: E402
 from lucene_solr_spark.registry import BM25_SPECS  # noqa: E402
 from lucene_solr_spark.session import get_spark  # noqa: E402
@@ -189,6 +192,15 @@ def run_once(cpus: int, n_turns: int, queries: bool = True,
             out["merge_sec"] = round(time.perf_counter() - t0, 3)
         finally:
             shutil.rmtree(merge_root, ignore_errors=True)
+        split_root = idx_root + "_split"
+        shutil.copytree(idx_root, split_root)
+        try:
+            segs = Manifest.load(split_root).segments
+            t0 = time.perf_counter()
+            split_segment(spark, split_root, max(segs, key=lambda n: segs[n]["n_docs"]), 2)
+            out["split_sec"] = round(time.perf_counter() - t0, 3)
+        finally:
+            shutil.rmtree(split_root, ignore_errors=True)
 
         if queries:
             from lucene_solr_spark.query.model import BooleanSpec
@@ -531,6 +543,7 @@ def main() -> None:
             "turns_per_sec": r["turns_per_sec"],
             "cpus": r["cpus"],
             "merge_sec": r["merge_sec"],
+            "split_sec": r["split_sec"],
         },
     }))
 

@@ -6,8 +6,8 @@ SOLR-5894 sparse faceting) in idiomatic Spark:
 
 - inverted-index segments built in ``mapInPandas`` (vectorized numpy
   delta+varint posting codec, block-max metadata),
-- tiered segment merge, one shuffle-free task per destination
-  segment, with a metadata-only vectorized posting concat,
+- tiered segment merge and split, one shuffle-free task per output
+  segment, through one vectorized rewriter that keeps the index sort,
 - BM25 top-k with block-max-WAND-style pruning,
 - SOLR-5894-style sparse high-cardinality faceting with two-phase
   distributed merge-and-refine,

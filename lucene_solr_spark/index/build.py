@@ -24,7 +24,7 @@ The Spark analog of Lucene's write path
 
 Everything inside the task is numpy/pandas-vectorized: tokenize →
 explode → factorize → lexsort → run-length tf → one-shot varint pack
-(``codec.pack_all_postings``). No per-row Python.
+(:func:`postings_table`). No per-row Python.
 """
 
 from __future__ import annotations
@@ -129,7 +129,6 @@ def build_segment_pdf(pdf: pd.DataFrame, seg_id: int = 0, analyzer=None) -> dict
     (the Analyzer invariant — guarded by IndexSearcher).
     """
     pdf = pdf.sort_values(["conv_id", "turn_idx"], kind="mergesort").reset_index(drop=True)
-    n_docs = len(pdf)
     toks = (analyzer or tokenize_pandas)(pdf["text"])
     doc_len = toks.str.len().to_numpy(np.int64)
 
@@ -151,38 +150,53 @@ def build_segment_pdf(pdf: pd.DataFrame, seg_id: int = 0, analyzer=None) -> dict
     t_s, d_s, p_s = term_codes[srt], doc_idx[srt], positions[srt]
 
     # run-length over (term, doc) = postings with tf
-    if n_tokens:
-        new_run = np.empty(n_tokens, bool)
-        new_run[0] = True
-        new_run[1:] = (t_s[1:] != t_s[:-1]) | (d_s[1:] != d_s[:-1])
-        run_starts = np.nonzero(new_run)[0]
-        tf = np.diff(np.append(run_starts, n_tokens)).astype(np.int64)
-        p_term = t_s[run_starts]
-        p_doc = d_s[run_starts]
-        term_change = np.empty(len(run_starts), bool)
-        term_change[0] = True
-        term_change[1:] = p_term[1:] != p_term[:-1]
-        term_starts = np.append(np.nonzero(term_change)[0], len(run_starts)).astype(np.int64)
-        packed = codec.pack_all_postings_flat(
-            term_starts, p_doc, tf, doc_len[p_doc], positions=p_s
-        )
-        df_per_term = np.diff(term_starts)
-        cf_per_term = np.add.reduceat(tf, term_starts[:-1])
-    else:
-        term_starts = np.array([0], np.int64)
-        packed = codec.pack_all_postings_flat(term_starts[:0], *([np.empty(0, np.int64)] * 3))
-        df_per_term = np.empty(0, np.int64)
-        cf_per_term = np.empty(0, np.int64)
+    new_run = np.ones(n_tokens, bool)
+    new_run[1:] = (t_s[1:] != t_s[:-1]) | (d_s[1:] != d_s[:-1])
+    run_starts = np.flatnonzero(new_run)
+    tf = np.diff(np.append(run_starts, n_tokens)).astype(np.int64)
+    p_term = t_s[run_starts]
+    term_change = np.ones(len(run_starts), bool)
+    term_change[1:] = p_term[1:] != p_term[:-1]
+    term_starts = np.append(np.flatnonzero(term_change), len(run_starts))
+    postings = postings_table(
+        seg_id, terms_sorted, term_starts, d_s[run_starts], tf, doc_len, p_s
+    )
 
-    # Arrow columns straight from the flat codec output — the offset
-    # vectors ARE the Arrow List/Binary layouts (zero per-term Python).
-    blk_offs = packed["blk_offsets"]
+    ftok = pd.Series(
+        [t[0] if len(t) else None for t in toks], index=pdf.index, dtype=object
+    )
+    docs = pdf[["conv_id", "turn_idx", "role", "tool", "ts"]].assign(
+        doc_len=doc_len, ftok=ftok
+    )
+    return segment_tables(seg_id, postings, docs)
+
+
+def postings_table(
+    seg_id: int,
+    terms: np.ndarray,
+    term_starts: np.ndarray,
+    docs: np.ndarray,
+    tfs: np.ndarray,
+    doc_lens: np.ndarray,
+    positions: np.ndarray,
+) -> pa.Table:
+    """Pack one segment's postings into its ``postings`` table — the
+    one postings constructor of build, merge and split.
+
+    ``terms`` are sorted; ``term_starts`` (T+1) cut the term-major
+    ``docs``/``tfs`` (one per posting, docs ascending within a term);
+    ``doc_lens`` is per doc (indexed by ``docs``); ``positions`` are
+    per token in posting order. Arrow columns come straight from the
+    flat codec output: its offset vectors ARE the Arrow List/Binary
+    layouts (no per-term Python)."""
+    term_starts = np.asarray(term_starts, np.int64)
+    packed = codec.pack_all_postings_flat(
+        term_starts, docs, tfs, np.asarray(doc_lens, np.int64)[docs], positions
+    )
+    blk_offs = pa.array(packed["blk_offsets"].astype(np.int32))
 
     def _la(flat: np.ndarray) -> pa.Array:
-        return pa.ListArray.from_arrays(
-            pa.array(blk_offs.astype(np.int32)),
-            pa.array(np.asarray(flat).astype(np.int32)),
-        )
+        return pa.ListArray.from_arrays(blk_offs, pa.array(np.asarray(flat).astype(np.int32)))
 
     def _ba(term_offs: np.ndarray, data: bytes) -> pa.Array:
         return pa.Array.from_buffers(
@@ -191,13 +205,14 @@ def build_segment_pdf(pdf: pd.DataFrame, seg_id: int = 0, analyzer=None) -> dict
             [None, pa.py_buffer(term_offs.astype(np.int32).tobytes()), pa.py_buffer(data)],
         )
 
-    postings = pa.table(
+    cf = np.add.reduceat(tfs, term_starts[:-1]) if len(tfs) else np.empty(0)
+    return pa.table(
         {
-            "seg_id": pa.array(np.full(len(terms_sorted), seg_id, np.int32)),
-            "bucket": pa.array(_bucket_array(terms_sorted), pa.int32()),
-            "term": pa.array(terms_sorted.astype(str) if len(terms_sorted) else [], pa.string()),
-            "df": pa.array(df_per_term.astype(np.int32)),
-            "cf": pa.array(cf_per_term.astype(np.int64)),
+            "seg_id": pa.array(np.full(len(terms), seg_id, np.int32)),
+            "bucket": pa.array(_bucket_array(terms), pa.int32()),
+            "term": pa.array(np.asarray(terms, object).astype(str) if len(terms) else [], pa.string()),
+            "df": pa.array(np.diff(term_starts).astype(np.int32)),
+            "cf": pa.array(cf.astype(np.int64)),
             "first_docs": _la(packed["first_docs"]),
             "doc_offs": _la(packed["doc_offs"]),
             "tf_offs": _la(packed["tf_offs"]),
@@ -210,22 +225,32 @@ def build_segment_pdf(pdf: pd.DataFrame, seg_id: int = 0, analyzer=None) -> dict
         }
     )
 
-    ftok = pd.Series(
-        [t[0] if len(t) else None for t in toks], index=pdf.index, dtype=object
-    )
-    docs = pdf[["conv_id", "turn_idx", "role", "tool", "ts"]].assign(
-        doc_len=doc_len, ftok=ftok
-    )
-    return segment_tables(seg_id, postings, docs)
+
+def unsorted_row(conv_ids, turn_idx) -> int:
+    """First row (≥1) whose ``(conv_id, turn_idx)`` sorts before the
+    row above it, or -1 when the rows are in index-sort order."""
+    c = np.asarray(conv_ids, object)
+    t = np.asarray(turn_idx, np.int64)
+    ok = (c[1:] > c[:-1]) | ((c[1:] == c[:-1]) & (t[1:] >= t[:-1]))
+    bad = np.flatnonzero(~ok)
+    return int(bad[0]) + 1 if len(bad) else -1
 
 
 def segment_tables(seg_id: int, postings: pa.Table, docs: pd.DataFrame) -> dict:
     """Finish one segment from its postings and its per-doc columns
-    (``DOC_COLUMNS``, in index order) — the table assembly that build,
-    merge and split share. ``doc_ord`` is the row position; facet
-    ordinals and dictionaries are re-derived per segment (Lucene's
-    SORTED doc values: ords are segment-local). Returns the tables
-    :func:`write_segment` takes plus the manifest metrics."""
+    (``DOC_COLUMNS``) — the table assembly that build, merge and split
+    share. ``doc_ord`` is the row position, so the docs must arrive in
+    the index sort ``(conv_id, turn_idx)`` (``IndexWriterConfig#
+    setIndexSort``; ``early_topk`` streams segment heads on it) — a
+    writer that breaks it raises here. Facet ordinals and dictionaries
+    are re-derived per segment (Lucene's SORTED doc values: ords are
+    segment-local). Returns the tables :func:`write_segment` takes
+    plus the manifest metrics."""
+    row = unsorted_row(docs["conv_id"].astype(str), docs["turn_idx"])
+    if row >= 0:
+        raise ValueError(
+            f"segment {seg_id}: docs not in (conv_id, turn_idx) order at row {row}"
+        )
     n_docs = len(docs)
     ords: dict[str, np.ndarray] = {}
     dict_rows: list[pd.DataFrame] = []

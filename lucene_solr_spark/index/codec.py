@@ -230,44 +230,6 @@ def pack_all_postings_flat(
     return out
 
 
-def pack_all_postings(
-    term_starts: np.ndarray,
-    doc_ords: np.ndarray,
-    tfs: np.ndarray,
-    doc_lens: np.ndarray,
-    positions: np.ndarray | None = None,
-) -> dict:
-    """Per-term-list view of :func:`pack_all_postings_flat` (compat /
-    test API): first_docs, doc_offs, tf_offs, max_tfs, min_dls as
-    lists of numpy arrays per term; doc_bytes/tf_bytes as bytes per
-    term. The hot build path uses the flat form directly."""
-    f = pack_all_postings_flat(term_starts, doc_ords, tfs, doc_lens, positions)
-    T = f["n_terms"]
-    cuts = f["blk_offsets"][1:-1]
-    out = {
-        "first_docs": list(np.split(f["first_docs"], cuts)),
-        "doc_offs": list(np.split(f["doc_offs"], cuts)),
-        "tf_offs": list(np.split(f["tf_offs"], cuts)),
-        "max_tfs": list(np.split(f["max_tfs"], cuts)),
-        "min_dls": list(np.split(f["min_dls"], cuts)),
-        "doc_bytes": [
-            f["doc_data"][f["term_d_offsets"][i] : f["term_d_offsets"][i + 1]]
-            for i in range(T)
-        ],
-        "tf_bytes": [
-            f["tf_data"][f["term_t_offsets"][i] : f["term_t_offsets"][i + 1]]
-            for i in range(T)
-        ],
-    }
-    if positions is not None:
-        out["pos_offs"] = list(np.split(f["pos_offs"], cuts))
-        out["pos_bytes"] = [
-            f["pos_data"][f["term_p_offsets"][i] : f["term_p_offsets"][i + 1]]
-            for i in range(T)
-        ]
-    return out
-
-
 def unpack_positions(
     pos_offs: np.ndarray,
     pos_bytes: bytes,
@@ -321,3 +283,65 @@ def unpack_postings(
         outs_d.append(np.cumsum(deltas))
         outs_t.append(unpack_varint(tbuf[tf_offs[blk] : tf_ends[blk]]))
     return np.concatenate(outs_d), np.concatenate(outs_t)
+
+
+def _binary_column(col) -> tuple[np.ndarray, np.ndarray]:
+    """(row byte offsets (n+1, from 0), concatenated bytes) of a whole
+    binary column."""
+    arr = col.combine_chunks()
+    n = len(arr)
+    _validity, offs_buf, data_buf = arr.buffers()
+    offs = np.frombuffer(offs_buf, np.int32)[arr.offset : arr.offset + n + 1].astype(np.int64)
+    if data_buf is None or n == 0:
+        return np.zeros(n + 1, np.int64), np.empty(0, np.uint8)
+    data = np.frombuffer(data_buf, np.uint8)[offs[0] : offs[-1]]
+    return offs - offs[0], data
+
+
+def _list_column(col) -> tuple[np.ndarray, np.ndarray]:
+    """(row offsets (n+1, from 0), flat int64 values) of a whole list
+    column."""
+    arr = col.combine_chunks()
+    offs = arr.offsets.to_numpy().astype(np.int64)
+    return offs - offs[0], arr.flatten().to_numpy().astype(np.int64)
+
+
+def unpack_segment(postings) -> dict:
+    """Decode a whole postings table (pyarrow) in one pass — the
+    inverse of :func:`pack_all_postings_flat`, for writers that rewrite
+    a segment (merge, split).
+
+    Each byte column is one varint stream, so it is decoded with ONE
+    :func:`unpack_varint` call. Block starts come from ``doc_offs``
+    (term-relative byte offsets → value indices), not from
+    ``BLOCK_SIZE``, so short blocks decode too; each block's first
+    delta is replaced by its ``first_docs`` entry and the doc deltas
+    are summed per block. Positions restart at every posting.
+
+    Returns term_starts (T+1, into the posting arrays), docs and tfs
+    (one per posting, term-major) and positions (one per token, in
+    posting order)."""
+    df = postings["df"].to_numpy().astype(np.int64)
+    term_starts = np.zeros(len(df) + 1, np.int64)
+    np.cumsum(df, out=term_starts[1:])
+
+    term_d, doc_data = _binary_column(postings["doc_bytes"])
+    deltas = unpack_varint(doc_data)
+    blk_rows, blk_offs = _list_column(postings["doc_offs"])
+    blk_term = np.repeat(np.arange(len(df)), np.diff(blk_rows))
+    ends_before = np.zeros(len(doc_data) + 1, np.int64)
+    np.cumsum((doc_data & 0x80) == 0, out=ends_before[1:])
+    blk_start = ends_before[term_d[blk_term] + blk_offs]
+    deltas[blk_start] = _list_column(postings["first_docs"])[1]
+    starts_mask = np.zeros(len(deltas), bool)
+    starts_mask[blk_start] = True
+    docs = segmented_cumsum(deltas, starts_mask)
+
+    tfs = unpack_varint(_binary_column(postings["tf_bytes"])[1])
+    pdeltas = unpack_varint(_binary_column(postings["pos_bytes"])[1])
+    tok_mask = np.zeros(len(pdeltas), bool)
+    tok_mask[np.cumsum(tfs) - tfs] = True
+    positions = segmented_cumsum(pdeltas, tok_mask)
+    if not len(docs) == len(tfs) == term_starts[-1] or len(positions) != tfs.sum():
+        raise ValueError("postings table decodes to inconsistent doc, tf and position counts")
+    return {"term_starts": term_starts, "docs": docs, "tfs": tfs, "positions": positions}

@@ -5,20 +5,17 @@ Merge policy: the committed segments are ordered and grouped into
 ``merge_factor``-sized tiers; each tier becomes ONE destination segment
 (Lucene never merges everything into a single segment either — that is
 what keeps per-term merged posting lists bounded at 10^12-doc scale).
-Within a tier, destination doc ordinals are source-major:
-``dst_ord = doc_base(src) + src_ord`` where ``doc_base`` is the running
-sum of source doc counts — exactly Lucene's ``MergeState.DocMap``.
 
-The codec makes the posting merge **metadata-only**: block payload
-bytes delta-encode against the block's own ``first_docs`` entry
-(``codec.pack_all_postings``), so remapping a whole source run is
-``first_docs += doc_base`` — no varint re-encode, no decode. What
-remains is concatenating per-source runs in source order and rebasing
-the per-block byte offsets, which :func:`merge_tier` does with array
-operations over the whole tier: the sources' postings tables are
-concatenated and sorted by ``(term, src_pos)``, after which each
-term's list and binary values already sit in merged order, so a merged
-row is just a new offsets entry at a term boundary.
+:func:`merge_tier` is the one segment rewriter — merge and split
+(``split.py``, a one-source tier that keeps one child's docs) both run
+through it: decode every source's postings whole
+(``codec.unpack_segment``), order the tier's docs by the index sort
+``(conv_id, turn_idx)`` (stable, so equal keys stay source-major) —
+Lucene's ``MultiSorter`` on an index-sorted merge — remap each posting
+to its new doc id, re-sort postings by ``(term, new_doc)`` and repack
+through the build's packer (``build.postings_table``). A merged
+segment is therefore the segment the build would write from the same
+turns, index-sorted like every other segment.
 
 Physical: ``spark.range(n_dst).mapInPandas`` — one stage, no exchange,
 one task per destination segment (the ``each_segment`` shape). One
@@ -48,12 +45,11 @@ from lucene_solr_spark.index.build import (
     METRICS_SCHEMA,
     flush_segment,
     manifest_entries,
+    postings_table,
     segment_tables,
 )
+from lucene_solr_spark.index.codec import unpack_segment
 from lucene_solr_spark.index.manifest import Manifest
-
-#: per-block byte offsets and the binary column they point into
-_BYTE_OFFSETS = {"doc_offs": "doc_bytes", "tf_offs": "tf_bytes", "pos_offs": "pos_bytes"}
 
 
 def plan_merge(manifest: Manifest, merge_factor: int) -> list[list[str]]:
@@ -65,66 +61,68 @@ def plan_merge(manifest: Manifest, merge_factor: int) -> list[list[str]]:
     return [names[i : i + merge_factor] for i in range(0, len(names), merge_factor)]
 
 
-def _offsets(arr: pa.Array) -> np.ndarray:
-    """Row offsets (n+1) of a list or binary array."""
-    return np.frombuffer(arr.buffers()[1], np.int32)[arr.offset : arr.offset + len(arr) + 1]
-
-
-def merge_tier(src_dirs: list[str], seg_id: int) -> dict:
-    """Merge one tier's source segments (in ``src_pos`` order) into the
-    tables of one destination segment — pure pyarrow/numpy, no Spark.
-
-    After a sort by ``(term, src_pos)`` each term's rows are contiguous
-    and source-ordered, so every merged list/binary column keeps the
-    sorted values buffer and takes new offsets at the term starts;
-    ``first_docs`` gain their row's ``doc_base`` and the block byte
-    offsets gain the bytes of the same term's earlier runs."""
-    posts, docs, bases = [], [], [0]
-    for pos, d in enumerate(src_dirs):
-        p = pq.read_table(f"{d}/postings.parquet")
-        posts.append(p.append_column("src_pos", pa.array(np.full(p.num_rows, pos, np.int32))))
+def merge_tier(src_dirs: list[str], seg_id: int, keep=None) -> dict:
+    """Rewrite one tier's source segments (in ``src_pos`` order) into
+    the tables of one destination segment — pure pyarrow/numpy, no
+    Spark. ``keep(docs) -> bool mask`` over the tier's docs (source
+    order) drops the docs it rejects, with their postings."""
+    # 1: decode each source whole; its docs shift by its doc_base
+    terms, docs, dec = [], [], []
+    base = 0
+    for d in src_dirs:
+        p = pq.read_table(f"{d}/postings.parquet", columns=[
+            "term", "df", "first_docs", "doc_offs", "doc_bytes", "tf_bytes", "pos_bytes"])
+        u = unpack_segment(p)
+        u["docs"] += base
+        terms.append(p["term"].combine_chunks())
+        dec.append(u)
         dm = pq.read_table(f"{d}/docmap.parquet", columns=["doc_ord", *DOC_COLUMNS])
         docs.append(dm.sort_by("doc_ord").drop_columns(["doc_ord"]))
-        bases.append(bases[-1] + dm.num_rows)
+        base += dm.num_rows
 
-    t = pa.concat_tables(posts)
-    t = t.take(pc.sort_indices(t, [("term", "ascending"), ("src_pos", "ascending")]))
-    col = {name: t[name].combine_chunks() for name in t.column_names}
-    n = t.num_rows
-    new_term = np.ones(n, bool)
-    new_term[1:] = pc.not_equal(col["term"][1:], col["term"][:-1]).to_numpy(
-        zero_copy_only=False
+    # 2: the tier's docs in index-sort order, minus rejected ones
+    docs = pa.concat_tables(docs).to_pandas()
+    order = docs.sort_values(["conv_id", "turn_idx"], kind="mergesort").index.to_numpy()
+    if keep is not None:
+        order = order[np.asarray(keep(docs), bool)[order]]
+    new_doc = np.full(len(docs), -1, np.int64)
+    new_doc[order] = np.arange(len(order))
+
+    # 3: every posting's tier-wide term id and new doc id
+    all_terms = pa.concat_arrays(terms)
+    uniq = pc.unique(all_terms)
+    uniq = uniq.take(pc.array_sort_indices(uniq))
+    term_id = np.repeat(
+        pc.index_in(all_terms, uniq).to_numpy(),
+        np.concatenate([np.diff(u["term_starts"]) for u in dec]),
     )
-    starts = np.flatnonzero(new_term)
-    bounds = np.append(starts, n)
-    row_term = np.cumsum(new_term) - 1
+    post_doc = new_doc[np.concatenate([u["docs"] for u in dec])]
+    tfs = np.concatenate([u["tfs"] for u in dec])
+    positions = np.concatenate([u["positions"] for u in dec])
+    live = post_doc >= 0
 
-    add = {"first_docs": np.asarray(bases)[col["src_pos"].to_numpy()]}
-    merged = {
-        "seg_id": pa.array(np.full(len(starts), seg_id, np.int32)),
-        "bucket": col["bucket"].take(starts),
-        "term": col["term"].take(starts),
-        "df": pa.array(np.add.reduceat(col["df"].to_numpy(), starts).astype(np.int32)),
-        "cf": pa.array(np.add.reduceat(col["cf"].to_numpy(), starts).astype(np.int64)),
-    }
-    for off_col, bin_col in _BYTE_OFFSETS.items():
-        offs = _offsets(col[bin_col])
-        merged[bin_col] = pa.Array.from_buffers(
-            pa.binary(), len(starts),
-            [None, pa.py_buffer(offs[bounds].tobytes()), col[bin_col].buffers()[2]],
-        )
-        before = offs[:-1].astype(np.int64)
-        add[off_col] = before - before[starts][row_term]
-    for name in ("first_docs", "doc_offs", "tf_offs", "pos_offs", "max_tfs", "min_dls"):
-        offs = _offsets(col[name])
-        values = pc.list_flatten(col[name]).to_numpy()
-        if name in add:
-            values = values + np.repeat(add[name], np.diff(offs))
-        merged[name] = pa.ListArray.from_arrays(
-            pa.array(offs[bounds] - offs[0]), pa.array(values.astype(np.int32))
-        )
-    postings = pa.table({name: merged[name] for name in t.column_names[:-1]})
-    return segment_tables(seg_id, postings, pa.concat_tables(docs).to_pandas())
+    # 4: postings by (term, new doc); positions gathered along
+    srt = np.flatnonzero(live)[np.lexsort((post_doc[live], term_id[live]))]
+    tok_start = np.cumsum(tfs) - tfs
+    tf_s = tfs[srt]
+    out_start = np.cumsum(tf_s) - tf_s
+    tok = np.repeat(tok_start[srt] - out_start, tf_s) + np.arange(int(tf_s.sum()))
+    counts = np.bincount(term_id[srt], minlength=len(uniq))
+    present = np.flatnonzero(counts)
+    term_starts = np.concatenate([[0], np.cumsum(counts[present])])
+
+    # 5: repack through the build's writer
+    kept = docs.iloc[order].reset_index(drop=True)
+    postings = postings_table(
+        seg_id,
+        uniq.take(pa.array(present)).to_numpy(zero_copy_only=False),
+        term_starts,
+        post_doc[srt],
+        tf_s,
+        kept["doc_len"].to_numpy(np.int64),
+        positions[tok],
+    )
+    return segment_tables(seg_id, postings, kept)
 
 
 def merge_segments(

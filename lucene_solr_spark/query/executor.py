@@ -584,6 +584,9 @@ class IndexSearcher:
         self._dicts_df = self.spark.read.parquet(*self._dict_files)
         #: term → global df cache (SolrIndexSearcher filterCache spirit)
         self._df_cache: dict[str, int] = {}
+        #: (kind, pattern, max_expansions) → rewrite's expanded terms;
+        #: snapshot-stable like the df cache
+        self._expansions: dict[tuple, list[str]] = {}
         #: driver-side pyarrow dataset over the postings files (global_df)
         self._postings_ds = None
         self._field_card_cache: dict[str, int] = {}
@@ -742,9 +745,8 @@ class IndexSearcher:
         """Canonical DocSet identity: the spec minus paging (k) —
         every page of a request shares one DocSet, Solr's
         queryResultCache windowing spirit. Multiterm specs key on
-        their REWRITTEN form (cache_docset rewrites before keying;
-        probes with the unrewritten original simply miss — a probe
-        must never launch a dictionary-expansion job)."""
+        their REWRITTEN form (cache_docset and docset_count rewrite
+        before keying)."""
         from dataclasses import replace as _replace
 
         return _replace(spec, k=0)
@@ -811,7 +813,11 @@ class IndexSearcher:
     def docset_count(self, spec: BooleanSpec) -> int:
         """|DocSet| — on a queryResultCache hit this sums the
         warm-time per-segment popcounts (zero Spark jobs, zero IO —
-        the numFound fast path); else one bounded count job."""
+        the numFound fast path); else one bounded count job. A
+        multiterm spec probes under its rewritten key, so a warm
+        pattern hits too."""
+        if spec.needs_rewrite:
+            spec = self.rewrite(spec)
         bc = self._docset_cached_bc(spec)
         if bc is not None:
             return bc.popcount()
@@ -2185,16 +2191,23 @@ class IndexSearcher:
         rewrite; each expanded term scores with its own idf). The
         search/docset/facet entry points call this automatically, so
         ``search(parse("data s?a*"))`` just works; a pattern matching
-        nothing contributes no clauses (Lucene: empty rewrite)."""
+        nothing contributes no clauses (Lucene: empty rewrite). Each
+        pattern's dictionary scan runs once per searcher: a searcher is
+        pinned to one snapshot, so its expansion never goes stale."""
         if not spec.needs_rewrite:
             return spec
         from dataclasses import replace
 
         extra: list[str] = []
-        for pat in spec.wildcards:
-            extra.extend(self.expand_wildcard(pat, max_expansions))
-        for pat in spec.regexps:
-            extra.extend(self.expand_regexp(pat, max_expansions))
+        for kind, pats, expand in (
+            ("wildcard", spec.wildcards, self.expand_wildcard),
+            ("regexp", spec.regexps, self.expand_regexp),
+        ):
+            for pat in pats:
+                key = (kind, pat, max_expansions)
+                if key not in self._expansions:
+                    self._expansions[key] = expand(pat, max_expansions)
+                extra.extend(self._expansions[key])
         seen = set(spec.should)
         extra = tuple(t for t in dict.fromkeys(extra) if t not in seen)
         return replace(

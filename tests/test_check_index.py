@@ -1,6 +1,7 @@
 """CheckIndex CLI tool (tools/check_index.py): a freshly built, a merged
 and a split index pass the deep check; tampered stats / unreadable
-segment files are detected; exit-code contract."""
+segment files and an unsorted docmap are detected; exit-code
+contract."""
 
 from __future__ import annotations
 
@@ -91,6 +92,26 @@ def test_stale_block_max_detected(spark, built_root, tmp_path):
     assert not rep["ok"]
     term = t["term"][0].as_py()
     assert rep["errors"] == [f"{seg}/{term}: block-max tf stale (block 0)"]
+
+
+def test_unsorted_docmap_detected(spark, built_root, tmp_path):
+    """A docmap whose rows leave the (conv_id, turn_idx) index sort is
+    reported, though doc_ord is still a 0..n-1 permutation."""
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "unsorted")
+    shutil.copytree(built_root, root)
+    seg = sorted(os.listdir(os.path.join(root, "segments")))[0]
+    path = os.path.join(root, "segments", seg, "docmap.parquet")
+    dm = pq.read_table(path)
+    swap = [1, 0, *range(2, dm.num_rows)]  # rows 0 and 1 trade keys
+    for col in ("conv_id", "turn_idx"):
+        dm = dm.set_column(dm.schema.get_field_index(col), col,
+                           dm[col].take(swap))
+    pq.write_table(dm, path)
+    rep = check_index(spark, root, deep=False)
+    assert rep["errors"] == [
+        f"{seg}: docmap not in (conv_id, turn_idx) order at doc_ord 1"]
 
 
 def test_unreadable_segment_detected(spark, built_root, tmp_path):

@@ -66,16 +66,48 @@ def test_pack_all_equals_per_term(seed):
         doc_ords[s:e] = np.sort(rng.choice(5000, e - s, replace=False))
     tfs = rng.integers(1, 20, n).astype(np.int64)
     dls = rng.integers(5, 200, n).astype(np.int64)
-    allp = codec.pack_all_postings(term_starts, doc_ords, tfs, dls)
+    allp = codec.pack_all_postings_flat(term_starts, doc_ords, tfs, dls)
+    blk = allp["blk_offsets"]
     for i in range(n_terms):
         s, e = term_starts[i], term_starts[i + 1]
+        b0, b1 = blk[i], blk[i + 1]
+        d0, d1 = allp["term_d_offsets"][i], allp["term_d_offsets"][i + 1]
+        t0, t1 = allp["term_t_offsets"][i], allp["term_t_offsets"][i + 1]
         single = codec.pack_postings(doc_ords[s:e], tfs[s:e])
-        assert np.array_equal(allp["first_docs"][i], single["first_docs"])
-        assert np.array_equal(allp["max_tfs"][i], single["max_tfs"])
-        assert allp["doc_bytes"][i] == single["doc_bytes"]
-        assert allp["tf_bytes"][i] == single["tf_bytes"]
-        assert np.array_equal(allp["doc_offs"][i], single["doc_offs"])
+        assert np.array_equal(allp["first_docs"][b0:b1], single["first_docs"])
+        assert np.array_equal(allp["max_tfs"][b0:b1], single["max_tfs"])
+        assert allp["doc_data"][d0:d1] == single["doc_bytes"]
+        assert allp["tf_data"][t0:t1] == single["tf_bytes"]
+        assert np.array_equal(allp["doc_offs"][b0:b1], single["doc_offs"])
         # min_dl invariant
         for b, blk_start in enumerate(range(0, e - s, codec.BLOCK_SIZE)):
             seg = dls[s + blk_start : min(e, s + blk_start + codec.BLOCK_SIZE)]
-            assert allp["min_dls"][i][b] == seg.min()
+            assert allp["min_dls"][b0 + b] == seg.min()
+
+
+@pytest.mark.parametrize("seed", SEEDS)
+def test_unpack_segment_repacks_to_same_table(seed):
+    """Decoding a built segment's whole postings table and packing the
+    decoded arrays again gives back the same table."""
+    import pandas as pd
+
+    from lucene_solr_spark.index.build import build_segment_pdf, postings_table
+
+    rng = np.random.default_rng(seed)
+    n = 300
+    words = np.array([f"t{i}" for i in range(400)], object)
+    lens = rng.integers(0, 60, n)
+    text = [" ".join(words[rng.zipf(1.2, k) % 400]) for k in lens]
+    seg = build_segment_pdf(pd.DataFrame({
+        "conv_id": [f"c{i // 5:03d}" for i in range(n)],
+        "turn_idx": np.arange(n) % 5, "role": "user", "text": text,
+        "tool": None, "ts": pd.Timestamp("2024-01-01"),
+    }), seg_id=3)
+    post = seg["postings"]
+    u = codec.unpack_segment(post)
+    assert u["term_starts"][-1] == seg["metrics"]["n_postings"]
+    again = postings_table(
+        3, post["term"].to_numpy(), u["term_starts"], u["docs"], u["tfs"],
+        seg["docmap"]["doc_len"].to_numpy(), u["positions"],
+    )
+    assert again.equals(post)

@@ -1,8 +1,10 @@
 """Segment merge tests (SURVEY §5 / M3): the per-destination merge
 must preserve every answer — merged index ≡ original index on the BM25
-battery and facets (SegmentMerger correctness re-expressed), global
-stats preserved, postings structurally valid (CheckIndex analog) — and
-run as one shuffle-free stage whatever the vocabulary."""
+battery, facets and early_topk (SegmentMerger correctness
+re-expressed), global stats preserved, postings structurally valid
+(CheckIndex analog), each merged segment equal to the build's segment
+over its tier's turns — and run as one shuffle-free stage whatever the
+vocabulary."""
 
 from __future__ import annotations
 
@@ -16,7 +18,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from lucene_solr_spark.index import codec
-from lucene_solr_spark.index.build import FACET_FIELDS, build_index
+from lucene_solr_spark.index.build import build_index, build_segment_pdf
 from lucene_solr_spark.index.manifest import Manifest
 from lucene_solr_spark.index.merge import merge_segments, plan_merge
 from lucene_solr_spark.query.executor import IndexSearcher
@@ -39,6 +41,8 @@ def pair(spark, sf_dir, tmp_path_factory):
 
 #: distinct terms of the wide corpus (the per-term merge cost driver)
 WIDE_VOCAB = 24_000
+WIDE_SCHEMA = ("conv_id string, turn_idx int, role string, text string,"
+               " tool string, ts timestamp")
 
 
 def _wide_corpus(n_turns: int = 600) -> pd.DataFrame:
@@ -68,26 +72,29 @@ def wide(spark, tmp_path_factory):
     """(source root, merged root, #Spark jobs, stage ids of the merge)
     for a 4-segment, >=20k-term index merged 2 -> 1 per tier."""
     src = str(tmp_path_factory.mktemp("wide_src"))
-    t = spark.createDataFrame(
-        _wide_corpus(),
-        "conv_id string, turn_idx int, role string, text string,"
-        " tool string, ts timestamp",
-    )
-    build_index(spark, t, src, num_parts=4)
+    build_index(spark, spark.createDataFrame(_wide_corpus(), WIDE_SCHEMA),
+                src, num_parts=4)
     dst = src + "_merged"
     shutil.copytree(src, dst)
+    n_jobs, stages = _jobs_and_stages(
+        spark, lambda: merge_segments(spark, dst, merge_factor=2))
+    return src, dst, n_jobs, stages
+
+
+def _jobs_and_stages(spark, fn) -> tuple[int, list[int]]:
+    """(#Spark jobs fn ran, their stage ids), counted under a job
+    group."""
     sc = spark.sparkContext
-    gid = f"merge-{uuid.uuid4().hex}"
-    sc.setJobGroup(gid, "merge")
+    gid = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "job count")
     try:
-        merge_segments(spark, dst, merge_factor=2)
+        fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     st = sc.statusTracker()
     jobs = st.getJobIdsForGroup(gid)
-    stages = [s for j in jobs for s in st.getJobInfo(j).stageIds]
-    return src, dst, len(jobs), stages
+    return len(jobs), [s for j in jobs for s in st.getJobInfo(j).stageIds]
 
 
 def _shuffle_bytes(spark, stage_id: int) -> int:
@@ -117,23 +124,6 @@ def test_wide_merge_is_one_shuffle_free_stage(spark, wide):
     assert _shuffle_bytes(spark, stages[0]) == 0
 
 
-def _decode(post: pd.DataFrame) -> dict:
-    """term -> (docs, tfs, positions), every block decoded."""
-    out = {}
-    for row in post.itertuples(index=False):
-        fd = np.asarray(row.first_docs, np.int64)
-        docs, tfs = codec.unpack_postings(
-            fd, np.asarray(row.doc_offs, np.int64),
-            np.asarray(row.tf_offs, np.int64), row.doc_bytes, row.tf_bytes,
-        )
-        pos = codec.unpack_positions(
-            np.asarray(row.pos_offs, np.int64), row.pos_bytes, tfs,
-            np.arange(len(fd)), len(fd),
-        )
-        out[row.term] = (docs, tfs, pos)
-    return out
-
-
 def _tiers(src: str, dst: str, merge_factor: int):
     """(merged segment dir, its source dirs in src_pos order) pairs."""
     seg = os.path.join(src, "segments")
@@ -145,61 +135,52 @@ def _tiers(src: str, dst: str, merge_factor: int):
     ]
 
 
-@pytest.mark.parametrize("which", ["sf", "wide"])
-def test_merged_postings_are_rebased_source_runs(pair, wide, which):
-    """Every merged term decodes (docs, tfs, positions) to the
-    concatenation of its source runs in source order, each source's
-    docs shifted by its doc_base (the running doc count before it)."""
-    if which == "sf":
-        src, dst, mf = pair[0].index_root, pair[1].index_root, 4
-    else:
-        src, dst, mf = wide[0], wide[1], 2
-    for merged_dir, src_dirs in _tiers(src, dst, mf):
-        want: dict = {}
-        base = 0
-        for d in src_dirs:
-            for term, (docs, tfs, pos) in _decode(
-                    pd.read_parquet(f"{d}/postings.parquet")).items():
-                want.setdefault(term, []).append((docs + base, tfs, pos))
-            base += len(pd.read_parquet(f"{d}/docmap.parquet", columns=["doc_ord"]))
-        got = _decode(pd.read_parquet(f"{merged_dir}/postings.parquet"))
-        assert sorted(got) == sorted(want)
-        for term, runs in want.items():
-            docs, tfs, pos = got[term]
-            assert np.array_equal(docs, np.concatenate([r[0] for r in runs])), term
-            assert np.array_equal(tfs, np.concatenate([r[1] for r in runs])), term
-            assert np.array_equal(pos, np.concatenate([r[2] for r in runs])), term
+def _keys(seg_dir: str) -> pd.DataFrame:
+    return pd.read_parquet(f"{seg_dir}/docmap.parquet",
+                           columns=["conv_id", "turn_idx"])
+
+
+def assert_segment_is_build(seg_dir: str, turns: pd.DataFrame,
+                            seg_id: int) -> None:
+    """Every table of the segment at ``seg_dir`` equals what
+    ``build_segment_pdf`` writes from ``turns``."""
+    want = build_segment_pdf(turns, seg_id=seg_id)
+    for name in ("postings", "docmap", "dicts"):
+        got = pq.read_table(f"{seg_dir}/{name}.parquet")
+        assert got.equals(want[name]), (seg_dir, name)
+
+
+def early_pages(searcher) -> list:
+    """early_topk's first page and its index-sort cursor's second."""
+    first = searcher.early_topk(10).toPandas()
+    mark = (first.conv_id.iloc[-1], int(first.turn_idx.iloc[-1]))
+    second = searcher.early_topk(10, cursor=mark).toPandas()
+    return [first.values.tolist(), second.values.tolist()]
 
 
 @pytest.mark.parametrize("which", ["sf", "wide"])
-def test_merged_docmap_and_dicts(pair, wide, which):
-    """The merged docmap is the source docmaps concatenated in source
-    order with doc_ord = row position, its ordinals index the merged
-    dictionaries, and each field's dictionary is the sorted distinct
-    non-null values of its docs."""
+def test_merged_tier_equals_build(spark, sf_dir, pair, wide, which):
+    """A merged segment is the segment the build writes from its tier's
+    turns: postings, docmap (index-sorted, doc_ord = row) and dicts
+    are equal table for table."""
     if which == "sf":
         src, dst, mf = pair[0].index_root, pair[1].index_root, 4
+        turns = transcripts_from_documents(spark, sf_dir).toPandas()
     else:
         src, dst, mf = wide[0], wide[1], 2
-    cols = ["conv_id", "turn_idx", "doc_len", "ts", *FACET_FIELDS]
-    for merged_dir, src_dirs in _tiers(src, dst, mf):
-        want = pd.concat(
-            [pd.read_parquet(f"{d}/docmap.parquet").sort_values("doc_ord")[cols]
-             for d in src_dirs],
-            ignore_index=True,
-        )
-        dm = pd.read_parquet(f"{merged_dir}/docmap.parquet")
-        assert list(dm["doc_ord"]) == list(range(len(want)))
-        pd.testing.assert_frame_equal(dm[cols], want)
-        dicts = pd.read_parquet(f"{merged_dir}/dicts.parquet")
-        for fld in FACET_FIELDS:
-            d = dicts[dicts["field"] == fld].sort_values("term_ord")
-            uniq = sorted(want[fld].dropna().unique())
-            assert list(d["term"]) == uniq, fld
-            assert list(d["term_ord"]) == list(range(len(uniq))), fld
-            ords = dm[f"{fld}_ord"].to_numpy()
-            named = np.where(ords >= 0, np.asarray(uniq + [None], object)[ords], None)
-            assert list(named) == list(want[fld].where(want[fld].notna(), None)), fld
+        turns = spark.createDataFrame(_wide_corpus(), WIDE_SCHEMA).toPandas()
+    for i, (merged_dir, src_dirs) in enumerate(_tiers(src, dst, mf)):
+        keys = pd.concat([_keys(d) for d in src_dirs])
+        assert_segment_is_build(
+            merged_dir, turns.merge(keys, on=["conv_id", "turn_idx"]), i)
+
+
+def test_merged_early_topk_matches_unmerged(pair):
+    """Merged segments keep the index sort, so early_topk (which
+    streams only each segment's head) and its cursor's next page
+    equal the unmerged index's."""
+    a, b = pair
+    assert early_pages(b) == early_pages(a)
 
 
 def test_stats_preserved(pair):

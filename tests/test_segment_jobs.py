@@ -143,6 +143,27 @@ def test_cached_composed_select_is_one_job(spark, searcher):
     assert second[0] == searcher.search(spec, round_to=4).offset(10).collect()
 
 
+def test_cached_wildcard_select_runs_as_many_jobs_as_term(spark, searcher):
+    """A repeated /select with a wildcard q runs as many jobs as the
+    same request with a plain term: the searcher expands each pattern
+    once (its dictionary scan is snapshot-stable), not once per leg."""
+    from lucene_solr_spark.handler import select
+
+    def jobs(q):
+        params = {"q": q, "rows": 10, "facet.field": "role"}
+
+        def request():
+            out = select(searcher, params)
+            return out["response"].collect(), out["facet_counts"]["role"].collect()
+
+        first = request()
+        second, n = _jobs(spark, request)
+        assert second == first
+        return n
+
+    assert jobs("w1*") == jobs("w1")
+
+
 @pytest.mark.parametrize("sort", [None, "turn_idx asc"], ids=["score", "field"])
 def test_cursor_page_collect_runs_no_job(spark, searcher, sort):
     """A cursorMark page is materialized once inside ``select`` (to

@@ -1,22 +1,32 @@
 """SPLITSHARD tests (index/split.py): splitting one segment by
 conv-hash must preserve every answer — split index ≡ original on the
-BM25 battery and facets, conversations stay segment-local, postings
-stay structurally valid, and the commit is one atomic snapshot.
+BM25 battery, facets and early_topk, conversations stay
+segment-local, each child equals the build's segment over its docs,
+the split is one shuffle-free stage, and the commit is one atomic
+snapshot.
 
 ref: solr/core/src/java/org/apache/solr/update/SolrIndexSplitter.java
 (the same guarantee: sub-indexes together ≡ the source index)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import numpy as np
+import pandas as pd
 import pytest
+from test_merge import (
+    _jobs_and_stages,
+    _shuffle_bytes,
+    assert_segment_is_build,
+    early_pages,
+)
 
 from lucene_solr_spark.index.build import build_index
 from lucene_solr_spark.index.codec import unpack_postings
 from lucene_solr_spark.index.manifest import Manifest
-from lucene_solr_spark.index.split import split_segment
+from lucene_solr_spark.index.split import route_convs, split_segment
 from lucene_solr_spark.query.executor import IndexSearcher
 from lucene_solr_spark.query.model import BooleanSpec
 from lucene_solr_spark.registry import BM25_SPECS
@@ -116,3 +126,42 @@ def test_split_then_delete_masks(pair, spark, tmp_path):
     assert n > 0
     after = IndexSearcher(spark, root).search(spec).toPandas()
     assert len(after) == 0
+
+
+def test_split_children_equal_build(spark, sf_dir, pair):
+    """Each child is the segment the build writes from the source
+    docs its conversations route to."""
+    a, b, src = pair
+    src_docs = pd.read_parquet(
+        os.path.join(a.index_root, "segments", src, "docmap.parquet"),
+        columns=["conv_id", "turn_idx"])
+    route = route_convs(src_docs["conv_id"].to_numpy().astype("U"), 2)
+    turns = transcripts_from_documents(spark, sf_dir).toPandas()
+    children = b.manifest.lineage[-1]["children"]
+    assert len(children) == 2
+    for name in children:
+        part = int(b.manifest.segments[name]["part"])
+        # child c is part max_part + 1 + c
+        keys = src_docs[route == part - max(a.seg_dir_by_id) - 1]
+        assert_segment_is_build(
+            b.seg_dir_by_id[part],
+            turns.merge(keys, on=["conv_id", "turn_idx"]), part)
+
+
+def test_split_early_topk_matches_unsplit(pair):
+    a, b, _src = pair
+    assert early_pages(b) == early_pages(a)
+
+
+def test_split_is_one_shuffle_free_stage(spark, pair, tmp_path):
+    """A split is one job of one stage with one task per child, and
+    moves no shuffle bytes."""
+    a, _b, src = pair
+    root = str(tmp_path / "idx")
+    shutil.copytree(a.index_root, root)
+    n_jobs, stages = _jobs_and_stages(
+        spark, lambda: split_segment(spark, root, src, n_children=3))
+    assert n_jobs == 1 and len(stages) == 1
+    assert spark.sparkContext.statusTracker().getStageInfo(
+        stages[0]).numTasks == 3
+    assert _shuffle_bytes(spark, stages[0]) == 0

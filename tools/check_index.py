@@ -5,9 +5,10 @@ Lucene ships ``org.apache.lucene.index.CheckIndex`` (run via
 ``java -cp lucene-core.jar org.apache.lucene.index.CheckIndex <dir>``)
 to verify segment structure: posting lists decode, docs are strictly
 increasing, term dictionaries are sorted, per-segment stats match a
-recount. This is that tool for the engine's manifest/segment layout —
-the same invariants the build/merge test suites pin, packaged as an
-ops command a user can point at any index root.
+recount, and docs follow the index sort. This is that tool for the
+engine's manifest/segment layout — the same invariants the build/merge
+test suites pin, packaged as an ops command a user can point at any
+index root.
 
 Spark-first shape: one task PER SEGMENT (``mapInPandas`` over the
 manifest's segment list); every task reads its own segment's Parquet —
@@ -49,7 +50,7 @@ def check_segment(seg_dir: str, seg_meta: dict, deep: bool,
     import pandas as pd
 
     from lucene_solr_spark.index import codec
-    from lucene_solr_spark.index.build import term_bucket
+    from lucene_solr_spark.index.build import term_bucket, unsorted_row
 
     errs: list[str] = []
     name = os.path.basename(seg_dir)
@@ -74,12 +75,18 @@ def check_segment(seg_dir: str, seg_meta: dict, deep: bool,
     if seg_meta.get("n_postings") != int(p["df"].sum()):
         errs.append(f"{name}: n_postings != sum(df)")
 
-    # docmap: ordinals must be the contiguous 0..n-1 identity in index
-    # sort order (the scorer's positional decode depends on it)
+    # docmap: ordinals must be the contiguous 0..n-1 identity (the
+    # scorer's positional decode depends on it), in index-sort order
+    # (early_topk streams segment heads on it)
     if "doc_ord" in dm.columns:
         ords = dm["doc_ord"].to_numpy()
         if not np.array_equal(np.sort(ords), np.arange(len(ords))):
             errs.append(f"{name}: doc_ord not a 0..n-1 permutation")
+        srt = dm.sort_values("doc_ord")
+        row = unsorted_row(srt["conv_id"].astype(str), srt["turn_idx"])
+        if row >= 0:
+            errs.append(f"{name}: docmap not in (conv_id, turn_idx) order "
+                        f"at doc_ord {row}")
 
     # dictionary: sorted terms, positive df, bucket routing intact
     terms = p["term"].tolist()
