@@ -18,7 +18,9 @@ import pyarrow.parquet as pq
 import pytest
 
 from lucene_solr_spark.index import codec
-from lucene_solr_spark.index.build import build_index, build_segment_pdf
+from lucene_solr_spark.index.build import (
+    FACET_FIELDS, build_index, build_segment_pdf,
+)
 from lucene_solr_spark.index.manifest import Manifest
 from lucene_solr_spark.index.merge import merge_segments, plan_merge
 from lucene_solr_spark.query.executor import IndexSearcher
@@ -173,6 +175,96 @@ def test_merged_tier_equals_build(spark, sf_dir, pair, wide, which):
         keys = pd.concat([_keys(d) for d in src_dirs])
         assert_segment_is_build(
             merged_dir, turns.merge(keys, on=["conv_id", "turn_idx"]), i)
+
+
+def _decode(post: pd.DataFrame) -> dict:
+    """term -> (docs, tfs, positions), every block decoded."""
+    out = {}
+    for row in post.itertuples(index=False):
+        fd = np.asarray(row.first_docs, np.int64)
+        docs, tfs = codec.unpack_postings(
+            fd, np.asarray(row.doc_offs, np.int64),
+            np.asarray(row.tf_offs, np.int64), row.doc_bytes, row.tf_bytes,
+        )
+        pos = codec.unpack_positions(
+            np.asarray(row.pos_offs, np.int64), row.pos_bytes, tfs,
+            np.arange(len(fd)), len(fd),
+        )
+        out[row.term] = (docs, tfs, pos)
+    return out
+
+
+def _sorted_docmap(src_dirs: list[str]) -> pd.DataFrame:
+    """The tier's source docmaps concatenated in source order and
+    stably index-sorted by (conv_id, turn_idx), doc_ord dropped."""
+    cols = ["conv_id", "turn_idx", "doc_len", "ts", *FACET_FIELDS]
+    cat = pd.concat(
+        [pd.read_parquet(f"{d}/docmap.parquet").sort_values("doc_ord")[cols]
+         for d in src_dirs],
+        ignore_index=True,
+    )
+    return cat.sort_values(["conv_id", "turn_idx"],
+                           kind="mergesort").reset_index(drop=True)
+
+
+@pytest.mark.parametrize("which", ["sf", "wide"])
+def test_merged_postings_are_rebased_source_runs(pair, wide, which):
+    """Every merged term decodes (docs, tfs, positions) to its source
+    runs with each source doc rebased to its index-sorted merged doc
+    id (found by its (conv_id, turn_idx) key), ordered by that id."""
+    if which == "sf":
+        src, dst, mf = pair[0].index_root, pair[1].index_root, 4
+    else:
+        src, dst, mf = wide[0], wide[1], 2
+    for merged_dir, src_dirs in _tiers(src, dst, mf):
+        dm = pd.read_parquet(f"{merged_dir}/docmap.parquet")
+        new_id = {(c, int(t)): int(o) for c, t, o in
+                  zip(dm["conv_id"], dm["turn_idx"], dm["doc_ord"])}
+        runs: dict = {}
+        for d in src_dirs:
+            sdm = pd.read_parquet(f"{d}/docmap.parquet").sort_values("doc_ord")
+            remap = np.array([new_id[(c, int(t))] for c, t in
+                              zip(sdm["conv_id"], sdm["turn_idx"])], np.int64)
+            for term, (docs, tfs, pos) in _decode(
+                    pd.read_parquet(f"{d}/postings.parquet")).items():
+                starts = np.concatenate([[0], np.cumsum(tfs)[:-1]])
+                for doc, tf, s in zip(remap[docs], tfs, starts):
+                    runs.setdefault(term, []).append((doc, tf, pos[s:s + tf]))
+        got = _decode(pd.read_parquet(f"{merged_dir}/postings.parquet"))
+        assert sorted(got) == sorted(runs)
+        for term, rows in runs.items():
+            rows.sort(key=lambda r: r[0])
+            docs, tfs, pos = got[term]
+            assert np.array_equal(docs, [r[0] for r in rows]), term
+            assert np.array_equal(tfs, [r[1] for r in rows]), term
+            assert np.array_equal(pos, np.concatenate([r[2] for r in rows])), term
+
+
+@pytest.mark.parametrize("which", ["sf", "wide"])
+def test_merged_docmap_and_dicts(pair, wide, which):
+    """The merged docmap is the source docmaps concatenated in source
+    order and stably index-sorted by (conv_id, turn_idx), with doc_ord
+    = row position; its ordinals index the merged dictionaries, and
+    each field's dictionary is the sorted distinct non-null values of
+    its docs."""
+    if which == "sf":
+        src, dst, mf = pair[0].index_root, pair[1].index_root, 4
+    else:
+        src, dst, mf = wide[0], wide[1], 2
+    for merged_dir, src_dirs in _tiers(src, dst, mf):
+        want = _sorted_docmap(src_dirs)
+        dm = pd.read_parquet(f"{merged_dir}/docmap.parquet")
+        assert list(dm["doc_ord"]) == list(range(len(want)))
+        pd.testing.assert_frame_equal(dm[list(want.columns)], want)
+        dicts = pd.read_parquet(f"{merged_dir}/dicts.parquet")
+        for fld in FACET_FIELDS:
+            d = dicts[dicts["field"] == fld].sort_values("term_ord")
+            uniq = sorted(want[fld].dropna().unique())
+            assert list(d["term"]) == uniq, fld
+            assert list(d["term_ord"]) == list(range(len(uniq))), fld
+            ords = dm[f"{fld}_ord"].to_numpy()
+            named = np.where(ords >= 0, np.asarray(uniq + [None], object)[ords], None)
+            assert list(named) == list(want[fld].where(want[fld].notna(), None)), fld
 
 
 def test_merged_early_topk_matches_unmerged(pair):
