@@ -19,15 +19,13 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 from lucene_solr_spark import registry  # noqa: E402
-from lucene_solr_spark.query import bm25_df  # noqa: E402
 from lucene_solr_spark.query.model import BooleanSpec  # noqa: E402
-from lucene_solr_spark.transcripts import transcripts_from_documents  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    t = transcripts_from_documents(spark, "/root/testdata/sf0.001")
-    return bm25_df.search(t, BooleanSpec(must=("merge",), k=10), round_to=4)
+    searcher = registry.cached_searcher(spark, "/root/testdata/sf0.001")
+    return searcher.search(BooleanSpec(must=("merge",), k=10), round_to=4)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -342,7 +342,7 @@ def run_once(cpus: int, n_turns: int, queries: bool = True,
                 spark, idx_root, BooleanSpec(filters=(("role", "tool"),))
             )
             out["delete_commit_sec"] = round(time.perf_counter() - td, 3)
-            sd = IndexSearcher(spark, idx_root).persist()
+            sd = IndexSearcher(spark, idx_root)
             td = time.perf_counter()
             sd.search(next(iter(BM25_SPECS.values()))).collect()
             out["post_delete_search_sec"] = round(time.perf_counter() - td, 3)

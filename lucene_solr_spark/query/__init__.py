@@ -1,7 +1,7 @@
-"""Query-side engine: parser → logical Query tree → two executors.
+"""Query-side engine: parser → logical Query tree → index engine.
 
-- :mod:`lucene_solr_spark.query.bm25_df` — brute-force Catalyst-only
-  scorer (milestone M1; the pinned rank-identity oracle, SURVEY §7.5).
-- :mod:`lucene_solr_spark.query.executor` — the real engine: pruned
+- :mod:`lucene_solr_spark.query.executor` — the index engine: pruned
   segment scan → vectorized posting decode → block-max WAND top-k.
+- :mod:`lucene_solr_spark.query.oracle` — the DuckDB SQL twin of every
+  scoring contract (the pinned rank-identity oracle, SURVEY §7.5).
 """

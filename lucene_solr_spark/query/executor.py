@@ -922,8 +922,7 @@ class IndexSearcher:
             return spec, None
         if not spec.scoring_terms:
             # Lucene rejects pure-negative scored queries (QueryUtils
-            # .makeQueryable wraps them for filters, not scoring) — and
-            # bm25_df.search raises identically.
+            # .makeQueryable wraps them for filters, not scoring).
             raise ValueError("query has no scoring terms")
         idf = self.global_idf(list(spec.lookup_terms))  # must_not keyed
         if spec.boosts:

@@ -123,8 +123,8 @@ class BooleanSpec:
     #: span_first is the ``start=0`` special case. Window containment
     #: depends only on relative distances, so this is equivalent to
     #: running the span_near match on the token SUB-ARRAY
-    #: ``toks[start:end]`` — exactly how the Catalyst and DuckDB
-    #: engines spell it; the index scorer filters occurrences to the
+    #: ``toks[start:end]`` — exactly how the DuckDB oracle spells
+    #: it; the index scorer filters occurrences to the
     #: absolute-position band instead (same match set). Group terms
     #: contribute MUST scoring; the containment is a two-phase filter.
     #: ref: lucene/core/src/java/org/apache/lucene/search/spans/SpanPositionRangeQuery.java
@@ -163,10 +163,9 @@ class BooleanSpec:
     multi_phrases: tuple[tuple[tuple[str, ...], ...], ...] = ()
     #: UNREWRITTEN MultiTermQuery nodes from the parser (WildcardQuery
     #: ``te?t*`` / RegexpQuery ``/re/``). Executors NEVER see these:
-    #: ``IndexSearcher.rewrite`` (dictionary scan) or
-    #: ``bm25_df.rewrite_multiterm`` (corpus scan) must expand them
+    #: ``IndexSearcher.rewrite`` (dictionary scan) must expand them
     #: into SHOULD TermQuery clauses first — scoring with them present
-    #: raises. Negated multiterm is rejected at parse time (the
+    #: raises (the DuckDB oracle too). Negated multiterm is rejected at parse time (the
     #: accept-and-invert trap).
     wildcards: tuple[str, ...] = ()
     regexps: tuple[str, ...] = ()
@@ -182,7 +181,7 @@ class BooleanSpec:
     #: phrase freq counts START anchors p1 with toks[p1]=term_1 and an
     #: in-order chain p1<…<pn, pn−p1 ≤ slop+n−1 (at slop=0 this IS the
     #: exact n-gram occurrence count — one pinned counting family in
-    #: all three engines).
+    #: the index engine and the DuckDB oracle).
     #: ref: solr/core/src/java/org/apache/solr/search/ExtendedDismaxQParser.java
     #: (pf/pf2/pf3/ps), lucene/core/src/java/org/apache/lucene/search/PhraseQuery.java
     pf_phrases: tuple[tuple[str, ...], ...] = ()

@@ -2,15 +2,18 @@
 
 Generates, from the SAME :class:`BooleanSpec` logical plan, an ANSI-SQL
 query DuckDB can run over the driver-registered ``documents`` view (via
-the transcripts CTE). The driver compares it against the Spark result
-(row-count + schema + order-insensitive value hash) — this is the
-correctness gate for the CORE query path.
+the transcripts CTE). The driver compares it against the index engine's
+result (row-count + schema + order-insensitive value hash) — this is the
+correctness gate for the CORE query path, and the one independent
+reference the index engine's scoring contracts are written against.
 
 Scores are rounded to 4 decimals on BOTH sides: tf/df/N/doc_len are
-exact integers and avgdl an exact int-sum ratio, so Spark's and
-DuckDB's float64 pipelines agree to ~1 ulp; rounding removes the ulp.
+exact integers and avgdl an exact int-sum ratio, so the index engine's
+and DuckDB's float64 pipelines agree to ~1 ulp; rounding removes the ulp.
 The top-k boundary is made engine-independent by ordering on the
-ROUNDED score with the pinned (conv_id, turn_idx) tiebreak.
+ROUNDED score with the pinned (conv_id, turn_idx) tiebreak. Duels that
+compare raw float64 scores ask :func:`bm25_oracle_sql` for
+``round_to=None``; the golden top-k lists are read at ``round_to=6``.
 """
 
 from __future__ import annotations
@@ -110,7 +113,7 @@ def _span_not_clause(
     inc: tuple[str, ...], exc: tuple[str, ...], slop: int
 ) -> str:
     """SpanNotQuery, DuckDB spelling — same anchored sweep + span-end
-    exclusion as scorer._span_not_docs / bm25_df._span_not_pred."""
+    exclusion as scorer._span_not_docs."""
     w = len(inc) + slop
     firsts = [
         f"list_min(list_filter(range(s, least(s + {w} - 1, len(toks)) + 1), "
@@ -134,8 +137,7 @@ def _span_not_clause(
 
 def _multi_phrase_clause(slots: tuple[tuple[str, ...], ...]) -> str:
     """MultiPhraseQuery adjacency, DuckDB spelling (1-based lists) —
-    same contract as bm25_df._multi_phrase_pred /
-    scorer._multi_phrase_docs."""
+    same contract as scorer._multi_phrase_docs."""
     n = len(slots)
     conds = " AND ".join(
         f"list_contains([{_sql_list(slot)}], toks[s + {j}])"
@@ -152,7 +154,7 @@ def _span_within_clause(
     little: str, big: tuple[str, ...], slop: int
 ) -> str:
     """SpanWithinQuery, DuckDB spelling — same per-owner anchor sweep
-    as scorer._span_within_docs / bm25_df._span_within_pred: anchors q
+    as scorer._span_within_docs: anchors q
     hold a big-group term (the owner, pinned at q); every OTHER big
     term contributes its LAST in-window occurrence; the little term
     must occur in [q, greatest(picks)]."""
@@ -180,7 +182,8 @@ def _span_within_clause(
 
 #: transcripts column types (transcripts.py TRANSCRIPT_SCHEMA) — range
 #: literals are typed by the TARGET FIELD, never by bound parseability
-#: (ADVICE r2: role:[1 TO 5] must be lexicographic in all three engines)
+#: (ADVICE r2: role:[1 TO 5] must be lexicographic in the index engine
+#: and the DuckDB oracle alike)
 _NUMERIC_RANGE_FIELDS = frozenset({"turn_idx", "doc_id", "n_chars"})
 
 
@@ -199,11 +202,19 @@ def _range_sql(fld: str, v: str) -> str:
 DEFAULT_TOKS_SQL = "regexp_extract_all(lower(text), '[a-z0-9]+')"
 
 
-def bm25_oracle_sql(spec: BooleanSpec, toks_sql: str = DEFAULT_TOKS_SQL) -> str:
+def bm25_oracle_sql(
+    spec: BooleanSpec,
+    toks_sql: str = DEFAULT_TOKS_SQL,
+    round_to: int | None = ROUND,
+) -> str:
+    """Pinned top-k (conv_id, turn_idx, score) of ``spec``. The score is
+    rounded to ``round_to`` decimals and the top-k cut orders on that
+    rounded score; ``round_to=None`` selects and orders on the raw
+    float64 score."""
     if spec.needs_rewrite:
         raise ValueError(
             "spec holds unrewritten multiterm nodes — expand via "
-            "IndexSearcher.rewrite / bm25_df.rewrite_multiterm first "
+            "IndexSearcher.rewrite first "
             "(the oracle needs concrete terms)"
         )
     terms = spec.scoring_terms
@@ -270,6 +281,13 @@ def bm25_oracle_sql(spec: BooleanSpec, toks_sql: str = DEFAULT_TOKS_SQL) -> str:
     else:
         boost_case = "1.0"
 
+    # raw scores sum each doc's addends in one fixed order: DuckDB's
+    # parallel sum() order varies by run, which moves a 3+-addend sum
+    # by an ulp and can split an exact tie
+    sum_open, sum_close = (
+        ("list_sum(list(", "ORDER BY {}))") if round_to is None else ("sum(", ")")
+    )
+
     mm_join = ""
     if spec.should and spec.min_should_match > 0:
         mm_join = f"""
@@ -305,12 +323,12 @@ dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
 hits AS (SELECT conv_id, turn_idx FROM docs2{where_docs}),
 scored AS (
   SELECT tf.conv_id, tf.turn_idx,
-         sum(
+         {sum_open}
            {boost_case}
            * ln(1.0 + (stats.n_docs - dfreq.df + 0.5) / (dfreq.df + 0.5))
            * (tf.tf * ({K1} + 1))
            / (tf.tf + {K1} * (1 - {B} + {B} * tf.doc_len / stats.avgdl))
-         ) AS score
+         {sum_close.format("tf.term")} AS score
   FROM tf
   JOIN dfreq USING (term)
   CROSS JOIN stats
@@ -356,10 +374,10 @@ pfcnt AS (
 ),
 pfbonus AS (
   SELECT conv_id, turn_idx,
-         sum({float(spec.pf_boost)} * pfidf.idf_sum
+         {sum_open}{float(spec.pf_boost)} * pfidf.idf_sum
              * (pfcnt.pftf * ({K1} + 1))
              / (pfcnt.pftf + {K1} * (1 - {B} + {B} * pfcnt.doc_len / stats.avgdl))
-         ) AS bonus
+         {sum_close.format("ph_id")} AS bonus
   FROM pfcnt JOIN pfidf USING (ph_id) CROSS JOIN stats
   WHERE pfcnt.pftf > 0
   GROUP BY conv_id, turn_idx
@@ -369,10 +387,11 @@ scored AS (
   FROM scored_base sb LEFT JOIN pfbonus pb USING (conv_id, turn_idx)
 )
 """
+    score = "score" if round_to is None else f"round(score, {round_to})"
     return (body + f"""
-SELECT conv_id, turn_idx, round(score, {ROUND}) AS score
+SELECT conv_id, turn_idx, {score} AS score
 FROM scored
-ORDER BY round(score, {ROUND}) DESC, conv_id, turn_idx
+ORDER BY {score} DESC, conv_id, turn_idx
 LIMIT {spec.k}
 """).strip()
 

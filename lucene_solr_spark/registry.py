@@ -16,7 +16,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lucene_solr_spark.query import bm25_df
 from lucene_solr_spark.query.model import BooleanSpec
 from lucene_solr_spark.query.oracle import ROUND, _sql_list, bm25_oracle_sql
 from lucene_solr_spark.transcripts import transcripts_from_documents
@@ -35,6 +34,9 @@ def register(name: str, fn: QueryFn, oracle: str | None = None) -> None:
 
 # ---------------------------------------------------------------------------
 # CORE: BM25 boolean query battery over the transcripts table (P2-P8, W1-W2)
+# through the INDEX engine (segment build → manifest → bucket-pruned postings
+# scan → block-max WAND scorer), each checked against its DuckDB oracle SQL —
+# the driver thereby checks the whole inverted-index pipeline.
 # ---------------------------------------------------------------------------
 
 #: The golden boolean specs (FIXTURES.md §3 shapes). Terms chosen from the
@@ -52,25 +54,6 @@ BM25_SPECS: dict[str, BooleanSpec] = {
     "bm25_phrase3": BooleanSpec(phrases=(("order", "sort"),), must=("table",), k=10),
 }
 
-
-def _mk_bm25(spec: BooleanSpec) -> QueryFn:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        t = transcripts_from_documents(spark, sf_dir)
-        return bm25_df.search(t, spec, round_to=ROUND)
-
-    return run
-
-
-for _name, _spec in BM25_SPECS.items():
-    register(f"q_{_name}", _mk_bm25(_spec), bm25_oracle_sql(_spec))
-
-
-# ---------------------------------------------------------------------------
-# CORE: the same boolean battery through the INDEX engine (segment build →
-# manifest → bucket-pruned postings scan → block-max WAND scorer). Same
-# oracle SQL as the DataFrame path — the driver thereby checks the whole
-# inverted-index pipeline, not just Catalyst arithmetic.
-# ---------------------------------------------------------------------------
 
 _INDEX_ROOTS: dict[str, str] = {}
 
@@ -98,6 +81,11 @@ def _mk_idx_bm25(spec: BooleanSpec) -> QueryFn:
     return run
 
 
+for _name, _spec in BM25_SPECS.items():
+    register(f"q_{_name}", _mk_idx_bm25(_spec), bm25_oracle_sql(_spec))
+
+# the q_idx_* names of the first six specs stay registered under their
+# own keys (the driver's query set is keyed by name)
 for _name in ("bm25_term", "bm25_and", "bm25_or_mm", "bm25_not",
               "bm25_phrase", "bm25_filtered"):
     _spec = BM25_SPECS[_name]
@@ -1371,13 +1359,13 @@ register("q_idx_terms_component", _idx_terms_component, ORACLES["q_terms_compone
 # matches at slop>=1 but not at slop 0 (the planted fixture phrase is
 # "table scan merge policy").
 _SLOPPY = BooleanSpec(phrases=(("table", "merge"),), phrase_slop=1, k=15)
-register("q_bm25_sloppy", _mk_bm25(_SLOPPY), bm25_oracle_sql(_SLOPPY))
+register("q_bm25_sloppy", _mk_idx_bm25(_SLOPPY), bm25_oracle_sql(_SLOPPY))
 register("q_idx_bm25_sloppy", _mk_idx_bm25(_SLOPPY), bm25_oracle_sql(_SLOPPY))
 
 # 3-term sloppy phrase: "table … scan … order" with total gap ≤ 2
 # (14 matching docs at sf0.01 — a real selective-but-nonempty shape).
 _SLOPPY3 = BooleanSpec(phrases=(("table", "scan", "order"),), phrase_slop=2, k=15)
-register("q_bm25_sloppy3", _mk_bm25(_SLOPPY3), bm25_oracle_sql(_SLOPPY3))
+register("q_bm25_sloppy3", _mk_idx_bm25(_SLOPPY3), bm25_oracle_sql(_SLOPPY3))
 register("q_idx_bm25_sloppy3", _mk_idx_bm25(_SLOPPY3), bm25_oracle_sql(_SLOPPY3))
 
 def _mk_conv_search(spec: BooleanSpec, k: int, mode: str) -> QueryFn:
@@ -2026,11 +2014,11 @@ ORDER BY conv_id, turn_idx""",
 
 # Negated phrase + negated filter shapes (P5/P16 corner the round-1
 # parser silently inverted): '-"merge policy"' and '-role:assistant'
-# through BOTH executors. The parser round-trips these (test_parser).
+# through the index engine. The parser round-trips these (test_parser).
 _NEG_PHRASE = BooleanSpec(
     must=("table",), must_not_phrases=(("table", "scan"),), k=12
 )
-register("q_bm25_neg_phrase", _mk_bm25(_NEG_PHRASE), bm25_oracle_sql(_NEG_PHRASE))
+register("q_bm25_neg_phrase", _mk_idx_bm25(_NEG_PHRASE), bm25_oracle_sql(_NEG_PHRASE))
 register("q_idx_bm25_neg_phrase", _mk_idx_bm25(_NEG_PHRASE), bm25_oracle_sql(_NEG_PHRASE))
 
 # Unordered span-near (SpanNearQuery inOrder=false): 'merge' and
@@ -2038,7 +2026,7 @@ register("q_idx_bm25_neg_phrase", _mk_idx_bm25(_NEG_PHRASE), bm25_oracle_sql(_NE
 # contain both at sf0.01; the window narrows that to true near-spans,
 # incl. reversed "scan … merge" that an ordered sloppy phrase misses).
 _SPAN = BooleanSpec(span_near=(("merge", "scan"),), span_slop=2, k=15)
-register("q_bm25_span_near", _mk_bm25(_SPAN), bm25_oracle_sql(_SPAN))
+register("q_bm25_span_near", _mk_idx_bm25(_SPAN), bm25_oracle_sql(_SPAN))
 register("q_idx_bm25_span_near", _mk_idx_bm25(_SPAN), bm25_oracle_sql(_SPAN))
 
 # SpanOrQuery over span-near clauses (VERDICT r2 item 10): docs where
@@ -2047,7 +2035,7 @@ register("q_idx_bm25_span_near", _mk_idx_bm25(_SPAN), bm25_oracle_sql(_SPAN))
 _SPAN_OR = BooleanSpec(
     span_or=(("table", "scan"), ("hash", "join")), span_slop=1, k=15
 )
-register("q_bm25_span_or", _mk_bm25(_SPAN_OR), bm25_oracle_sql(_SPAN_OR))
+register("q_bm25_span_or", _mk_idx_bm25(_SPAN_OR), bm25_oracle_sql(_SPAN_OR))
 register("q_idx_bm25_span_or", _mk_idx_bm25(_SPAN_OR), bm25_oracle_sql(_SPAN_OR))
 
 # SpanNotQuery: a table…merge span (window 6, any order) whose [min,
@@ -2056,7 +2044,7 @@ register("q_idx_bm25_span_or", _mk_idx_bm25(_SPAN_OR), bm25_oracle_sql(_SPAN_OR)
 _SPAN_NOT = BooleanSpec(
     span_not=((("table", "merge"), ("scan",)),), span_slop=4, k=15
 )
-register("q_bm25_span_not", _mk_bm25(_SPAN_NOT), bm25_oracle_sql(_SPAN_NOT))
+register("q_bm25_span_not", _mk_idx_bm25(_SPAN_NOT), bm25_oracle_sql(_SPAN_NOT))
 register(
     "q_idx_bm25_span_not", _mk_idx_bm25(_SPAN_NOT), bm25_oracle_sql(_SPAN_NOT)
 )
@@ -2070,7 +2058,7 @@ _MULTI_PHRASE = BooleanSpec(
     multi_phrases=((("table",), ("scan", "merge")),), k=15
 )
 register(
-    "q_bm25_multi_phrase", _mk_bm25(_MULTI_PHRASE),
+    "q_bm25_multi_phrase", _mk_idx_bm25(_MULTI_PHRASE),
     bm25_oracle_sql(_MULTI_PHRASE),
 )
 register(
@@ -2086,7 +2074,7 @@ _SPAN_WITHIN = BooleanSpec(
     span_within=(("key", ("table", "merge")),), span_slop=4, k=15
 )
 register(
-    "q_bm25_span_within", _mk_bm25(_SPAN_WITHIN),
+    "q_bm25_span_within", _mk_idx_bm25(_SPAN_WITHIN),
     bm25_oracle_sql(_SPAN_WITHIN),
 )
 register(
@@ -2097,11 +2085,11 @@ register(
 # SpanFirstQuery: the merge/scan near-span (window 4, any order) must
 # sit entirely within the FIRST 12 tokens of the turn — position-
 # anchored matching, spelled as the span_near contract over the
-# truncated token prefix in all three engines.
+# truncated token prefix in the index engine and the DuckDB oracle.
 _SPAN_FIRST = BooleanSpec(
     span_first=(("merge", "scan"),), span_slop=2, span_first_end=12, k=15
 )
-register("q_bm25_span_first", _mk_bm25(_SPAN_FIRST), bm25_oracle_sql(_SPAN_FIRST))
+register("q_bm25_span_first", _mk_idx_bm25(_SPAN_FIRST), bm25_oracle_sql(_SPAN_FIRST))
 register(
     "q_idx_bm25_span_first", _mk_idx_bm25(_SPAN_FIRST), bm25_oracle_sql(_SPAN_FIRST)
 )
@@ -2109,15 +2097,15 @@ register(
 # SpanPositionRangeQuery: the merge/scan near-span (window 4, any
 # order) must sit entirely within the 0-based position band [4, 16) —
 # span_first's generalization with a non-zero lower bound (positions
-# 0–3 are EXCLUDED, the discriminator vs span_first_end=16). Catalyst
-# and DuckDB run the span_near contract over the contiguous token
+# 0–3 are EXCLUDED, the discriminator vs span_first_end=16). DuckDB
+# runs the span_near contract over the contiguous token
 # sub-array; the index scorer bands absolute positions — same match
 # set because window containment is relative.
 _SPAN_RANGE = BooleanSpec(
     span_range=(("merge", "scan"),), span_slop=2,
     span_range_start=4, span_range_end=16, k=15,
 )
-register("q_bm25_span_range", _mk_bm25(_SPAN_RANGE), bm25_oracle_sql(_SPAN_RANGE))
+register("q_bm25_span_range", _mk_idx_bm25(_SPAN_RANGE), bm25_oracle_sql(_SPAN_RANGE))
 register(
     "q_idx_span_position_range", _mk_idx_bm25(_SPAN_RANGE),
     bm25_oracle_sql(_SPAN_RANGE),
@@ -2126,13 +2114,13 @@ register(
 # edismax pf (phrase-boost): OR query over merge/data (mm=1) where
 # docs containing the exact phrase "merge data" additionally gain
 # pf_boost × PhraseQuery score (Σ term idf × saturated phrase freq) —
-# matching is unchanged, ranking is not. Both executors + the shared
+# matching is unchanged, ranking is not. The index engine and the
 # DuckDB twin implement the pinned contract (model.pf_phrases).
 _PF = BooleanSpec(
     should=("merge", "data"), min_should_match=1,
     pf_phrases=(("merge", "data"),), pf_boost=2.0, k=20,
 )
-register("q_bm25_pf", _mk_bm25(_PF), bm25_oracle_sql(_PF))
+register("q_bm25_pf", _mk_idx_bm25(_PF), bm25_oracle_sql(_PF))
 register("q_idx_bm25_pf", _mk_idx_bm25(_PF), bm25_oracle_sql(_PF))
 
 # edismax ps (sloppy pf): the boost phrase "table merge" matches with
@@ -2143,7 +2131,7 @@ _PS = BooleanSpec(
     should=("table", "merge"), min_should_match=1,
     pf_phrases=(("table", "merge"),), pf_boost=2.0, pf_slop=2, k=20,
 )
-register("q_bm25_ps", _mk_bm25(_PS), bm25_oracle_sql(_PS))
+register("q_bm25_ps", _mk_idx_bm25(_PS), bm25_oracle_sql(_PS))
 register("q_idx_bm25_ps", _mk_idx_bm25(_PS), bm25_oracle_sql(_PS))
 
 # edismax front door: the full analyzed query as SHOULD under mm='50%'
@@ -2154,22 +2142,22 @@ from lucene_solr_spark.query.parser import edismax as _edismax  # noqa: E402
 _EDISMAX = _edismax("table merge strategy", mm="50%", pf_boost=1.5, k=20)
 register("q_idx_edismax", _mk_idx_bm25(_EDISMAX), bm25_oracle_sql(_EDISMAX))
 
-# Range fq (P12/P13 as a FILTER clause through BOTH executors):
+# Range fq (P12/P13 as a FILTER clause through the index engine):
 # `data ts:[2024-01-01T02:00:00 TO 2024-01-01T09:30:00]` — typed
-# timestamp bounds, docmap-mask on the index side, Catalyst filter on
+# timestamp bounds, docmap-mask on the index side, a WHERE clause on
 # the oracle side, same BM25 scores (fq never scores).
 _RANGE_FQ = BooleanSpec(
     must=("data",),
     range_filters=(("ts", "2024-01-01T02:00:00", "2024-01-01T09:30:00"),),
     k=12,
 )
-register("q_bm25_range_fq", _mk_bm25(_RANGE_FQ), bm25_oracle_sql(_RANGE_FQ))
+register("q_bm25_range_fq", _mk_idx_bm25(_RANGE_FQ), bm25_oracle_sql(_RANGE_FQ))
 register("q_idx_bm25_range_fq", _mk_idx_bm25(_RANGE_FQ), bm25_oracle_sql(_RANGE_FQ))
 
 _NEG_FILTER = BooleanSpec(
     must=("query",), not_filters=(("role", "assistant"),), k=12
 )
-register("q_bm25_neg_filter", _mk_bm25(_NEG_FILTER), bm25_oracle_sql(_NEG_FILTER))
+register("q_bm25_neg_filter", _mk_idx_bm25(_NEG_FILTER), bm25_oracle_sql(_NEG_FILTER))
 register("q_idx_bm25_neg_filter", _mk_idx_bm25(_NEG_FILTER), bm25_oracle_sql(_NEG_FILTER))
 
 
@@ -2228,10 +2216,10 @@ register(
 
 # FieldValueQuery fq (`tool:*` — ExistsQuery over docvalues): scored
 # BM25 restricted to docs WHERE the tool field has a value, through
-# both executors via the shared exists_filters mask path.
+# the index engine's exists_filters mask path.
 _EXISTS_SPEC = BooleanSpec(must=("data",), exists_filters=("tool",), k=12)
 register(
-    "q_bm25_exists_fq", _mk_bm25(_EXISTS_SPEC), bm25_oracle_sql(_EXISTS_SPEC)
+    "q_bm25_exists_fq", _mk_idx_bm25(_EXISTS_SPEC), bm25_oracle_sql(_EXISTS_SPEC)
 )
 register(
     "q_idx_bm25_exists_fq",
@@ -3468,7 +3456,7 @@ register(
 # BoostQuery / edismax qf weights (P14): per-term boosted disjunction.
 _BOOSTED = BooleanSpec(should=("fast", "slow", "vector"), min_should_match=1,
                        boosts=(("fast", 2.5), ("vector", 0.5)), k=15)
-register("q_bm25_boosted", _mk_bm25(_BOOSTED), bm25_oracle_sql(_BOOSTED))
+register("q_bm25_boosted", _mk_idx_bm25(_BOOSTED), bm25_oracle_sql(_BOOSTED))
 register("q_idx_bm25_boosted", _mk_idx_bm25(_BOOSTED), bm25_oracle_sql(_BOOSTED))
 
 

@@ -20,21 +20,19 @@ from lucene_solr_spark.registry import QUERIES
 from lucene_solr_spark.transcripts import transcripts_from_documents
 
 
-def test_synonym_query_blends_stats_not_or(spark, sf_dir):
+def test_synonym_query_blends_stats_not_or(spark, sf_dir, oracle_topk):
     """Discriminator: SynonymQuery must NOT equal the SHOULD-OR of its
     terms. OR sums idf(t)*sat(tf_t) per term; the blend saturates the
     summed tf once under one idf — on any doc containing BOTH terms
     with unequal dfs the two scores differ."""
-    from lucene_solr_spark.query.bm25_df import search as rel_search
     from lucene_solr_spark.query.model import BooleanSpec
 
     syn = {
         (r.conv_id, r.turn_idx): r.score
         for r in q_synonym_query(spark, sf_dir).collect()
     }
-    t = transcripts_from_documents(spark, sf_dir)
-    or_df = rel_search(t, BooleanSpec(should=_SYN_TERMS, k=12), round_to=4)
-    orr = {(r.conv_id, r.turn_idx): r.score for r in or_df.collect()}
+    or_df = oracle_topk(BooleanSpec(should=_SYN_TERMS, k=12), round_to=4)
+    orr = {(r.conv_id, r.turn_idx): r.score for r in or_df.itertuples()}
     assert syn  # non-empty
     overlap = set(syn) & set(orr)
     assert overlap

@@ -105,7 +105,7 @@ def test_delete_is_atomic_snapshot(spark, idx):
 
 
 # ---------------------------------------------------------------------------
-# randomized duel: deleted index == brute oracle minus deleted keys
+# randomized duel: deleted index == DuckDB oracle minus deleted keys
 # ---------------------------------------------------------------------------
 
 
@@ -123,31 +123,29 @@ def del_env(spark, sf_dir, tmp_path_factory):
         s.postings().groupBy("term").agg(F.sum("df").alias("df"))
         .orderBy(F.desc("df"), "term").toPandas()
     )
-    return s, t, vocab, s.deleted_keys
+    return s, vocab, s.deleted_keys
 
 
 @pytest.mark.parametrize("seed", range(8))
-def test_random_duel_with_deletes(del_env, seed):
-    """Deleted-index search == brute full-corpus scoring with deleted
+def test_random_duel_with_deletes(del_env, oracle_topk, seed):
+    """Deleted-index search == DuckDB full-corpus scoring with deleted
     keys dropped BEFORE the top-k cut (full-corpus stats, pinned
     tiebreak) — rank and float64-score identical."""
     import dataclasses
 
     import numpy as np
 
-    from lucene_solr_spark.query import bm25_df
     from tests.test_random_duel import random_spec
 
-    s, t, vocab, deleted = del_env
+    s, vocab, deleted = del_env
     rng = np.random.default_rng(10_000 + seed)
     spec = random_spec(rng, vocab)
     a = s.search(spec).toPandas()
 
     big = dataclasses.replace(spec, k=1_000_000)
-    brute = bm25_df.search(t, big).toPandas()
-    keep = ~brute.apply(lambda r: (r.conv_id, r.turn_idx) in deleted, axis=1) \
-        if len(brute) else brute.index == brute.index
-    brute = brute[keep].head(spec.k)
+    brute = oracle_topk(big)
+    keep = [k not in deleted for k in zip(brute.conv_id, brute.turn_idx)]
+    brute = brute[np.array(keep, dtype=bool)].head(spec.k)
 
     assert list(zip(a.conv_id, a.turn_idx)) == list(
         zip(brute.conv_id, brute.turn_idx)

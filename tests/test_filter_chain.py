@@ -138,27 +138,21 @@ def test_synonym_chain_mismatch_raises(syn_root, spark):
         IndexSearcher(spark, syn_root, analyzer_version="stop+sstem-v1")
 
 
-def test_synonym_search_merges_surface_forms(syn_root, spark, sf_dir):
+def test_synonym_search_merges_surface_forms(syn_root, spark, sf_dir, oracle_topk):
     """Searching the canonical term through the synonym index matches
-    the union of the raw-surface-form matches, rank-identical to a
-    brute Catalyst pass over the mapped token stream."""
+    the union of the raw-surface-form matches, rank-identical to the
+    DuckDB oracle over the mapped token stream."""
     from pyspark.sql import functions as F
 
-    from lucene_solr_spark.query import bm25_df
+    from lucene_solr_spark import registry
 
+    assert SYN == registry.SYN_RULES  # the oracle's CASE mapping spells SYN
     s = IndexSearcher(spark, syn_root, analyzer_version="syn-v1")
     spec = BooleanSpec(must=("lookup",), k=25)
     got = s.search(spec).toPandas()
 
     t = transcripts_from_documents(spark, sf_dir)
-    mapped = t.withColumn(
-        "text",
-        F.regexp_replace(
-            F.regexp_replace(F.lower("text"), r"\bscan\b", "lookup"),
-            r"\bquery\b", "lookup",
-        ),
-    )
-    want = bm25_df.search(mapped, spec).toPandas()
+    want = oracle_topk(spec, toks_sql=registry._syn_toks_sql())
     assert list(zip(got.conv_id, got.turn_idx)) == list(
         zip(want.conv_id, want.turn_idx)
     )

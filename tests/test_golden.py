@@ -1,6 +1,7 @@
 """Golden-response gate (assertQ/assertJQ analog, SURVEY §5): the
 distributed index engine must reproduce the committed golden top-k —
-docIDs AND scores — for the pinned reference query set. Regenerate
+docIDs AND scores — for the pinned reference query set, and the DuckDB
+oracle the goldens are read from must still reproduce them. Regenerate
 via tools/make_golden.py ONLY on a deliberate scoring-contract change."""
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ import pytest
 from lucene_solr_spark.index.build import build_index
 from lucene_solr_spark.query.executor import IndexSearcher
 from lucene_solr_spark.query.model import BooleanSpec
+from lucene_solr_spark.query.oracle import bm25_oracle_sql
 from lucene_solr_spark.transcripts import transcripts_from_documents
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden")
@@ -39,15 +41,19 @@ def searcher(spark, tmp_path_factory):
     return IndexSearcher(spark, root)
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES["queries"]))
-def test_golden(searcher, name):
+def golden_spec(name: str) -> BooleanSpec:
     spec_dict = dict(QUERIES["queries"][name])
     spec_dict["must"] = tuple(spec_dict["must"])
     spec_dict["should"] = tuple(spec_dict["should"])
     spec_dict["must_not"] = tuple(spec_dict["must_not"])
     spec_dict["phrases"] = tuple(tuple(p) for p in spec_dict["phrases"])
     spec_dict["filters"] = tuple((f, v) for f, v in spec_dict["filters"])
-    spec = BooleanSpec(**spec_dict)
+    return BooleanSpec(**spec_dict)
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES["queries"]))
+def test_golden(searcher, name):
+    spec = golden_spec(name)
     got = searcher.search(spec, round_to=QUERIES["round_to"]).toPandas()
     want = RESULTS[name]
     assert [[r.conv_id, r.turn_idx] for r in got.itertuples()] == [
@@ -56,3 +62,15 @@ def test_golden(searcher, name):
     assert np.allclose(
         got.score.to_numpy(), [w[2] for w in want], atol=1e-9
     ), name
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES["queries"]))
+def test_golden_from_oracle(duck, sf_dir, name):
+    """The goldens' source: the DuckDB oracle (over ``sf_dir``, the
+    goldens' corpus) at the goldens' rounding returns every committed
+    top-k list exactly."""
+    assert QUERIES["sf_dir"] == sf_dir
+    rows = duck.execute(
+        bm25_oracle_sql(golden_spec(name), round_to=QUERIES["round_to"])
+    ).fetchall()
+    assert [[c, int(t), float(sc)] for c, t, sc in rows] == RESULTS[name], name

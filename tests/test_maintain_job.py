@@ -3,6 +3,7 @@ clear-tombstones round trip, in-process."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 from lucene_solr_spark.index.build import build_index
@@ -11,7 +12,8 @@ from lucene_solr_spark.query.executor import IndexSearcher
 from lucene_solr_spark.query.model import BooleanSpec
 from lucene_solr_spark.transcripts import transcripts_from_documents
 
-sys.path.insert(0, "/root/repo/jobs")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "jobs"))
 from maintain_job import main  # noqa: E402
 
 
@@ -62,7 +64,6 @@ def test_ttl_delete_via_range_query(spark, sf_dir, tmp_path):
 
 
 def test_pipeline_cli_stages(spark, sf_dir, tmp_path):
-    sys.path.insert(0, "/root/repo/jobs")
     from pipeline_job import main as pmain
 
     st = pmain(["sample", "--sf-dir", sf_dir, "--out",
@@ -90,7 +91,6 @@ def test_pipeline_cli_stages(spark, sf_dir, tmp_path):
 
 
 def test_pipeline_cli_filter_stage(spark, sf_dir, tmp_path):
-    sys.path.insert(0, "/root/repo/jobs")
     from pipeline_job import main as pmain
 
     st = pmain(["filter", "--sf-dir", sf_dir, "--out",
@@ -107,7 +107,6 @@ def test_pipeline_cli_filter_stage(spark, sf_dir, tmp_path):
 
 
 def test_pipeline_cli_substring_stage(spark, sf_dir, tmp_path):
-    sys.path.insert(0, "/root/repo/jobs")
     from pipeline_job import main as pmain
 
     st = pmain(["substring", "--sf-dir", sf_dir, "--out",
@@ -125,7 +124,6 @@ def test_pipeline_cli_substring_stage(spark, sf_dir, tmp_path):
 
 
 def test_pipeline_cli_semdedup_stage(spark, sf_dir, tmp_path):
-    sys.path.insert(0, "/root/repo/jobs")
     from pipeline_job import main as pmain
 
     st = pmain(["semdedup", "--sf-dir", sf_dir, "--out",
@@ -149,7 +147,6 @@ def test_pipeline_cli_semdedup_stage(spark, sf_dir, tmp_path):
 
 
 def test_pipeline_cli_dsir_stage(spark, sf_dir, tmp_path):
-    sys.path.insert(0, "/root/repo/jobs")
     from pipeline_job import main as pmain
 
     st = pmain(["dsir", "--sf-dir", sf_dir, "--out",
@@ -167,7 +164,6 @@ def test_pipeline_cli_dsir_stage(spark, sf_dir, tmp_path):
 
 
 def test_pipeline_cli_classify_filter_stage(spark, sf_dir, tmp_path):
-    sys.path.insert(0, "/root/repo/jobs")
     from pipeline_job import main as pmain
 
     st = pmain(["classify-filter", "--sf-dir", sf_dir, "--out",
@@ -192,7 +188,6 @@ def test_pipeline_cli_classify_filter_stage(spark, sf_dir, tmp_path):
 
 
 def test_pipeline_cli_ppl_filter_stage(spark, sf_dir, tmp_path):
-    sys.path.insert(0, "/root/repo/jobs")
     from pipeline_job import main as pmain
 
     st = pmain(["ppl-filter", "--sf-dir", sf_dir, "--out",

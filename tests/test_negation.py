@@ -1,6 +1,6 @@
 """Negation semantics duel (ADVICE round 1): negated phrases, negated
 filters, pure-negative and filter-only DocSets, facet/pivot domains
-with filters — index engine vs brute Catalyst vs pandas reference.
+with filters — index engine vs DuckDB oracle vs pandas reference.
 
 The structural trap being guarded: the per-segment pass skips a
 segment containing NONE of the query's terms — for pure-negative/
@@ -9,12 +9,14 @@ pass must visit every segment for them."""
 
 from __future__ import annotations
 
+import dataclasses
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from lucene_solr_spark.analyzer import tokenize_one
 from lucene_solr_spark.index.build import build_index
-from lucene_solr_spark.query import bm25_df
 from lucene_solr_spark.query.executor import IndexSearcher
 from lucene_solr_spark.query.facets import FacetRequest, facet_field, facet_pivot
 from lucene_solr_spark.query.model import BooleanSpec
@@ -29,8 +31,9 @@ def env(spark, sf_dir, tmp_path_factory):
     # num_parts high enough that some segments lack rare terms
     build_index(spark, t, root, num_parts=6, lineage_source=sf_dir)
     s = IndexSearcher(spark, root)
-    pdf = bm25_df.doc_tokens(t).toPandas()
-    return s, t, pdf
+    pdf = t.select("conv_id", "turn_idx", "role", "tool", "text").toPandas()
+    pdf["toks"] = [tokenize_one(x) for x in pdf.pop("text")]
+    return s, pdf
 
 
 def _keys(df) -> set[tuple[str, int]]:
@@ -39,7 +42,7 @@ def _keys(df) -> set[tuple[str, int]]:
 
 def test_pure_negative_docset(env):
     """parse('-stream'): docs from term-free segments must survive."""
-    s, t, pdf = env
+    s, pdf = env
     got = _keys(s.docset(parse("-stream")))
     expect = {
         (r.conv_id, int(r.turn_idx))
@@ -52,7 +55,7 @@ def test_pure_negative_docset(env):
 
 
 def test_filter_only_docset(env):
-    s, t, pdf = env
+    s, pdf = env
     got = _keys(s.docset(parse("role:assistant")))
     expect = {
         (r.conv_id, int(r.turn_idx))
@@ -64,7 +67,7 @@ def test_filter_only_docset(env):
 
 def test_negated_filter_missing_matches(env):
     """-tool:tool_7 admits docs with tool NULL (differs-or-missing)."""
-    s, t, pdf = env
+    s, pdf = env
     spec = BooleanSpec(must=("data",), not_filters=(("tool", "tool_7"),))
     got = _keys(s.docset(spec))
     expect = {
@@ -79,36 +82,32 @@ def test_negated_filter_missing_matches(env):
     ), "fixture must exercise the missing-field case"
 
 
-def test_negated_phrase_search_duel(env):
-    """must=table, must_not_phrases=[(table, scan)]: idx == brute,
+def test_negated_phrase_search_duel(env, oracle_topk):
+    """must=table, must_not_phrases=[(table, scan)]: idx == oracle,
     rank and score identical."""
-    s, t, pdf = env
+    s, pdf = env
     spec = BooleanSpec(must=("table",), must_not_phrases=(("table", "scan"),), k=15)
     a = s.search(spec).toPandas()
-    b = bm25_df.search(t, spec).toPandas()
+    b = oracle_topk(spec)
     assert list(zip(a.conv_id, a.turn_idx)) == list(zip(b.conv_id, b.turn_idx))
     assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9)
     # the negation must actually remove phrase docs
-    full = bm25_df.search(t, BooleanSpec(must=("table",), k=1000)).toPandas()
-    assert len(full) > len(
-        bm25_df.search(t, spec.__class__(must=("table",),
-                                         must_not_phrases=(("table", "scan"),),
-                                         k=1000)).toPandas()
-    )
+    full = oracle_topk(BooleanSpec(must=("table",), k=1000))
+    assert len(full) > len(oracle_topk(dataclasses.replace(spec, k=1000)))
 
 
-def test_neg_filter_search_duel(env):
-    s, t, pdf = env
+def test_neg_filter_search_duel(env, oracle_topk):
+    s, pdf = env
     spec = BooleanSpec(must=("query",), not_filters=(("role", "assistant"),), k=15)
     a = s.search(spec).toPandas()
-    b = bm25_df.search(t, spec).toPandas()
+    b = oracle_topk(spec)
     assert list(zip(a.conv_id, a.turn_idx)) == list(zip(b.conv_id, b.turn_idx))
     assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9)
 
 
 def test_facet_pure_negative_domain(env):
     """Facet over '-merge': counts must include term-free segments."""
-    s, t, pdf = env
+    s, pdf = env
     got = facet_field(
         s, FacetRequest(field="role", limit=10),
         spec=BooleanSpec(must_not=("merge",)),
@@ -123,7 +122,7 @@ def test_facet_pure_negative_domain(env):
 def test_pivot_filtered_domain(env):
     """ADVICE: pivot with a FILTER clause must honor the fq mask
     (round 1 silently over-counted)."""
-    s, t, pdf = env
+    s, pdf = env
     spec = BooleanSpec(must=("data",), filters=(("role", "user"),))
     got = facet_pivot(s, ("role", "tool"), spec=spec, limits=(3, 2)).toPandas()
     sub = pdf[

@@ -1,11 +1,12 @@
 """edismax pf (phrase-boost) duels — the pinned PhraseQuery-scoring
-contract (model.pf_phrases) across all four spellings:
+contract (model.pf_phrases) across all three spellings:
 
     segment index (scorer._phrase_freqs bonus)
- == brute Catalyst (bm25_df._phrase_count_col bonus)
  == DuckDB oracle  (oracle._phrase_count_sql CTE)
  == numpy reference (this file)
 
+at 4 decimals against the numpy reference, and at full float64
+precision (rank identity, atol 1e-9) between the index and the oracle;
 plus the two contract discriminators: pf never changes the match set,
 and a second phrase occurrence raises the bonus sub-linearly (tf
 saturation), never linearly.
@@ -20,13 +21,11 @@ from __future__ import annotations
 import math
 from collections import Counter
 
-import duckdb
 import numpy as np
 import pytest
 
 from lucene_solr_spark.analyzer import tokenize_one
 from lucene_solr_spark.index.build import build_index
-from lucene_solr_spark.query import bm25_df
 from lucene_solr_spark.query.executor import IndexSearcher
 from lucene_solr_spark.query.model import B, K1, BooleanSpec
 from lucene_solr_spark.query.oracle import bm25_oracle_sql
@@ -44,11 +43,15 @@ def env(spark, sf_dir, tmp_path_factory):
     s = IndexSearcher(spark, root)
     pdf = t.toPandas()
     pdf["toks"] = [tokenize_one(x) for x in pdf["text"]]
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-    )
-    return s, t, pdf, con
+    return s, pdf
+
+
+def assert_raw_duel(s, oracle_topk, spec, msg):
+    """Unrounded index scores == the unrounded oracle: same ranks,
+    float64 scores within 1e-9."""
+    a, b = s.search(spec).toPandas(), oracle_topk(spec)
+    assert list(zip(a.conv_id, a.turn_idx)) == list(zip(b.conv_id, b.turn_idx)), msg
+    assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9), msg
 
 
 def _phrase_count(toks: list[str], phrase: tuple[str, ...]) -> int:
@@ -113,8 +116,8 @@ def rand_pf(rng: np.random.Generator, pdf):
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_pf_duel(env, seed):
-    s, t, pdf, con = env
+def test_pf_duel(env, duck, oracle_topk, seed):
+    s, pdf = env
     rng = np.random.default_rng(seed)
     ph = rand_pf(rng, pdf)
     boost = float(rng.choice([0.5, 1.0, 2.0, 3.5]))
@@ -134,21 +137,17 @@ def test_pf_duel(env, seed):
     ]
     assert got_idx == want, (ph, boost)
 
-    got_df = [
-        (r.conv_id, int(r.turn_idx), float(r.score))
-        for r in bm25_df.search(t, spec, round_to=ROUND).collect()
-    ]
-    assert got_df == want, (ph, boost)
-
     got_duck = [
         (r[0], int(r[1]), float(r[2]))
-        for r in con.execute(bm25_oracle_sql(spec)).fetchall()
+        for r in duck.execute(bm25_oracle_sql(spec)).fetchall()
     ]
     assert got_duck == want, (ph, boost)
 
+    assert_raw_duel(s, oracle_topk, spec, (ph, boost))
+
 
 def test_pf_does_not_change_match_set(env):
-    s, t, pdf, con = env
+    s, _pdf = env
     base = BooleanSpec(should=("merge", "data"), min_should_match=1, k=10**6)
     pf = BooleanSpec(
         should=("merge", "data"), min_should_match=1,
@@ -194,12 +193,12 @@ def test_pf_saturates_with_freq():
     assert bonus["c2"] < 2 * bonus["c1"]  # saturation, not linear
 
 
-def test_pf_shingles_duel(env):
+def test_pf_shingles_duel(env, duck, oracle_topk):
     """Multi-phrase pf (edismax pf+pf2): whole-query phrase + bigram
-    shingles all contribute independent bonuses — 4-way agreement."""
+    shingles all contribute independent bonuses — 3-way agreement."""
     from lucene_solr_spark.query.parser import edismax
 
-    s, t, pdf, con = env
+    s, pdf = env
     spec = edismax(
         "table merge strategy", mm=1, pf=True, pf2=True,
         pf_boost=1.5, k=25,
@@ -212,16 +211,12 @@ def test_pf_shingles_duel(env):
         for r in s.search(spec, round_to=ROUND).collect()
     ]
     assert got_idx == want
-    got_df = [
-        (r.conv_id, int(r.turn_idx), float(r.score))
-        for r in bm25_df.search(t, spec, round_to=ROUND).collect()
-    ]
-    assert got_df == want
     got_duck = [
         (r[0], int(r[1]), float(r[2]))
-        for r in con.execute(bm25_oracle_sql(spec)).fetchall()
+        for r in duck.execute(bm25_oracle_sql(spec)).fetchall()
     ]
     assert got_duck == want
+    assert_raw_duel(s, oracle_topk, spec, spec.pf_phrases)
 
 
 # --- edismax ps (sloppy pf) — r4 ---------------------------------------
@@ -294,10 +289,10 @@ def brute_ps_topk(pdf, spec: BooleanSpec, k: int):
 
 
 @pytest.mark.parametrize("seed", SEEDS[:8])
-def test_ps_duel(env, seed):
-    """4-way: index scorer / Catalyst brute / DuckDB oracle / pure
-    python — random sloppy boost phrases with random slop."""
-    s, t, pdf, con = env
+def test_ps_duel(env, duck, oracle_topk, seed):
+    """3-way: index scorer / DuckDB oracle / pure python — random
+    sloppy boost phrases with random slop."""
+    s, pdf = env
     rng = np.random.default_rng(4000 + seed)
     ph = rand_pf(rng, pdf)
     slop = int(rng.integers(1, 4))
@@ -311,22 +306,18 @@ def test_ps_duel(env, seed):
         for r in s.search(spec, round_to=ROUND).collect()
     ]
     assert got_idx == want, (ph, slop)
-    got_df = [
-        (r.conv_id, int(r.turn_idx), float(r.score))
-        for r in bm25_df.search(t, spec, round_to=ROUND).collect()
-    ]
-    assert got_df == want, (ph, slop)
     got_duck = [
         (r[0], int(r[1]), float(r[2]))
-        for r in con.execute(bm25_oracle_sql(spec)).fetchall()
+        for r in duck.execute(bm25_oracle_sql(spec)).fetchall()
     ]
     assert got_duck == want, (ph, slop)
+    assert_raw_duel(s, oracle_topk, spec, (ph, slop))
 
 
 def test_ps_zero_slop_is_exact_pf(env):
     """pf_slop=0 must be byte-identical to the exact pf path — one
     counting family."""
-    s, _t, _pdf, _con = env
+    s, _pdf = env
     base = BooleanSpec(
         should=("merge", "data"), min_should_match=1,
         pf_phrases=(("merge", "data"),), pf_boost=2.0, k=20,
@@ -344,7 +335,7 @@ def test_ps_boosts_docs_exact_pf_misses(env):
     """Discriminator: with phrase (table, merge) and slop 2, docs
     carrying the injected 'table scan merge' span gain a bonus the
     exact pf cannot see — the ps ranking must differ from pf's."""
-    s, _t, pdf, _con = env
+    s, pdf = env
     has_gap_span = any(
         _sloppy_start_count(r.toks, ("table", "merge"), 2)
         > _phrase_count(r.toks, ("table", "merge"))

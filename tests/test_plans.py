@@ -97,22 +97,6 @@ def test_conv_search_no_global_sort_below_agg(searcher):
     assert "partial_max" in plan or "partial_sum" in plan, plan
 
 
-def test_rerank_no_global_sort_in_second_pass(spark, sf_dir):
-    """rerank phase 2 scores unsorted (score_all); the only global
-    orderings are phase-1's top-N and the final top-k."""
-    from lucene_solr_spark.query import bm25_df
-    from lucene_solr_spark.query.model import BooleanSpec
-
-    t = transcripts_from_documents(spark, sf_dir)
-    plan = _physical(
-        bm25_df.rerank(
-            t, BooleanSpec(must=("merge",)), ["sort"],
-            rerank_docs=20, rerank_weight=2.0, k=10,
-        )
-    )
-    assert plan.count("TakeOrderedAndProject") == 2, plan
-
-
 def test_tokenizer_is_jvm_side(spark, sf_dir):
     """The Catalyst tokenizer spelling must not introduce a Python UDF
     (BatchEvalPython) — brute-force scoring stays JVM-side."""
@@ -236,23 +220,6 @@ def test_collapse_expand_windows_are_key_partitioned(spark, sf_dir):
     assert "SinglePartition" not in collapse_plan.split("TakeOrdered")[0].split(
         "Window"
     )[0], "no single-partition exchange below the rank window"
-
-
-def test_pf_query_no_cartesian_and_broadcast_weights(spark, sf_dir):
-    """The pf Catalyst path: idf-sum and stats joins broadcast; no
-    cartesian anywhere; the only non-broadcast join is the final
-    doc-keyed bonus merge."""
-    from lucene_solr_spark.query import bm25_df
-    from lucene_solr_spark.query.model import BooleanSpec
-
-    t = transcripts_from_documents(spark, sf_dir)
-    spec = BooleanSpec(
-        should=("merge", "data"), min_should_match=1,
-        pf_phrases=(("merge", "data"),), pf_boost=2.0, k=20,
-    )
-    plan = _physical(bm25_df.search(t, spec, round_to=4))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan
 
 
 def test_fetch_stream_broadcasts_stream_side(spark, sf_dir):

@@ -1,15 +1,18 @@
 """Dueling implementations (SURVEY §5, TestDuelingCodecs analog):
 the segment-index engine must be rank-identical — docIDs AND float64
-scores — to the pinned brute-force Catalyst oracle on every query
-shape; WAND-pruned disjunctions must equal unpruned scoring."""
+scores — to the DuckDB oracle on every query shape; WAND-pruned
+disjunctions must equal unpruned scoring."""
 
 from __future__ import annotations
+
+import re
+from collections import Counter
 
 import numpy as np
 import pytest
 
+from lucene_solr_spark.analyzer import tokenize_one
 from lucene_solr_spark.index.build import build_index
-from lucene_solr_spark.query import bm25_df
 from lucene_solr_spark.query.executor import IndexSearcher
 from lucene_solr_spark.query.model import BooleanSpec
 from lucene_solr_spark.registry import BM25_SPECS
@@ -24,24 +27,61 @@ def searcher(spark, sf_dir, tmp_path_factory):
     return IndexSearcher(spark, root), t
 
 
+@pytest.fixture(scope="module")
+def doc_freq(searcher):
+    """term → df over the tokenized corpus (not the index dictionary)."""
+    _s, t = searcher
+    texts = t.select("text").toPandas().text
+    return Counter(x for text in texts for x in set(tokenize_one(text)))
+
+
+def brute_expand(doc_freq, spec, max_expansions=1024):
+    """Brute MultiTermQuery rewrite over the corpus vocabulary: Lucene
+    wildcard (``*`` any run, ``?`` one char, ``\\`` escapes) and
+    whole-term regexp, each pattern's matches ranked (df desc, term asc)
+    and capped at ``max_expansions`` — the expanded SHOULD tuple."""
+
+    def wildcard_re(pat):
+        out, i = [], 0
+        while i < len(pat):
+            c = pat[i]
+            if c == "\\" and i + 1 < len(pat):
+                i += 1
+                out.append(re.escape(pat[i]))
+            else:
+                out.append({"*": ".*", "?": "."}.get(c, re.escape(c)))
+            i += 1
+        return re.compile("".join(out), re.S)
+
+    vocab = sorted(doc_freq, key=lambda x: (-doc_freq[x], x))
+    extra = []
+    for rx in [wildcard_re(p) for p in spec.wildcards] + [
+        re.compile(p) for p in spec.regexps
+    ]:
+        extra += sorted([x for x in vocab if rx.fullmatch(x)][:max_expansions])
+    return spec.should + tuple(
+        x for x in dict.fromkeys(extra) if x not in spec.should
+    )
+
+
 @pytest.mark.parametrize("name", list(BM25_SPECS))
-def test_rank_identical_to_oracle(searcher, name):
-    s, t = searcher
+def test_rank_identical_to_oracle(searcher, oracle_topk, name):
+    s, _t = searcher
     spec = BM25_SPECS[name]
     a = s.search(spec).toPandas()
-    b = bm25_df.search(t, spec).toPandas()
+    b = oracle_topk(spec)
     assert list(zip(a.conv_id, a.turn_idx)) == list(zip(b.conv_id, b.turn_idx)), name
     assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9), name
 
 
-def test_wand_pruning_equals_exact(searcher):
-    """Pure-disjunction path (block-max WAND) == exact: compare against
-    the same spec forced down the exact path via min_should_match=1
-    being widened to an mm=0 'must of nothing' equivalent oracle."""
-    s, t = searcher
+def test_wand_pruning_equals_exact(searcher, oracle_topk):
+    """Pure-disjunction path (block-max WAND) == exact: the oracle
+    scores every matching doc, so a doc WAND wrongly skipped would
+    show as a rank difference."""
+    s, _t = searcher
     spec = BooleanSpec(should=("the", "fast", "merge", "w1"), min_should_match=1, k=25)
     a = s.search(spec).toPandas()
-    b = bm25_df.search(t, spec).toPandas()
+    b = oracle_topk(spec)
     assert list(zip(a.conv_id, a.turn_idx)) == list(zip(b.conv_id, b.turn_idx))
     assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9)
 
@@ -51,12 +91,12 @@ def test_missing_term_yields_empty(searcher):
     assert s.search(BooleanSpec(must=("zzzzneverseen",), k=5)).count() == 0
 
 
-def test_phrase_requires_adjacency(searcher):
-    s, t = searcher
+def test_phrase_requires_adjacency(searcher, oracle_topk):
+    s, _t = searcher
     spec = BooleanSpec(phrases=(("table", "scan"),), k=50)
     hits = s.search(spec).toPandas()
     # every hit's text must contain the adjacent phrase per the oracle
-    b = bm25_df.search(t, spec).toPandas()
+    b = oracle_topk(spec)
     assert set(zip(hits.conv_id, hits.turn_idx)) == set(zip(b.conv_id, b.turn_idx))
 
 
@@ -80,32 +120,30 @@ def test_expand_terms_bounded(searcher):
     assert set(capped) == top5
 
 
-def test_string_range_fq_is_lexicographic_in_both_engines(searcher):
+def test_string_range_fq_is_lexicographic_in_both_engines(searcher, oracle_topk):
     """ADVICE r2: a numeric-parseable bound on a STRING field must
-    compare lexicographically in the Catalyst executor too (literal
-    typed by the target column, not by bound parseability) — all
-    engines must agree."""
+    compare lexicographically (literal typed by the target column, not
+    by bound parseability) — the index engine and the oracle agree."""
     s, t = searcher
     # lexicographic window catching 'assistant' but not 'user'/'tool'
     spec = BooleanSpec(
         must=("merge",), range_filters=(("role", "a", "s"),), k=50
     )
     a = s.search(spec).toPandas()
-    b = bm25_df.search(t, spec).toPandas()
+    b = oracle_topk(spec)
     assert list(zip(a.conv_id, a.turn_idx)) == list(zip(b.conv_id, b.turn_idx))
     assert len(a) > 0 and set(["assistant"]) >= set(
         t.filter(t.role >= "a").filter(t.role <= "s")
         .select("role").distinct().toPandas()["role"]
     )
     # numeric-looking bounds on a string field: lexicographic → no role
-    # matches; the old parseability coercion made Catalyst compare
-    # numerically (NULL-casting every row) while the index engine and
-    # oracle compared as strings
+    # matches (a parseability coercion would compare numerically,
+    # NULL-casting every row)
     spec2 = BooleanSpec(
         must=("merge",), range_filters=(("role", "1", "5"),), k=50
     )
     a2 = s.search(spec2).toPandas()
-    b2 = bm25_df.search(t, spec2).toPandas()
+    b2 = oracle_topk(spec2)
     assert list(zip(a2.conv_id, a2.turn_idx)) == list(
         zip(b2.conv_id, b2.turn_idx)
     )
@@ -158,36 +196,36 @@ def test_cursor_paging_equals_offset_paging(searcher):
     assert len(set(keys)) == len(keys)
 
 
-def test_query_string_multiterm_rank_identical(searcher):
-    """parse('data s?a* /w.*w/') through BOTH engines: the index path
-    auto-rewrites via the dictionary scan, the Catalyst path via the
-    corpus-vocabulary scan — identical expansion, identical ranks."""
+def test_query_string_multiterm_rank_identical(searcher, doc_freq, oracle_topk):
+    """parse('data s?a* /w.*w/'): the index path auto-rewrites via the
+    dictionary scan, which must expand to the brute corpus-vocabulary
+    expansion; the rewritten spec then ranks identically in the oracle."""
     from lucene_solr_spark.query.parser import parse
 
-    s, t = searcher
+    s, _t = searcher
     spec = parse("data s?a* /w.*w/", k=20)
+    rw_idx = s.rewrite(spec)
+    assert not rw_idx.needs_rewrite
+    assert rw_idx.should == brute_expand(doc_freq, spec)
+    assert len(rw_idx.should) > len(spec.should)
     a = s.search(spec).toPandas()
-    b = bm25_df.search(t, spec).toPandas()
+    b = oracle_topk(rw_idx)
     assert len(a) > 0
     assert list(zip(a.conv_id, a.turn_idx)) == list(zip(b.conv_id, b.turn_idx))
     assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9)
-    # the two rewrites expand to the same term set
-    rw_idx = s.rewrite(spec)
-    rw_df = bm25_df.rewrite_multiterm(t, spec)
-    assert rw_idx.should == rw_df.should
-    assert not rw_idx.needs_rewrite
 
 
-def test_empty_multiterm_rewrite_yields_zero_hits(searcher):
+def test_empty_multiterm_rewrite_yields_zero_hits(searcher, doc_freq):
     """A wildcard matching nothing = Lucene's empty rewrite: zero
-    hits (never an error, never MatchAll), in BOTH engines, for both
-    search and docset."""
+    hits (never an error, never MatchAll), for both search and
+    docset; the corpus vocabulary has no term it could expand to."""
     from lucene_solr_spark.query.parser import parse
 
-    s, t = searcher
+    s, _t = searcher
     spec = parse("zzz*", k=5)
+    assert brute_expand(doc_freq, spec) == ()
+    assert s.rewrite(spec).should == ()
     assert s.search(spec).count() == 0
-    assert bm25_df.search(t, spec).count() == 0
     assert s.docset(spec).count() == 0
     # with another positive clause the query degrades gracefully to it
     spec2 = parse("+merge zzz*", k=5)

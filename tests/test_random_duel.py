@@ -1,8 +1,7 @@
 """Randomized dueling suite (LuceneTestCase / TestDuelingCodecs
 philosophy, SURVEY §5): seeded random boolean query shapes over the
 real corpus vocabulary — the segment engine must be rank-identical
-(docIDs AND float64 scores) to the brute-force Catalyst oracle on
-every one. Seeds are fixed → reproducible; widen SEEDS to fuzz."""
+(docIDs AND float64 scores) to the DuckDB oracle on every one. Seeds are fixed → reproducible; widen SEEDS to fuzz."""
 
 from __future__ import annotations
 
@@ -11,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.index.build import build_index
-from lucene_solr_spark.query import bm25_df
 from lucene_solr_spark.query.executor import IndexSearcher
 from lucene_solr_spark.query.model import BooleanSpec
 from lucene_solr_spark.transcripts import transcripts_from_documents
@@ -39,7 +37,7 @@ def env(spark, sf_dir, tmp_path_factory):
         s.postings().groupBy("term").agg(F.sum("df").alias("df"))
         .orderBy(F.desc("df"), "term").toPandas()
     )
-    return s, sm, t, vocab
+    return s, sm, vocab
 
 
 def random_spec(rng: np.random.Generator, vocab) -> BooleanSpec:
@@ -98,15 +96,15 @@ def random_spec(rng: np.random.Generator, vocab) -> BooleanSpec:
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_random_duel(env, seed):
-    """Three-way: fresh index == merged index == brute-force oracle
+def test_random_duel(env, oracle_topk, seed):
+    """Three-way: fresh index == merged index == DuckDB oracle
     (rank AND score identical) — segment-layout invariance under
     random query shapes."""
-    s, sm, t, vocab = env
+    s, sm, vocab = env
     rng = np.random.default_rng(seed)
     spec = random_spec(rng, vocab)
     a = s.search(spec).toPandas()
-    b = bm25_df.search(t, spec).toPandas()
+    b = oracle_topk(spec)
     c = sm.search(spec).toPandas()
     assert list(zip(a.conv_id, a.turn_idx)) == list(zip(b.conv_id, b.turn_idx)), spec
     assert np.allclose(a.score.to_numpy(), b.score.to_numpy(), atol=1e-9), spec

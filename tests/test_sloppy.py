@@ -4,24 +4,21 @@ Pinned contract (SloppyPhraseMatcher in-order subset): a doc matches
 phrase (t1..tn) at slop s iff exists positions p1<...<pn with
 toks[pi]=ti and pn - p1 <= s + n - 1 (total intervening gap <= s).
 
-Three executors must agree with a brute-force pure-Python reference:
-the Catalyst higher-order-function predicate (bm25_df), the numpy
-chain DP in the segment scorer (executor.docset), and the DuckDB SQL
-clause (oracle)."""
+Both executors must agree with a brute-force pure-Python reference:
+the numpy chain DP in the segment scorer (executor.docset) and the
+DuckDB SQL clause (oracle)."""
 
 from __future__ import annotations
 
-import duckdb
 import numpy as np
 import pytest
 
 from lucene_solr_spark.analyzer import tokenize_one
 from lucene_solr_spark.index.build import build_index
-from lucene_solr_spark.query import bm25_df
 from lucene_solr_spark.query.executor import IndexSearcher
 from lucene_solr_spark.query.model import BooleanSpec
 from lucene_solr_spark.query.oracle import _phrase_clause
-from lucene_solr_spark.transcripts import TRANSCRIPTS_ORACLE_CTE, transcripts_from_documents
+from lucene_solr_spark.transcripts import transcripts_from_documents
 
 SEEDS = list(range(12))
 
@@ -54,11 +51,7 @@ def env(spark, sf_dir, tmp_path_factory):
     s = IndexSearcher(spark, root)
     pdf = t.toPandas()
     pdf["toks"] = [tokenize_one(x) for x in pdf["text"]]
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-    )
-    return s, t, pdf, con
+    return s, pdf
 
 
 def rand_phrase(rng: np.random.Generator, pdf) -> tuple[tuple[str, ...], int]:
@@ -81,8 +74,8 @@ def rand_phrase(rng: np.random.Generator, pdf) -> tuple[tuple[str, ...], int]:
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_sloppy_duel(env, seed):
-    s, t, pdf, con = env
+def test_sloppy_duel(env, oracle_docs, seed):
+    s, pdf = env
     rng = np.random.default_rng(seed)
     phrase, slop = rand_phrase(rng, pdf)
     spec = BooleanSpec(phrases=(phrase,), phrase_slop=slop)
@@ -100,22 +93,5 @@ def test_sloppy_duel(env, seed):
     }
     assert got_idx == expect, (phrase, slop)
 
-    got_df = {
-        (r.conv_id, int(r.turn_idx))
-        for r in bm25_df.doc_tokens(t)
-        .filter(bm25_df._phrase_pred(phrase, slop))
-        .select("conv_id", "turn_idx")
-        .collect()
-    }
-    assert got_df == expect, (phrase, slop)
-
-    clause = _phrase_clause(phrase, slop)
-    sql = f"""WITH {TRANSCRIPTS_ORACLE_CTE},
-docs AS (SELECT conv_id, turn_idx,
-                regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-         FROM transcripts)
-SELECT conv_id, turn_idx FROM docs WHERE {clause}"""
-    got_duck = {
-        (r[0], int(r[1])) for r in con.execute(sql).fetchall()
-    }
+    got_duck = oracle_docs(_phrase_clause(phrase, slop))
     assert got_duck == expect, (phrase, slop)

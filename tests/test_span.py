@@ -1,18 +1,26 @@
 """Unordered span-near (SpanNearQuery inOrder=false): pinned window
 contract — ∃ one occurrence per distinct group term with max−min ≤
-len(group)+slop−1, any order. 3-way duel: index path vs Catalyst vs a
-brute python reference, random groups drawn from real docs."""
+len(group)+slop−1, any order. 3-way duel: index path vs the DuckDB
+oracle clause vs a brute python reference, random groups drawn from
+real docs; hand-built edge docs run the oracle clause over a pandas
+frame."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from lucene_solr_spark.analyzer import tokenize_one
 from lucene_solr_spark.index.build import build_index
-from lucene_solr_spark.query import bm25_df
 from lucene_solr_spark.query.executor import IndexSearcher
 from lucene_solr_spark.query.model import BooleanSpec
+from lucene_solr_spark.query.oracle import (
+    _multi_phrase_clause,
+    _span_clause,
+    _span_not_clause,
+    _span_within_clause,
+)
 from lucene_solr_spark.transcripts import transcripts_from_documents
 
 SEEDS = list(range(10))
@@ -39,7 +47,15 @@ def env(spark, sf_dir, tmp_path_factory):
     s = IndexSearcher(spark, root)
     pdf = t.toPandas()
     pdf["toks"] = [tokenize_one(x) for x in pdf["text"]]
-    return s, t, pdf
+    return s, pdf
+
+
+def text_frame(rows) -> pd.DataFrame:
+    """(conv_id, turn_idx, text) rows → the oracle clause's toks frame."""
+    return pd.DataFrame(
+        [(c, i, tokenize_one(tx)) for c, i, tx in rows],
+        columns=["conv_id", "turn_idx", "toks"],
+    )
 
 
 def rand_group(rng: np.random.Generator, pdf):
@@ -65,8 +81,8 @@ def rand_group(rng: np.random.Generator, pdf):
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_span_duel(env, seed):
-    s, t, pdf, = env
+def test_span_duel(env, oracle_docs, seed):
+    s, pdf = env
     rng = np.random.default_rng(seed)
     group, slop = rand_group(rng, pdf)
     spec = BooleanSpec(span_near=(group,), span_slop=slop)
@@ -81,43 +97,25 @@ def test_span_duel(env, seed):
     got_idx = {(r.conv_id, int(r.turn_idx)) for r in s.docset(spec).collect()}
     assert got_idx == expect, (group, slop)
 
-    got_df = {
-        (r.conv_id, int(r.turn_idx))
-        for r in bm25_df.doc_tokens(t)
-        .filter(bm25_df._span_pred(group, slop))
-        .select("conv_id", "turn_idx")
-        .collect()
-    }
-    assert got_df == expect, (group, slop)
+    got_duck = oracle_docs(_span_clause(group, slop))
+    assert got_duck == expect, (group, slop)
 
 
-def test_span_unordered_catches_reversal(spark):
+def test_span_unordered_catches_reversal(oracle_docs):
     """An ordered sloppy phrase misses 'b … a'; span-near must not."""
-    import datetime
-
-    from lucene_solr_spark.transcripts import TRANSCRIPTS_SCHEMA
-
-    rows = [
-        ("c1", 0, "user", "beta junk alpha end", None,
-         datetime.datetime(2024, 1, 1)),
-        ("c2", 0, "user", "alpha junk junk junk junk beta", None,
-         datetime.datetime(2024, 1, 1)),
-    ]
-    t = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    got = (
-        bm25_df.doc_tokens(t)
-        .filter(bm25_df._span_pred(("alpha", "beta"), 1))
-        .select("conv_id")
-        .collect()
-    )
+    frame = text_frame([
+        ("c1", 0, "beta junk alpha end"),
+        ("c2", 0, "alpha junk junk junk junk beta"),
+    ])
+    got = oracle_docs(_span_clause(("alpha", "beta"), 1), frame)
     # window 3: c1 matches reversed within 3; c2's span is 6 → no
-    assert {r.conv_id for r in got} == {"c1"}
+    assert got == {("c1", 0)}
 
 
 def test_span_scores_match_term_and(env):
     """Span terms contribute MUST scoring — scores equal the plain
     AND query's scores on the surviving docs (filter never rescores)."""
-    s, t, _ = env
+    s, _ = env
     spec = BooleanSpec(span_near=(("merge", "scan"),), span_slop=3, k=10)
     got = {(r.conv_id, r.turn_idx): round(r.score, 4)
            for r in s.search(spec, round_to=4).collect()}
@@ -153,10 +151,10 @@ def ref_span_not_match(
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_span_not_duel(env, seed):
+def test_span_not_duel(env, oracle_docs, seed):
     """3-way duel for SpanNotQuery on random include groups + a real
     exclude term drawn from the corpus."""
-    s, t, pdf = env
+    s, pdf = env
     rng = np.random.default_rng(1000 + seed)
     inc, slop = rand_group(rng, pdf)
     vocab = sorted({x for ts in pdf["toks"] for x in ts} - set(inc))
@@ -172,21 +170,15 @@ def test_span_not_duel(env, seed):
     got_idx = {(r.conv_id, int(r.turn_idx)) for r in s.docset(spec).collect()}
     assert got_idx == expect, (inc, exc, slop)
 
-    got_df = {
-        (r.conv_id, int(r.turn_idx))
-        for r in bm25_df.doc_tokens(t)
-        .filter(bm25_df._span_not_pred(inc, exc, slop))
-        .select("conv_id", "turn_idx")
-        .collect()
-    }
-    assert got_df == expect, (inc, exc, slop)
+    got_duck = oracle_docs(_span_not_clause(inc, exc, slop))
+    assert got_duck == expect, (inc, exc, slop)
 
 
 @pytest.mark.parametrize("seed", SEEDS[:5])
-def test_span_or_duel(env, seed):
+def test_span_or_duel(env, oracle_docs, seed):
     """3-way duel for SpanOrQuery: two random span-near alternatives,
     expectation = union of the per-group brute matches."""
-    s, t, pdf = env
+    s, pdf = env
     rng = np.random.default_rng(2000 + seed)
     g1, slop = rand_group(rng, pdf)
     g2, _ = rand_group(rng, pdf)
@@ -202,42 +194,22 @@ def test_span_or_duel(env, seed):
     got_idx = {(r.conv_id, int(r.turn_idx)) for r in s.docset(spec).collect()}
     assert got_idx == expect, (g1, g2, slop)
 
-    pred = bm25_df._span_pred(g1, slop) | bm25_df._span_pred(g2, slop)
-    got_df = {
-        (r.conv_id, int(r.turn_idx))
-        for r in bm25_df.doc_tokens(t).filter(pred)
-        .select("conv_id", "turn_idx").collect()
-    }
-    assert got_df == expect, (g1, g2, slop)
+    got_duck = oracle_docs(
+        f"({_span_clause(g1, slop)}) OR ({_span_clause(g2, slop)})"
+    )
+    assert got_duck == expect, (g1, g2, slop)
 
 
-def test_span_not_positional_vs_boolean_not(spark):
+def test_span_not_positional_vs_boolean_not(oracle_docs):
     """The exclusion is POSITIONAL: a doc with the exclude term outside
     the include span must survive (where -term would kill it)."""
-    import datetime
-
-    from lucene_solr_spark.transcripts import TRANSCRIPTS_SCHEMA
-
-    rows = [
-        # scan BETWEEN table..merge → excluded
-        ("c1", 0, "user", "table scan merge end", None,
-         datetime.datetime(2024, 1, 1)),
-        # scan AFTER the span → survives
-        ("c2", 0, "user", "table merge junk scan", None,
-         datetime.datetime(2024, 1, 1)),
-        # no scan at all → survives
-        ("c3", 0, "user", "junk table merge", None,
-         datetime.datetime(2024, 1, 1)),
-    ]
-    t = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
-    got = {
-        r.conv_id
-        for r in bm25_df.doc_tokens(t)
-        .filter(bm25_df._span_not_pred(("table", "merge"), ("scan",), 1))
-        .select("conv_id")
-        .collect()
-    }
-    assert got == {"c2", "c3"}
+    frame = text_frame([
+        ("c1", 0, "table scan merge end"),  # scan BETWEEN table..merge → excluded
+        ("c2", 0, "table merge junk scan"),  # scan AFTER the span → survives
+        ("c3", 0, "junk table merge"),  # no scan at all → survives
+    ])
+    got = oracle_docs(_span_not_clause(("table", "merge"), ("scan",), 1), frame)
+    assert got == {("c2", 0), ("c3", 0)}
 
 
 # --- span_first (SpanFirstQuery) --------------------------------------
@@ -251,8 +223,8 @@ def ref_span_first_match(
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_span_first_duel(env, seed):
-    s, t, pdf = env
+def test_span_first_duel(env, oracle_docs, seed):
+    s, pdf = env
     rng = np.random.default_rng(3000 + seed)
     group, slop = rand_group(rng, pdf)
     end = int(rng.integers(len(group) + slop, 25))
@@ -268,20 +240,14 @@ def test_span_first_duel(env, seed):
     got_idx = {(r.conv_id, int(r.turn_idx)) for r in s.docset(spec).collect()}
     assert got_idx == expect, (group, slop, end)
 
-    got_df = {
-        (r.conv_id, int(r.turn_idx))
-        for r in bm25_df.doc_tokens(t)
-        .filter(bm25_df._span_pred(group, slop, prefix_end=end))
-        .select("conv_id", "turn_idx")
-        .collect()
-    }
-    assert got_df == expect, (group, slop, end)
+    got_duck = oracle_docs(_span_clause(group, slop, prefix_end=end))
+    assert got_duck == expect, (group, slop, end)
 
 
 def test_span_first_is_stricter_than_near(env):
     """Same group, capped to the doc head: span_first hits must be a
     strict subset of the span_near hits on this corpus."""
-    s, _t, _pdf = env
+    s, _pdf = env
     near = BooleanSpec(span_near=(("merge", "scan"),), span_slop=2)
     first = BooleanSpec(span_first=(("merge", "scan"),), span_slop=2,
                         span_first_end=12)
@@ -301,11 +267,11 @@ def ref_span_range_match(
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_span_range_duel(env, seed):
+def test_span_range_duel(env, oracle_docs, seed):
     """3-way duel for SpanPositionRangeQuery: the index scorer bands
-    absolute positions, Catalyst/DuckDB run the span_near contract over
-    the token sub-array — both must equal the brute reference."""
-    s, t, pdf = env
+    absolute positions, DuckDB runs the span_near contract over the
+    token sub-array — both must equal the brute reference."""
+    s, pdf = env
     rng = np.random.default_rng(8000 + seed)
     group, slop = rand_group(rng, pdf)
     start = int(rng.integers(0, 8))
@@ -324,23 +290,17 @@ def test_span_range_duel(env, seed):
     got_idx = {(r.conv_id, int(r.turn_idx)) for r in s.docset(spec).collect()}
     assert got_idx == expect, (group, slop, start, end)
 
-    got_df = {
-        (r.conv_id, int(r.turn_idx))
-        for r in bm25_df.doc_tokens(t)
-        .filter(bm25_df._span_pred(
-            group, slop, prefix_end=end, pos_start=start
-        ))
-        .select("conv_id", "turn_idx")
-        .collect()
-    }
-    assert got_df == expect, (group, slop, start, end)
+    got_duck = oracle_docs(
+        _span_clause(group, slop, prefix_end=end, pos_start=start)
+    )
+    assert got_duck == expect, (group, slop, start, end)
 
 
 def test_span_range_excludes_head_matches(env):
     """Discriminator vs span_first: with start=4, docs whose ONLY
     qualifying window touches positions 0–3 drop out — span_range(4,16)
     must be a strict subset of span_first(16) on this corpus."""
-    s, _t, _pdf = env
+    s, _pdf = env
     first = BooleanSpec(span_first=(("merge", "scan"),), span_slop=2,
                         span_first_end=16)
     rng_ = BooleanSpec(span_range=(("merge", "scan"),), span_slop=2,
@@ -352,7 +312,7 @@ def test_span_range_excludes_head_matches(env):
 
 def test_span_range_start_zero_equals_span_first(env):
     """start=0 degenerates to SpanFirstQuery — same DocSet."""
-    s, _t, _pdf = env
+    s, _pdf = env
     first = BooleanSpec(span_first=(("merge", "scan"),), span_slop=2,
                         span_first_end=12)
     rng_ = BooleanSpec(span_range=(("merge", "scan"),), span_slop=2,
@@ -388,11 +348,11 @@ def ref_span_within_match(
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_span_within_duel(env, seed):
+def test_span_within_duel(env, oracle_docs, seed):
     """3-way duel for SpanWithinQuery: random big groups from real
     windows, little drawn from the same window when possible (so
     positive matches occur) else from the rest of the vocabulary."""
-    s, t, pdf = env
+    s, pdf = env
     rng = np.random.default_rng(7000 + seed)
     big, slop = rand_group(rng, pdf)
     vocab = sorted({x for ts in pdf["toks"] for x in ts} - set(big))
@@ -408,33 +368,19 @@ def test_span_within_duel(env, seed):
     got_idx = {(r.conv_id, int(r.turn_idx)) for r in s.docset(spec).collect()}
     assert got_idx == expect, (little, big, slop)
 
-    got_df = {
-        (r.conv_id, int(r.turn_idx))
-        for r in bm25_df.doc_tokens(t)
-        .filter(bm25_df._span_within_pred(little, big, slop))
-        .select("conv_id", "turn_idx")
-        .collect()
-    }
-    assert got_df == expect, (little, big, slop)
+    got_duck = oracle_docs(_span_within_clause(little, big, slop))
+    assert got_duck == expect, (little, big, slop)
 
 
-def test_span_within_positional_vs_conjunction(spark):
+def test_span_within_positional_vs_conjunction(oracle_docs):
     """The discriminator: both docs hold all three terms, but only the
     one whose 'key' lies INSIDE a table…merge span matches — proving
     containment is positional, never a boolean +key."""
-    df = spark.createDataFrame(
-        [
-            ("c1", 0, ["table", "key", "merge"]),   # key inside [0,2]
-            ("c1", 1, ["key", "table", "merge"]),   # key outside [1,2]
-        ],
-        "conv_id string, turn_idx int, toks array<string>",
-    )
-    got = {
-        (r.conv_id, int(r.turn_idx))
-        for r in df.filter(
-            bm25_df._span_within_pred("key", ("table", "merge"), 1)
-        ).collect()
-    }
+    frame = text_frame([
+        ("c1", 0, "table key merge"),  # key inside [0,2]
+        ("c1", 1, "key table merge"),  # key outside [1,2]
+    ])
+    got = oracle_docs(_span_within_clause("key", ("table", "merge"), 1), frame)
     assert got == {("c1", 0)}
     # and the brute reference says the same
     assert ref_span_within_match(["table", "key", "merge"], "key",
@@ -456,11 +402,11 @@ def ref_multi_phrase_match(
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_multi_phrase_duel(env, seed):
+def test_multi_phrase_duel(env, oracle_docs, seed):
     """3-way duel for MultiPhraseQuery: slot 1 from a real adjacent
     pair, slot 2 = the real next token plus a random alternative —
     so both the matched and unmatched alternative paths exercise."""
-    s, t, pdf = env
+    s, pdf = env
     rng = np.random.default_rng(9000 + seed)
     vocab = sorted({x for ts in pdf["toks"] for x in ts})
     for _ in range(80):
@@ -484,21 +430,15 @@ def test_multi_phrase_duel(env, seed):
     got_idx = {(r.conv_id, int(r.turn_idx)) for r in s.docset(spec).collect()}
     assert got_idx == expect, slots
 
-    got_df = {
-        (r.conv_id, int(r.turn_idx))
-        for r in bm25_df.doc_tokens(t)
-        .filter(bm25_df._multi_phrase_pred(slots))
-        .select("conv_id", "turn_idx")
-        .collect()
-    }
-    assert got_df == expect, slots
+    got_duck = oracle_docs(_multi_phrase_clause(slots))
+    assert got_duck == expect, slots
 
 
 def test_multi_phrase_vs_exact_phrases_union(env):
     """Pinned identity: multi_phrase("table", {scan, merge}) matches
     exactly the UNION of the exact phrases "table scan" and
     "table merge" — and differs from the 3-term conjunction."""
-    s, _, pdf = env
+    s, pdf = env
     slots = (("table",), ("merge", "scan"))
     spec = BooleanSpec(multi_phrases=(slots,))
     got = {(r.conv_id, int(r.turn_idx)) for r in s.docset(spec).collect()}
